@@ -25,6 +25,11 @@ composition and the durable-write policy):
 5. **report** — corpus_report (x92) before/after rows embedded in the
    manifest: the curation run's evidence, not a side effect.
 
+Independent actions overlap (``session.run_concurrently``): the
+before-report runs alongside stage 1 and the ``_assigned`` barrier write,
+then every split's stages 3-4 and the after-report run side by side. The
+manifest keeps ``splits_e6`` order whatever finishes first.
+
 Scale: stages 1-3 inherit their operators' documented shapes (scan-side
 filters, hash dedup, banded near-dup, bucketed cumsums — no n^2, no
 global single-reducer window); the write is one range exchange per
@@ -39,6 +44,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +52,8 @@ from pyspark.sql import functions as F
 
 from .operators import sampling as sp
 from .operators import text as tx
+from .session import run_concurrently
+from .sources.writers import overwrite_parquet
 
 DEFAULT_SPLITS_E6 = {"train": 900_000, "val": 50_000, "test": 50_000}
 
@@ -77,15 +85,10 @@ def corpus_run(
     if benchmark is None:
         benchmark = docs.limit(0)
 
-    report_before = [r.asDict() for r in tx.corpus_report(
-        docs, text_col, id_col
-    ).orderBy("source").collect()]
-
-    kept = tx.curate(
-        docs, benchmark, text_col=text_col, id_col=id_col,
-        near_dup=near_dup, quality=quality, boilerplate=boilerplate,
-    )
-    survivors = docs.join(kept.select(id_col), id_col, "left_semi")
+    def report(frame: DataFrame) -> list[dict[str, Any]]:
+        return [r.asDict() for r in tx.corpus_report(
+            frame, text_col, id_col
+        ).orderBy("source").collect()]
 
     # Materialization barrier (round-10, guide §5): the curate cascade is
     # by far the most expensive stage, and without a barrier it is
@@ -102,28 +105,27 @@ def corpus_run(
     # churn, and every downstream action (split pack+writes,
     # report_after) reads a column-pruned compressed scan instead of
     # re-running the cascade. Overwrite mode keeps reruns idempotent.
-    assigned_path = os.path.join(out_dir, "_assigned")
-    sp.shuffle_split(
-        survivors, splits_e6, id_col=id_col, seed=seed
-    ).write.mode("overwrite").parquet(assigned_path)
-    assigned = spark.read.parquet(assigned_path)
+    def curate_and_assign() -> DataFrame:
+        kept = tx.curate(
+            docs, benchmark, text_col=text_col, id_col=id_col,
+            near_dup=near_dup, quality=quality, boilerplate=boilerplate,
+        )
+        survivors = docs.join(kept.select(id_col), id_col, "left_semi")
+        return overwrite_parquet(
+            sp.shuffle_split(survivors, splits_e6, id_col=id_col, seed=seed),
+            os.path.join(out_dir, "_assigned"),
+        )
+
+    # the before-report reads only the input, so it overlaps the cascade
+    report_before, assigned = run_concurrently(
+        spark, [partial(report, docs), curate_and_assign]
+    )
     chunked = tx.chunk_documents(
         assigned, chunk_size=chunk_size, overlap=overlap,
         text_col=text_col, id_col=id_col,
     ).join(assigned.select(id_col, "split", "shuffle_key"), id_col)
 
-    manifest: dict[str, Any] = {
-        "seed": seed,
-        "splits_e6": splits_e6,
-        "chunk_size": chunk_size,
-        "overlap": overlap,
-        "seq_budget": seq_budget,
-        "curate": {"near_dup": near_dup, "quality": quality,
-                   "boilerplate": boilerplate},
-        "report_before": report_before,
-        "splits": {},
-    }
-    for name in splits_e6:
+    def write_split(name: str) -> dict[str, Any]:
         # pack each split with the range-bucketed exact-cumsum path: the
         # training order is (shuffle_key, chunk_id) — shuffled documents,
         # sequential chunks within a document
@@ -151,19 +153,16 @@ def corpus_run(
             ranged = part.repartitionByRange(
                 spark.sparkContext.defaultParallelism, "pack_id", "pack_offset"
             )
-        (
-            ranged.sortWithinPartitions("pack_id", "pack_offset")
-            .write.mode("overwrite")
-            .parquet(path)
+        back = overwrite_parquet(
+            ranged.sortWithinPartitions("pack_id", "pack_offset"), path
         )
-        back = spark.read.parquet(path)
         stats = back.agg(
             F.count(F.lit(1)).alias("chunks"),
             F.countDistinct(id_col).alias("docs"),
             F.countDistinct("pack_id").alias("packs"),
             F.sum(F.col("chunk_tokens").cast("bigint")).alias("tokens"),
         ).first()
-        manifest["splits"][name] = {
+        return {
             "path": path,
             "docs": stats["docs"],
             "chunks": stats["chunks"],
@@ -171,12 +170,26 @@ def corpus_run(
             "tokens": stats["tokens"],
         }
 
-    # report over the durable assigned frame (same rows as survivors —
-    # the two extra split/shuffle_key columns are inert to the
-    # aggregates), so the after-report does not re-run the cascade either
-    manifest["report_after"] = [r.asDict() for r in tx.corpus_report(
-        assigned, text_col, id_col
-    ).orderBy("source").collect()]
+    # the splits are independent of each other, and the after-report reads
+    # the durable assigned frame (same rows as survivors — the two extra
+    # split/shuffle_key columns are inert to the aggregates), so none of
+    # them re-runs the cascade and all of them overlap
+    *split_stats, report_after = run_concurrently(spark, [
+        *(partial(write_split, name) for name in splits_e6),
+        partial(report, assigned),
+    ])
+    manifest: dict[str, Any] = {
+        "seed": seed,
+        "splits_e6": splits_e6,
+        "chunk_size": chunk_size,
+        "overlap": overlap,
+        "seq_budget": seq_budget,
+        "curate": {"near_dup": near_dup, "quality": quality,
+                   "boilerplate": boilerplate},
+        "report_before": report_before,
+        "splits": dict(zip(splits_e6, split_stats)),
+        "report_after": report_after,
+    }
 
     # manifest through the Hadoop FileSystem API (same resolution as the
     # shard writes above), staged + renamed so readers never see a torn

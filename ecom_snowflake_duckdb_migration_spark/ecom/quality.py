@@ -6,9 +6,11 @@ with per-test severity (e.g. order_items.product_id → products_enriched is
 severity warn, /root/reference/dbt/dbt_duckdb/models/ecom_intermediate/
 schema.yml:186-191; global severity error, dbt_project.yml:41-43).
 
-Each check compiles to one aggregate/anti-join job — no collect of row-level
-data; only violation counts (plus an optional stored-failures DataFrame,
-mirroring dbt's store_failures).
+Each check compiles to one aggregate/anti-join count — no collect of
+row-level data; only violation counts (plus an optional stored-failures
+DataFrame, mirroring dbt's store_failures). ``run_suite`` runs the counts
+concurrently (``session.run_concurrently``), the counterpart of dbt's
+``threads: 4``; most of them are one-task jobs over small models.
 
 DEFAULT_SUITE mirrors the reference's schema.yml files for the layers we
 materialize.
@@ -17,10 +19,13 @@ materialize.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Literal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import run_concurrently
 
 Severity = Literal["error", "warn"]
 
@@ -112,23 +117,29 @@ DEFAULT_SUITE: list[tuple] = [
 
 
 def run_suite(ref, suite: list[tuple] | None = None) -> list[TestResult]:
-    """Run a test suite against a resolver (e.g. ``PipelineRunner.ref``)."""
-    results = []
+    """Run a test suite against a resolver (e.g. ``PipelineRunner.ref``);
+    results come back in suite order.
+
+    Every ``ref()`` resolves on the calling thread first (resolving can
+    materialize a model, and the resolver's memo is not thread-safe); only
+    the counts run concurrently.
+    """
+    checks = []
     for model, test, column, parent_model, parent_column, severity in (
         suite if suite is not None else DEFAULT_SUITE
     ):
         df = ref(model)
         if test == "unique":
-            results.append(unique(df, model, column, severity))
+            checks.append(partial(unique, df, model, column, severity))
         elif test == "not_null":
-            results.append(not_null(df, model, column, severity))
+            checks.append(partial(not_null, df, model, column, severity))
         elif test == "relationships":
-            results.append(
-                relationships(df, ref(parent_model), model, column, parent_column, severity)
-            )
+            checks.append(partial(
+                relationships, df, ref(parent_model), model, column, parent_column, severity
+            ))
         else:
             raise ValueError(f"unknown test {test}")
-    return results
+    return run_concurrently(df.sparkSession, checks) if checks else []
 
 
 def assert_suite(results: list[TestResult]) -> None:

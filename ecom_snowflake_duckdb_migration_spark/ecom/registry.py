@@ -12,9 +12,10 @@ The Spark equivalent of the reference's dbt invocation
   filter → full refresh, replicated as such (SURVEY S11 quirk); true
   incremental loading is available separately via sources.incremental_filter.
 
-dbt's ``threads: 4`` intra-layer parallelism is subsumed by Spark's own
-job/stage/task parallelism — materializations here run sequentially but each
-one fans out across all executor cores.
+Materializations run one at a time, each fanning out across the executor
+cores; dbt's ``threads: 4`` has no equivalent here yet. The quality suite's
+checks do overlap (``quality.run_suite``), and ``ref()`` memoization is not
+thread-safe, so callers resolve models on one thread.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.writers import overwrite_parquet
 from . import intermediate as I
 from . import marts as M
 from .staging import RAW_FOR_STAGING, STAGING_SPECS, stage
@@ -170,8 +172,7 @@ class PipelineRunner:
             path = f"{self.warehouse_dir}/{spec.layer}/{spec.name}"
             if self.incremental and spec.name in INCREMENTAL_FILTERS:
                 return self._materialize_incremental(spec, df, path)
-            df.write.mode("overwrite").parquet(path)
-            return self.spark.read.parquet(path)
+            return overwrite_parquet(df, path)
         return df.cache()
 
     def _materialize_incremental(self, spec: ModelSpec, df: DataFrame, path: str) -> DataFrame:

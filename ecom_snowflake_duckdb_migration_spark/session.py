@@ -14,13 +14,24 @@ Scale posture: shuffle partitions default to 2x local cores for local runs but
 should be overridden (``spark.sql.shuffle.partitions``) to ~2-3x total cluster
 cores on a real deployment; AQE coalesces small post-shuffle partitions either
 way, so over-provisioning is safe.
+
+Independent actions: ``run_concurrently`` submits them from a small thread
+pool, the local stand-in for dbt's ``threads: 4``. Many of the engine's
+actions are one-task jobs (small reports, count checks, tiny splits), so
+issued one at a time they leave most cores idle.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def default_parallelism() -> int:
@@ -28,6 +39,50 @@ def default_parallelism() -> int:
     if cpus and cpus.isdigit():
         return int(cpus)
     return os.cpu_count() or 8
+
+
+def default_driver_memory() -> str:
+    """Half the host's RAM, 1-24 GB: the driver JVM holds every executor in
+    local mode, and the OS and the Python workers need the other half."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "24g"
+    return f"{max(1, min(24, total // 2**31))}g"
+
+
+def run_concurrently(spark: SparkSession, thunks: Sequence[Callable[[], T]]) -> list[T]:
+    """Run independent Spark actions from a pool of
+    ``min(len(thunks), default_parallelism())`` threads.
+
+    Results come back in submission order. Every thunk runs to its end
+    before anything is raised; then the first failure in submission order
+    is re-raised, so no write is still in flight when the caller sees it.
+
+    Each worker thread gets a copy of the caller's JVM local properties (job
+    group, scheduler pool, job tags), so its jobs are attributed like the
+    caller's own. Its call site starts as this call's line in the caller's
+    module. PySpark's per-action call site (``collect at <file>:<line>``)
+    replaces it only for an action that starts while no other thread is
+    inside one, because PySpark counts call-site nesting process-wide.
+    """
+    thunks = list(thunks)
+    if not thunks:
+        return []
+    jsc = spark.sparkContext._jsc
+    props = jsc.sc().getLocalProperties()
+    caller = sys._getframe(1)
+    site = f"run_concurrently at {caller.f_code.co_filename}:{caller.f_lineno}"
+
+    def run(thunk: Callable[[], T]) -> T:
+        jsc.sc().setLocalProperties(props.clone())
+        jsc.setCallSite(site)
+        return thunk()
+
+    # leaving the block waits for every thunk
+    with ThreadPoolExecutor(min(len(thunks), default_parallelism())) as pool:
+        futures = [pool.submit(run, thunk) for thunk in thunks]
+    return [f.result() for f in futures]
 
 
 def get_spark(
@@ -56,7 +111,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # Trust bucketed tables' sortBy order when each bucket holds one
@@ -70,14 +125,22 @@ def get_spark(
     # network and spills/shuffles are transient, so RAM-backed local.dir
     # avoids this environment's slow disk path (measured 2x on shuffle-heavy
     # queries). Real-cluster deployments should override spark.local.dir to
-    # fast node-local storage (NVMe) instead.
-    if master.startswith("local") and os.path.isdir("/dev/shm"):
+    # fast node-local storage (NVMe) instead. A caller's spark.local.dir, or
+    # SPARK_LOCAL_DIRS (which Spark prefers over it), wins, and then nothing
+    # is created here.
+    extra_conf = extra_conf or {}
+    if (
+        master.startswith("local")
+        and "spark.local.dir" not in extra_conf
+        and not os.environ.get("SPARK_LOCAL_DIRS")
+        and os.path.isdir("/dev/shm")
+    ):
         shm = "/dev/shm/spark-local"
         try:
             os.makedirs(shm, exist_ok=True)
             builder = builder.config("spark.local.dir", shm)
         except OSError:
             pass
-    for key, value in (extra_conf or {}).items():
+    for key, value in extra_conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

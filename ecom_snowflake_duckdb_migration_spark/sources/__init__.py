@@ -30,6 +30,7 @@ from .writers import (
     create_typed_table,
     create_view,
     describe_catalog,
+    overwrite_parquet,
     write_csv_with_metadata,
     write_envelope_json,
     write_jdbc,
@@ -55,6 +56,7 @@ __all__ = [
     "describe_catalog",
     "flatten_json_columns",
     "incremental_filter",
+    "overwrite_parquet",
     "parquet_file_stats",
     "read_csv",
     "read_envelope_json",

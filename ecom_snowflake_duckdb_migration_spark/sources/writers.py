@@ -57,6 +57,15 @@ def write_csv_with_metadata(
     return meta
 
 
+def overwrite_parquet(df: DataFrame, path: str) -> DataFrame:
+    """Overwrite ``path`` with ``df`` as parquet and read it back with
+    ``df``'s schema, which skips the one-task schema-inference job a plain
+    re-read launches. File sources read every column as nullable, so the
+    schema equals ``spark.read.parquet(path).schema``."""
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
 def write_envelope_json(
     df: DataFrame,
     path: str,

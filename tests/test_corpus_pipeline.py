@@ -3,9 +3,13 @@ curate -> split -> chunk -> pack -> durable shards + manifest."""
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import json
 import os
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from ecom_snowflake_duckdb_migration_spark.corpus_pipeline import corpus_run
@@ -80,3 +84,46 @@ def test_corpus_run_without_benchmark(spark, sf_dir, tmp_path):
     # no-benchmark run keeps MORE (or equal) docs than a decontaminated
     # one would — the decontamination stage was a structural no-op
     assert sum(v["docs"] for v in m["splits"].values()) > 0
+
+
+# corpus_run on the sf0.001 fixture (benchmark = src0, seq_budget=512),
+# recorded from the sequential implementation: each split's (docs, chunks,
+# packs, tokens) and the sha256 of its rows read back file by file in part
+# order, plus the sha256 of the before/after corpus reports.
+PINNED_SPLITS = {
+    "train": ((313, 351, 39, 19722), "3b850a37f738bc0ea275add499cf119c35e27e721ec2dc347d237b66d3bc2ce1"),
+    "val": ((23, 26, 3, 1441), "e79e642bea0eb047ae304d0f489cf9287a7eb850665e1c95d95e21c5cf94e094"),
+    "test": ((16, 19, 3, 1072), "a3c10be445fa248ee0436bdb650531a7cbb2b955f281e705636d80732f0c4cf9"),
+}
+PINNED_REPORTS = "c36cc9bde55542be9e772e79ce482dc08eedf1eaf7af90dc0424d17bd9de6ba1"
+
+
+def _rows_digest(path: str) -> str:
+    """Order-sensitive digest of a parquet directory's rows, in file order."""
+    h = hashlib.sha256()
+    for name in sorted(glob.glob(os.path.join(path, "*.parquet"))):
+        for row in pq.read_table(name).to_pylist():
+            h.update(json.dumps(list(row.values())).encode("utf-8"))
+    return h.hexdigest()
+
+
+def test_corpus_run_output_pinned(spark, sf_dir, tmp_path):
+    if os.path.basename(sf_dir.rstrip("/")) != "sf0.001":
+        pytest.skip("the pinned values are those of the sf0.001 fixture")
+    corpus, bench = _inputs(spark, sf_dir)
+    out = str(tmp_path / "corpus")
+    m = corpus_run(spark, corpus, out, benchmark=bench, seq_budget=512)
+
+    with open(os.path.join(out, "_manifest.json")) as f:
+        on_disk = json.load(f)
+    assert list(m["splits"]) == list(m["splits_e6"]) == list(on_disk["splits"])
+    got = {
+        name: (
+            tuple(s[k] for k in ("docs", "chunks", "packs", "tokens")),
+            _rows_digest(s["path"]),
+        )
+        for name, s in m["splits"].items()
+    }
+    assert got == PINNED_SPLITS
+    reports = json.dumps([m["report_before"], m["report_after"]], sort_keys=True)
+    assert hashlib.sha256(reports.encode("utf-8")).hexdigest() == PINNED_REPORTS

@@ -115,6 +115,15 @@ def test_quality_suite_passes(pipeline):
     ), "expected the severity-warn dirty-FK test to fire on planted bad rows"
 
 
+def test_materialized_table_rereads_with_inferred_schema(spark, pipeline, tmp_path):
+    runner, _ = pipeline
+    warehouse = PipelineRunner(spark, runner.raw, warehouse_dir=str(tmp_path))
+    for name in ("orders", "customers_enriched"):
+        spec = MODELS[name]
+        path = f"{tmp_path}/{spec.layer}/{name}"
+        assert warehouse.ref(name).schema == spark.read.parquet(path).schema
+
+
 def test_generator_is_deterministic(spark):
     a = generate_all(spark, n_customers=50)["orders"].collect()
     b = generate_all(spark, n_customers=50)["orders"].collect()

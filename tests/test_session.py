@@ -1,0 +1,86 @@
+"""session.run_concurrently: the pool that overlaps independent actions."""
+
+from __future__ import annotations
+
+import os
+import sys
+import threading
+import time
+from functools import partial
+
+import pytest
+
+from ecom_snowflake_duckdb_migration_spark.session import run_concurrently
+
+
+def test_results_in_submission_order(spark):
+    # later thunks finish first
+    thunks = [lambda i=i: (time.sleep(0.05 * (4 - i)), i)[1] for i in range(4)]
+    assert run_concurrently(spark, thunks) == [0, 1, 2, 3]
+    assert run_concurrently(spark, []) == []
+
+
+def test_failure_surfaces_after_every_thunk_finishes(spark):
+    finished = threading.Event()
+
+    def slow():
+        time.sleep(0.3)
+        finished.set()
+
+    def fail(msg, delay):
+        time.sleep(delay)
+        raise ValueError(msg)
+
+    # the first failure in submission order wins, not the first to happen
+    with pytest.raises(ValueError, match="late"):
+        run_concurrently(spark, [slow, lambda: fail("late", 0.1), lambda: fail("early", 0)])
+    assert finished.is_set()
+
+
+def test_worker_local_properties_are_private(spark):
+    """Each worker mutates its own copy of the caller's JVM local
+    properties: no worker sees another's, and the caller sees none."""
+    sc = spark.sparkContext
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+
+    def own(i):
+        sc.setLocalProperty("run_concurrently.test", str(i))
+        time.sleep(0.01)
+        return sc.getLocalProperty("run_concurrently.test")
+
+    try:
+        got = run_concurrently(spark, [partial(own, i) for i in range(16)])
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [str(i) for i in range(16)]
+    assert sc.getLocalProperty("run_concurrently.test") is None
+
+
+def _run_in_group(spark, group: str, n: int) -> list[int]:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "run_concurrently test")
+    try:
+        run_concurrently(spark, [
+            lambda: spark.range(4, numPartitions=1).collect() for _ in range(n)
+        ])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_jobs_carry_callers_job_group(spark):
+    assert len(_run_in_group(spark, "rc-group", 3)) == 3
+
+
+def test_job_call_site_names_callers_module(spark):
+    tracker = spark.sparkContext.statusTracker()
+    sites = [
+        tracker.getStageInfo(stage).name
+        for job in _run_in_group(spark, "rc-site", 3)
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+    assert len(sites) == 3
+    for site in sites:
+        assert os.path.basename(__file__) in site, site

@@ -40,6 +40,25 @@ def test_envelope_json_roundtrip(spark, sf_dir, tmp_path):
     assert sum(m.recordCount for m in rows) == nation.count()
 
 
+def test_overwrite_parquet_rereads_with_inferred_schema(spark, tmp_path):
+    df = spark.createDataFrame(
+        [(1, "a", None)], "id BIGINT NOT NULL, name STRING, score DECIMAL(12,2)"
+    ).select(
+        "*",
+        F.struct(F.col("id").alias("k"), F.lit("v").alias("v")).alias("pair"),
+        F.array(F.col("id")).alias("ids"),
+        F.create_map(F.col("name"), F.col("id")).alias("by_name"),
+        F.lit(datetime.date(2026, 1, 1)).alias("day"),
+        F.lit(datetime.datetime(2026, 1, 1, 12)).alias("ts"),
+    )
+    path = str(tmp_path / "t")
+    back = sources.overwrite_parquet(df, path)
+    assert back.schema == spark.read.parquet(path).schema
+    assert back.collect() == df.collect()
+    # a second call overwrites
+    assert sources.overwrite_parquet(df.limit(0), path).count() == 0
+
+
 def test_envelope_validate_count_rejects_corrupt(spark, tmp_path):
     bad = {
         "metadata": {"table": "t", "recordCount": 99, "generatedAt": "x", "version": "1"},
