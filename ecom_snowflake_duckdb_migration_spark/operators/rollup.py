@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.writers import replace_dir
+
 BP = 10_000
 
 
@@ -43,35 +45,33 @@ def refresh_rollup(
     key_cols: list[str] | None = None,
     value_col: str = "value",
 ) -> None:
-    """Merge one batch into the materialized rollup at ``rollup_path``."""
+    """Merge one batch into the materialized rollup at ``rollup_path``,
+    rewriting it through the crash-safe ``sources.writers.replace_dir``."""
     import os
 
     key_cols = key_cols or ["event_type"]
     new_parts = _partials(batch, ts_col, key_cols, value_col)
-    if os.path.exists(rollup_path):
-        existing = spark.read.parquet(rollup_path)
-        touched = new_parts.select("bucket").distinct()
-        # merge only the touched buckets; untouched state is carried through
-        merged_touched = (
-            existing.join(F.broadcast(touched), "bucket", "left_semi")
-            .unionByName(new_parts)
-            .groupBy("bucket", *key_cols)
-            .agg(
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("value_bp").alias("value_bp"),
-            )
-        )
-        untouched = existing.join(F.broadcast(touched), "bucket", "left_anti")
-        merged = untouched.unionByName(merged_touched)
-    else:
-        merged = new_parts
-    staging = rollup_path.rstrip("/") + "._staging"
-    merged.write.mode("overwrite").parquet(staging)
-    import shutil
 
-    if os.path.exists(rollup_path):
-        shutil.rmtree(rollup_path)
-    os.rename(staging, rollup_path)
+    def fill(tmp: str) -> None:
+        merged = new_parts
+        if os.path.exists(rollup_path):
+            existing = spark.read.parquet(rollup_path)
+            touched = new_parts.select("bucket").distinct()
+            # merge only the touched buckets; untouched state is carried through
+            merged_touched = (
+                existing.join(F.broadcast(touched), "bucket", "left_semi")
+                .unionByName(new_parts)
+                .groupBy("bucket", *key_cols)
+                .agg(
+                    F.sum("n_rows").alias("n_rows"),
+                    F.sum("value_bp").alias("value_bp"),
+                )
+            )
+            untouched = existing.join(F.broadcast(touched), "bucket", "left_anti")
+            merged = untouched.unionByName(merged_touched)
+        merged.write.mode("overwrite").parquet(tmp)
+
+    replace_dir(spark, rollup_path, fill)
 
 
 def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:

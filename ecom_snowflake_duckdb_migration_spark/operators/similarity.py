@@ -32,6 +32,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# method="auto" keeps codebooks up to EXPR_MAX_CELLS cells (and PQ tables up
+# to EXPR_MAX_PQ_TABLE entries) on the expression fold the DuckDB oracles
+# compute; larger ones go to the Arrow/numpy kernels. Pinned by
+# test_semantic_dispatch_smallgeometry_stays_expr.
+EXPR_MAX_CELLS, EXPR_MAX_PQ_TABLE = 16, 32
+
+
+def _resolve_method(method: str, centroids: list, codebooks: list | None = None) -> str:
+    if method != "auto":
+        return method
+    big_pq = codebooks is not None and len(codebooks) * len(codebooks[0]) > EXPR_MAX_PQ_TABLE
+    return "pandas" if len(centroids) > EXPR_MAX_CELLS or big_pq else "expr"
+
 
 # ---------------------------------------------------------------------------
 # SQL-text twins of the literal-codebook expression builders.
@@ -582,8 +595,7 @@ def ivf_partition(
     ``method``: 'expr' = the Catalyst literal-codebook assigner (DuckDB
     oracle twin; right for small codebooks), 'pandas' = the Arrow/numpy
     kernel (production codebooks), 'auto' = expr up to 16 cells."""
-    if method == "auto":
-        method = "expr" if len(centroids) <= 16 else "pandas"
+    method = _resolve_method(method, centroids)
     if method == "pandas":
         return assign_cell_pandas(df, centroids, vec_col)
     return df.withColumn("ivf_cell", assign_cell(vec_col, centroids))
@@ -759,8 +771,7 @@ def knn_join(
     trained centroids — vanishingly rare, and >16-cell codebooks have no
     oracle to match).
     """
-    if method == "auto":
-        method = "expr" if len(centroids) <= 16 else "pandas"
+    method = _resolve_method(method, centroids)
     d = len(centroids[0])
     qcells = _query_probe_cells(
         queries, centroids, nprobe, query_vec_col, query_id_col, method
@@ -905,8 +916,7 @@ def probe_ivf_store(
     expressions, a pruned scan, one equi-join, and the per-query top-k
     window. The query frame is checkpointed so the collected cell set and
     the join provably see the same probe cells."""
-    if method == "auto":
-        method = "expr" if len(centroids) <= 16 else "pandas"
+    method = _resolve_method(method, centroids)
     d = len(centroids[0])
     qcells = _query_probe_cells(
         queries, centroids, nprobe, query_vec_col, query_id_col, method
@@ -966,8 +976,7 @@ def semantic_dedup(
     ``ivf_partition`` output bucketed by cell, and the self-join becomes
     co-located with zero exchanges.
     """
-    if method == "auto":
-        method = "expr" if len(centroids) <= 16 else "pandas"
+    method = _resolve_method(method, centroids)
     # materialization barrier (round-10, guide §5): the sweep references
     # the celled frame THREE times (both self-join sides + the final
     # anti-join), and cell assignment is scan-side with no exchange to
@@ -1065,8 +1074,7 @@ def semantic_cells(
     the dispatch point — without it the 128-cell literal tree pays the
     measured ~90 s/20k-row interpreted-expression cost (round-10 sf64
     finding, same economics as knn_join's)."""
-    if method == "auto":
-        method = "expr" if len(centroids) <= 16 else "pandas"
+    method = _resolve_method(method, centroids)
     if method == "pandas":
         return _semantic_cells_pandas(df, centroids, vec_col, id_col)
     d = len(centroids[0])
@@ -1300,6 +1308,7 @@ def semantic_dedup_incremental(
     cell assignment entirely (the point of persisting the store: the
     recurring probe pays only the batch-side expressions plus the join).
     """
+    method = _resolve_method(method, centroids)
     d = len(centroids[0])
     # ONE cell projection over the batch, shared by both stages: the
     # per-row codebook expressions (8+ dots for assign_cell + csim) are
@@ -1321,7 +1330,7 @@ def semantic_dedup_incremental(
             F.col("nrm").alias("c_nrm"),
             F.col("cell").alias("c_cell"),
         )
-    elif method == "pandas" or (method == "auto" and len(centroids) > 16):
+    elif method == "pandas":
         # numpy kernel for production codebooks (csim is a free by-product
         # of the same matmul, unlike the expr path where it would double
         # the per-row cosine count)
@@ -1336,10 +1345,7 @@ def semantic_dedup_incremental(
             norm(vec_col, d).alias("c_nrm"),
             assign_cell(vec_col, centroids).alias("c_cell"),
         )
-    resolved = (
-        ("expr" if len(centroids) <= 16 else "pandas") if method == "auto" else method
-    )
-    if resolved == "pandas":
+    if method == "pandas":
         veto = _veto_cogroup_pandas(b, c, threshold, id_col, bc.schema[id_col])
     else:
         veto = (
@@ -1362,7 +1368,7 @@ def semantic_dedup_incremental(
         veto, bc[id_col] == veto["_veto"], "left_anti"
     ).localCheckpoint(eager=True)
     return semantic_dedup_celled(
-        survivors_celled, threshold, id_col, vec_col, dim=d, pair_method=resolved
+        survivors_celled, threshold, id_col, vec_col, dim=d, pair_method=method
     )
 
 
@@ -1651,7 +1657,7 @@ def train_residual_pq_codebooks(
 
     from .sampling import sample_hash
 
-    method = "expr" if len(centroids) <= 16 else "pandas"
+    method = _resolve_method("auto", centroids)
     celled = ivf_partition(df, centroids, vec_col, method=method).filter(
         F.col("ivf_cell").isNotNull()
     )
@@ -1988,23 +1994,12 @@ def ivfadc_knn_join(
     residual against an arbitrary cell would be meaningless). Probe-cell
     ties break to the LOWEST cell id in both methods.
     """
-    method = _ivfadc_method(method, centroids, codebooks)
+    method = _resolve_method(method, centroids, codebooks)
     item_side = _ivfadc_item_side(items, centroids, codebooks, vec_col, id_col, method)
     qcells = _ivfadc_query_cells(
         queries, centroids, codebooks, nprobe, query_vec_col, query_id_col, method
     )
     return _ivfadc_score_topk(qcells, item_side, codebooks, k, id_col, query_id_col)
-
-
-def _ivfadc_method(
-    method: str,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-) -> str:
-    if method == "auto":
-        m, kc = len(codebooks), len(codebooks[0])
-        return "pandas" if (len(centroids) > 16 or m * kc > 32) else "expr"
-    return method
 
 
 def _ivfadc_item_side(
@@ -2183,7 +2178,7 @@ def write_ivfadc_store(
     cost of a probe is nprobe/n_cells of THAT. Same clustered-write
     discipline as :func:`write_ivf_store` (one file per cell, not
     n_tasks slivers); NULL-vector rows are unsearchable and excluded."""
-    method = _ivfadc_method(method, centroids, codebooks)
+    method = _resolve_method(method, centroids, codebooks)
     item_side = _ivfadc_item_side(df, centroids, codebooks, vec_col, id_col, method)
     (
         item_side.withColumnRenamed("_rn2", "rn2")
@@ -2211,7 +2206,7 @@ def append_ivfadc_store(
     inside the existing cell directories. Probes see old + new rows with
     no rewrite of history; dynamic partition overwrite is NOT used, so
     concurrent probes keep reading committed files."""
-    method = _ivfadc_method(method, centroids, codebooks)
+    method = _resolve_method(method, centroids, codebooks)
     item_side = _ivfadc_item_side(df, centroids, codebooks, vec_col, id_col, method)
     (
         item_side.withColumnRenamed("_rn2", "rn2")
@@ -2242,7 +2237,7 @@ def probe_ivfadc_store(
     The probe reads only the probed cells' code columns — never a float
     vector — and pays the query-side table expressions, the pruned scan,
     one equi-join, and the top-k window."""
-    method = _ivfadc_method(method, centroids, codebooks)
+    method = _resolve_method(method, centroids, codebooks)
     qcells = _ivfadc_query_cells(
         queries, centroids, codebooks, nprobe, query_vec_col, query_id_col, method
     ).localCheckpoint(eager=False)

@@ -715,7 +715,6 @@ def jaccard_verify_pairs(
     sh: DataFrame,
     id_col: str = "doc_id",
     threshold_e6: int = 800_000,
-    intersect: str = "arrow",
 ) -> DataFrame:
     """Exact-Jaccard verification restricted to candidate (d1, d2) pairs.
 
@@ -725,12 +724,9 @@ def jaccard_verify_pairs(
     compatibility, exploded distinct (id, shingle) rows
     (``char_shingles``' contract), which are collected into the same
     array shape with one object aggregate. Candidates join that narrow
-    (id, array) table on each side and |A∩B| is computed per pair —
-    by default in the run-amortized Arrow kernel
-    (``_intersect_run_kernel``: each d1's sorted set built once per
-    consecutive run, pairs probed vectorized; ``intersect="jvm"``
-    selects the previous per-pair ``array_intersect``, an O(|A|+|B|)
-    hash probe inside whole-stage codegen, byte-identical output).
+    (id, array) table on each side and |A∩B| is computed per pair in
+    the run-amortized Arrow kernel (``_intersect_run_kernel``: each d1's
+    sorted set built once per consecutive run, pairs probed vectorized).
     |A∪B| = |A|+|B|-|A∩B|. Cost is linear in (candidates x doc shingle count)
     WITHOUT materializing exploded (pair, shingle) rows through an
     exchange: the previous explode-then-equi-join shape shuffled
@@ -774,34 +770,18 @@ def jaccard_verify_pairs(
             F.least("sz1", "sz2") * F.lit(SCALE) >= F.lit(threshold_e6) * F.greatest("sz1", "sz2")
         )
     )
-    if intersect == "arrow":
-        # run-amortized Arrow kernel (round-11, guide §4): a local sort
-        # on d1 makes same-d1 candidates contiguous within each task (no
-        # exchange — the (d1, d2) repartition above already placed them),
-        # the kernel builds each d1's sorted set once per run and probes
-        # all its pairs vectorized. Same-session paired A/B at sf0.1
-        # (2.85M post-prefilter pairs): JVM 10.7/11.4 s vs Arrow
-        # 5.9/2.9 s min-of-5, outputs byte-identical; q48/x132/x85/x90
-        # stay hash-green. intersect="jvm" keeps the builtin for
-        # array-shape regressions or Arrow-hostile deployments.
-        scored = (
-            joined.sortWithinPartitions("d1")
-            .mapInArrow(
-                _intersect_run_kernel,
-                f"d1 {dict(joined.dtypes)['d1']}, d2 {dict(joined.dtypes)['d2']},"
-                " n_inter int, sz1 int, sz2 int",
-            )
-        )
-    elif intersect == "jvm":
-        scored = joined.select(
-            "d1",
-            "d2",
-            F.size(F.array_intersect("ss1", "ss2")).alias("n_inter"),
-            "sz1",
-            "sz2",
-        )
-    else:
-        raise ValueError(f"intersect must be arrow|jvm, got {intersect!r}")
+    # run-amortized Arrow kernel (round-11, guide §4): a local sort on d1
+    # makes same-d1 candidates contiguous within each task (no exchange —
+    # the (d1, d2) repartition above already placed them), the kernel
+    # builds each d1's sorted set once per run and probes all its pairs
+    # vectorized. Same-session paired A/B at sf0.1 (2.85M post-prefilter
+    # pairs): per-pair JVM array_intersect 10.7/11.4 s vs Arrow 5.9/2.9 s
+    # min-of-5, outputs byte-identical.
+    scored = joined.sortWithinPartitions("d1").mapInArrow(
+        _intersect_run_kernel,
+        f"d1 {dict(joined.dtypes)['d1']}, d2 {dict(joined.dtypes)['d2']},"
+        " n_inter int, sz1 int, sz2 int",
+    )
     return (
         scored.filter(F.col("n_inter") >= 1)
         .withColumn("jaccard_e6", F.expr(f"n_inter * {SCALE} div (sz1 + sz2 - n_inter)"))

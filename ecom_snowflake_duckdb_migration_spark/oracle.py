@@ -61,10 +61,10 @@ class ParityResult:
         return self.ok
 
 
-def compare_to_oracle(name: str, df: DataFrame, oracle_sql: str, sf_dir: str) -> ParityResult:
-    spark_cols = list(df.columns)
-    spark_rows = [tuple(r) for r in df.collect()]
-
+def _oracle_compare(spark_cols: list[str], spark_rows: list[tuple], oracle_sql: str, sf_dir: str):
+    """Fetch ``oracle_sql`` from DuckDB; returns ``(oracle_cols, n_rows,
+    mismatches)``, where ``mismatches`` (normalized (spark, oracle) row
+    pairs that differ) is None unless columns and row counts agree."""
     con = duckdb_connection(sf_dir)
     try:
         cur = con.execute(oracle_sql)
@@ -72,21 +72,31 @@ def compare_to_oracle(name: str, df: DataFrame, oracle_sql: str, sf_dir: str) ->
         oracle_rows = cur.fetchall()
     finally:
         con.close()
+    mismatches = None
+    if sorted(spark_cols) == sorted(oracle_cols) and len(spark_rows) == len(oracle_rows):
+        s = _norm_rows(spark_cols, spark_rows)
+        o = _norm_rows(oracle_cols, oracle_rows)
+        mismatches = [(a, b) for a, b in zip(s, o) if a != b]
+    return oracle_cols, len(oracle_rows), mismatches
+
+
+def compare_to_oracle(name: str, df: DataFrame, oracle_sql: str, sf_dir: str) -> ParityResult:
+    spark_cols = list(df.columns)
+    spark_rows = [tuple(r) for r in df.collect()]
+    oracle_cols, n_oracle, mismatches = _oracle_compare(spark_cols, spark_rows, oracle_sql, sf_dir)
 
     if sorted(spark_cols) != sorted(oracle_cols):
         return ParityResult(
             name, False, f"columns differ: spark={sorted(spark_cols)} oracle={sorted(oracle_cols)}"
         )
-    if len(spark_rows) != len(oracle_rows):
+    if len(spark_rows) != n_oracle:
         return ParityResult(
-            name, False, f"row count differs: spark={len(spark_rows)} oracle={len(oracle_rows)}"
+            name, False, f"row count differs: spark={len(spark_rows)} oracle={n_oracle}"
         )
-
-    s = _norm_rows(spark_cols, spark_rows)
-    o = _norm_rows(oracle_cols, oracle_rows)
-    if s != o:
-        diffs = [(a, b) for a, b in zip(s, o) if a != b][:3]
-        return ParityResult(name, False, f"values differ; first mismatched (spark, oracle): {diffs}")
+    if mismatches:
+        return ParityResult(
+            name, False, f"values differ; first mismatched (spark, oracle): {mismatches[:3]}"
+        )
     return ParityResult(name, True, f"{len(spark_rows)} rows match")
 
 
@@ -140,21 +150,13 @@ def driver_style_result(name: str, fn, oracle_sql: str | None, spark, sf_dir: st
         if oracle_sql is None:
             row["err"] = "no_oracle"
             return row
-        con = duckdb_connection(sf_dir)
-        try:
-            cur = con.execute(oracle_sql)
-            oracle_cols = [d[0] for d in cur.description]
-            oracle_rows = cur.fetchall()
-        finally:
-            con.close()
-        row["oracle_rows"] = len(oracle_rows)
-        row["rows_match"] = len(spark_rows) == len(oracle_rows)
-        row["schema_match"] = sorted(spark_cols) == sorted(oracle_cols)
-        row["hash_match"] = (
-            row["rows_match"]
-            and row["schema_match"]
-            and _norm_rows(spark_cols, spark_rows) == _norm_rows(oracle_cols, oracle_rows)
+        oracle_cols, n_oracle, mismatches = _oracle_compare(
+            spark_cols, spark_rows, oracle_sql, sf_dir
         )
+        row["oracle_rows"] = n_oracle
+        row["rows_match"] = len(spark_rows) == n_oracle
+        row["schema_match"] = sorted(spark_cols) == sorted(oracle_cols)
+        row["hash_match"] = mismatches == []
     except Exception as e:  # keep sweeping; the row records the failure
         row["err"] = f"{type(e).__name__}: {e}"[:300]
     return row

@@ -6,8 +6,9 @@ KB-scale files; every later scan then pays per-file open + footer reads
 and the driver pays the listing. ``compact_parquet`` rewrites a directory
 to ``ceil(total_bytes / target_file_bytes)`` files — optionally
 range-clustered on sort keys so row-group min/max pruning works after the
-rewrite — using the sketch_store crash-safe swap (write to a ``.tmp``
-sibling, two renames, recovery preamble; sources/sketch_store.py:84).
+rewrite — using the package's one crash-safe directory swap,
+``writers.replace_dir`` (write to a hidden ``.{name}.tmp`` sibling, two
+checked renames, recovery preamble).
 
 Filesystem access goes through the session's Hadoop FileSystem API, so
 the same code serves file://, hdfs:// and s3a:// (on object stores a
@@ -21,6 +22,8 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .writers import replace_dir, restore_dir
 
 
 def _fs(spark: SparkSession, path: str):
@@ -45,22 +48,6 @@ def parquet_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     return n, total
 
 
-def _scratch_paths(jvm, path: str):
-    """HIDDEN scratch siblings for the swap: ``parent/.{name}.tmp`` and
-    ``parent/.{name}.old``. The leading dot matters when the compacted
-    directory is a LEAF PARTITION (``store/cell=3``): Spark's partition
-    discovery skips dot/underscore-prefixed paths, so a concurrent
-    reader of the store ROOT never lists the scratch dirs as bogus
-    partition values (``cell=3.old`` would otherwise parse as a string
-    partition mid-swap) — probes keep reading committed files throughout
-    a compaction."""
-    base = path.rstrip("/")
-    parent, _, name = base.rpartition("/")
-    P = jvm.org.apache.hadoop.fs.Path
-    prefix = f"{parent}/" if parent else ""
-    return P(f"{prefix}.{name}.old"), P(f"{prefix}.{name}.tmp")
-
-
 def compact_parquet(
     spark: SparkSession,
     path: str,
@@ -77,23 +64,15 @@ def compact_parquet(
     cluster_by_zorder single-key analogue; use Z-order for 2-D).
 
     Output sizing uses the INPUT's compressed bytes — same codec in and
-    out, so it lands near the target without a second pass. The swap is
-    crash-safe, not atomic: a reader can hit ENOENT for the instant
-    between the two renames and should retry; a crash leaves a complete
-    ``.old`` or ``.tmp``, never a torn directory, and the recovery
-    preamble restores ``.old`` on the next call.
+    out, so it lands near the target without a second pass. The rewrite
+    goes through ``writers.replace_dir``: crash-safe, not atomic (see
+    there), and a crash inside an earlier call's swap is recovered first.
     """
     if target_file_bytes <= 0:
         raise ValueError("target_file_bytes must be positive")
-    fs, hpath, jvm = _fs(spark, path)
-    old, tmp = _scratch_paths(jvm, path)
-
-    # Recovery: a crash between the swap renames leaves the only complete
-    # directory at '.old' and nothing at path — restore before touching
-    # anything (same contract as sketch_store.merge_into).
-    if not fs.exists(hpath) and fs.exists(old):
-        if not fs.rename(old, hpath):
-            raise OSError(f"recovery rename {old} -> {path} failed")
+    fs, hpath, _ = _fs(spark, path)
+    # recover before the guard and the stats below look at path
+    restore_dir(spark, path)
 
     # Hive-partitioned layouts are refused, not silently flattened: the
     # rewrite would demote partition directories to plain columns in a
@@ -124,27 +103,12 @@ def compact_parquet(
         )
     else:
         shaped = df.repartition(n_out)
-    if fs.exists(tmp):
-        fs.delete(tmp, True)
-    shaped.write.mode("overwrite").parquet(str(tmp))
-    rows = spark.read.parquet(str(tmp)).count()
 
-    # Hadoop rename() reports failure by RETURNING FALSE, not raising —
-    # every step is checked so a failed (not crashed) rename aborts
-    # before the delete can remove the only surviving copy. Rename onto
-    # an existing directory would also nest tmp INSIDE path; the checks
-    # make that impossible to reach.
-    if fs.exists(old):
-        fs.delete(old, True)
-    if not fs.rename(hpath, old):
-        raise OSError(f"swap aborted: rename {path} -> {old} failed; data intact")
-    if not fs.rename(tmp, hpath):
-        # put the original back before surfacing the failure
-        fs.rename(old, hpath)
-        raise OSError(
-            f"swap aborted: rename {tmp} -> {path} failed; original restored"
-        )
-    fs.delete(old, True)
+    def fill(tmp: str) -> int:
+        shaped.write.mode("overwrite").parquet(tmp)
+        return spark.read.parquet(tmp).count()
+
+    rows = replace_dir(spark, path, fill)
     files_after, bytes_after = parquet_file_stats(spark, path)
     return {
         "files_before": files_before,
@@ -171,7 +135,7 @@ def compact_cell_store(
     of open overhead alone on a slivered store).
 
     Each leaf compacts independently through :func:`compact_parquet`'s
-    crash-safe two-rename swap; the scratch directories are HIDDEN
+    crash-safe ``replace_dir`` swap; the scratch directories are HIDDEN
     siblings (``.cell=3.tmp`` / ``.cell=3.old``) that partition
     discovery skips, so CONCURRENT PROBES of the store root keep reading
     committed files mid-compaction — a probe never sees a half-written
@@ -270,18 +234,17 @@ def consolidate_batch_store(
     a replay overwrite, and ``read_batch_store``'s current-batch
     exclusion (!= N with N > K) never excludes consolidated rows.
 
-    Crash safety (crash-safe, not atomic — the module's standard
-    contract): the merged data is staged in a hidden ``.batch_id=K.tmp``
-    sibling, swapped in with the two checked renames, then a root-level
-    ``_consolidated_upto`` marker (= K) is written BEFORE the stale
-    ``batch_id<K`` directories are deleted. A crash between the swap and
-    the marker leaves duplicate rows visible for that window only; a
-    crash between the marker and the deletions leaves stale directories
-    that every reader already ignores (``read_batch_store`` filters
-    ``batch_id < floor``) and the next call garbage-collects. The
-    recovery preamble restores a ``.old`` orphan exactly like
-    :func:`compact_parquet`. The merge itself reads above the previous
-    floor, so stale pre-floor directories are never double-counted.
+    Crash safety (``writers.replace_dir``'s contract): the merged rows
+    replace ``batch_id=K`` with a ``_consolidated_upto`` sidecar (= K)
+    inside, published by the same rename; then the root marker (= K) is
+    written BEFORE the stale ``batch_id<K`` directories are deleted. A
+    crash before the root marker shows duplicate rows until the next
+    call, which restores the marker from the sidecar and deletes the
+    pre-K directories instead of merging them again. A crash before the
+    deletions leaves directories every reader ignores
+    (``read_batch_store`` filters ``batch_id < floor``) and the next call
+    garbage-collects. A crash inside the swap leaves a
+    ``.batch_id=K.old`` orphan, restored before the batches are listed.
 
     Returns ``{batches_before, batches_after, files_before, files_after,
     rows, upto}``; a store with fewer than ``min_batches`` committed
@@ -295,16 +258,12 @@ def consolidate_batch_store(
     root = str(hpath).rstrip("/")
     P = jvm.org.apache.hadoop.fs.Path
 
-    # recovery preamble: a crash between the two swap renames leaves the
-    # only complete copy of the target partition at '.batch_id=K.old'
+    # recovery: a crash inside replace_dir's swap leaves the target
+    # partition's only complete copy at the hidden '.batch_id=K.old'
     for st in fs.listStatus(hpath):
         name = st.getPath().getName()
         if name.startswith(".batch_id=") and name.endswith(".old"):
-            visible = P(f"{root}/{name[1:-len('.old')]}")
-            if fs.exists(visible):
-                fs.delete(st.getPath(), True)  # crash after swap: scrap .old
-            elif not fs.rename(st.getPath(), visible):
-                raise OSError(f"recovery rename {name} failed")
+            restore_dir(spark, f"{root}/{name[1:-len('.old')]}")
 
     floor = read_consolidated_floor(spark, path)
     ids = sorted(
@@ -313,6 +272,16 @@ def consolidate_batch_store(
         if st.isDirectory()
         and st.getPath().getName().startswith("batch_id=")
     )
+    # recovery: a crash before the root marker write leaves the floor only
+    # in the merged partition's sidecar; restore the marker from it
+    merged_ids = [
+        i for i in ids
+        if (floor is None or i > floor)
+        and fs.exists(P(f"{root}/batch_id={i}/{CONSOLIDATED_MARKER}"))
+    ]
+    if merged_ids:
+        floor = max(merged_ids)
+        _write_consolidated_marker(fs, jvm, root, floor)
     live = [i for i in ids if floor is None or i >= floor]
     stale = [i for i in ids if floor is not None and i < floor]
     out = {
@@ -335,29 +304,20 @@ def consolidate_batch_store(
             .drop("batch_id")
             .repartition(n_out)
         )
-        target = P(f"{root}/batch_id={upto}")
-        old = P(f"{root}/.batch_id={upto}.old")
-        tmp = P(f"{root}/.batch_id={upto}.tmp")
-        if fs.exists(tmp):
-            fs.delete(tmp, True)
-        merged.write.mode("overwrite").parquet(str(tmp))
-        rows = spark.read.parquet(str(tmp)).count()
-        if fs.exists(old):
-            fs.delete(old, True)
-        if not fs.rename(target, old):
-            raise OSError(f"swap aborted: rename batch_id={upto} -> .old failed")
-        if not fs.rename(tmp, target):
-            fs.rename(old, target)
-            raise OSError(
-                f"swap aborted: rename .tmp -> batch_id={upto} failed; restored"
-            )
+        target = f"{root}/batch_id={upto}"
+
+        def fill(tmp: str) -> int:
+            merged.write.mode("overwrite").parquet(tmp)
+            _write_consolidated_marker(fs, jvm, tmp, upto)  # the sidecar
+            return spark.read.parquet(tmp).count()
+
+        rows = replace_dir(spark, target, fill)
         _write_consolidated_marker(fs, jvm, root, upto)
-        fs.delete(old, True)
         stale = sorted(set(stale) | {i for i in live if i < upto})
         out.update(
             batches_after=1,
             files_before=files_before,
-            files_after=parquet_file_stats(spark, str(target))[0],
+            files_after=parquet_file_stats(spark, target)[0],
             rows=rows,
             upto=upto,
         )

@@ -25,6 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .writers import replace_dir
+
 _META_NAME = "_sketch_meta.json"
 
 # kind -> (merge fn over a unioned frame, required meta params)
@@ -53,9 +55,16 @@ def write_sketch(df: DataFrame, path: str, kind: str, **params) -> None:
     missing = [p for p in required if p not in params]
     if missing:
         raise ValueError(f"{kind} sketch requires params {missing}")
-    df.write.mode("overwrite").parquet(path)
-    with open(_meta_path(path), "w") as f:
-        json.dump({"kind": kind, "params": params}, f)
+    replace_dir(df.sparkSession, path, lambda tmp: _write_with_sidecar(df, tmp, kind, params))
+
+
+def _write_with_sidecar(df: DataFrame, tmp: str, kind: str, params: dict) -> None:
+    # The sidecar goes into the scratch directory with the parquet, so the
+    # swap's rename publishes both together: no reader window sees one
+    # without the other. (Spark ignores _-prefixed files in parquet dirs.)
+    df.write.mode("overwrite").parquet(tmp)
+    with open(_meta_path(tmp), "w") as f:
+        json.dump({"kind": kind, "params": dict(params)}, f)
 
 
 def read_sketch(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
@@ -86,53 +95,26 @@ def merge_into(spark: SparkSession, path: str, new_sketch: DataFrame, kind: str,
 
     Refuses kind/param mismatches (merging an HLL(p=9) into an HLL(p=10)
     or a (d,w)-mismatched count-min is algebraically meaningless). First
-    call creates the store. The swap is write-to-sibling then rename: the
-    sidecar is written INTO the sibling before any rename, so a reader
-    never sees a parquet dir without its metadata, and every directory on
-    disk is complete at all times. The swap itself is two renames (old
-    aside, sibling in) — not a single atomic exchange, so a concurrent
-    reader can hit ENOENT in that instant and should retry; a crash leaves
-    a complete ``.old`` or ``.tmp`` to recover from, never a torn store.
+    call creates the store. The rewrite goes through
+    ``writers.replace_dir``: its recovery preamble runs first, so a crash
+    in an earlier merge's swap restores the accumulated history instead of
+    reinitializing the store, and the sidecar is written into the scratch
+    directory so the same rename publishes parquet and metadata together.
     """
-    import shutil
 
-    # Crash recovery BEFORE anything else: a crash between the two swap
-    # renames leaves the only complete store at '.old' and nothing at
-    # ``path``. Without this, the next merge would take the first-write
-    # branch (no sidecar at path) and then rmtree '.old' — silently
-    # discarding the entire accumulated history.
-    old = path.rstrip("/") + ".old"
-    if not os.path.exists(_meta_path(path)) and os.path.exists(
-        os.path.join(old, _META_NAME)
-    ):
-        if os.path.isdir(path):  # torn partial at path: the .old is older
-            shutil.rmtree(path)  # but complete — prefer complete
-        os.rename(old, path)
-
-    if os.path.exists(_meta_path(path)):
-        prev, meta = read_sketch(spark, path)
-        if meta["kind"] != kind or {k: meta["params"].get(k) for k in params} != {
-            k: params[k] for k in params
-        }:
-            raise ValueError(
-                f"sketch at {path} is {meta['kind']}({meta['params']}); "
-                f"refusing to merge {kind}({params})"
-            )
-        merged = merge_sketches(prev, new_sketch, kind, **params)
-    else:
+    def fill(tmp: str) -> None:
         merged = new_sketch
-    tmp = path.rstrip("/") + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    # Sidecar goes into the sibling BEFORE the swap: the rename then moves
-    # parquet + metadata together, so no reader window sees one without
-    # the other. (Spark ignores _-prefixed files inside parquet dirs.)
-    with open(_meta_path(tmp), "w") as f:
-        json.dump({"kind": kind, "params": dict(params)}, f)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    if os.path.isdir(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+        if os.path.exists(_meta_path(path)):
+            prev, meta = read_sketch(spark, path)
+            if meta["kind"] != kind or {k: meta["params"].get(k) for k in params} != {
+                k: params[k] for k in params
+            }:
+                raise ValueError(
+                    f"sketch at {path} is {meta['kind']}({meta['params']}); "
+                    f"refusing to merge {kind}({params})"
+                )
+            merged = merge_sketches(prev, new_sketch, kind, **params)
+        _write_with_sidecar(merged, tmp, kind, params)
+
+    replace_dir(spark, path, fill)
     return spark.read.parquet(path)

@@ -15,13 +15,15 @@ Scale notes: the delete+insert upsert is expressed as a single left-anti join
 plus union — one shuffle on the key, broadcast when the batch is small (the
 daily-delta case, which AQE detects at runtime). For transactional storage the
 same semantics map 1:1 to Delta ``MERGE INTO``; the parquet path here rewrites
-the target atomically via a staging directory.
+the target through the crash-safe directory swap ``writers.replace_dir``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .writers import replace_dir
 
 
 def dedup_keep_newest(
@@ -70,24 +72,22 @@ def upsert_delete_insert(
 def upsert_parquet(
     spark, target_path: str, batch: DataFrame, keys: list[str]
 ) -> None:
-    """S8 against parquet storage: read-modify-write with a staging dir so the
-    swap is atomic for concurrent *new* reads. DataFrames created against the
-    old snapshot must be re-read after the swap — overwrite-in-place cannot
-    give snapshot isolation; Delta MERGE replaces this wholesale when a
-    transactional format is available."""
+    """S8 against parquet storage: read-modify-write through
+    :func:`.writers.replace_dir`, so a crash at any point leaves either the
+    old or the new table, never a missing one. New reads after the swap see
+    the new table; DataFrames created against the old snapshot must be
+    re-read — overwrite-in-place cannot give snapshot isolation; Delta MERGE
+    replaces this wholesale when a transactional format is available."""
     import os
-    import shutil
 
-    if os.path.exists(target_path):
-        target = spark.read.parquet(target_path)
-        merged = upsert_delete_insert(target, batch, keys)
-    else:
+    def fill(tmp: str) -> None:
         merged = batch
-    staging = target_path.rstrip("/") + "._staging"
-    merged.write.mode("overwrite").parquet(staging)
-    if os.path.exists(target_path):
-        shutil.rmtree(target_path)
-    os.rename(staging, target_path)
+        if os.path.exists(target_path):
+            target = spark.read.parquet(target_path)
+            merged = upsert_delete_insert(target, batch, keys)
+        merged.write.mode("overwrite").parquet(tmp)
+
+    replace_dir(spark, target_path, fill)
     # Drop any cached file listings/plans pointing at the replaced snapshot.
     spark.catalog.refreshByPath(target_path)
 

@@ -66,6 +66,60 @@ def overwrite_parquet(df: DataFrame, path: str) -> DataFrame:
     return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
+def _swap_paths(spark: SparkSession, path: str):
+    """``(fs, path, old, tmp)`` as Hadoop objects (file://, hdfs://, s3a://).
+    The scratch siblings ``.{name}.old``/``.{name}.tmp`` are hidden, so
+    partition discovery over a parent store never lists them."""
+    P = spark._jvm.org.apache.hadoop.fs.Path
+    parent, _, name = path.rstrip("/").rpartition("/")
+    prefix = f"{parent}/" if parent else ""
+    hpath = P(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, hpath, P(f"{prefix}.{name}.old"), P(f"{prefix}.{name}.tmp")
+
+
+def restore_dir(spark: SparkSession, path: str) -> None:
+    """Recovery preamble of :func:`replace_dir`: a ``.old`` with nothing at
+    ``path`` is the only complete copy left by a crash between the renames,
+    so move it back; a ``.old`` next to ``path`` is stale, so delete it."""
+    fs, hpath, old, _ = _swap_paths(spark, path)
+    if not fs.exists(old):
+        return
+    if fs.exists(hpath):
+        fs.delete(old, True)
+    elif not fs.rename(old, hpath):
+        raise OSError(f"recovery rename {old} -> {path} failed")
+
+
+def replace_dir(spark: SparkSession, path: str, fill):
+    """Replace (or create) the directory ``path`` with what ``fill(tmp)``
+    writes into its hidden ``tmp`` sibling; returns ``fill``'s result.
+
+    ``fill`` runs after :func:`restore_dir`, so it may read the last
+    complete ``path``; sidecars it writes into ``tmp`` are published by the
+    same rename as the data. The swap is two checked renames (``path`` to
+    ``.old``, ``tmp`` to ``path``), then ``.old`` is deleted: crash-safe,
+    not atomic — a reader can hit ENOENT between the renames and should
+    retry, and a crash leaves a complete ``.old`` or ``.tmp``, never a torn
+    directory. Runs no Spark action beyond ``fill``'s."""
+    restore_dir(spark, path)
+    fs, hpath, old, tmp = _swap_paths(spark, path)
+    if fs.exists(tmp):
+        fs.delete(tmp, True)
+    result = fill(str(tmp))
+    # Hadoop rename() returns False instead of raising: check each step so
+    # a failed rename aborts before the delete can remove the only copy.
+    had_path = fs.exists(hpath)
+    if had_path and not fs.rename(hpath, old):
+        raise OSError(f"swap aborted: rename {path} -> {old} failed; data intact")
+    if not fs.rename(tmp, hpath):
+        if had_path:
+            fs.rename(old, hpath)
+        raise OSError(f"swap aborted: rename {tmp} -> {path} failed; original restored")
+    fs.delete(old, True)
+    return result
+
+
 def write_envelope_json(
     df: DataFrame,
     path: str,

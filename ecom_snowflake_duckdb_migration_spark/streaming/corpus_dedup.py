@@ -86,8 +86,10 @@ def streaming_corpus_dedup(
     per micro-batch under the docs store; fold them periodically (stream
     stopped or between batches) with
     ``sources.compaction.consolidate_batch_store(spark, <docs path>)`` —
-    the read path above honors its ``_consolidated_upto`` floor marker,
-    so a consolidation crash never re-emits duplicate history.
+    the read path above honors its ``_consolidated_upto`` floor marker.
+    After a consolidation crash, rerun it before restarting the stream:
+    a crash before the marker write shows duplicate history until the
+    next call restores the marker.
     """
     params = dict(k=k, num_hashes=num_hashes, bands=bands, hash_fn=hash_fn)
     bands_path = os.path.join(store_dir, "bands")

@@ -255,7 +255,7 @@ def test_sketch_store_crash_recovery(spark, sf_dir, tmp_path):
     baseline = sorted(r.h for r in store.read_sketch(spark, path)[0].collect())
 
     # simulate the torn window: store renamed aside, nothing at path
-    shutil.move(path, path + ".old")
+    shutil.move(path, str(tmp_path / ".kmv.old"))
     assert not os.path.exists(path)
 
     second = sk.kmv_sketch(df.limit(150), "o_orderkey", k=64)

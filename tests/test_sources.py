@@ -120,6 +120,41 @@ def test_upsert_parquet_roundtrip(spark, tmp_path):
     assert got == {1: "a", 2: "B", 3: "c"}
 
 
+def _upsert_case(spark, path, rows):
+    batch = spark.createDataFrame(rows, "id long, v string")
+    sources.upsert_parquet(spark, path, batch, ["id"])
+    return {(r.id, r.v) for r in spark.read.parquet(path).collect()}
+
+
+def _rollup_case(spark, path, rows):
+    from ecom_snowflake_duckdb_migration_spark.operators.rollup import (
+        read_rollup,
+        refresh_rollup,
+    )
+
+    ts = [(i, v, datetime.datetime(2026, 2, i % 2 + 1, 9)) for i, v in rows]
+    batch = spark.createDataFrame(ts, "event_id long, event_type string, ts timestamp")
+    refresh_rollup(spark, path, batch.withColumn("value", F.lit(1.0)))
+    return {(str(r.bucket), r.event_type, r.n_rows) for r in read_rollup(spark, path).collect()}
+
+
+@pytest.mark.parametrize("write", [_upsert_case, _rollup_case], ids=["upsert", "rollup"])
+def test_rewrite_recovers_from_crash_between_renames(spark, tmp_path, write):
+    """A crash between replace_dir's two renames leaves the table only at
+    the hidden '.tbl.old' sibling; the next write restores it and keeps
+    history instead of starting from the new batch alone."""
+    import shutil
+
+    path = str(tmp_path / "tbl")
+    first = [(1, "a"), (2, "b"), (3, "c")]
+    write(spark, path, first)
+    shutil.move(path, str(tmp_path / ".tbl.old"))  # crash after rename 1
+    got = write(spark, path, [(4, "d")])
+    expect = write(spark, str(tmp_path / "ref"), first + [(4, "d")])
+    assert got == expect
+    assert sorted(os.listdir(tmp_path)) == ["ref", "tbl"]  # no scratch left
+
+
 def test_dedup_keep_newest(spark):
     df = spark.createDataFrame(
         [(1, "old", 1), (1, "new", 2), (2, "only", 1)], ["id", "v", "loaded_at"]
@@ -748,6 +783,44 @@ def test_consolidate_batch_store_crash_windows(spark, tmp_path):
         for r in read_batch_store(spark, root, batch_id=99).collect()
     }
     assert final == expect | {(50, "b5"), (60, "b6")}
+
+
+def test_consolidate_batch_store_crash_before_root_marker(spark, tmp_path):
+    """Crash after the swap published the merged batch_id=K (rows plus its
+    floor sidecar) but before the root marker write: the next call must
+    restore the marker and garbage-collect the pre-K batches, not merge
+    them into batch_id=K a second time."""
+    import shutil
+
+    from ecom_snowflake_duckdb_migration_spark.sources import (
+        consolidate_batch_store,
+        read_consolidated_floor,
+    )
+    from ecom_snowflake_duckdb_migration_spark.streaming.store_io import (
+        read_batch_store,
+    )
+
+    root = str(tmp_path / "store")
+    batches = {b: [(b * 10 + i, f"t{b}-{i}") for i in range(3)] for b in range(3)}
+    _write_batch_store(spark, root, batches)
+    expect = sorted(r for rows in batches.values() for r in rows)
+    # the state that crash leaves: all 9 rows under batch_id=2 with the
+    # sidecar, the pre-swap batch_id=2 possibly still at '.old', the
+    # pre-floor batches still present, and no root marker
+    shutil.move(f"{root}/batch_id=2", f"{root}/.batch_id=2.old")
+    spark.createDataFrame(expect, "doc_id long, text string").write.parquet(
+        f"{root}/batch_id=2"
+    )
+    with open(f"{root}/batch_id=2/_consolidated_upto", "w") as f:
+        f.write("2\n")
+    consolidate_batch_store(spark, root)
+    got = sorted(
+        (r.doc_id, r.text)
+        for r in read_batch_store(spark, root, batch_id=99).collect()
+    )
+    assert len(got) == 9 and got == expect
+    assert read_consolidated_floor(spark, root) == 2
+    assert sorted(d for d in os.listdir(root) if "batch_id" in d) == ["batch_id=2"]
 
 
 def test_consolidate_batch_store_restores_old_orphan(spark, tmp_path):
