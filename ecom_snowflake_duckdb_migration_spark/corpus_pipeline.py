@@ -35,9 +35,9 @@ filters, hash dedup, banded near-dup, bucketed cumsums — no n^2, no
 global single-reducer window); the write is one range exchange per
 split. The manifest is a driver-side dict of per-split scalars.
 
-Reruns are idempotent: every split directory and the manifest are
-overwritten atomically per-directory (Spark overwrite mode), and every
-stage is a pure function of (input rows, seed, parameters).
+Reruns are idempotent: every split directory is overwritten (Spark
+overwrite mode), the manifest is published whole (``writers.publish_text``),
+and every stage is a pure function of (input rows, seed, parameters).
 """
 
 from __future__ import annotations
@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 from .operators import sampling as sp
 from .operators import text as tx
 from .session import run_concurrently
-from .sources.writers import overwrite_parquet
+from .sources.writers import overwrite_parquet, publish_text
 
 DEFAULT_SPLITS_E6 = {"train": 900_000, "val": 50_000, "test": 50_000}
 
@@ -191,25 +191,9 @@ def corpus_run(
         "report_after": report_after,
     }
 
-    # manifest through the Hadoop FileSystem API (same resolution as the
-    # shard writes above), staged + renamed so readers never see a torn
-    # file — works for file://, hdfs:// and s3a:// out_dirs alike
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    root = P(out_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(root)
-    tmp = P(f"{out_dir.rstrip('/')}/._manifest.json.tmp")
-    final = P(f"{out_dir.rstrip('/')}/_manifest.json")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(
-            json.dumps(manifest, indent=1, default=int).encode("utf-8")
-        ))
-    finally:
-        stream.close()
-    if fs.exists(final):
-        fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        raise OSError(f"manifest rename failed under {out_dir}")
+    publish_text(
+        spark,
+        f"{out_dir.rstrip('/')}/_manifest.json",
+        json.dumps(manifest, indent=1, default=int),
+    )
     return manifest

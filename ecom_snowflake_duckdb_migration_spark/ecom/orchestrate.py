@@ -73,7 +73,6 @@ def daily_run(
     day: _dt.date | None = None,
     n_customers: int = 200,
     incremental: bool = False,
-    land_as_envelopes: bool = True,
     transactional: bool = False,
 ) -> DailyRunResult:
     """One scheduled pipeline run (generate -> land -> ingest -> transform ->
@@ -92,19 +91,16 @@ def daily_run(
     raw_counts: dict[str, int] = {}
     raw_read: dict[str, DataFrame] = {}
     for table, df in feed.items():
-        if land_as_envelopes:
-            landing = f"{warehouse_dir}/landing/{day.isoformat()}/{table}"
-            write_envelope_json(
-                df, landing, table, run_ts=_dt.datetime.combine(day, _dt.time())
-            )
-            landed = read_envelope_json(
-                spark,
-                landing + "/*.txt",
-                data_schema=RAW_SCHEMAS[table],
-                validate_count=True,
-            )
-        else:
-            landed = df
+        landing = f"{warehouse_dir}/landing/{day.isoformat()}/{table}"
+        write_envelope_json(
+            df, landing, table, run_ts=_dt.datetime.combine(day, _dt.time())
+        )
+        landed = read_envelope_json(
+            spark,
+            landing + "/*.txt",
+            data_schema=RAW_SCHEMAS[table],
+            validate_count=True,
+        )
         deduped = dedup_keep_newest(landed, RAW_PRIMARY_KEYS[table], "loaded_at")
         target = f"{warehouse_dir}/ecom_raw/{table}"
         if transactional:

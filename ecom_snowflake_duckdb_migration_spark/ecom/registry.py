@@ -27,7 +27,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.writers import overwrite_parquet
+from ..sources.writers import exists, overwrite_parquet
 from . import intermediate as I
 from . import marts as M
 from .staging import RAW_FOR_STAGING, STAGING_SPECS, stage
@@ -177,12 +177,10 @@ class PipelineRunner:
 
     def _materialize_incremental(self, spec: ModelSpec, df: DataFrame, path: str) -> DataFrame:
         """S11 for real: append only rows past the sink's high-water mark."""
-        import os
-
         from ..sources.upsert import incremental_filter
 
         ts_col = INCREMENTAL_FILTERS[spec.name]
-        if os.path.exists(path):
+        if exists(self.spark, path):
             sink = self.spark.read.parquet(path)
             fresh = incremental_filter(df, sink.select(ts_col), ts_col)
             fresh.write.mode("append").parquet(path)

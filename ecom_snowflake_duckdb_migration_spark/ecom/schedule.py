@@ -24,7 +24,8 @@ Everything is pure datetime arithmetic — deterministic, driver-side, tested
 without a Spark session. ``Scheduler`` persists its high-water mark as a JSON
 sidecar in the warehouse dir, so a restarted process resumes exactly where it
 stopped (the Airflow metadata-DB role, reduced to the one fact this pipeline
-needs).
+needs). The state file is driver-local (``os``/``open``), not a durable
+store: it belongs to the scheduler process, not to the warehouse data.
 """
 
 from __future__ import annotations

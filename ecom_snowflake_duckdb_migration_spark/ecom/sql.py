@@ -11,10 +11,9 @@ work unchanged.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.writers import list_names
 from .registry import LAYERS, MODELS, PipelineRunner
 
 
@@ -25,14 +24,11 @@ def open_warehouse(spark: SparkSession, warehouse_dir: str) -> list[str]:
     temp views cannot contain dots). Returns the registered bare names."""
     registered = []
     for layer in ("ecom_raw",) + LAYERS:
-        layer_dir = os.path.join(warehouse_dir, layer)
-        if not os.path.isdir(layer_dir):
-            continue
-        for name in sorted(os.listdir(layer_dir)):
-            path = os.path.join(layer_dir, name)
-            if not os.path.isdir(path):
-                continue
-            df = spark.read.parquet(path)
+        layer_dir = f"{warehouse_dir.rstrip('/')}/{layer}"
+        for name in sorted(list_names(spark, layer_dir) or []):
+            if name.startswith((".", "_")):
+                continue  # replace_dir scratch siblings, checksums, markers
+            df = spark.read.parquet(f"{layer_dir}/{name}")
             df.createOrReplaceTempView(f"{layer}_{name}")
             df.createOrReplaceTempView(name)
             registered.append(name)

@@ -25,6 +25,13 @@ def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
+def quote_ident(name: str) -> str:
+    """Backtick-quote an identifier for parsed SQL (``selectExpr``, ``F.expr``,
+    DDL), doubling embedded backticks. Unquoted, a reserved word fails to
+    parse and a column named 'a-b' silently parses as subtraction."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def surrogate_key(*cols: Column | str) -> Column:
     """dbt_utils.generate_surrogate_key parity: md5 of '-'-joined fields,
     each NULL-coalesced to '' after a varchar cast."""

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..sources.writers import replace_dir
+from ..sources.writers import exists, replace_dir
 
 BP = 10_000
 
@@ -47,14 +47,12 @@ def refresh_rollup(
 ) -> None:
     """Merge one batch into the materialized rollup at ``rollup_path``,
     rewriting it through the crash-safe ``sources.writers.replace_dir``."""
-    import os
-
     key_cols = key_cols or ["event_type"]
     new_parts = _partials(batch, ts_col, key_cols, value_col)
 
     def fill(tmp: str) -> None:
         merged = new_parts
-        if os.path.exists(rollup_path):
+        if exists(spark, rollup_path):
             existing = spark.read.parquet(rollup_path)
             touched = new_parts.select("bucket").distinct()
             # merge only the touched buckets; untouched state is carried through

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.core import quote_ident
+
 _HEX_SPACE = 16 ** 8  # 8 hex chars = 32 bits of the hash
 
 
@@ -338,9 +340,7 @@ def token_budget_select(
     # in the lower bucket). Built as ONE parsed expression — the Column-API
     # chain over 63 cuts measured ~0.4 s of py4j per call (round-10).
     bucket_sql = "0"
-    # backtick the interpolated name (round-11, advisor finding): a
-    # score column named like a reserved word would otherwise mis-parse
-    sc = "`" + score_col.replace("`", "``") + "`"
+    sc = quote_ident(score_col)
     for c in sorted(set(cuts)):
         bucket_sql = (
             f"({bucket_sql} + CASE WHEN {sc} >"
@@ -484,9 +484,9 @@ def _bucket_expr(value_col: str, cuts, descending: bool) -> Column:
         return F.lit(0)
     arr = ",".join(repr(c) + "D" for c in cs)
     cmp = (
-        f"IF(`{value_col}` > x, 0, 1)"
+        f"IF({quote_ident(value_col)} > x, 0, 1)"
         if descending
-        else f"IF(`{value_col}` > x, 1, 0)"
+        else f"IF({quote_ident(value_col)} > x, 1, 0)"
     )
     return F.expr(f"aggregate(array({arr}), 0, (acc, x) -> acc + {cmp})")
 
@@ -499,7 +499,7 @@ def _offset_expr(offsets: dict, bkt_col: str) -> Column:
     if not offsets:
         return F.lit(0).cast("long")
     entries = ",".join(f"{int(k)},{int(v)}L" for k, v in offsets.items())
-    return F.expr(f"coalesce(element_at(map({entries}), `{bkt_col}`), 0L)")
+    return F.expr(f"coalesce(element_at(map({entries}), {quote_ident(bkt_col)}), 0L)")
 
 
 def exact_ntile_bucketed_multi(
@@ -587,7 +587,7 @@ def _prebucket_sql(value_col: str, core: int, tail_res: int, descending: bool) -
     log2 are monotone non-strict; equal values always share a prebucket),
     so exact ntile semantics survive any coarsening of it. ``descending``
     negates the id so prebucket ascending == requested order."""
-    v = f"`{value_col}`"
+    v = quote_ident(value_col)
     p = (
         f"CASE WHEN {v} > {core} THEN {core} + CAST(floor(log2(CAST({v} AS DOUBLE) / {core}.0D) * {tail_res}) AS INT) "
         f"WHEN {v} < -{core} THEN -{core} - CAST(floor(log2(CAST(-{v} AS DOUBLE) / {core}.0D) * {tail_res}) AS INT) "
@@ -785,7 +785,7 @@ def _offset_map_expr(offsets: dict, key_col: str) -> Column:
     """``map(pb -> rows_before)`` literal lookup (py4j-batched like
     :func:`_offset_expr`; BIGINT values for exact ranks past 2^31)."""
     entries = ",".join(f"{int(k)},{int(v)}L" for k, v in offsets.items())
-    return F.expr(f"coalesce(element_at(map({entries}), `{key_col}`), 0L)")
+    return F.expr(f"coalesce(element_at(map({entries}), {quote_ident(key_col)}), 0L)")
 
 
 def gumbel_topk_sample(

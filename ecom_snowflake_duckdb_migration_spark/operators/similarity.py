@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.core import quote_ident
+
 # method="auto" keeps codebooks up to EXPR_MAX_CELLS cells (and PQ tables up
 # to EXPR_MAX_PQ_TABLE entries) on the expression fold the DuckDB oracles
 # compute; larger ones go to the Arrow/numpy kernels. Pinned by
@@ -77,7 +79,7 @@ def _ident_sql(s: str) -> str:
     Non-identifier strings pass through untouched as SQL fragments (the
     documented dual use of the string inputs); column names that need
     quoting beyond this (hyphens, spaces) must be passed as Columns."""
-    return f"`{s}`" if _SAFE_IDENT.fullmatch(s) else s
+    return quote_ident(s) if _SAFE_IDENT.fullmatch(s) else s
 
 
 def _dlit_sql(v: float) -> str:

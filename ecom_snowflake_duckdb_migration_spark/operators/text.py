@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..functions.core import quote_ident
+
 SCALE = 1_000_000  # fixed-point scale for engine-stable ratios
 
 # Tiny per-language stopword probes for the n-gram/stopword language ID
@@ -232,15 +234,6 @@ def _ws_trim(c: Column) -> Column:
     return F.regexp_replace(F.regexp_replace(c, r"^\s+", ""), r"\s+$", "")
 
 
-def _bt(name: str) -> str:
-    """Backtick-quote an identifier for interpolation into parsed SQL
-    (round-11, advisor finding): a name that needs quoting (hyphens,
-    spaces, reserved words) would otherwise fail to parse or silently
-    parse as a different expression — e.g. a column named 'a-b' parses
-    as subtraction."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def gopher_quality_stats(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -276,7 +269,7 @@ def gopher_quality_stats(
     ~1 ms; trees are node-identical, pinned by the pure-Python
     reference parity test and the catalog oracle).
     """
-    t = f"coalesce({_bt(text_col)}, '')"
+    t = f"coalesce({quote_ident(text_col)}, '')"
     tr = f"regexp_replace(regexp_replace({t}, '^\\\\s+', ''), '\\\\s+$', '')"
     words = (
         f"CASE WHEN {tr} = '' THEN CAST(array() AS ARRAY<STRING>)"
@@ -311,7 +304,7 @@ def gopher_quality_stats(
         )
 
     out = df.selectExpr(
-        _bt(id_col),
+        quote_ident(id_col),
         f"{n_words} AS n_words",
         f"{frac(sum_wlen, n_words)} AS mean_word_len_e6",
         f"{frac(f'({n_hash} + {n_ellipsis})', n_words)} AS symbol_word_ratio_e6",
@@ -603,7 +596,7 @@ def minhash_signatures(
     return (
         df.filter(F.length(text_col) >= k)
         .select(F.col(id_col), arr.alias("_shingles"))
-        .selectExpr(_bt(id_col), *mins)
+        .selectExpr(quote_ident(id_col), *mins)
     )
 
 
@@ -632,12 +625,12 @@ def lsh_band_stack(
             band_exprs.append(f"md5(concat_ws('|', {cols})) AS band_{band}")
         else:
             band_exprs.append(f"xxhash64({cols}, {10_000 + band}) AS band_{band}")
-    banded = sig.selectExpr(_bt(id_col), *band_exprs)
+    banded = sig.selectExpr(quote_ident(id_col), *band_exprs)
     structs = ", ".join(
         f"named_struct('band', {i}, 'bucket', band_{i})" for i in range(bands)
     )
     return banded.selectExpr(
-        _bt(id_col), f"explode(array({structs})) AS bb"
+        quote_ident(id_col), f"explode(array({structs})) AS bb"
     ).select(id_col, "bb.band", "bb.bucket")
 
 
@@ -920,11 +913,11 @@ def _signature_agreement_e6(
     AQE-coalesce repartition guard, and the integer-div e6 estimate live
     here so a fix lands everywhere."""
     s1 = sig_a.selectExpr(
-        f"{_bt(id_col)} AS {a_col}",
+        f"{quote_ident(id_col)} AS {a_col}",
         *[f"mh_{s} AS a_{s}" for s in range(num_hashes)],
     )
     s2 = sig_b.selectExpr(
-        f"{_bt(id_col)} AS {b_col}",
+        f"{quote_ident(id_col)} AS {b_col}",
         *[f"mh_{s} AS b_{s}" for s in range(num_hashes)],
     )
     # agree fold as ONE parsed expression (round-10 py4j economics)

@@ -26,6 +26,8 @@ Mechanics:
   use the bucketed scan ONLY when both tables are registered in the
   session catalog — the correctness gate and any plain consumer keep the
   raw-parquet plans untouched.
+- Files are touched with driver-local ``os`` calls, not the helpers in
+  ``writers``: a session-local warehouse cache on the ``olap_mixed`` setup path.
 """
 
 from __future__ import annotations
@@ -34,6 +36,8 @@ import hashlib
 import os
 
 from pyspark.sql import SparkSession
+
+from ..functions.core import quote_ident
 
 # alias -> (source table, bucket key, sort columns, derived columns).
 # Families:
@@ -163,7 +167,9 @@ def ensure_bucketed_facts(
             # as M buckets would hash rows to the wrong buckets and
             # silently drop join matches. (Spark ignores _-prefixed files.)
             schema = spark.read.parquet(location).schema
-            ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
+            ddl = ", ".join(
+                f"{quote_ident(f.name)} {f.dataType.simpleString()}" for f in schema.fields
+            )
             spark.sql(
                 f"CREATE TABLE {name} ({ddl}) USING parquet"
                 f" CLUSTERED BY ({layout['key']})"

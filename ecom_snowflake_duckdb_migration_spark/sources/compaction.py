@@ -10,11 +10,12 @@ rewrite — using the package's one crash-safe directory swap,
 ``writers.replace_dir`` (write to a hidden ``.{name}.tmp`` sibling, two
 checked renames, recovery preamble).
 
-Filesystem access goes through the session's Hadoop FileSystem API, so
+Filesystem access goes through the Hadoop-FS helpers in ``writers``, so
 the same code serves file://, hdfs:// and s3a:// (on object stores a
 rename is a server-side copy — there, prefer compacting into a NEW prefix
 and flipping the catalog pointer that write_table registration provides;
-the swap here is the single-filesystem path).
+the swap here is the single-filesystem path); markers are published whole
+by ``publish_text``, so a cut-off write never leaves an empty marker.
 """
 
 from __future__ import annotations
@@ -23,20 +24,21 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .writers import replace_dir, restore_dir
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
+from .writers import (
+    exists,
+    hadoop_fs,
+    list_names,
+    publish_text,
+    read_text,
+    replace_dir,
+    restore_dir,
+)
 
 
 def parquet_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(data file count, total data bytes) under ``path``, recursively —
     counts ``*.parquet`` only (skips _SUCCESS, sidecars, checksums)."""
-    fs, hpath, _ = _fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     it = fs.listFiles(hpath, True)
     n = total = 0
     while it.hasNext():
@@ -70,7 +72,7 @@ def compact_parquet(
     """
     if target_file_bytes <= 0:
         raise ValueError("target_file_bytes must be positive")
-    fs, hpath, _ = _fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     # recover before the guard and the stats below look at path
     restore_dir(spark, path)
 
@@ -148,14 +150,14 @@ def compact_cell_store(
     Returns ``{leaves, compacted, skipped, files_before, files_after,
     rows}`` summed over compacted leaves.
     """
-    fs, hpath, jvm = _fs(spark, path)
-    if not fs.exists(hpath):
+    names = list_names(spark, path)
+    if names is None:
         raise FileNotFoundError(path)
-    leaves = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and "=" in name and not name.startswith((".", "_")):
-            leaves.append(str(st.getPath().toUri().getPath()))
+    leaves = [
+        f"{path.rstrip('/')}/{name}"
+        for name in names
+        if "=" in name and not name.startswith((".", "_"))
+    ]
     out = {
         "leaves": len(leaves), "compacted": 0, "skipped": 0,
         "files_before": 0, "files_after": 0, "rows": 0,
@@ -188,29 +190,8 @@ def read_consolidated_floor(spark: SparkSession, path: str) -> int | None:
     garbage (deleted, or pending deletion after a crash). ``None`` when
     the store has never been consolidated. Readers must drop
     ``batch_id < floor`` rows — streaming/store_io.read_batch_store does."""
-    fs, hpath, jvm = _fs(spark, path)
-    marker = jvm.org.apache.hadoop.fs.Path(
-        f"{str(hpath).rstrip('/')}/{CONSOLIDATED_MARKER}"
-    )
-    if not fs.exists(marker):
-        return None
-    stream = fs.open(marker)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return int(text.strip())
-
-
-def _write_consolidated_marker(fs, jvm, path: str, upto: int) -> None:
-    marker = jvm.org.apache.hadoop.fs.Path(
-        f"{path.rstrip('/')}/{CONSOLIDATED_MARKER}"
-    )
-    out = fs.create(marker, True)
-    try:
-        out.writeBytes(f"{upto}\n")
-    finally:
-        out.close()
+    text = read_text(spark, f"{path.rstrip('/')}/{CONSOLIDATED_MARKER}")
+    return None if text is None else int(text.strip())
 
 
 def consolidate_batch_store(
@@ -252,36 +233,34 @@ def consolidate_batch_store(
     """
     from pyspark.sql import functions as F
 
-    fs, hpath, jvm = _fs(spark, path)
-    if not fs.exists(hpath):
+    names = list_names(spark, path)
+    if names is None:
         raise FileNotFoundError(path)
-    root = str(hpath).rstrip("/")
-    P = jvm.org.apache.hadoop.fs.Path
+    root = path.rstrip("/")
+    marker = f"{root}/{CONSOLIDATED_MARKER}"
 
     # recovery: a crash inside replace_dir's swap leaves the target
     # partition's only complete copy at the hidden '.batch_id=K.old'
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
+    for name in names:
         if name.startswith(".batch_id=") and name.endswith(".old"):
             restore_dir(spark, f"{root}/{name[1:-len('.old')]}")
 
     floor = read_consolidated_floor(spark, path)
     ids = sorted(
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(hpath)
-        if st.isDirectory()
-        and st.getPath().getName().startswith("batch_id=")
+        int(name.split("=", 1)[1])
+        for name in list_names(spark, path)
+        if name.startswith("batch_id=")
     )
     # recovery: a crash before the root marker write leaves the floor only
     # in the merged partition's sidecar; restore the marker from it
     merged_ids = [
         i for i in ids
         if (floor is None or i > floor)
-        and fs.exists(P(f"{root}/batch_id={i}/{CONSOLIDATED_MARKER}"))
+        and exists(spark, f"{root}/batch_id={i}/{CONSOLIDATED_MARKER}")
     ]
     if merged_ids:
         floor = max(merged_ids)
-        _write_consolidated_marker(fs, jvm, root, floor)
+        publish_text(spark, marker, f"{floor}\n")
     live = [i for i in ids if floor is None or i >= floor]
     stale = [i for i in ids if floor is not None and i < floor]
     out = {
@@ -291,12 +270,8 @@ def consolidate_batch_store(
     }
     if len(live) >= min_batches:
         upto = max(live)
-        files_before = sum(
-            parquet_file_stats(spark, f"{root}/batch_id={i}")[0] for i in live
-        )
-        total_bytes = sum(
-            parquet_file_stats(spark, f"{root}/batch_id={i}")[1] for i in live
-        )
+        stats = [parquet_file_stats(spark, f"{root}/batch_id={i}") for i in live]
+        files_before, total_bytes = (sum(col) for col in zip(*stats))
         n_out = max(1, math.ceil(total_bytes / target_file_bytes))
         merged = (
             spark.read.parquet(path)
@@ -308,11 +283,11 @@ def consolidate_batch_store(
 
         def fill(tmp: str) -> int:
             merged.write.mode("overwrite").parquet(tmp)
-            _write_consolidated_marker(fs, jvm, tmp, upto)  # the sidecar
+            publish_text(spark, f"{tmp}/{CONSOLIDATED_MARKER}", f"{upto}\n")  # the sidecar
             return spark.read.parquet(tmp).count()
 
         rows = replace_dir(spark, target, fill)
-        _write_consolidated_marker(fs, jvm, root, upto)
+        publish_text(spark, marker, f"{upto}\n")
         stale = sorted(set(stale) | {i for i in live if i < upto})
         out.update(
             batches_after=1,
@@ -324,5 +299,6 @@ def consolidate_batch_store(
     # garbage-collect directories below the floor (normal path AND the
     # crash-recovery path where a previous call died before its deletes)
     for i in stale:
-        fs.delete(P(f"{root}/batch_id={i}"), True)
+        fs, stale_dir = hadoop_fs(spark, f"{root}/batch_id={i}")
+        fs.delete(stale_dir, True)
     return out

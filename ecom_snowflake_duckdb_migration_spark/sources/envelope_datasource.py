@@ -23,6 +23,8 @@ per-envelope validation logic lives naturally):
 Rows cross the Python worker boundary via Arrow batches (the API's
 iterator-of-tuples path); fine for control-plane volumes, not for the
 100 TB fact path — documented trade, same stance as the multimodal UDFs.
+Files are read with Python ``open`` on the workers (no JVM there), not the
+driver-side Hadoop-FS helpers in ``writers``: paths must be local.
 """
 
 from __future__ import annotations

@@ -4,10 +4,12 @@ Operationalizes operators/sketches.py for the shard-and-merge workflow: a
 100 TB pipeline computes one sketch per ingest batch (day, shard, source)
 and folds it into a running artifact instead of ever re-scanning history.
 The store is a parquet directory plus a ``_sketch_meta.json`` sidecar (same
-pattern as the CSV metadata sidecar, writers.py:34) recording the sketch
-kind and its parameters — merging two sketches is only algebraically valid
-when those parameters match, so ``merge_into`` refuses mismatches instead
-of silently producing garbage.
+pattern as the CSV metadata sidecar, ``writers.write_csv_with_metadata``)
+recording the sketch kind and its parameters — merging two sketches is only
+algebraically valid when those parameters match, so ``merge_into`` refuses
+mismatches instead of silently producing garbage. The sidecar goes through
+the Hadoop-FS helpers in ``writers`` (any Hadoop-FS URI) and is written into
+``replace_dir``'s scratch dir, so one rename publishes it with the parquet.
 
 Merge algebra per kind (all idempotent on re-delivery of the same rows —
 max/OR — or exactly-once by upstream dedup for the additive ones):
@@ -20,12 +22,11 @@ max/OR — or exactly-once by upstream dedup for the additive ones):
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .writers import replace_dir
+from .writers import exists, publish_text, read_text, replace_dir
 
 _META_NAME = "_sketch_meta.json"
 
@@ -44,7 +45,7 @@ _MERGE_KEYS = {
 
 
 def _meta_path(path: str) -> str:
-    return os.path.join(path, _META_NAME)
+    return f"{path.rstrip('/')}/{_META_NAME}"
 
 
 def write_sketch(df: DataFrame, path: str, kind: str, **params) -> None:
@@ -63,15 +64,16 @@ def _write_with_sidecar(df: DataFrame, tmp: str, kind: str, params: dict) -> Non
     # swap's rename publishes both together: no reader window sees one
     # without the other. (Spark ignores _-prefixed files in parquet dirs.)
     df.write.mode("overwrite").parquet(tmp)
-    with open(_meta_path(tmp), "w") as f:
-        json.dump({"kind": kind, "params": dict(params)}, f)
+    meta = json.dumps({"kind": kind, "params": dict(params)})
+    publish_text(df.sparkSession, _meta_path(tmp), meta)
 
 
 def read_sketch(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
     """Load a sketch and its metadata; raises if the sidecar is absent."""
-    with open(_meta_path(path)) as f:
-        meta = json.load(f)
-    return spark.read.parquet(path), meta
+    text = read_text(spark, _meta_path(path))
+    if text is None:
+        raise FileNotFoundError(_meta_path(path))
+    return spark.read.parquet(path), json.loads(text)
 
 
 def merge_sketches(a: DataFrame, b: DataFrame, kind: str, **params) -> DataFrame:
@@ -104,7 +106,7 @@ def merge_into(spark: SparkSession, path: str, new_sketch: DataFrame, kind: str,
 
     def fill(tmp: str) -> None:
         merged = new_sketch
-        if os.path.exists(_meta_path(path)):
+        if exists(spark, _meta_path(path)):
             prev, meta = read_sketch(spark, path)
             if meta["kind"] != kind or {k: meta["params"].get(k) for k in params} != {
                 k: params[k] for k in params

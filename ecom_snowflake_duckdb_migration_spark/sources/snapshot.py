@@ -24,6 +24,9 @@ the (public) Iceberg/Delta recipe re-built on plain parquet:
 At 100 TB nothing here is driver-heavy: the commit log is O(1) tiny JSON
 files; data moves only through executor-side parquet write of the merged
 DataFrame (one shuffle via the anti-join in ``upsert_delete_insert``).
+
+Local paths only: the commit relies on POSIX ``link(2)``, which Hadoop FS
+lacks, so this module uses ``os`` calls, not the helpers in ``writers``.
 """
 
 from __future__ import annotations

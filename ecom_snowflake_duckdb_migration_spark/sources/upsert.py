@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .writers import replace_dir
+from .writers import exists, replace_dir
 
 
 def dedup_keep_newest(
@@ -78,11 +78,9 @@ def upsert_parquet(
     the new table; DataFrames created against the old snapshot must be
     re-read — overwrite-in-place cannot give snapshot isolation; Delta MERGE
     replaces this wholesale when a transactional format is available."""
-    import os
-
     def fill(tmp: str) -> None:
         merged = batch
-        if os.path.exists(target_path):
+        if exists(spark, target_path):
             target = spark.read.parquet(target_path)
             merged = upsert_delete_insert(target, batch, keys)
         merged.write.mode("overwrite").parquet(tmp)

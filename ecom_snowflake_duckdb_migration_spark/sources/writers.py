@@ -22,13 +22,14 @@ so hot join keys can be co-located and date columns pruned at 100 TB.
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from ..functions.core import quote_ident
 
 
 def write_csv_with_metadata(
@@ -52,8 +53,7 @@ def write_csv_with_metadata(
         "columns": df.columns,
         "version": "1.0",
     }
-    with open(os.path.join(path, "_metadata.json"), "w") as fh:
-        json.dump(meta, fh)
+    publish_text(df.sparkSession, f"{path.rstrip('/')}/_metadata.json", json.dumps(meta))
     return meta
 
 
@@ -66,23 +66,69 @@ def overwrite_parquet(df: DataFrame, path: str) -> DataFrame:
     return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
-def _swap_paths(spark: SparkSession, path: str):
-    """``(fs, path, old, tmp)`` as Hadoop objects (file://, hdfs://, s3a://).
-    The scratch siblings ``.{name}.old``/``.{name}.tmp`` are hidden, so
-    partition discovery over a parent store never lists them."""
-    P = spark._jvm.org.apache.hadoop.fs.Path
-    parent, _, name = path.rstrip("/").rpartition("/")
-    prefix = f"{parent}/" if parent else ""
-    hpath = P(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath, P(f"{prefix}.{name}.old"), P(f"{prefix}.{name}.tmp")
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path``, resolved as ``spark.read`` resolves
+    it (plain path, file:, hdfs://, s3a://). Every durable-store check, listing
+    and sidecar goes through this: driver-local ``os`` calls report a ``file:``
+    or remote store as missing, so its history would be silently dropped."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def exists(spark: SparkSession, path: str) -> bool:
+    fs, hpath = hadoop_fs(spark, path)
+    return bool(fs.exists(hpath))
+
+
+def list_names(spark: SparkSession, path: str) -> list[str] | None:
+    """Child entry names of ``path`` (hidden ones too); None if it is missing."""
+    fs, hpath = hadoop_fs(spark, path)
+    if not fs.exists(hpath):
+        return None
+    return [st.getPath().getName() for st in fs.listStatus(hpath)]
+
+
+def read_text(spark: SparkSession, path: str) -> str | None:
+    """UTF-8 content of the small file ``path``, or None if it does not exist."""
+    fs, hpath = hadoop_fs(spark, path)
+    if not fs.exists(hpath):
+        return None
+    stream = fs.open(hpath)
+    try:
+        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+
+
+def publish_text(spark: SparkSession, path: str, text: str) -> None:
+    """Write the small file ``path`` so a reader never sees a partial file:
+    write the hidden sibling ``.{name}.tmp`` (replacing a stale one), delete
+    ``path``, then a checked rename (in between, a reader finds no file)."""
+    fs, hpath = hadoop_fs(spark, path)
+    tmp = _hidden_sibling(spark, path, "tmp")
+    stream = fs.create(tmp, True)
+    try:
+        stream.write(bytearray(text.encode("utf-8")))
+    finally:
+        stream.close()
+    if fs.exists(hpath):
+        fs.delete(hpath, False)
+    if not fs.rename(tmp, hpath):
+        raise OSError(f"publish rename {tmp} -> {path} failed")
+
+
+def _hidden_sibling(spark: SparkSession, path: str, suffix: str):
+    """Hadoop Path of the hidden sibling ``.{name}.{suffix}`` (partition discovery skips it)."""
+    parent, sep, name = path.rstrip("/").rpartition("/")
+    return spark._jvm.org.apache.hadoop.fs.Path(f"{parent}{sep}.{name}.{suffix}")
 
 
 def restore_dir(spark: SparkSession, path: str) -> None:
     """Recovery preamble of :func:`replace_dir`: a ``.old`` with nothing at
     ``path`` is the only complete copy left by a crash between the renames,
     so move it back; a ``.old`` next to ``path`` is stale, so delete it."""
-    fs, hpath, old, _ = _swap_paths(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
+    old = _hidden_sibling(spark, path, "old")
     if not fs.exists(old):
         return
     if fs.exists(hpath):
@@ -103,7 +149,8 @@ def replace_dir(spark: SparkSession, path: str, fill):
     retry, and a crash leaves a complete ``.old`` or ``.tmp``, never a torn
     directory. Runs no Spark action beyond ``fill``'s."""
     restore_dir(spark, path)
-    fs, hpath, old, tmp = _swap_paths(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
+    old, tmp = _hidden_sibling(spark, path, "old"), _hidden_sibling(spark, path, "tmp")
     if fs.exists(tmp):
         fs.delete(tmp, True)
     result = fill(str(tmp))
@@ -169,7 +216,7 @@ def create_typed_table(
 ) -> None:
     """S7: CREATE TABLE IF NOT EXISTS with a declared schema (no inference in
     the engine path). External parquet when ``path`` is given."""
-    ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
+    ddl = ", ".join(f"{quote_ident(f.name)} {f.dataType.simpleString()}" for f in schema.fields)
     location = f" LOCATION '{path}'" if path else ""
     spark.sql(f"CREATE TABLE IF NOT EXISTS {name} ({ddl}) USING parquet{location}")
 

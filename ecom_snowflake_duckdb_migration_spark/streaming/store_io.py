@@ -20,6 +20,9 @@ data files but no ``batch_id=*`` partitions is the pre-batch-keying
 flat-append layout — state is durable across sessions, so we detect it
 and raise a clear migration error instead of crashing later with an
 unresolved-column AnalysisException.
+
+The store is listed with ``sources.writers.list_names`` (Hadoop FS), so an
+hdfs://, s3a:// or ``file:`` store is never mistaken for a missing one.
 """
 
 from __future__ import annotations
@@ -27,26 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.writers import list_names
+
 
 class LegacyStoreLayoutError(RuntimeError):
     """A durable store written by the pre-batch-keyed flat-append layout."""
-
-
-def _store_child_names(spark: SparkSession, path: str) -> list[str] | None:
-    """Child entry names of ``path``, or None if it does not exist —
-    resolved through the Hadoop FileSystem API (NOT ``os.path``), so a
-    remote store URI (hdfs://, s3a://) is inspected with the same
-    resolution ``spark.read.parquet`` will use. Driver-local ``os``
-    calls on a remote URI would return "missing" and make a populated
-    durable store silently read as 'no corpus yet' — the exact
-    silent-empty failure mode this module exists to eliminate
-    (round-8 ADVICE)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return None
-    return [st.getPath().getName() for st in fs.listStatus(hpath)]
 
 
 def _committed_partitions(names: list[str]) -> list[str]:
@@ -81,7 +69,7 @@ def read_batch_store(
     marker write and the deletions — rows below the floor are filtered
     out so that crash window never re-emits duplicate history.
     """
-    names = _store_child_names(spark, path)
+    names = list_names(spark, path)
     if names is None:
         return None
     if not _committed_partitions(names):

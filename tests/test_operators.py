@@ -3134,7 +3134,7 @@ def test_sql_twin_string_paths_quote_reserved_identifiers(spark):
     # fragment inputs keep working (the documented dual use)
     frag = d.select(sim.norm("slice(`order`, 1, 2)", dim=2).alias("n")).collect()
     assert sorted(r.n for r in frag) == [1.0, 5.0]
-    # gopher stats over a reserved-word text column (full _bt quoting)
+    # gopher stats over a reserved-word text column (full quote_ident quoting)
     g = spark.createDataFrame(
         [(1, "the be to of and that have with " + "word " * 50)],
         "doc_id long, `table` string",
@@ -3149,6 +3149,16 @@ def test_sql_twin_string_paths_quote_reserved_identifiers(spark):
     sig = tx.minhash_signatures(m, id_col="select", num_hashes=8)
     assert sig.count() == 1
     assert tx.lsh_band_stack(sig, id_col="select", num_hashes=8, bands=4).count() == 4
+
+
+def test_quote_ident_doubles_embedded_backtick(spark):
+    """The one identifier-quoting helper doubles an embedded backtick, so
+    the quoted name parses back to the same column."""
+    from ecom_snowflake_duckdb_migration_spark.functions.core import quote_ident
+
+    assert quote_ident("a`b") == "`a``b`"
+    d = spark.createDataFrame([(1,)], "`a``b` long")
+    assert d.selectExpr(quote_ident("a`b")).columns == ["a`b"]
 
 
 def test_semantic_dispatch_smallgeometry_stays_expr(spark):

@@ -72,17 +72,18 @@ def test_envelope_validate_count_rejects_corrupt(spark, tmp_path):
         )
 
 
-def test_csv_sink_and_scan_with_schema(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("uri", ["", "file:"], ids=["path", "file-uri"])
+def test_csv_sink_and_scan_with_schema(spark, sf_dir, tmp_path, uri):
     region = load(spark, sf_dir, "region").select(
         F.col("r_regionkey").cast("int").alias("id"), F.col("r_name").alias("name")
     )
     path = str(tmp_path / "csv")
     meta = sources.write_csv_with_metadata(
-        region, path, "region", single_file=True, run_ts=datetime.datetime(2026, 1, 1)
+        region, uri + path, "region", single_file=True, run_ts=datetime.datetime(2026, 1, 1)
     )
     assert meta["recordCount"] == 5
     assert json.load(open(os.path.join(path, "_metadata.json")))["table"] == "region"
-    back = sources.read_csv(spark, path, schema=ROW_SCHEMA, uppercase=True)
+    back = sources.read_csv(spark, uri + path, schema=ROW_SCHEMA, uppercase=True)
     assert back.columns == ["ID", "NAME"]
     assert back.count() == 5
     assert dict(back.dtypes)["ID"] == "int"
@@ -138,21 +139,61 @@ def _rollup_case(spark, path, rows):
     return {(str(r.bucket), r.event_type, r.n_rows) for r in read_rollup(spark, path).collect()}
 
 
-@pytest.mark.parametrize("write", [_upsert_case, _rollup_case], ids=["upsert", "rollup"])
-def test_rewrite_recovers_from_crash_between_renames(spark, tmp_path, write):
+def _sketch_case(spark, path, rows):
+    from ecom_snowflake_duckdb_migration_spark.operators.sketches import kmv_sketch
+    from ecom_snowflake_duckdb_migration_spark.sources import sketch_store
+
+    batch = spark.createDataFrame(rows, "id long, v string")
+    sketch_store.merge_into(spark, path, kmv_sketch(batch, "v", k=64), "kmv", k=64)
+    return {r.h for r in sketch_store.read_sketch(spark, path)[0].collect()}
+
+
+@pytest.mark.parametrize(
+    "write, uri",
+    [
+        (_upsert_case, ""),
+        (_rollup_case, ""),
+        (_sketch_case, ""),
+        (_upsert_case, "file:"),
+        (_rollup_case, "file:"),
+        (_sketch_case, "file:"),
+    ],
+    ids=["upsert", "rollup", "sketch", "upsert-file-uri", "rollup-file-uri", "sketch-file-uri"],
+)
+def test_rewrite_recovers_from_crash_between_renames(spark, tmp_path, write, uri):
     """A crash between replace_dir's two renames leaves the table only at
     the hidden '.tbl.old' sibling; the next write restores it and keeps
-    history instead of starting from the new batch alone."""
+    history instead of starting from the new batch alone. The same holds
+    when the store is named by a ``file:`` URI, which driver-local ``os``
+    checks would report as missing."""
     import shutil
 
     path = str(tmp_path / "tbl")
     first = [(1, "a"), (2, "b"), (3, "c")]
-    write(spark, path, first)
+    write(spark, uri + path, first)
     shutil.move(path, str(tmp_path / ".tbl.old"))  # crash after rename 1
-    got = write(spark, path, [(4, "d")])
+    got = write(spark, uri + path, [(4, "d")])
     expect = write(spark, str(tmp_path / "ref"), first + [(4, "d")])
     assert got == expect
     assert sorted(os.listdir(tmp_path)) == ["ref", "tbl"]  # no scratch left
+
+
+def test_publish_text_replaces_stale_scratch(spark, tmp_path):
+    """An interrupted publish leaves only the hidden '.m.tmp' scratch file;
+    the next publish replaces it, the new content reads back, and no
+    scratch file remains."""
+    from ecom_snowflake_duckdb_migration_spark.sources.writers import (
+        publish_text,
+        read_text,
+    )
+
+    path = str(tmp_path / "m")
+    publish_text(spark, path, "1\n")
+    (tmp_path / ".m.tmp").write_text("")  # publish of "2" cut off mid-write
+    assert read_text(spark, path) == "1\n"
+    publish_text(spark, path, "2\n")
+    assert read_text(spark, path) == "2\n"
+    assert [n for n in os.listdir(tmp_path) if n.endswith(".tmp")] == []
 
 
 def test_dedup_keep_newest(spark):

@@ -32,6 +32,11 @@ def test_open_warehouse_registers_tables(spark, warehouse):
     assert len(sql(spark, "SELECT * FROM fct_order_details LIMIT 5").collect()) == 5
 
 
+def test_open_warehouse_takes_file_uri(spark, warehouse):
+    root, _ = warehouse
+    assert open_warehouse(spark, "file:" + root) == open_warehouse(spark, root)
+
+
 def test_register_models_exposes_lazy_views(spark, warehouse):
     _, runner = warehouse
     register_models(runner, ["dim_customers", "dim_categories"])
