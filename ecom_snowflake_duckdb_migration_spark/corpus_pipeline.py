@@ -14,10 +14,10 @@ composition and the durable-write policy):
    same split, same order on any engine / run / partitioning;
 3. **chunk + pack** — sliding-window chunking (q37) and fixed-budget
    context-window packing PER SPLIT (q38's pack_sequences called once
-   per split frame, so eval packs never mix into train; the
-   range-bucketed exact-cumsum path, NOT partition_col='split' — a
-   3-way partition_col window would funnel the 90% train split through
-   one window partition);
+   per split frame, so eval packs never mix into train; each call is the
+   range-bucketed exact-cumsum path, never a window partitioned by
+   split, which would funnel the 90% train split through one window
+   partition);
 4. **write** — one parquet directory per split
    (``out_dir/split=<name>``), range-partitioned AND sorted on
    (pack_id, pack_offset) so shards stream in training order with

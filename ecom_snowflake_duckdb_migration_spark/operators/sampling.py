@@ -18,7 +18,7 @@ decision never needs a global pass.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.core import quote_ident
 
@@ -290,6 +290,29 @@ def exact_quota_sample(
     )
 
 
+def exclusive_prefix(totals: dict) -> dict:
+    """``key -> sum of the totals of every smaller key``: the driver-side
+    prefix sum that turns per-bucket totals into cross-bucket offsets for
+    the range-bucketed global scans (``token_budget_select``,
+    ``text.pack_sequences``). A NULL total (an all-NULL bucket) counts 0."""
+    offsets, running = {}, 0
+    for k in sorted(totals):
+        offsets[k] = running
+        running += totals[k] or 0
+    return offsets
+
+
+def offset_map_expr(offsets: dict, key_col: str) -> Column:
+    """``coalesce(map(key -> offset)[key_col], 0)`` over a driver-built
+    dict as ONE parsed SQL expression (a Column-API ``create_map`` chain
+    costs a py4j round-trip per entry). Keys and offsets must be integral;
+    offsets are BIGINT so running sums and ranks stay exact past 2^31."""
+    if not offsets:
+        return F.lit(0).cast("long")
+    entries = ",".join(f"{int(k)},{int(v)}L" for k, v in offsets.items())
+    return F.expr(f"coalesce(element_at(map({entries}), {quote_ident(key_col)}), 0L)")
+
+
 def token_budget_select(
     df: DataFrame,
     budget_tokens: int,
@@ -321,6 +344,8 @@ def token_budget_select(
     ``score_col`` must be non-null: NULL orders nulls-last under Spark's
     DESC but nulls-first under DuckDB's (silent cross-engine divergence),
     so null scores fail fast here instead of ranking arbitrarily.
+    ``tokens_col`` holds integral token counts (the bucket offsets are
+    BIGINT).
     """
     if budget_tokens <= 0:
         raise ValueError("budget_tokens must be positive")
@@ -367,217 +392,12 @@ def token_budget_select(
         raise ValueError(
             f"{score_col}/{tokens_col} contain NULLs; selection order undefined"
         )
-    per_bucket = {r["_bkt"]: r["t"] for r in totals}
-    offsets, running = {}, 0
-    for k in sorted(per_bucket):
-        offsets[k] = running
-        running += per_bucket[k]
-    if offsets:
-        entries = ", ".join(f"{k}, {v}" for k, v in offsets.items())
-        off = F.expr(f"coalesce(element_at(map({entries}), _bkt), 0)")
-    else:
-        off = F.lit(0)
-    cum = (off + F.col("_cum_in")).alias("cum_tokens")
+    offsets = exclusive_prefix({r["_bkt"]: r["t"] for r in totals})
+    cum = (offset_map_expr(offsets, "_bkt") + F.col("_cum_in")).alias("cum_tokens")
     return (
         with_cum.select(id_col, score_col, tokens_col, cum)
         .filter(F.col("cum_tokens") - F.col(tokens_col) < F.lit(budget_tokens))
     )
-
-
-def exact_ntile_bucketed(
-    df: DataFrame,
-    n_tiles: int,
-    value_col: str,
-    tiebreak_col: str,
-    out_col: str,
-    descending: bool = False,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """EXACT ``ntile(n_tiles) OVER (ORDER BY value [DESC], tiebreak)``
-    without the global total order — the scale path for quantile scoring
-    (RFM and friends).
-
-    ``NTILE`` is a pure function of a row's global rank and the total
-    count, so it does not actually need a single-reducer sort: rows are
-    range-bucketed on ``value_col`` via approx-quantile cuts (monotone
-    cuts suffice — equal values always land in the same bucket, so the
-    (value, tiebreak) order is bucket-respecting wherever the approximate
-    cuts fall), ``row_number`` runs partitioned per bucket, bucket counts
-    are a driver-side prefix sum over ``n_buckets`` scalars (the
-    ``token_budget_select`` contract), and the tile comes from SQL
-    ``NTILE``'s floor allocation: with n rows and k tiles the first
-    ``n % k`` tiles hold ``n // k + 1`` rows. Bit-identical to the window
-    form, at one hash-ranged exchange with |rows|/n_buckets-bounded sort
-    runs instead of one reducer sorting everything.
-
-    ``value_col`` must be non-null (NULL orders differently under Spark
-    and DuckDB DESC; fail fast), ``tiebreak_col`` must be unique per row
-    for a deterministic total order.
-
-    The operator runs THREE jobs over ``df`` (approxQuantile, the bucket
-    stats collect, the final ranked pass); a ``localCheckpoint`` barrier
-    is taken up front so a nondeterministic input (fresh sample,
-    uncheckpointed shuffle) cannot make the counts disagree with the
-    ranked pass — and so chained calls stop re-executing each other's
-    windows. Inputs already checkpointed/cached pay only a no-op plan
-    node.
-    """
-    if n_tiles <= 0:
-        raise ValueError("n_tiles must be positive")
-    from pyspark.sql import Window
-
-    df = df.localCheckpoint(eager=False)
-    cuts = df.stat.approxQuantile(
-        value_col,
-        [i / n_buckets for i in range(1, n_buckets)],
-        1.0 / n_buckets,  # cuts only steer balance, never output values
-    )
-    v = F.col(value_col)
-    b = df.withColumn("_bkt", _bucket_expr(value_col, cuts, descending))
-    order_v = v.desc() if descending else v.asc()
-    w = Window.partitionBy("_bkt").orderBy(order_v, F.col(tiebreak_col).asc())
-    ranked = b.withColumn("_rk_in", F.row_number().over(w))
-    stats = b.groupBy("_bkt").agg(
-        F.count(F.lit(1)).alias("c"),
-        F.count_if(v.isNull()).alias("bad"),
-    ).collect()
-    if sum(r["bad"] for r in stats) > 0:
-        raise ValueError(f"{value_col} contains NULLs; ntile order undefined")
-    counts = {r["_bkt"]: r["c"] for r in stats}
-    offsets, running = {}, 0
-    for k in sorted(counts):
-        offsets[k] = running
-        running += counts[k]
-    n = running
-    rank = _offset_expr(offsets, "_bkt") + F.col("_rk_in")  # exact global rank
-    tile = _ntile_of_rank(rank, n, n_tiles)
-    return ranked.withColumn(out_col, tile.cast("int")).drop("_bkt", "_rk_in")
-
-
-def _ntile_of_rank(rank: Column, n: int, n_tiles: int) -> Column:
-    """SQL NTILE's floor allocation as a pure function of the exact
-    global 1-based rank and the total count: with n rows and k tiles the
-    first ``n % k`` tiles hold ``n // k + 1`` rows."""
-    q, m = divmod(n, n_tiles)
-    boundary = m * (q + 1)  # ranks <= boundary sit in the q+1-sized tiles
-    if q == 0:
-        return rank  # fewer rows than tiles: ntile gives rank itself
-    tile = F.when(
-        rank <= F.lit(boundary), (rank + F.lit(q)) / F.lit(q + 1)
-    ).otherwise(F.lit(m) + (rank - F.lit(boundary) + F.lit(q - 1)) / F.lit(q))
-    return F.floor(tile)
-
-
-def _bucket_expr(value_col: str, cuts, descending: bool) -> Column:
-    """Range-bucket id from approx-quantile cuts; bucket 0 holds the
-    FIRST rows of the order in both directions, ties with a cut land in
-    one bucket (strict compare one side).
-
-    Built as ONE SQL string: the equivalent chain of ~n_buckets
-    ``F.when`` Column objects costs a py4j round-trip per cut
-    (measured ~0.3 s of pure driver time per metric at 64 buckets — it
-    dominated x98's constant), while one ``F.expr`` over a literal
-    double array is a single call. ``{repr(c)}D`` round-trips the exact
-    IEEE double, so the comparison semantics are unchanged."""
-    cs = sorted(set(float(c) for c in cuts))
-    if not cs:
-        return F.lit(0)
-    arr = ",".join(repr(c) + "D" for c in cs)
-    cmp = (
-        f"IF({quote_ident(value_col)} > x, 0, 1)"
-        if descending
-        else f"IF({quote_ident(value_col)} > x, 1, 0)"
-    )
-    return F.expr(f"aggregate(array({arr}), 0, (acc, x) -> acc + {cmp})")
-
-
-def _offset_expr(offsets: dict, bkt_col: str) -> Column:
-    """Driver prefix-sum lookup ``bucket id -> rows before this bucket``
-    as one SQL map expression (same py4j-batching rationale as
-    :func:`_bucket_expr`; BIGINT values so ranks stay exact past 2^31
-    rows)."""
-    if not offsets:
-        return F.lit(0).cast("long")
-    entries = ",".join(f"{int(k)},{int(v)}L" for k, v in offsets.items())
-    return F.expr(f"coalesce(element_at(map({entries}), {quote_ident(bkt_col)}), 0L)")
-
-
-def exact_ntile_bucketed_multi(
-    df: DataFrame,
-    n_tiles: int,
-    specs: list[tuple[str, str, bool]],
-    tiebreak_col: str,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """Fused multi-column :func:`exact_ntile_bucketed`: one tile column
-    per ``(value_col, out_col, descending)`` spec, bit-identical to
-    applying the single-column form per spec — in TWO jobs total instead
-    of three-per-spec.
-
-    The single-column form pays one approxQuantile scan + one stats
-    collect + one checkpoint per call; chained over k metrics that is 3k
-    jobs and was x98's sf16 sore spot (round-8 VERDICT item 1). Here all
-    cut lists come from ONE multi-column approxQuantile (job 1, which
-    also materializes the checkpoint), all per-bucket counts from ONE
-    explode-groupBy over (metric, bucket) pairs (job 2 — a k*n_buckets-
-    row collect, the token_budget_select driver-state contract), and the
-    output is ONE pass whose k window ranks (each partitioned by its own
-    bucket column) chain inside a single job. An in-plan offsets variant
-    (prefix-window + broadcast joins, zero collects) was measured SLOWER
-    here: each broadcast exchange re-evaluates the stats subtree, so k
-    metrics re-scan the checkpoint k extra times — the tiny collect is
-    the cheaper barrier.
-    """
-    if n_tiles <= 0:
-        raise ValueError("n_tiles must be positive")
-    from pyspark.sql import Window
-
-    df = df.localCheckpoint(eager=False)
-    value_cols = [s[0] for s in specs]
-    cuts_all = df.stat.approxQuantile(
-        value_cols,
-        [i / n_buckets for i in range(1, n_buckets)],
-        1.0 / n_buckets,  # cuts only steer balance, never output values
-    )
-    b = df
-    for (vc, oc, desc), cuts in zip(specs, cuts_all):
-        b = b.withColumn(f"_bkt_{oc}", _bucket_expr(vc, cuts, desc))
-    stats = (
-        b.select(
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(i).alias("m"),
-                        F.col(f"_bkt_{oc}").alias("bkt"),
-                        F.col(vc).isNull().alias("bad"),
-                    )
-                    for i, (vc, oc, _) in enumerate(specs)
-                ])
-            ).alias("s")
-        )
-        .groupBy("s.m", "s.bkt")
-        .agg(F.count(F.lit(1)).alias("c"), F.count_if("s.bad").alias("bad"))
-        .collect()
-    )
-    if sum(r["bad"] for r in stats) > 0:
-        bad_metrics = sorted({specs[r["m"]][0] for r in stats if r["bad"]})
-        raise ValueError(f"{bad_metrics} contain NULLs; ntile order undefined")
-    out = b
-    for i, (vc, oc, desc) in enumerate(specs):
-        counts = {r["bkt"]: r["c"] for r in stats if r["m"] == i}
-        offsets, running = {}, 0
-        for k in sorted(counts):
-            offsets[k] = running
-            running += counts[k]
-        n = running
-        off = _offset_expr(offsets, f"_bkt_{oc}")
-        order_v = F.col(vc).desc() if desc else F.col(vc).asc()
-        w = Window.partitionBy(f"_bkt_{oc}").orderBy(
-            order_v, F.col(tiebreak_col).asc()
-        )
-        rank = off + F.row_number().over(w)
-        out = out.withColumn(oc, _ntile_of_rank(rank, n, n_tiles).cast("int"))
-    return out.drop(*[f"_bkt_{oc}" for _, oc, _ in specs])
 
 
 def _prebucket_sql(value_col: str, core: int, tail_res: int, descending: bool) -> str:
@@ -604,13 +424,16 @@ def exact_ntile_hist_multi(
     core: int = 4096,
     tail_res: int = 256,
 ) -> DataFrame:
-    """:func:`exact_ntile_bucketed_multi` in TWO jobs instead of three,
-    with ZERO shuffles of the main frame (the x98 sf16 constant,
-    round-9 ask #1).
+    """EXACT ``ntile(n_tiles) OVER (ORDER BY value [DESC], tiebreak)``
+    for every ``(value_col, out_col, descending)`` spec, without a global
+    total order: TWO jobs and ZERO shuffles of the main frame — the scale
+    path for quantile scoring (x98's RFM tiles above its size gate).
 
-    The three-job form needs an approxQuantile pass BEFORE it can count
-    rows per bucket, because its cuts are data-dependent. This form cuts
-    on a DATA-INDEPENDENT monotone fine histogram instead
+    ``NTILE`` is a pure function of a row's global rank and the total
+    count (SQL's floor allocation: with n rows and k tiles the first
+    ``n % k`` tiles hold ``n // k + 1`` rows). Data-dependent cuts would
+    need an approxQuantile pass BEFORE rows could be counted per bucket;
+    this form cuts on a DATA-INDEPENDENT monotone fine histogram instead
     (:func:`_prebucket_sql`: identity for |v| <= ``core``, log2 tail at
     ``tail_res``/octave above), so ONE pass both materializes the
     barrier AND collects exact ``(metric, prebucket)`` counts; the
@@ -639,8 +462,9 @@ def exact_ntile_hist_multi(
     band in the log tail; a straddling group sorts within one task, so a
     boundary landing inside a billions-row tie group is the (inherent)
     worst case. Values must be integral (the RFM contract: days /
-    counts / bp fixed-point).
-
+    counts / bp fixed-point) and non-null (NULL orders differently under
+    Spark and DuckDB DESC; fail fast); ``tiebreak_col`` must be unique
+    per row for a deterministic total order.
     """
     if n_tiles <= 0:
         raise ValueError("n_tiles must be positive")
@@ -768,7 +592,7 @@ def exact_ntile_hist_multi(
             & (F.col(f"_thr_{oc}._m") == F.lit(i)),
             "left",
         )
-        ft = _offset_map_expr(first_tile, f"_pb_{oc}")
+        ft = offset_map_expr(first_tile, f"_pb_{oc}")
         straddled = ft + F.size(
             F.filter(F.col(f"_thr_{oc}._thrs"), lambda t: t < _key(vc, desc))
         )
@@ -779,13 +603,6 @@ def exact_ntile_hist_multi(
         )
         out = out.drop("_m").drop("_jpb").drop("_thrs")
     return out.drop(*[f"_pb_{oc}" for _, oc, _ in specs])
-
-
-def _offset_map_expr(offsets: dict, key_col: str) -> Column:
-    """``map(pb -> rows_before)`` literal lookup (py4j-batched like
-    :func:`_offset_expr`; BIGINT values for exact ranks past 2^31)."""
-    entries = ",".join(f"{int(k)},{int(v)}L" for k, v in offsets.items())
-    return F.expr(f"coalesce(element_at(map({entries}), {quote_ident(key_col)}), 0L)")
 
 
 def gumbel_topk_sample(

@@ -711,15 +711,12 @@ def jaccard_verify_pairs(
 ) -> DataFrame:
     """Exact-Jaccard verification restricted to candidate (d1, d2) pairs.
 
-    ``sh`` is either the pre-built per-document set frame from
-    ``char_shingle_sets`` — (id, ss array<bigint>), the zero-shuffle
-    scan-side form every internal caller now passes — or, for backward
-    compatibility, exploded distinct (id, shingle) rows
-    (``char_shingles``' contract), which are collected into the same
-    array shape with one object aggregate. Candidates join that narrow
-    (id, array) table on each side and |A∩B| is computed per pair in
-    the run-amortized Arrow kernel (``_intersect_run_kernel``: each d1's
-    sorted set built once per consecutive run, pairs probed vectorized).
+    ``sh`` is the per-document set frame from ``char_shingle_sets`` —
+    (id, ss array<bigint>), built scan-side with zero shuffles.
+    Candidates join that narrow (id, array) table on each side and
+    |A∩B| is computed per pair in the run-amortized Arrow kernel
+    (``_intersect_run_kernel``: each d1's sorted set built once per
+    consecutive run, pairs probed vectorized).
     |A∪B| = |A|+|B|-|A∩B|. Cost is linear in (candidates x doc shingle count)
     WITHOUT materializing exploded (pair, shingle) rows through an
     exchange: the previous explode-then-equi-join shape shuffled
@@ -732,7 +729,7 @@ def jaccard_verify_pairs(
     exploded shape carried per group.
 
     Two deliberate physical choices: (1) shingles are xxhash64'd to int64
-    BEFORE collecting — the intersect probes fixed-width longs instead of
+    in the set frame — the intersect probes fixed-width longs instead of
     strings, and counts are identical modulo 64-bit collisions (~1e-12 for
     realistic per-doc shingle counts; same argument, and same oracle
     compatibility, as ``ngram_jaccard_pairs``' hash_shingles). (2) the
@@ -744,12 +741,7 @@ def jaccard_verify_pairs(
     arrays join in AFTER it (broadcast at small scale), so they are never
     shuffled per candidate.
     """
-    if "ss" in sh.columns:
-        sets = sh.select(id_col, "ss")
-    else:
-        sets = sh.select(
-            F.col(id_col), F.xxhash64("shingle").alias("shingle")
-        ).groupBy(id_col).agg(F.collect_set("shingle").alias("ss"))
+    sets = sh.select(id_col, "ss")
     par = candidates.sparkSession.sparkContext.defaultParallelism
     joined = (
         candidates.repartition(par, "d1", "d2")
@@ -1162,7 +1154,6 @@ def pack_sequences(
     budget: int,
     token_col: str = "chunk_tokens",
     order_cols: tuple[str, ...] = ("doc_id", "chunk_id"),
-    partition_col: str | None = None,
 ) -> DataFrame:
     """Assign fixed-budget sequence packs (context-window packing).
 
@@ -1177,29 +1168,15 @@ def pack_sequences(
     the exclusive cumsum is exact under range bucketing: rows range-
     partition on ``order_cols`` (order-respecting by construction), the
     within-bucket cumsum runs partitioned, and cross-bucket offsets are a
-    driver-side prefix sum over n_buckets scalars (the token_budget_select
-    / exact_ntile_bucketed contract). The bucketed frame is checkpointed
-    once because range boundaries are sampled per execution — the offsets
-    pass and the output pass must see the SAME bucketing. Pass
-    ``partition_col`` (e.g. a shard key) for per-shard pack ids instead
-    (one partitioned window, no checkpoint).
+    driver-side prefix sum over n_buckets scalars (the
+    ``sampling.token_budget_select`` contract). The bucketed frame is
+    checkpointed once because range boundaries are sampled per execution
+    — the offsets pass and the output pass must see the SAME bucketing.
     """
     from pyspark.sql.window import Window
 
-    if partition_col is not None:
-        w = Window.partitionBy(partition_col).orderBy(
-            *[F.col(c) for c in order_cols]
-        )
-        cum_excl = F.coalesce(
-            F.sum(F.col(token_col)).over(
-                w.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        )
-        return (
-            df.withColumn("pack_id", F.floor(cum_excl / F.lit(budget)).cast("int"))
-            .withColumn("pack_offset", (cum_excl % F.lit(budget)).cast("int"))
-        )
+    from .sampling import exclusive_prefix, offset_map_expr
+
     n_buckets = df.sparkSession.sparkContext.defaultParallelism
     b = (
         df.repartitionByRange(n_buckets, *[F.col(c) for c in order_cols])
@@ -1212,22 +1189,8 @@ def pack_sequences(
         F.lit(0),
     )
     totals = b.groupBy("_bkt").agg(F.sum(token_col).alias("t")).collect()
-    offsets, running = {}, 0
-    for k in sorted(r["_bkt"] for r in totals):
-        offsets[k] = running
-        running += next(r["t"] for r in totals if r["_bkt"] == k) or 0
-    off = (
-        F.coalesce(
-            F.element_at(
-                F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-                F.col("_bkt"),
-            ),
-            F.lit(0),
-        )
-        if offsets
-        else F.lit(0)
-    )
-    cum_excl = off + cum_in
+    offsets = exclusive_prefix({r["_bkt"]: r["t"] for r in totals})
+    cum_excl = offset_map_expr(offsets, "_bkt") + cum_in
     return (
         b.withColumn("pack_id", F.floor(cum_excl / F.lit(budget)).cast("int"))
         .withColumn("pack_offset", (cum_excl % F.lit(budget)).cast("int"))
@@ -2634,39 +2597,11 @@ def rrf_fuse(
     return fused.withColumn("fused_rank", F.row_number().over(w))
 
 
-def _merge_adjacent(toks: Column, a: str, b: str) -> Column:
-    """Greedy left-to-right merge of every adjacent ``(a, b)`` symbol pair
-    in a token array into the single symbol ``a+b`` — one BPE merge
-    applied to one word, as a pure Catalyst fold (no UDF).
-
-    ``aggregate`` walks the array once accumulating the rewritten array;
-    when the accumulator's last symbol is ``a`` and the next token is
-    ``b`` they collapse into ``a+b``. Because the merged symbol replaces
-    the accumulator tail, an overlapping run like ``a a a`` (pair
-    ``(a,a)``) merges the FIRST two and leaves the third — exactly the
-    non-overlapping left-to-right scan of Sennrich et al. 2016's
-    reference implementation (``re.sub`` with non-overlapping matches).
-    Symbols are threaded as literal Columns, never interpolated into SQL
-    text, so quotes/backslashes in symbols are safe.
-    """
-    merged = F.lit(a + b)
-    # F.get is 0-based and yields NULL (never an error) out of bounds, so
-    # the empty-accumulator probe is safe under ANSI mode too.
-    return F.aggregate(
-        toks,
-        F.expr("cast(array() as array<string>)"),
-        lambda acc, t: F.when(
-            (F.get(acc, F.size(acc) - 1) == F.lit(a)) & (t == F.lit(b)),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(merged)),
-        ).otherwise(F.concat(acc, F.array(t))),
-    )
-
-
 def _bpe_word_freq(df: DataFrame, text_col: str, lowercase: bool) -> DataFrame:
-    """``(word, n)`` frequency table shared by both trainers: whitespace
+    """``(word, n)`` frequency table :func:`bpe_train` collects: whitespace
     tokenization (Java ``\\s``), optional lowercase, length >= 2 (length-1
-    words carry no pairs). Keeping this Java-side guarantees the
-    driver-local trainer tokenizes identically to the distributed one."""
+    words carry no pairs). Its first pair statistics are exactly
+    ``bpe_pair_counts`` (the DuckDB-oracled x93)."""
     word = F.explode(
         F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
     ).alias("word")
@@ -2682,108 +2617,34 @@ def _bpe_word_freq(df: DataFrame, text_col: str, lowercase: bool) -> DataFrame:
 
 def bpe_train(
     df: DataFrame,
-    n_merges: int = 16,
-    text_col: str = "text",
-    lowercase: bool = True,
-    min_pair_count: int = 2,
-) -> DataFrame:
-    """Distributed BPE tokenizer training (Sennrich et al. 2016,
-    arXiv:1508.07909 Algorithm 1): iteratively find the corpus-wide most
-    frequent adjacent symbol pair and merge it, ``n_merges`` times.
-
-    Returns the learned merge table ``(rank, a, b, merged,
-    n_occurrences)`` with ``rank`` starting at 1 in merge order — the
-    artifact a tokenizer ships (merges.txt). Ties on count break on
-    ``(a, b)`` lexicographically so training is deterministic; merging
-    stops early when no pair reaches ``min_pair_count``.
-
-    Iteration 1's pair statistics are exactly ``bpe_pair_counts`` (the
-    DuckDB-oracled x93 entry), so the loop's base case is cross-engine
-    verified; the full sequence is pinned against a pure-Python
-    reference implementation in tests (iterative state makes the loop
-    itself non-SQL-expressible — driver records the rows-only check).
-
-    Scale shape: training state is the WORD-FREQUENCY table (bounded by
-    |vocab|, orders of magnitude smaller than the corpus), symbolized
-    once and localCheckpoint-ed per merge so lineage stays flat. Each
-    iteration is one map-side-combinable pair count plus a 1-row
-    TakeOrdered (the argmax — a bounded driver scalar, same class as the
-    incremental max-ts read) and one Catalyst fold rewrite; the corpus
-    text is read exactly once, up front. One Spark job per merge is the
-    right shape to CROSS-VERIFY the algorithm (the base case is the
-    DuckDB-oracled x93), not to train a production vocabulary — use
-    :func:`bpe_train_local` (same merge sequence, pinned) for 1k+ merges.
-    """
-    wf = (
-        _bpe_word_freq(df, text_col, lowercase)
-        .select(
-            F.expr(
-                "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
-            ).alias("toks"),
-            "n",
-        )
-        .localCheckpoint(eager=True)
-    )
-    spark = df.sparkSession
-    out_schema = "rank INT, a STRING, b STRING, merged STRING, n_occurrences BIGINT"
-    merges: list[tuple] = []
-    for rank in range(1, n_merges + 1):
-        # Words fully merged to one symbol carry no pairs; filtering them
-        # also guards the sequence(1, 0) -> [1, 0] descending trap (see
-        # bpe_pair_counts).
-        pair_counts = (
-            wf.filter(F.size("toks") >= 2)
-            .select(
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(toks) - 1),"
-                        " i -> struct(element_at(toks, i) AS a,"
-                        " element_at(toks, i + 1) AS b))"
-                    )
-                ).alias("p"),
-                "n",
-            )
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("n").cast("long").alias("cnt"))
-        )
-        top = pair_counts.orderBy(F.desc("cnt"), "a", "b").take(1)
-        if not top or top[0]["cnt"] < min_pair_count:
-            break
-        a, b, cnt = top[0]["a"], top[0]["b"], top[0]["cnt"]
-        merges.append((rank, a, b, a + b, cnt))
-        wf = wf.select(
-            _merge_adjacent(F.col("toks"), a, b).alias("toks"), "n"
-        ).localCheckpoint(eager=True)
-    return spark.createDataFrame(merges, out_schema)
-
-
-def bpe_train_local(
-    df: DataFrame,
     n_merges: int = 1024,
     text_col: str = "text",
     lowercase: bool = True,
     min_pair_count: int = 2,
     max_distinct_words: int = 5_000_000,
 ) -> DataFrame:
-    """Vocabulary-scale BPE training: same algorithm, same deterministic
-    merge sequence as :func:`bpe_train` (pinned equal in tests), but the
-    merge loop runs DRIVER-SIDE over the collected word-frequency table —
-    the standard production shape (HuggingFace tokenizers, SentencePiece
-    train the same way): the corpus is scanned distributed exactly once
-    to build ``(word, n)``, and everything after is bounded by |vocab|,
-    not |corpus|.
+    """BPE tokenizer training (Sennrich et al. 2016, arXiv:1508.07909
+    Algorithm 1): iteratively find the corpus-wide most frequent adjacent
+    symbol pair and merge it, ``n_merges`` times.
 
-    Why: ``bpe_train`` launches one Spark job per merge (a pair-count
-    aggregation + a Catalyst-fold rewrite + a localCheckpoint). That is
-    the right shape to cross-verify the algorithm (its base case is the
-    DuckDB-oracled x93), but a production 32k-merge vocabulary would be
-    32k sequential Spark jobs. Here each merge is an O(touched words)
-    in-memory update: a pair -> words inverted index finds exactly the
-    words containing the chosen pair, and a lazy-deletion heap yields the
-    argmax without rescanning pair counts (ties break on (a, b)
-    lexicographically — identical to the distributed trainer's
-    ``orderBy(desc(cnt), a, b)``, since Python code-point string order
-    equals Spark's unsigned-byte UTF-8 order).
+    Returns the learned merge table ``(rank, a, b, merged,
+    n_occurrences)`` with ``rank`` starting at 1 in merge order — the
+    artifact a tokenizer ships (merges.txt). Ties on count break on
+    ``(a, b)`` lexicographically (Python code-point string order equals
+    Spark's unsigned-byte UTF-8 order) so training is deterministic;
+    merging stops early when no pair reaches ``min_pair_count``. The full
+    sequence is pinned against a pure-Python reference in tests.
+
+    The merge loop runs DRIVER-SIDE over the collected word-frequency
+    table — the standard production shape (HuggingFace tokenizers,
+    SentencePiece train the same way): the corpus is scanned distributed
+    exactly once to build ``(word, n)``, and everything after is bounded
+    by |vocab|, not |corpus|. Each merge is an O(touched words) in-memory
+    update: a pair -> words inverted index finds exactly the words
+    containing the chosen pair, and a lazy-deletion heap yields the
+    argmax without rescanning pair counts. A one-Spark-job-per-merge loop
+    took 26.9 s for the 89 merges this loop learns in 1.0 s
+    (PERF_BPE_PATHS.json).
 
     Driver memory bound: the collect is the DISTINCT-WORD table, not the
     corpus — |vocab| * avg word length. Real web corpora hold this in the
@@ -2793,8 +2654,6 @@ def bpe_train_local(
     n == 1 cannot win a merge while any pair reaches ``min_pair_count``
     >= 2 twice... they still contribute counts, so we do NOT silently
     drop them — raise and let the caller decide).
-
-    Returns the same ``(rank, a, b, merged, n_occurrences)`` merge table.
     """
     import heapq
     from collections import Counter
@@ -2849,7 +2708,8 @@ def bpe_train_local(
             toks = words[i]
             n = counts[i]
             before = _word_pairs(toks)
-            # greedy left-to-right merge — the same scan as _merge_adjacent
+            # greedy left-to-right merge (non-overlapping, like the
+            # reference's re.sub): ``a a a`` under (a, a) -> ``aa a``
             out: list[str] = []
             for t in toks:
                 if out and out[-1] == a and t == b:
@@ -2886,37 +2746,82 @@ def bpe_apply(
     id_col: str = "doc_id",
     lowercase: bool = True,
 ) -> DataFrame:
-    """Tokenize documents with a learned BPE merge list (rank order):
-    symbolize each whitespace word to characters, then apply every merge
-    as a chained Catalyst fold — the inference half of ``bpe_train``.
+    """Tokenize documents with a learned BPE merge list (rank order) —
+    the inference half of :func:`bpe_train`: each whitespace word becomes
+    the word-boundary marker ``▁`` plus its characters, then every merge
+    applies in rank order, greedy left-to-right per merge.
 
     Returns ``(id_col, tokens, n_tokens)`` where ``tokens`` is the
-    space-joined symbol string (words separated by the word-boundary
-    marker ``▁``) — flat strings, so the result is driver- and
-    sink-friendly. The merge chain is ``len(merges)`` nested folds; each
-    level references the previous expression once, so cost grows
-    LINEARLY in the merge count — measured at sf0.1 the fold path wins
-    only below ~16 merges (0.26 s at 8, 2.7 s at 89 vs a flat 0.36 s for
-    ``bpe_apply_pandas``; PERF_BPE_PATHS.json). Use this form for
-    tiny demonstration vocabularies and the pandas twin for anything
-    real.
+    space-joined symbol string — flat strings, so the result is driver-
+    and sink-friendly. Cost is flat in the merge count: the merge list
+    ships once in the task closure (a 50k-merge vocabulary is ~1 MB),
+    where a Catalyst fold per merge grew linearly (8x slower at 89
+    merges, PERF_BPE_PATHS.json).
+
+    Merges are pinned against a pure-Python reference in tests. Rank-order
+    application equals the min-rank-bigram loop of standard BPE encoders
+    because merging rank k only creates adjacencies involving its output
+    symbol, and any pair containing that symbol was necessarily learned
+    AFTER rank k. Words memoize within a batch (Zipf: a handful of
+    distinct words dominate any real batch).
+
+    Scale: embarrassingly parallel mapInPandas — no shuffle, no state;
+    the output schema carries the CALLER's id column name and type.
     """
-    src = f"lower({text_col})" if lowercase else text_col
-    # filter() drops empty words (empty text splits to ['']) before the
-    # char explode, so sequence() never sees a zero length.
-    toks = F.expr(
-        "flatten(transform("
-        f" filter(split(trim(coalesce({src}, '')), '\\\\s+'), w -> w != ''),"
-        " w -> concat(array('▁'),"
-        "     transform(sequence(1, length(w)), i -> substring(w, i, 1)))))"
-    )
-    for a, b in merges:
-        toks = _merge_adjacent(toks, a, b)
-    return df.select(
-        F.col(id_col),
-        F.array_join(toks, " ").alias("tokens"),
-        F.size(toks).cast("long").alias("n_tokens"),
-    )
+    import re
+
+    import pandas as pd
+
+    id_field = df.schema[id_col]
+    out_schema = StructType([
+        id_field,
+        StructField("tokens", StringType()),
+        StructField("n_tokens", LongType()),
+    ])
+    pairs = list(merges)
+    # Java \s is ASCII-only ([ \t\n\x0B\f\r]) while Python str.split()
+    # splits on all Unicode whitespace (e.g. U+00A0) — split on the Java
+    # class explicitly so words match the trainer's _bpe_word_freq, and
+    # drop the empties a leading/trailing separator leaves.
+    _java_ws = re.compile(r"[ \t\n\x0B\f\r]+")
+
+    def encode_word(w: str) -> list[str]:
+        toks = ["▁", *w]
+        for a, b in pairs:
+            out: list[str] = []
+            for t in toks:
+                if out and out[-1] == a and t == b:
+                    out[-1] = a + b
+                else:
+                    out.append(t)
+            toks = out
+        return toks
+
+    def run(batches):
+        cache: dict[str, list[str]] = {}
+        for pdf in batches:
+            tokens_col, n_col = [], []
+            for text in pdf[text_col]:
+                toks: list[str] = []
+                words = "" if text is None else text
+                if lowercase:
+                    words = words.lower()
+                for w in _java_ws.split(words):
+                    if not w:
+                        continue
+                    got = cache.get(w)
+                    if got is None:
+                        got = cache[w] = encode_word(w)
+                    toks.extend(got)
+                tokens_col.append(" ".join(toks))
+                n_col.append(len(toks))
+            yield pd.DataFrame({
+                id_field.name: pdf[id_col],
+                "tokens": tokens_col,
+                "n_tokens": n_col,
+            })
+
+    return df.select(id_col, text_col).mapInPandas(run, out_schema)
 
 
 def _hashed_presence_features(
@@ -3182,87 +3087,6 @@ def quality_classifier_score(
             ).cast("long").alias("score_e6"),
         )
     )
-
-
-def bpe_apply_pandas(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lowercase: bool = True,
-) -> DataFrame:
-    """Arrow-batched twin of ``bpe_apply`` for real merge lists: the
-    Catalyst-fold chain costs linearly per merge while this path is flat
-    in the merge count — measured crossover at sf0.1 is ~16 merges
-    (PERF_BPE_PATHS.json: fold 0.26/0.86/2.7 s at 8/32/89 merges, arrow
-    ~0.36 s at every point, outputs bit-equal). The merge list ships
-    once in the task closure (a 50k-merge vocabulary is ~1 MB).
-
-    Semantics are identical to ``bpe_apply`` (pinned by test): merges
-    apply in rank order, greedy left-to-right per merge. Rank-order
-    application equals the min-rank-bigram loop of standard BPE encoders
-    because merging rank k only creates adjacencies involving its output
-    symbol, and any pair containing that symbol was necessarily learned
-    AFTER rank k. Words memoize within a batch (Zipf: a handful of
-    distinct words dominate any real batch).
-
-    Scale: embarrassingly parallel mapInPandas — no shuffle, no state;
-    the output schema carries the CALLER's id column name and type.
-    """
-    import re
-
-    import pandas as pd
-
-    id_field = df.schema[id_col]
-    out_schema = StructType([
-        id_field,
-        StructField("tokens", StringType()),
-        StructField("n_tokens", LongType()),
-    ])
-    pairs = list(merges)
-    # Java \s is ASCII-only ([ \t\n\x0B\f\r]) while Python str.split()
-    # splits on all Unicode whitespace (e.g. U+00A0) — the twins must
-    # tokenize identically, so split on the Java class explicitly and
-    # drop empties exactly like the fold path's w != '' filter.
-    _java_ws = re.compile(r"[ \t\n\x0B\f\r]+")
-
-    def encode_word(w: str) -> list[str]:
-        toks = ["▁", *w]
-        for a, b in pairs:
-            out: list[str] = []
-            for t in toks:
-                if out and out[-1] == a and t == b:
-                    out[-1] = a + b
-                else:
-                    out.append(t)
-            toks = out
-        return toks
-
-    def run(batches):
-        cache: dict[str, list[str]] = {}
-        for pdf in batches:
-            tokens_col, n_col = [], []
-            for text in pdf[text_col]:
-                toks: list[str] = []
-                words = "" if text is None else text
-                if lowercase:
-                    words = words.lower()
-                for w in _java_ws.split(words):
-                    if not w:
-                        continue
-                    got = cache.get(w)
-                    if got is None:
-                        got = cache[w] = encode_word(w)
-                    toks.extend(got)
-                tokens_col.append(" ".join(toks))
-                n_col.append(len(toks))
-            yield pd.DataFrame({
-                id_field.name: pdf[id_col],
-                "tokens": tokens_col,
-                "n_tokens": n_col,
-            })
-
-    return df.select(id_col, text_col).mapInPandas(run, out_schema)
 
 
 def canonicalize_text(c: Column | str) -> Column:

@@ -2743,21 +2743,18 @@ def x100_funnel_conversion(spark, sf_dir):
     # SQL-expressible, so no DuckDB twin exists for the full sequence —
     # the driver records the rows-only check (like x33). The loop's base
     # case IS oracled: iteration 1's pair statistics are exactly x93
-    # (bpe_pair_counts), and the whole merge sequence + the greedy fold
+    # (bpe_pair_counts), and the whole merge sequence + the greedy merge
     # are pinned against a pure-Python Sennrich reference in
     # tests/test_operators.py::test_bpe_train_matches_python_reference.
     oracle=None,
-    doc="Distributed BPE tokenizer training (operators.text.bpe_train; "
+    doc="BPE tokenizer training (operators.text.bpe_train; "
     "Sennrich et al. 2016 Algorithm 1): 8 merges learned from the "
     "documents corpus — returns the merges.txt artifact (rank, a, b, "
-    "merged, n_occurrences). State is the |vocab|-bounded word-frequency "
-    "table, localCheckpoint-ed per merge; each iteration is one "
-    "map-combinable pair count + a 1-row argmax + a Catalyst fold "
-    "rewrite, with the corpus text read exactly once up front. "
-    "Vocabulary-scale training (1k+ merges) uses bpe_train_local — the "
-    "same corpus scan collects the |vocab|-bounded word table once and "
-    "the merge loop runs driver-side (526 merges/sec measured; pinned to "
-    "the identical merge sequence).",
+    "merged, n_occurrences). One distributed scan builds the "
+    "|vocab|-bounded word-frequency table and collects it once; the "
+    "merge loop then runs driver-side (pair -> words inverted index + "
+    "lazy-deletion heap, O(touched words) per merge), so vocabulary-scale "
+    "training is not one Spark job per merge.",
     tags=("LLM", "tokenizer", "iterative"),
 )
 def x105_bpe_merges(spark, sf_dir):

@@ -20,7 +20,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # purpose — it lints every catalog entry's plan without executing any.
 SLOW_TESTS = {
     "test_snapshot.py::test_daily_run_transactional_idempotent",
-    "test_operators.py::test_merge_adjacent_fold_property_sweep",
     "test_streaming.py::test_interval_join_state_rows_bounded",
     "test_snapshot.py::test_scheduled_run_retries_without_duplicates",
     "test_empty_inputs.py::test_all_queries_run_on_empty_inputs",
@@ -46,7 +45,6 @@ SLOW_TESTS = {
     "test_operators.py::test_minhash_prefiltered_equals_exact",
     "test_multimodal.py::test_audio_features",
     "test_streaming.py::test_stream_stream_interval_join_matches_batch",
-    "test_operators.py::test_exact_ntile_bucketed_matches_window_ntile",
     "test_streaming.py::test_restart_same_checkpoint_exactly_once",
     "test_parity.py::test_query_matches_oracle[x124_curate_boilerplate]",
     "test_operators.py::test_ann_ivf_recall_gate",

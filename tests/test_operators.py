@@ -236,17 +236,6 @@ def test_pack_sequences_lays_out_token_axis(spark, sf_dir):
     # pack ids are the contiguous range 0..floor((total-last)/budget)
     ids = sorted({r.pack_id for r in rows})
     assert ids == list(range(ids[-1] + 1))
-    # per-shard packing restarts the axis inside every shard
-    sharded = tx.pack_sequences(
-        chunks.withColumn("shard", F.col("doc_id") % 3),
-        budget=256, order_cols=("doc_id", "chunk_id"), partition_col="shard",
-    )
-    for shard, grp in ((s, [r for r in sharded.collect() if r.shard == s]) for s in range(3)):
-        grp.sort(key=lambda r: (r.doc_id, r.chunk_id))
-        cum = 0
-        for r in grp:
-            assert r.pack_id * 256 + r.pack_offset == cum, shard
-            cum += r.chunk_tokens
 
 
 def test_repetition_metrics_planted(spark):
@@ -1545,9 +1534,9 @@ def _py_bpe_train(texts, n_merges, min_pair_count=2):
     return merges
 
 
-def _py_bpe_apply(text, merges):
+def _py_bpe_apply(text, merges, split=str.split):
     toks = []
-    for w in (text or "").strip().lower().split():
+    for w in split((text or "").lower()):
         toks += ["▁"] + list(w)
     for a, b in merges:
         out = []
@@ -1586,35 +1575,10 @@ def test_bpe_train_matches_python_reference(spark):
     assert tx.bpe_train(df, n_merges=3, min_pair_count=10**6).count() == 0
 
 
-def test_bpe_train_local_matches_distributed_and_python(spark):
-    """The driver-local vocabulary-scale trainer must produce the SAME
-    merge sequence as the distributed trainer and the pure-Python
-    reference — counts, symbols, tie-breaks, early stop."""
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    texts = [
-        "the cat sat on the mat",
-        "the hat that the cat wore",
-        "aaaa aaaa ab",
-        "to to to be be",
-        None,
-        "x",
-    ]
-    schema = StructType(
-        [StructField("doc_id", IntegerType()), StructField("text", StringType())]
-    )
-    df = spark.createDataFrame(list(enumerate(texts)), schema)
-    local = [tuple(r) for r in tx.bpe_train_local(df, n_merges=12).collect()]
-    assert local == _py_bpe_train(texts, 12)
-    assert local == [tuple(r) for r in tx.bpe_train(df, n_merges=12).collect()]
-    # early stop parity
-    assert tx.bpe_train_local(df, n_merges=3, min_pair_count=10**6).count() == 0
-
-
 def test_bpe_train_local_long_horizon_roundtrip(spark):
     """A vocabulary-scale horizon (hundreds of merges, min_pair_count=1 so
     training exhausts the corpus) still matches the pure-Python recount
-    reference merge-for-merge, and bpe_apply_pandas round-trips the
+    reference merge-for-merge, and bpe_apply round-trips the
     learned vocabulary: every whole word that became a single symbol
     tokenizes to exactly [▁, word]."""
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
@@ -1629,13 +1593,13 @@ def test_bpe_train_local_long_horizon_roundtrip(spark):
     )
     df = spark.createDataFrame(list(enumerate(texts)), schema)
     got = [tuple(r) for r in
-           tx.bpe_train_local(df, n_merges=500, min_pair_count=1).collect()]
+           tx.bpe_train(df, n_merges=500, min_pair_count=1).collect()]
     want = _py_bpe_train(texts, 500, min_pair_count=1)
     assert got == want
     assert len(got) > 50  # the horizon actually exercised incremental updates
     merges = [(a, b) for _, a, b, _, _ in got]
     toks = {r.doc_id: r.tokens for r in
-            tx.bpe_apply_pandas(df, merges, id_col="doc_id").collect()}
+            tx.bpe_apply(df, merges, id_col="doc_id").collect()}
     # min_pair_count=1 exhausts every word to one symbol (the ▁ marker
     # stays a separate token — bpe_train symbolizes words without it)
     assert toks[0] == " ".join(f"▁ {w}" for w in texts[0].split())
@@ -1651,7 +1615,7 @@ def test_bpe_train_local_distinct_word_guard(spark):
 
     df = spark.createDataFrame([(0, "aa bb cc dd ee")], schema)
     with _pytest.raises(ValueError, match="distinct words"):
-        tx.bpe_train_local(df, n_merges=2, max_distinct_words=3)
+        tx.bpe_train(df, n_merges=2, max_distinct_words=3)
 
 
 def test_bpe_train_empty_corpus(spark):
@@ -1781,77 +1745,37 @@ def test_quality_classifier_empty_and_null(spark):
     assert got == {1: 500_000, 2: 500_000}
 
 
-def test_merge_adjacent_fold_property_sweep(spark):
-    """200 seeded random token arrays (multi-char symbols, quotes,
-    backslashes, unicode, overlapping runs) x random merge pairs: the
-    Catalyst fold must equal the pure-Python greedy scan on every one —
-    one Spark job for the whole sweep."""
-    import random
+def test_bpe_apply_splits_on_java_whitespace_keeps_id_column(spark):
+    """The tokenizer equals the pure-Python reference splitting on Java's
+    ASCII ``\\s`` class on trained merges, NULL/empty text included, and
+    carries the caller's id column name+type."""
+    import re
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (ArrayType, IntegerType, StringType,
-                                   StructField, StructType)
-
-    rng = random.Random(42)
-    alphabet = ["a", "b", "ab", "ba", "'", '"', "\\", "▁", "ü", "aa"]
-    cases = []
-    for i in range(200):
-        toks = [rng.choice(alphabet) for _ in range(rng.randint(0, 12))]
-        a, b = rng.choice(alphabet), rng.choice(alphabet)
-        cases.append((i, toks, a, b))
-
-    def py_merge(toks, a, b):
-        out = []
-        for t in toks:
-            if out and out[-1] == a and t == b:
-                out[-1] = a + b
-            else:
-                out.append(t)
-        return out
-
-    schema = StructType([
-        StructField("i", IntegerType()),
-        StructField("toks", ArrayType(StringType())),
-    ])
-    # group cases by (a, b) so each pair becomes one column expression
-    by_pair = {}
-    for i, toks, a, b in cases:
-        by_pair.setdefault((a, b), []).append((i, toks))
-    for (a, b), rows in by_pair.items():
-        df = spark.createDataFrame(rows, schema)
-        got = {
-            r.i: list(r.m)
-            for r in df.select(
-                "i", tx._merge_adjacent(F.col("toks"), a, b).alias("m")
-            ).collect()
-        }
-        for i, toks in rows:
-            assert got[i] == py_merge(toks, a, b), (i, toks, a, b)
-
-
-def test_bpe_apply_pandas_matches_fold_path(spark):
-    """The Arrow-batched tokenizer equals the Catalyst-fold path on
-    trained merges, NULL/empty text included, and carries the caller's id
-    column name+type."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     schema = StructType(
         [StructField("media_key", LongType()), StructField("text", StringType())]
     )
     # "no break": Java \s is ASCII-only, so NBSP must stay INSIDE the
-    # token in both paths (round-7 ADVICE — Python str.split() would split it)
+    # token (round-7 ADVICE — Python str.split() would split it)
     texts = ["the cat sat on the mat", "aaaa ab the hat", None, "", "x ü ▁",
              "no break the\tcatsat"]
     df = spark.createDataFrame(list(enumerate(texts)), schema)
     merges = [(r.a, r.b) for r in tx.bpe_train(df, n_merges=6).collect()]
     assert merges
-    fold = {r.media_key: (r.tokens, r.n_tokens)
-            for r in tx.bpe_apply(df, merges, id_col="media_key").collect()}
-    arrow = tx.bpe_apply_pandas(df, merges, id_col="media_key")
-    assert [f.name for f in arrow.schema.fields] == ["media_key", "tokens", "n_tokens"]
-    assert arrow.schema["media_key"].dataType == LongType()
-    got = {r.media_key: (r.tokens, r.n_tokens) for r in arrow.collect()}
-    assert got == fold
+
+    def java_split(t):
+        return [w for w in re.split(r"[ \t\n\x0B\f\r]+", t) if w]
+
+    want = {}
+    for i, t in enumerate(texts):
+        toks = _py_bpe_apply(t, merges, split=java_split)
+        want[i] = (" ".join(toks), len(toks))
+    out = tx.bpe_apply(df, merges, id_col="media_key")
+    assert [f.name for f in out.schema.fields] == ["media_key", "tokens", "n_tokens"]
+    assert out.schema["media_key"].dataType == LongType()
+    got = {r.media_key: (r.tokens, r.n_tokens) for r in out.collect()}
+    assert got == want
 
 
 def test_percentile_approx_within_rank_epsilon_of_exact(spark, sf_dir):
@@ -1878,88 +1802,6 @@ def test_percentile_approx_within_rank_epsilon_of_exact(spark, sf_dir):
         assert lo <= g <= hi, (p, g, lo, hi)
 
 
-def test_exact_ntile_bucketed_matches_window_ntile(spark):
-    """exact_ntile_bucketed must equal ntile(k) OVER (ORDER BY v, id) for
-    every k/direction on data with heavy ties, negatives, and n < k —
-    the bit-identical claim behind x98's scale branch."""
-    import random
-
-    from pyspark.sql import Window
-    from ecom_snowflake_duckdb_migration_spark.operators.sampling import (
-        exact_ntile_bucketed,
-    )
-
-    rng = random.Random(11)
-    rows = [(i, rng.choice([-5, 0, 0, 3, 3, 3, 7, 100])) for i in range(200)]
-    df = spark.createDataFrame(rows, "id INT, v INT")
-    for k in (1, 3, 4, 7):
-        for desc in (False, True):
-            order = [F.desc("v") if desc else F.asc("v"), F.asc("id")]
-            want = {
-                r.id: r.t
-                for r in df.select(
-                    "id", F.ntile(k).over(Window.orderBy(*order)).alias("t")
-                ).collect()
-            }
-            got = {
-                r.id: r.t
-                for r in exact_ntile_bucketed(
-                    df, k, "v", "id", "t", descending=desc, n_buckets=5
-                ).collect()
-            }
-            assert got == want, (k, desc)
-    # n < k: ntile degenerates to rank
-    tiny = spark.createDataFrame([(1, 10), (2, 20)], "id INT, v INT")
-    got = {r.id: r.t for r in
-           exact_ntile_bucketed(tiny, 4, "v", "id", "t").collect()}
-    assert got == {1: 1, 2: 2}
-    # NULL value fails fast
-    import pytest as _pytest
-    withnull = spark.createDataFrame([(1, None), (2, 5)], "id INT, v INT")
-    with _pytest.raises(ValueError, match="NULL"):
-        exact_ntile_bucketed(withnull, 4, "v", "id", "t")
-
-
-def test_exact_ntile_bucketed_multi_matches_chained_singles(spark):
-    """The fused multi-metric form must produce the SAME tiles as
-    applying the single-column form once per spec — on ties, negatives,
-    n < k, and mixed directions — while running a fixed number of jobs
-    (the x98 sf16 fix). NULL anywhere fails fast naming the column."""
-    import random
-
-    import pytest as _pytest
-
-    from ecom_snowflake_duckdb_migration_spark.operators.sampling import (
-        exact_ntile_bucketed,
-        exact_ntile_bucketed_multi,
-    )
-
-    rng = random.Random(13)
-    rows = [
-        (i, rng.choice([-5, 0, 0, 3, 3, 3, 7, 100]),
-         rng.randint(0, 4), rng.choice([-100, 0, 250]))
-        for i in range(150)
-    ]
-    df = spark.createDataFrame(rows, "id INT, a INT, b INT, c INT")
-    specs = [("a", "ta", False), ("b", "tb", True), ("c", "tc", False)]
-    chained = df
-    for vc, oc, desc in specs:
-        chained = exact_ntile_bucketed(
-            chained, 4, vc, "id", oc, descending=desc, n_buckets=5
-        )
-    want = {r.id: (r.ta, r.tb, r.tc) for r in chained.collect()}
-    got = {
-        r.id: (r.ta, r.tb, r.tc)
-        for r in exact_ntile_bucketed_multi(df, 4, specs, "id", n_buckets=5).collect()
-    }
-    assert got == want and len(got) == 150
-    withnull = spark.createDataFrame([(1, None, 2), (2, 5, 3)], "id INT, a INT, b INT")
-    with _pytest.raises(ValueError, match="NULL"):
-        exact_ntile_bucketed_multi(
-            withnull, 4, [("a", "ta", False), ("b", "tb", False)], "id"
-        )
-
-
 def test_exact_ntile_hist_multi_matches_window_ntile(spark):
     """The two-job histogram form (x98's round-9 scale shape: one
     count pass + a zero-main-shuffle tile-map output with
@@ -1973,7 +1815,6 @@ def test_exact_ntile_hist_multi_matches_window_ntile(spark):
 
     from pyspark.sql import Window
     from ecom_snowflake_duckdb_migration_spark.operators.sampling import (
-        exact_ntile_bucketed,
         exact_ntile_hist_multi,
     )
 
@@ -1987,9 +1828,8 @@ def test_exact_ntile_hist_multi_matches_window_ntile(spark):
     specs = [("a", "ta", False), ("b", "tb", True), ("c", "tc", False)]
     chained = df
     for vc, oc, desc in specs:
-        chained = exact_ntile_bucketed(
-            chained, 4, vc, "id", oc, descending=desc, n_buckets=5
-        )
+        order = [F.desc(vc) if desc else F.asc(vc), F.asc("id")]
+        chained = chained.withColumn(oc, F.ntile(4).over(Window.orderBy(*order)))
     want = {r.id: (r.ta, r.tb, r.tc) for r in chained.collect()}
     for kw in ({}, {"core": 8, "tail_res": 4}):
         got = {

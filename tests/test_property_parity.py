@@ -433,7 +433,7 @@ def test_hll_group_merge_equals_whole(spark, rows):
 )
 @settings(**SETTINGS)
 def test_jaccard_verify_matches_python_set_math(spark, texts, threshold_e6):
-    """The array-intersect verify (collect_set + size-ratio prefilter +
+    """The array-intersect verify (shingle sets + size-ratio prefilter +
     n_inter>=1 gate) must equal naive per-pair Python set Jaccard over ALL
     candidate pairs — pinning the rework against the ground truth rather
     than only the oracle corpus. Tiny alphabet forces heavy shingle
@@ -446,7 +446,7 @@ def test_jaccard_verify_matches_python_set_math(spark, texts, threshold_e6):
     cand = spark.createDataFrame(
         [(a, b) for a in ids for b in ids if a < b], ["d1", "d2"]
     )
-    sh = tx.char_shingles(d)
+    sh = tx.char_shingle_sets(d)
     got = {
         (r.d1, r.d2): r.jaccard_e6
         for r in tx.jaccard_verify_pairs(cand, sh, threshold_e6=threshold_e6).collect()
