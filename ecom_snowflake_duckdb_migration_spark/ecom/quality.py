@@ -75,13 +75,6 @@ def relationships(
     return TestResult(model, "relationships", column, orphans.count(), severity, orphans)
 
 
-def accepted_values(
-    df: DataFrame, model: str, column: str, values: list, severity: Severity = "error"
-) -> TestResult:
-    bad = df.filter(F.col(column).isNotNull() & ~F.col(column).isin(values))
-    return TestResult(model, "accepted_values", column, bad.count(), severity, bad)
-
-
 # (model, test, column, parent_model, parent_column, severity) — mirrors the
 # reference's schema.yml trees (staging :132-222, intermediate :17-239).
 DEFAULT_SUITE: list[tuple] = [

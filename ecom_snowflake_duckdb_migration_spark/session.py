@@ -10,10 +10,13 @@ Reference parity notes (SURVEY §1.2, §4):
   static broadcast threshold is raised because every reference dim table
   (region/nation/lookups) is tiny relative to facts.
 
-Scale posture: shuffle partitions default to 2x local cores for local runs but
-should be overridden (``spark.sql.shuffle.partitions``) to ~2-3x total cluster
-cores on a real deployment; AQE coalesces small post-shuffle partitions either
-way, so over-provisioning is safe.
+Host sizing lives here and nowhere else. One rule: the shuffle width and
+the bucketed fact cache's bucket count (``sources.bucketed``) are both
+``default_parallelism()``, the host's core count (``SPARK_GRAFT_CPUS`` when
+set); driver memory is ``default_driver_memory()``. There is no floor above
+the core count: AQE only coalesces post-shuffle partitions, it never widens
+them. On a real cluster pass ``shuffle_partitions`` at ~2-3x total executor
+cores.
 
 Independent actions: ``run_concurrently`` submits them from a small thread
 pool, the local stand-in for dbt's ``threads: 4``. Many of the engine's
@@ -93,10 +96,7 @@ def get_spark(
 ) -> SparkSession:
     cores = default_parallelism()
     master = master or f"local[{cores}]"
-    # One shuffle partition per core locally; AQE coalesces further when
-    # post-shuffle data is small. On a real cluster override to ~2-3x total
-    # executor cores — AQE makes over-provisioning safe.
-    shuffle_partitions = shuffle_partitions or max(cores, 16)
+    shuffle_partitions = shuffle_partitions or cores
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -124,19 +124,26 @@ def bucketed_table(spark: SparkSession, sf_dir: str, alias: str) -> str | None:
 
 
 def ensure_bucketed_facts(
-    spark: SparkSession, sf_dir: str, buckets: int = 16
+    spark: SparkSession, sf_dir: str, buckets: int | None = None
 ) -> dict[str, str]:
-    """Materialize (or re-register) orderkey-bucketed lineitem/orders.
+    """Materialize (or re-register) the bucketed fact copies at ``buckets``
+    buckets, by default one per core (``session.default_parallelism``, the
+    same rule as the shuffle width).
 
-    Idempotent: an existing catalog entry is kept; existing data files from
-    a previous session are re-registered with bucket DDL (no rewrite).
-    Returns the table-name map. One-time cost ~ one shuffle of each fact —
-    amortized over every subsequent orderkey join.
+    Idempotent: a catalog entry whose layout sidecar matches the request is
+    kept; matching data files from a previous session are re-registered
+    with bucket DDL (no rewrite). A copy whose source fingerprint or bucket
+    count differs from the request is stale and rewritten, so the cache
+    never serves a layout other than the one asked for. Returns the
+    table-name map. One-time cost ~ one shuffle of each fact — amortized
+    over every subsequent orderkey join.
     """
     import json
 
     from ..queries import load
+    from ..session import default_parallelism
 
+    buckets = buckets or default_parallelism()
     warehouse = spark.conf.get(
         "spark.sql.warehouse.dir", os.path.abspath("spark-warehouse")
     ).removeprefix("file:")
@@ -146,42 +153,46 @@ def ensure_bucketed_facts(
         out[alias] = name
         location = os.path.join(warehouse, name)
         sidecar = os.path.join(location, "_bucket_layout.json")
-        fingerprint = _source_fingerprint(sf_dir, table)
+        wanted = {
+            "key": key,
+            "sort_cols": sort_cols,
+            "buckets": buckets,
+            "source": _source_fingerprint(sf_dir, table),
+        }
         if os.path.isfile(sidecar):
             with open(sidecar) as f:
-                layout = json.load(f)
+                fresh = json.load(f) == wanted
         else:
-            layout = None
-        fresh = layout is not None and layout.get("source") == fingerprint
+            fresh = False
         if spark.catalog.tableExists(name):
             if fresh:
                 continue
-            # Source regenerated at the same sf_dir WITHIN this session
-            # (or the sidecar is gone): the registered copy is stale —
-            # drop and fall through to the rebuild, same contract as the
-            # cross-session re-registration path below.
+            # Source regenerated or bucket count changed WITHIN this session
+            # (or the sidecar is gone): the registered copy is stale — drop
+            # and fall through to the rebuild.
             spark.sql(f"DROP TABLE IF EXISTS {name}")
         if fresh:
-            # Re-register existing files. The bucket count MUST come from
-            # the layout they were written with: registering N-bucket files
-            # as M buckets would hash rows to the wrong buckets and
-            # silently drop join matches. (Spark ignores _-prefixed files.)
+            # Re-register the files of a previous session at the count they
+            # were written with, which is the requested one: registering
+            # N-bucket files as M buckets would hash rows to the wrong
+            # buckets and silently drop join matches. (Spark ignores
+            # _-prefixed files.)
             schema = spark.read.parquet(location).schema
             ddl = ", ".join(
                 f"{quote_ident(f.name)} {f.dataType.simpleString()}" for f in schema.fields
             )
             spark.sql(
                 f"CREATE TABLE {name} ({ddl}) USING parquet"
-                f" CLUSTERED BY ({layout['key']})"
-                f" SORTED BY ({', '.join(layout['sort_cols'])})"
-                f" INTO {layout['buckets']} BUCKETS LOCATION '{location}'"
+                f" CLUSTERED BY ({key}) SORTED BY ({', '.join(sort_cols)})"
+                f" INTO {buckets} BUCKETS LOCATION '{location}'"
             )
             continue
         if os.path.isdir(location):
-            # No sidecar (pre-sidecar write / torn copy) or a stale source
-            # fingerprint (regenerated data at the same path) — rewrite
-            # rather than guess or serve stale facts, clearing the dir
-            # first (Spark refuses managed tables on non-empty locations).
+            # No sidecar (pre-sidecar write / torn copy), a stale source
+            # fingerprint (regenerated data at the same path) or another
+            # bucket count — rewrite rather than guess or serve stale
+            # facts, clearing the dir first (Spark refuses managed tables
+            # on non-empty locations).
             import shutil
 
             shutil.rmtree(location, ignore_errors=True)
@@ -196,15 +207,7 @@ def ensure_bucketed_facts(
             .saveAsTable(name)
         )
         with open(sidecar, "w") as f:
-            json.dump(
-                {
-                    "key": key,
-                    "sort_cols": sort_cols,
-                    "buckets": buckets,
-                    "source": fingerprint,
-                },
-                f,
-            )
+            json.dump(wanted, f)
     return out
 
 

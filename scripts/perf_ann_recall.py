@@ -62,7 +62,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_cells = int(sys.argv[2]) if len(sys.argv) > 2 else 128
     out_path = sys.argv[3] if len(sys.argv) > 3 else "PERF_ANN_RECALL.json"
-    spark = get_spark(app_name="ann-recall", shuffle_partitions=32)
+    spark = get_spark(app_name="ann-recall")
     emb = perturbed_embeddings(spark, sf_dir)
 
     t0 = time.perf_counter()

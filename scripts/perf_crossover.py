@@ -1,10 +1,11 @@
 #!/usr/bin/env python
 """Spark-vs-DuckDB crossover measurement across scale factors.
 
-Same queries, same oracle SQL, same warm+min-of-N protocol as bench.py but
-with a lighter N (the large SFs run tens of seconds per query) — built to
-answer ONE question the sf0.1 gate can't: where does Spark's parallelism
-overtake the in-process engine as data grows? Emits one JSON line per SF.
+Same queries, same oracle SQL, same session profile and warm+min-of-N
+protocol as bench.py but with a lighter N (the large SFs run tens of
+seconds per query) — built to answer ONE question the sf0.1 gate can't:
+where does Spark's parallelism overtake the in-process engine as data
+grows? Emits one JSON line per SF.
 
 Usage: python scripts/perf_crossover.py <sf_dir> [n_runs=3] [out.json]
 """
@@ -12,13 +13,12 @@ Usage: python scripts/perf_crossover.py <sf_dir> [n_runs=3] [out.json]
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 
 sys.path.insert(0, "/root/repo")
 
-from bench import HEADLINE, bench_duckdb, time_blocked  # noqa: E402
+from bench import HEADLINE, bench_duckdb, profile_conf, time_blocked  # noqa: E402
 
 
 def main() -> None:
@@ -32,45 +32,19 @@ def main() -> None:
 
     from ecom_snowflake_duckdb_migration_spark.queries import all_queries
     from ecom_snowflake_duckdb_migration_spark.session import get_spark
+    from ecom_snowflake_duckdb_migration_spark.sources.bucketed import (
+        ensure_bucketed_facts,
+    )
 
     specs = all_queries()
     duck = bench_duckdb(specs, sf_dir)
 
-    os.makedirs("/dev/shm/spark-bench", exist_ok=True)
-    spark = get_spark(
-        app_name="crossover",
-        shuffle_partitions=32,
-        extra_conf={
-            "spark.sql.warehouse.dir": os.path.join(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                "spark-warehouse",
-            ),
-            "spark.sql.files.maxPartitionBytes": "8388608",
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8388608",
-            "spark.shuffle.compress": "false",
-            "spark.shuffle.spill.compress": "false",
-            "spark.local.dir": "/dev/shm/spark-bench",
-            # q07-class outputs exceed the 1g default at sf64 — a harness
-            # materialization limit, not an engine cost (DuckDB's
-            # fetch_arrow_table materializes the same rows driver-side)
-            "spark.driver.maxResultSize": "8g",
-        },
-    )
-    # Bucketed fact layout, same default-on flag as bench.py (prep untimed,
-    # reused across runs via the warehouse dir).
-    bucketed = os.environ.get("SPARK_GRAFT_BENCH_BUCKETED", "1").lower() not in ("0", "false")
-    bucket_prep = None
-    if bucketed:
-        from ecom_snowflake_duckdb_migration_spark.sources.bucketed import (
-            ensure_bucketed_facts,
-        )
-
-        t0 = time.perf_counter()
-        ensure_bucketed_facts(
-            spark, sf_dir, buckets=int(os.environ.get("SPARK_GRAFT_BENCH_BUCKETS", "32"))
-        )
-        bucket_prep = round(time.perf_counter() - t0, 3)
+    spark = get_spark(app_name="crossover", extra_conf=profile_conf(sf_dir))
+    # Bucketed fact layout as in bench.py (prep untimed, reused across runs
+    # via the warehouse dir).
+    t0 = time.perf_counter()
+    ensure_bucketed_facts(spark, sf_dir)
+    bucket_prep = round(time.perf_counter() - t0, 3)
 
     for name in HEADLINE:  # one warm pass (codegen + page cache)
         specs[name].fn(spark, sf_dir).toArrow()
@@ -88,7 +62,6 @@ def main() -> None:
         "n": n,
         "spark_queries": timings,
         "duckdb_queries": duck,
-        "bucketed": bucketed,
         "bucketed_prep_sec": bucket_prep,
     }
     line = json.dumps(result)

@@ -79,7 +79,7 @@ def main() -> int:
             )
             duck[name] = round(best, 4)
 
-    spark = get_spark(app_name="olap-scale", shuffle_partitions=32)
+    spark = get_spark(app_name="olap-scale")
     fns = {}
     for name in entries:
         fn = specs[name].fn

@@ -20,10 +20,9 @@ output-bound note). What a pipeline actually runs at this scale is
     survivors (curate's documented stage order),
 so those are the rows measured here.
 
-Each op runs in its OWN process (pass its name as argv[3]); the
-perf_sf64_all.sh driver loop does that and clears stale tmpfs shuffle
-dirs between ops — a killed run's /dev/shm/spark-local leftovers
-otherwise squeeze the next JVM into the OOM killer.
+Run each op in its OWN process (pass its name as argv[3]) and clear the
+tmpfs shuffle dir (/dev/shm/spark-local) between ops — a killed run's
+leftovers otherwise squeeze the next JVM into the OOM killer.
 
 Results merge into BENCH_SCALING.json under "round10_sf64_llm_ops".
 

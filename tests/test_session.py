@@ -1,7 +1,9 @@
-"""session.run_concurrently: the pool that overlaps independent actions."""
+"""session: the host-sizing rule and run_concurrently, the pool that
+overlaps independent actions."""
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import sys
 import threading
@@ -10,7 +12,30 @@ from functools import partial
 
 import pytest
 
-from ecom_snowflake_duckdb_migration_spark.session import run_concurrently
+from ecom_snowflake_duckdb_migration_spark.session import default_parallelism, run_concurrently
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_shuffle_width_is_core_count(spark):
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(default_parallelism())
+
+
+def test_bench_profile_follows_scale():
+    """bench.py's session profile: AQE off and 16 MB splits below sf1, AQE
+    on and 8 MB splits from sf1; width and local dir stay the factory's."""
+    spec = importlib.util.spec_from_file_location("bench", os.path.join(ROOT, "bench.py"))
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    small = bench.profile_conf("/data/sf0.1")
+    big = bench.profile_conf("/data/sf4")
+    assert small["spark.sql.adaptive.enabled"] == "false"
+    assert small["spark.sql.files.maxPartitionBytes"] == str(16 * 2**20)
+    assert big["spark.sql.adaptive.enabled"] == "true"
+    assert big["spark.sql.files.maxPartitionBytes"] == str(8 * 2**20)
+    for conf in (small, big):
+        assert "spark.sql.shuffle.partitions" not in conf
+        assert "spark.local.dir" not in conf
 
 
 def test_results_in_submission_order(spark):

@@ -385,10 +385,10 @@ def test_sync_to_targets_verifies_counts(spark, sf_dir, tmp_path):
 
 
 def test_bucketed_reregister_preserves_layout(spark, sf_dir):
-    """Cross-session reuse: files written with N buckets must re-register
-    with N buckets from the layout sidecar (a different count would hash
-    rows to the wrong buckets and silently lose join matches), and the
-    re-registered pair still joins with zero exchanges."""
+    """Cross-session reuse: files written with N buckets and asked for again
+    at N re-register without a rewrite (registering them at another count
+    would hash rows to the wrong buckets and silently lose join matches),
+    and the re-registered pair still joins with zero exchanges."""
     import json
     import os
     import shutil
@@ -416,8 +416,8 @@ def test_bucketed_reregister_preserves_layout(spark, sf_dir):
         for name in names.values():
             shutil.copytree(os.path.join(stash, name), os.path.join(warehouse, name))
 
-        # re-register asks for a DIFFERENT count; sidecar must win
-        names2 = ensure_bucketed_facts(spark, sf_dir, buckets=16)
+        # re-register at the same count: the kept files are reused
+        names2 = ensure_bucketed_facts(spark, sf_dir, buckets=4)
         assert names2 == names
         li, od = names["lineitem"], names["orders"]
         meta = json.load(
@@ -449,6 +449,60 @@ def test_bucketed_reregister_preserves_layout(spark, sf_dir):
         drop_bucketed_facts(spark, sf_dir)
         if stash:
             shutil.rmtree(stash, ignore_errors=True)
+
+
+def test_bucketed_cache_rebuilds_on_new_bucket_count(spark, sf_dir, tmp_path):
+    """A bucket count other than the cached one is a stale layout: ensure
+    rewrites the cache at the requested count, both while the old count's
+    catalog entry is live and when only an earlier session's files remain.
+    It never re-registers the old count."""
+    import json
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from ecom_snowflake_duckdb_migration_spark import plans
+    from ecom_snowflake_duckdb_migration_spark.queries import load
+    from ecom_snowflake_duckdb_migration_spark.sources.bucketed import (
+        drop_bucketed_facts,
+        ensure_bucketed_facts,
+    )
+
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+    def check(names, buckets):
+        li, od = names["lineitem"], names["orders"]
+        for name in (li, od):
+            with open(os.path.join(warehouse, name, "_bucket_layout.json")) as f:
+                assert json.load(f)["buckets"] == buckets
+            described = {
+                r.col_name: r.data_type
+                for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+            }
+            assert described["Num Buckets"] == str(buckets)
+        cond = F.col("o_orderkey") == F.col("l_orderkey")
+        joined = spark.table(od).join(spark.table(li), cond)
+        assert plans.plan_stats(joined.groupBy("o_orderkey").count()).shuffles == 0
+        raw = load(spark, sf_dir, "orders").join(load(spark, sf_dir, "lineitem"), cond)
+        assert joined.count() == raw.count()
+
+    try:
+        names = ensure_bucketed_facts(spark, sf_dir, buckets=4)
+        # same session, catalog entries live
+        assert ensure_bucketed_facts(spark, sf_dir, buckets=2) == names
+        check(names, 2)
+        # new session: catalog entries gone, the 2-bucket files kept
+        stash = str(tmp_path / "stash")
+        for name in names.values():
+            shutil.copytree(os.path.join(warehouse, name), os.path.join(stash, name))
+        drop_bucketed_facts(spark, sf_dir)
+        for name in names.values():
+            shutil.copytree(os.path.join(stash, name), os.path.join(warehouse, name))
+        assert ensure_bucketed_facts(spark, sf_dir, buckets=3) == names
+        check(names, 3)
+    finally:
+        drop_bucketed_facts(spark, sf_dir)
 
 
 def test_bucketed_cache_invalidates_on_source_change(spark, tmp_path):

@@ -1,16 +1,18 @@
-"""Spark-free guard for the two-tier suite: every ``SLOW_TESTS`` entry in
-conftest.py must name a test function defined in its file. A stale or
-misspelled entry otherwise skips nothing and goes unnoticed when a test is
-deleted or renamed."""
+"""Spark-free guards: every ``SLOW_TESTS`` entry in conftest.py must name a
+test function defined in its file (a stale or misspelled entry otherwise
+skips nothing and goes unnoticed when a test is deleted or renamed), and
+host sizing stays in ``session.py``."""
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 
 from conftest import SLOW_TESTS
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(HERE)
 
 
 def _defined_functions(fname: str) -> set[str]:
@@ -38,3 +40,29 @@ def test_slow_tests_name_defined_test_functions():
         if not func.startswith("test_") or func not in defined[fname]:
             stale.append(entry)
     assert not stale, f"SLOW_TESTS entries naming no test function: {stale}"
+
+
+# "[_]" keeps this file from matching a plain search for the variable prefix
+HOST_SIZING = re.compile(r"os\.cpu_count|SC_PHYS_PAGES|SPARK_GRAFT_BENCH[_]")
+
+
+def test_host_sizing_lives_in_session_py():
+    """Core count and RAM are read in ``session.py`` only, and no bench env
+    var overrides the sizing: the package, bench.py and scripts/ follow
+    ``default_parallelism`` / ``default_driver_memory``. perfbench/ is not
+    scanned: it is frozen outside benchmark changes and still keeps its own
+    driver-memory rule."""
+    package = os.path.join(ROOT, "ecom_snowflake_duckdb_migration_spark")
+    paths = [os.path.join(ROOT, "bench.py")]
+    for top in (package, os.path.join(ROOT, "scripts")):
+        for dirpath, _, names in os.walk(top):
+            paths += [os.path.join(dirpath, n) for n in names if n.endswith((".py", ".sh"))]
+    offenders = []
+    for path in paths:
+        if path == os.path.join(package, "session.py"):
+            continue
+        with open(path, encoding="utf-8") as f:
+            for lineno, line in enumerate(f, 1):
+                if HOST_SIZING.search(line):
+                    offenders.append(f"{os.path.relpath(path, ROOT)}:{lineno}")
+    assert not offenders, f"host sizing outside session.py: {offenders}"
