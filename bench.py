@@ -62,11 +62,16 @@ def time_blocked(fns: dict[str, callable], n: int = N_RUNS) -> dict[str, float]:
     whole block sequence run in TWO separated macro-passes.
 
     Why blocks: measured A/B on this host (same process, macro-alternated):
-    per-query blocks total 2.38 s vs 3.98 s round-robin at sf0.1 — Spark's
-    whole-stage-codegen queries run 1.5-2.3x slower when ten different
-    generated classes rotate through the JIT/i-cache between runs, while a
-    block keeps one query's code hot (DuckDB shows no such sensitivity).
-    Blocks time each engine at its per-query steady state.
+    per-query blocks total 2.38 s vs 3.98 s round-robin at sf0.1. The cause
+    was codegen-cache eviction, not the JIT or i-cache as such: Spark's
+    default 100-entry generated-class cache is smaller than the ten
+    headliners' working set, so round-robin sampling recompiled 476-711
+    classes per run, each one new code for the JIT to warm. With the
+    session factory's 4096-entry cache a round-robin run recompiles 0 and
+    reads about what blocks read (sum of per-query medians over 7 passes,
+    2.07 vs 1.83 s at sf0.1 on a 4-core host). The protocol is kept: blocks still time each engine at its
+    per-query steady state (DuckDB shows no order sensitivity), and the
+    output's ``codegen_compiles`` shows whether eviction came back.
 
     Why two macro-passes: the host's interference windows last multiple
     seconds, so a single block can have ALL its samples swallowed (observed:
@@ -172,6 +177,7 @@ def profile_conf(sf_dir: str) -> dict[str, str]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from ecom_snowflake_duckdb_migration_spark.plans import codegen_compiles
     from ecom_snowflake_duckdb_migration_spark.queries import all_queries
     from ecom_snowflake_duckdb_migration_spark.session import get_spark
     from ecom_snowflake_duckdb_migration_spark.sources.bucketed import (
@@ -219,6 +225,7 @@ def main() -> None:
     # Arrow-batch materialization to the driver: same bytes cross the
     # JVM->Python boundary as toPandas, minus the pandas conversion
     # (harness cost, not engine cost — DuckDB's fetch is equally thin).
+    compiles = codegen_compiles(spark)
     timings = time_blocked(
         {
             name: (lambda spec=specs[name]: spec.fn(spark, sf_dir).toArrow())
@@ -226,6 +233,7 @@ def main() -> None:
             if name in specs
         }
     )
+    compiles = codegen_compiles(spark) - compiles
 
     total = round(sum(timings.values()), 4)
     duck_total = round(sum(duck.values()), 4)
@@ -242,6 +250,9 @@ def main() -> None:
                 "ratio": round(total / duck_total, 3) if duck_total else None,
                 "n": N_RUNS,
                 "bucketed_prep_sec": bucket_prep,
+                # classes compiled while timing: nonzero means the codegen
+                # cache evicted part of the warmed working set
+                "codegen_compiles": compiles,
             }
         )
     )

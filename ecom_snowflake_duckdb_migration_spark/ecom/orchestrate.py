@@ -61,6 +61,7 @@ class DailyRunResult:
     raw_counts: dict[str, int]
     models: dict[str, DataFrame] = field(repr=False)
     quality: list[TestResult] = field(repr=False)
+    attempts: int = 1  # set by scheduled_run: 1 + the retries it took
 
     @property
     def quality_errors(self) -> list[TestResult]:
@@ -137,16 +138,28 @@ def scheduled_run(
     delay). Safe to retry because ``daily_run`` is idempotent per ``day``:
     ingestion is a PK upsert (re-applying the same batch is a no-op) and
     model layers rebuild deterministically from the raw snapshot — a retry
-    after a partial failure completes the run without duplicating rows."""
+    after a partial failure completes the run without duplicating rows.
+
+    Only failures worth retrying are retried: IO errors (``OSError``) and
+    failed Spark jobs, which reach Python as a ``Py4JJavaError`` carrying
+    the JVM's ``SparkException`` (stage aborts, lost executors, unreadable
+    files). Anything else — ``TypeError``, ``ValueError``, analysis errors —
+    fails the same way every time and is raised on the first attempt. The
+    result's ``attempts`` counts the runs it took."""
     import time as _time
 
-    last: Exception | None = None
-    for attempt in range(retries + 1):
+    from py4j.protocol import Py4JJavaError
+
+    attempt = 1
+    while True:
         try:
-            return daily_run(spark, warehouse_dir, day=day, **kwargs)
-        except Exception as exc:  # noqa: BLE001 - any step failure is retryable
-            last = exc
-            if attempt < retries and retry_delay > 0:
+            result = daily_run(spark, warehouse_dir, day=day, **kwargs)
+        except (OSError, Py4JJavaError):
+            if attempt > retries:
+                raise
+            attempt += 1
+            if retry_delay > 0:
                 _time.sleep(retry_delay)
-    assert last is not None
-    raise last
+        else:
+            result.attempts = attempt
+            return result

@@ -6,6 +6,7 @@ from .inspect import (
     assert_columns_pruned,
     assert_filter_pushed,
     assert_no_python_in_plan,
+    codegen_compiles,
     codegen_subtrees,
     executed_codegen_spans,
     formatted_plan,
@@ -22,6 +23,7 @@ __all__ = [
     "assert_columns_pruned",
     "assert_filter_pushed",
     "assert_no_python_in_plan",
+    "codegen_compiles",
     "codegen_subtrees",
     "executed_codegen_spans",
     "formatted_plan",

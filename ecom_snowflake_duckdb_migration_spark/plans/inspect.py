@@ -14,7 +14,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -73,6 +73,15 @@ def executed_codegen_spans(df: DataFrame) -> int:
     jvm = df._sc._jvm
     simple = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
     return len(set(re.findall(r"\*\((\d+)\)", simple)))
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far; a
+    cache hit does not count. The difference across a pass is that pass's
+    compiles, so a repeat pass that reads nonzero means the codegen cache
+    evicted part of its working set."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

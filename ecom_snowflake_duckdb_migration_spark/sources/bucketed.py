@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+from functools import partial
 
 from pyspark.sql import SparkSession
 
@@ -136,21 +137,24 @@ def ensure_bucketed_facts(
     count differs from the request is stale and rewritten, so the cache
     never serves a layout other than the one asked for. Returns the
     table-name map. One-time cost ~ one shuffle of each fact — amortized
-    over every subsequent orderkey join.
+    over every subsequent orderkey join. The copies are independent, so
+    each alias's check and rewrite runs on ``session.run_concurrently``.
     """
     import json
 
     from ..queries import load
-    from ..session import default_parallelism
+    from ..session import default_parallelism, run_concurrently
 
     buckets = buckets or default_parallelism()
     warehouse = spark.conf.get(
         "spark.sql.warehouse.dir", os.path.abspath("spark-warehouse")
     ).removeprefix("file:")
-    out = {}
-    for alias, (table, key, sort_cols, extra) in FACT_BUCKET_SPECS.items():
+    # load's memo is not thread-safe: resolve the sources on this thread
+    sources = {spec[0]: load(spark, sf_dir, spec[0]) for spec in FACT_BUCKET_SPECS.values()}
+
+    def ensure(alias: str) -> None:
+        table, key, sort_cols, extra = FACT_BUCKET_SPECS[alias]
         name = bucketed_name(sf_dir, alias)
-        out[alias] = name
         location = os.path.join(warehouse, name)
         sidecar = os.path.join(location, "_bucket_layout.json")
         wanted = {
@@ -166,7 +170,7 @@ def ensure_bucketed_facts(
             fresh = False
         if spark.catalog.tableExists(name):
             if fresh:
-                continue
+                return
             # Source regenerated or bucket count changed WITHIN this session
             # (or the sidecar is gone): the registered copy is stale — drop
             # and fall through to the rebuild.
@@ -186,7 +190,7 @@ def ensure_bucketed_facts(
                 f" CLUSTERED BY ({key}) SORTED BY ({', '.join(sort_cols)})"
                 f" INTO {buckets} BUCKETS LOCATION '{location}'"
             )
-            continue
+            return
         if os.path.isdir(location):
             # No sidecar (pre-sidecar write / torn copy), a stale source
             # fingerprint (regenerated data at the same path) or another
@@ -196,7 +200,7 @@ def ensure_bucketed_facts(
             import shutil
 
             shutil.rmtree(location, ignore_errors=True)
-        src = load(spark, sf_dir, table)
+        src = sources[table]
         if extra:
             src = src.selectExpr("*", *[f"{e} AS {n}" for n, e in extra.items()])
         (
@@ -208,7 +212,10 @@ def ensure_bucketed_facts(
         )
         with open(sidecar, "w") as f:
             json.dump(wanted, f)
-    return out
+
+    # the six copies are independent tables: check and write them side by side
+    run_concurrently(spark, [partial(ensure, alias) for alias in FACT_BUCKET_SPECS])
+    return {alias: bucketed_name(sf_dir, alias) for alias in FACT_BUCKET_SPECS}
 
 
 def drop_bucketed_facts(spark: SparkSession, sf_dir: str) -> None:

@@ -8,6 +8,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from ecom_snowflake_duckdb_migration_spark.ecom import orchestrate
 from ecom_snowflake_duckdb_migration_spark.ecom.orchestrate import daily_run
 
 DAY1 = datetime.date(2026, 1, 15)
@@ -79,3 +80,37 @@ def test_landing_envelopes_on_disk(spark, warehouse):
     assert files, "no envelope files landed"
     head = open(files[0]).read(100)
     assert head.startswith('{"metadata": {"table": "orders"')
+
+
+@pytest.mark.parametrize(
+    ("error", "attempts"),
+    [(TypeError("bad argument"), 1), (ValueError("bad value"), 1), (OSError("disk hiccup"), 3)],
+    ids=["TypeError", "ValueError", "OSError"],
+)
+def test_scheduled_run_retries_only_transient_failures(monkeypatch, error, attempts):
+    """Deterministic errors fail on the first attempt; IO errors get
+    ``retries + 1`` attempts before the last one surfaces."""
+    calls = []
+
+    def failing_run(*args, **kwargs):
+        calls.append(1)
+        raise error
+
+    monkeypatch.setattr(orchestrate, "daily_run", failing_run)
+    with pytest.raises(type(error)):
+        orchestrate.scheduled_run(None, "/unused", day=DAY1, retries=2)
+    assert len(calls) == attempts
+
+
+def test_scheduled_run_records_attempts(monkeypatch):
+    calls = []
+
+    def flaky_run(*args, day=None, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise OSError("transient")
+        return orchestrate.DailyRunResult(day=day, raw_counts={}, models={}, quality=[])
+
+    monkeypatch.setattr(orchestrate, "daily_run", flaky_run)
+    result = orchestrate.scheduled_run(None, "/unused", day=DAY1, retries=2)
+    assert result.attempts == 2

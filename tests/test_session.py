@@ -1,5 +1,5 @@
-"""session: the host-sizing rule and run_concurrently, the pool that
-overlaps independent actions."""
+"""session: the host-sizing rule, the generated-class cache bound and
+run_concurrently, the pool that overlaps independent actions."""
 
 from __future__ import annotations
 
@@ -12,6 +12,7 @@ from functools import partial
 
 import pytest
 
+from ecom_snowflake_duckdb_migration_spark.plans import codegen_compiles
 from ecom_snowflake_duckdb_migration_spark.session import default_parallelism, run_concurrently
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -19,6 +20,20 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def test_shuffle_width_is_core_count(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == str(default_parallelism())
+
+
+def test_generated_classes_survive_a_repeat_pass(spark):
+    """150 distinct plan shapes outnumber Spark's default 100-entry codegen
+    cache; with the factory's bound, a second pass compiles nothing."""
+    exprs = [f"id * {i} + {i}" for i in range(150)]
+    passes = []
+    for _ in range(2):
+        before = codegen_compiles(spark)
+        for expr in exprs:
+            spark.range(8).selectExpr(expr).collect()
+        passes.append(codegen_compiles(spark) - before)
+    assert passes[0] >= len(exprs)
+    assert passes[1] == 0
 
 
 def test_bench_profile_follows_scale():

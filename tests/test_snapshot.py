@@ -121,13 +121,14 @@ def test_scheduled_run_retries_without_duplicates(spark, tmp_path_factory, monke
         def run(self):
             calls["n"] += 1
             if calls["n"] == 1:
-                raise RuntimeError("transient transform failure")
+                raise OSError("transient transform failure")
             return super().run()
 
     monkeypatch.setattr(orch, "PipelineRunner", FlakyRunner)
     # fails after ingest on attempt 1 (raw already upserted), retry completes
     r = orch.scheduled_run(spark, root, day=day, retries=2, n_customers=40)
     assert calls["n"] == 2
+    assert r.attempts == 2
     assert r.quality_errors == []
 
     monkeypatch.setattr(orch, "PipelineRunner", real_runner)
@@ -141,9 +142,9 @@ def test_scheduled_run_retries_without_duplicates(spark, tmp_path_factory, monke
     # retries exhausted -> the last error surfaces
     class AlwaysFail(real_runner):
         def run(self):
-            raise RuntimeError("permanent")
+            raise OSError("permanent")
     monkeypatch.setattr(orch, "PipelineRunner", AlwaysFail)
-    with pytest.raises(RuntimeError, match="permanent"):
+    with pytest.raises(OSError, match="permanent"):
         orch.scheduled_run(
             spark, str(tmp_path_factory.mktemp("fail_wh")), day=day,
             retries=1, n_customers=40,
