@@ -7,8 +7,7 @@ severity warn, /root/reference/dbt/dbt_duckdb/models/ecom_intermediate/
 schema.yml:186-191; global severity error, dbt_project.yml:41-43).
 
 Each check compiles to one aggregate/anti-join count — no collect of
-row-level data; only violation counts (plus an optional stored-failures
-DataFrame, mirroring dbt's store_failures). ``run_suite`` runs the counts
+row-level data; only violation counts. ``run_suite`` runs the counts
 concurrently (``session.run_concurrently``), the counterpart of dbt's
 ``threads: 4``; most of them are one-task jobs over small models.
 
@@ -18,7 +17,7 @@ materialize.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import partial
 from typing import Literal
 
@@ -26,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import run_concurrently
+from ..sources.upsert import relationships_check
 
 Severity = Literal["error", "warn"]
 
@@ -37,7 +37,6 @@ class TestResult:
     column: str
     violations: int
     severity: Severity
-    failures: DataFrame | None = field(default=None, repr=False, compare=False)
 
     @property
     def passed(self) -> bool:
@@ -51,12 +50,12 @@ def unique(df: DataFrame, model: str, column: str, severity: Severity = "error")
         .count()
         .filter(F.col("count") > 1)
     )
-    return TestResult(model, "unique", column, dupes.count(), severity, dupes)
+    return TestResult(model, "unique", column, dupes.count(), severity)
 
 
 def not_null(df: DataFrame, model: str, column: str, severity: Severity = "error") -> TestResult:
     nulls = df.filter(F.col(column).isNull())
-    return TestResult(model, "not_null", column, nulls.count(), severity, nulls)
+    return TestResult(model, "not_null", column, nulls.count(), severity)
 
 
 def relationships(
@@ -67,12 +66,8 @@ def relationships(
     parent_column: str,
     severity: Severity = "error",
 ) -> TestResult:
-    orphans = child.filter(F.col(column).isNotNull()).join(
-        parent.select(F.col(parent_column).alias("_pk")).distinct(),
-        F.col(column) == F.col("_pk"),
-        "left_anti",
-    )
-    return TestResult(model, "relationships", column, orphans.count(), severity, orphans)
+    orphans = relationships_check(child, parent, column, parent_column)
+    return TestResult(model, "relationships", column, orphans.count(), severity)
 
 
 # (model, test, column, parent_model, parent_column, severity) — mirrors the

@@ -45,6 +45,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sources import align_union, incremental_filter, upsert_delete_insert
 from . import load, register, run_sql
 
 DEC_ELEM = "decimal(27,6)"
@@ -205,61 +206,18 @@ def q02_revenue_by_nation(spark, sf_dir):
         if _parquet_bytes(sf_dir, "customer") < _BROADCAST_GATE_BYTES
         else ""
     )
-    bt = _bucketed_facts(spark, sf_dir)
-    if bt:
-        # Bucketed facts: the raw-row join is exchange-free (merge join
-        # over co-located buckets), so the only shuffle left is the
-        # o_custkey aggregation — strictly fewer exchanges than either
-        # raw shape at ANY scale, which is why the bucketed branch
-        # replaces both size gates rather than adding a third.
-        sql = (
-            Q02_SQL_RAWJOIN.replace("SHUFFLE_HASH(o)", "MERGE(o)")
-            .replace("__CHINT__", chint)
-            .replace("{lineitem}", bt["lineitem"])
-            .replace("{orders}", bt["orders"])
-        )
-        return run_sql(spark, sf_dir, sql)
-    if _parquet_bytes(sf_dir, "orders") < _SMALL_FACT_GATE_BYTES:
-        return run_sql(spark, sf_dir, Q02_SQL_SMALL)
-    if _parquet_bytes(sf_dir, "lineitem") < _NODE_LOCAL_FACT_GATE_BYTES:
-        return run_sql(spark, sf_dir, Q02_SQL_RAWJOIN.replace("__CHINT__", chint))
-    return run_sql(spark, sf_dir, Q02_SQL.replace("__CHINT__", chint))
+    return _run_fact_sql(spark, sf_dir, Q02_SQL_RAWJOIN.replace("__CHINT__", chint))
 
 
-# While orders is small enough to broadcast cheaply (sub-bench scales), skip
-# the per-order rollup entirely: lineitem probes a broadcast of orders'
-# 2-column projection and aggregates straight to o_custkey — ONE wide
-# shuffle in the whole query. Same integer-bp math, so results are
-# bit-identical to the cascade below (pinned by tests/test_sql_df_parity).
-Q02_SQL_SMALL = f"""
-    WITH per_cust AS (
-        SELECT /*+ BROADCAST(o) */ o.o_custkey,
-               sum(CAST(floor((l_extendedprice * (1 - l_discount)) * {BP} + 0.5D) AS BIGINT)) AS _crev
-        FROM {{lineitem}} l
-        JOIN (SELECT o_orderkey, o_custkey FROM {{orders}}) o
-          ON l.l_orderkey = o.o_orderkey
-        GROUP BY o.o_custkey
-    )
-    SELECT /*+ BROADCAST(c), BROADCAST(n), BROADCAST(r) */
-           r.r_name, n.n_name,
-           CAST(sum(_crev) / {BP}.0D AS DOUBLE) AS revenue,
-           count(*)                             AS n_customers
-    FROM per_cust pc
-    JOIN {{customer}} c ON pc.o_custkey = c.c_custkey
-    JOIN {{nation}} n   ON n.n_nationkey = c.c_nationkey
-    JOIN {{region}} r   ON r.r_regionkey = n.n_regionkey
-    GROUP BY r.r_name, n.n_name
-"""
-
-
-# Between the gates (orders too big to broadcast, lineitem still node-local
-# sized): SHUFFLE_HASH the RAW projected lineitem rows against orders and
-# aggregate straight to o_custkey. Shuffling |lineitem| 2-long rows costs
-# more bytes than the per-order rollup ships, but skips two 1.5M-entry hash
-# aggregations — and below the node-local gate the shuffle rides memory/
-# tmpfs bandwidth where bytes are nearly free while agg CPU is the binding
-# cost (measured 0.80 -> 0.61 s at sf1). Past the gate bytes cross a real
-# network and the 4x row cut of the rollup cascade wins — Q02_SQL below.
+# SHUFFLE_HASH the RAW projected lineitem rows against orders and aggregate
+# straight to o_custkey: shuffling |lineitem| 2-long rows costs more bytes
+# than a per-order rollup would ship, but skips two 1.5M-entry hash
+# aggregations (measured 0.80 -> 0.61 s at sf1). On the orderkey-bucketed
+# facts the same join is a merge join over co-located buckets, so the only
+# shuffle left is the o_custkey aggregation. The oracle's
+# COUNT(DISTINCT c_custkey) is a plain COUNT over the per-customer rollup,
+# and integer bp sums are associative, so the result is bit-identical to
+# the single-pass dsum the oracle runs.
 Q02_SQL_RAWJOIN = f"""
     WITH lraw AS (
         SELECT l_orderkey,
@@ -283,80 +241,19 @@ Q02_SQL_RAWJOIN = f"""
 """
 
 
-# Aggregates cascade BELOW every join (the 100 TB plan shape) — see the
-# DataFrame twin's comment below.
-Q02_SQL = f"""
-    WITH lrev AS (
-        SELECT l_orderkey,
-               sum(CAST(floor((l_extendedprice * (1 - l_discount)) * {BP} + 0.5D) AS BIGINT)) AS _rev
-        FROM {{lineitem}}
-        GROUP BY l_orderkey
-    ),
-    per_cust AS (
-        SELECT /*+ SHUFFLE_HASH(o) */ o.o_custkey, sum(_rev) AS _crev
-        FROM {{orders}} o JOIN lrev ON lrev.l_orderkey = o.o_orderkey
-        GROUP BY o.o_custkey
-    )
-    SELECT /*+ __CHINT__BROADCAST(n), BROADCAST(r) */
-           r.r_name, n.n_name,
-           CAST(sum(_crev) / {BP}.0D AS DOUBLE) AS revenue,
-           count(*)                             AS n_customers
-    FROM per_cust pc
-    JOIN {{customer}} c ON pc.o_custkey = c.c_custkey
-    JOIN {{nation}} n   ON n.n_nationkey = c.c_nationkey
-    JOIN {{region}} r   ON r.r_regionkey = n.n_regionkey
-    GROUP BY r.r_name, n.n_name
-"""
-# SHUFFLE_HASH(o) in per_cust: both sides are pre-shrunk one-row-per-key
-# relations (orders projection x per-order rollup) — a hash join skips the
-# sort-merge's two 1.5M-row sorts (measured 1.32 -> 0.91 s at sf1). Build
-# side = orders' 2-col projection, whose per-partition slice stays small
-# under scale-proportional shuffle-partition sizing.
-
-
 def q02_revenue_by_nation_df(spark, sf_dir):
-    # Aggregates cascade BELOW every join (the 100 TB plan shape): lineitem
-    # collapses to one row per order, then to one row per customer, before
-    # the dimension joins — each join input shrinks ~4x/5x, and the oracle's
-    # COUNT(DISTINCT c_custkey) becomes a plain COUNT over the per-customer
-    # rollup (no distinct-aggregate state). Integer bp sums are associative,
-    # so the cascade is bit-identical to the single-pass dsum the oracle runs.
-    # Below the small-fact gate the rollup is skipped: lineitem probes a
-    # broadcast of orders' 2-col projection and aggregates straight to
-    # o_custkey (same switch as the SQL form).
+    # Raw-row shuffled-hash join, no pre-aggregation (see Q02_SQL_RAWJOIN).
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    rev_bp = to_bp(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    if _parquet_bytes(sf_dir, "orders") < _SMALL_FACT_GATE_BYTES:
-        per_cust = (
-            load(spark, sf_dir, "lineitem")
-            .join(F.broadcast(o), F.col("l_orderkey") == o.o_orderkey, "inner")
-            .groupBy("o_custkey")
-            .agg(F.sum(rev_bp).alias("_crev"))
-        )
-    elif _parquet_bytes(sf_dir, "lineitem") < _NODE_LOCAL_FACT_GATE_BYTES:
-        # Node-local fact: raw-row SHUFFLE_HASH join, no pre-agg (see
-        # Q02_SQL_RAWJOIN's comment for the byte-vs-CPU trade).
-        lraw = load(spark, sf_dir, "lineitem").select(
-            "l_orderkey", rev_bp.alias("_rev")
-        )
-        per_cust = (
-            o.hint("shuffle_hash")
-            .join(lraw, F.col("l_orderkey") == o.o_orderkey, "inner")
-            .groupBy("o_custkey")
-            .agg(F.sum("_rev").alias("_crev"))
-        )
-    else:
-        lrev = (
-            load(spark, sf_dir, "lineitem")
-            .groupBy("l_orderkey")
-            .agg(F.sum(rev_bp).alias("_rev"))
-        )
-        per_cust = (
-            o.hint("shuffle_hash")
-            .join(lrev, F.col("l_orderkey") == o.o_orderkey, "inner")
-            .groupBy("o_custkey")
-            .agg(F.sum("_rev").alias("_crev"))
-        )
+    lraw = load(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        to_bp(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("_rev"),
+    )
+    per_cust = (
+        o.hint("shuffle_hash")
+        .join(lraw, F.col("l_orderkey") == o.o_orderkey, "inner")
+        .groupBy("o_custkey")
+        .agg(F.sum("_rev").alias("_crev"))
+    )
     c = _maybe_broadcast(
         load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey"),
         sf_dir,
@@ -388,29 +285,24 @@ def _parquet_bytes(sf_dir: str, table: str) -> int:
 
 _BROADCAST_GATE_BYTES = 64 * 1024 * 1024  # matches session autoBroadcastJoinThreshold
 
-# Gate for treating a FACT table (orders) as broadcastable and for pinning
-# literal shuffle widths: much stricter than the dim gate — a fact passes
-# only at sub-bench scales (sf0.1 orders is 2.7 MB; sf1 is 17 MB and over).
-# Above it, queries fall back to the cascade/shuffle shapes that hold at
-# 100 TB, and shuffle widths come from spark.sql.shuffle.partitions.
-_SMALL_FACT_GATE_BYTES = 8 * 1024 * 1024
 
-# Gate between "shuffle bytes are nearly free" (single-node-class fact:
-# shuffle rides memory/tmpfs or node-local NVMe bandwidth, so trading extra
-# shuffled rows for fewer hash-aggregation passes wins) and "shuffle bytes
-# cross a network" (aggregate-below-join is the only sane shape). 256 MB of
-# columnar parquet ~ a low-GB row payload — comfortably node-local; past it
-# the rollup cascade's 4x row cut pays for itself.
-_NODE_LOCAL_FACT_GATE_BYTES = 256 * 1024 * 1024
-
-
-def _bucketed_facts(spark, sf_dir: str):
-    """Orderkey-bucketed lineitem/orders table names when registered in
-    this session's catalog (sources.bucketed.ensure_bucketed_facts), else
-    None — raw-parquet plans stay untouched unless a user opted in."""
+def _run_fact_sql(spark, sf_dir: str, template: str):
+    """Run an orderkey fact-join template. When the orderkey-bucketed
+    lineitem/orders are registered in this session's catalog
+    (sources.bucketed.ensure_bucketed_facts), the same SQL reads them and
+    ``MERGE(o)`` replaces ``SHUFFLE_HASH(o)``: the co-located, pre-sorted
+    buckets make the fact-fact join a merge join with no exchange and no
+    sort. Otherwise it runs over the raw parquet files."""
     from ..sources.bucketed import bucketed_fact_names
 
-    return bucketed_fact_names(spark, sf_dir)
+    bt = bucketed_fact_names(spark, sf_dir)
+    if bt:
+        template = (
+            template.replace("SHUFFLE_HASH(o)", "MERGE(o)")
+            .replace("{lineitem}", bt["lineitem"])
+            .replace("{orders}", bt["orders"])
+        )
+    return run_sql(spark, sf_dir, template)
 
 
 def _bucketed_lineitem_pk(spark, sf_dir: str):
@@ -599,42 +491,9 @@ def q04_semi_join_large_parts(spark, sf_dir):
     tags=("J5", "J3"),
 )
 def q05_nation_trade_roles(spark, sf_dir):
-    # The bp conversion happens IN the scan projection, before the join
-    # shuffle: one BIGINT crosses the exchange instead of two DOUBLEs
-    # (measured 0.71 -> 0.65 s at sf1, 0.34 -> 0.33 s at sf0.1 — strictly
-    # fewer bytes at any scale, same integer-exact math).
-    l_proj = (
-        "l_orderkey, l_suppkey,"
-        f" CAST(floor((l_extendedprice * (1 - l_discount)) * {BP} + 0.5D) AS BIGINT) AS _rev"
-    )
-    bt = _bucketed_facts(spark, sf_dir)
-    if bt:
-        # Orderkey-bucketed facts: co-located, pre-sorted buckets — the
-        # fact-fact join plans with ZERO exchanges and ZERO sorts (merge
-        # join over bucket order, pinned in tests/test_plans.py). The one
-        # shuffle the raw plan pays per run was paid once at bucketing time.
-        l_src = f"(SELECT {l_proj} FROM {bt['lineitem']})"
-        o_src = bt["orders"]
-        sql = Q05_SQL.replace("SHUFFLE_HASH(o)", "MERGE(o)")
-    else:
-        # Bench-scale width pin for the fact-fact SHJ, same gate as q24:
-        # the REPARTITION exchanges ARE the join shuffles (the join's
-        # required distribution is satisfied), so the pin adds no stage.
-        pin = _parquet_bytes(sf_dir, "lineitem") < _BROADCAST_GATE_BYTES
-        l_src = (
-            f"(SELECT /*+ REPARTITION(16, l_orderkey) */ {l_proj} FROM {{lineitem}})"
-            if pin
-            else f"(SELECT {l_proj} FROM {{lineitem}})"
-        )
-        o_src = (
-            "(SELECT /*+ REPARTITION(16, o_orderkey) */ o_orderkey, o_custkey FROM {orders})"
-            if pin
-            else "{orders}"
-        )
-        sql = Q05_SQL
-    return run_sql(
+    return _run_fact_sql(
         spark, sf_dir,
-        sql.replace("__LSRC__", l_src).replace("__OSRC__", o_src).replace(
+        Q05_SQL.replace(
             "__HINTS__",
             # cn/sn ride fixed hints in the outer 625-row select; only the
             # stream-side dims stay size-gated
@@ -651,6 +510,11 @@ def q05_nation_trade_roles(spark, sf_dir):
 # orders' 2-col projection, bounded per partition by scale-proportional
 # shuffle sizing.
 #
+# The bp conversion happens IN the scan projection, before the join
+# shuffle: one BIGINT crosses the exchange instead of two DOUBLEs
+# (measured 0.71 -> 0.65 s at sf1, 0.34 -> 0.33 s at sf0.1 — strictly
+# fewer bytes at any scale, same integer-exact math).
+#
 # Nation names join POST-AGG: the fact stream needs only c_nationkey /
 # s_nationkey — integers already sitting on customer/supplier — so the
 # per-row work drops from four broadcast probes + a two-STRING group key
@@ -664,8 +528,10 @@ Q05_SQL = f"""
                c.c_nationkey AS ck, s.s_nationkey AS sk,
                count(*)                       AS n_lines,
                CAST(sum(l._rev) AS BIGINT)    AS rev
-        FROM __LSRC__ l
-        JOIN __OSRC__ o     ON o.o_orderkey = l.l_orderkey
+        FROM (SELECT l_orderkey, l_suppkey,
+                     CAST(floor((l_extendedprice * (1 - l_discount)) * {BP} + 0.5D) AS BIGINT) AS _rev
+              FROM {{lineitem}}) l
+        JOIN {{orders}} o   ON o.o_orderkey = l.l_orderkey
         JOIN {{customer}} c ON c.c_custkey = o.o_custkey
         JOIN {{supplier}} s ON s.s_suppkey = l.l_suppkey
         GROUP BY c.c_nationkey, s.s_nationkey
@@ -688,11 +554,7 @@ def q05_nation_trade_roles_df(spark, sf_dir):
         "l_suppkey",
         to_bp(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("_rev"),
     )
-    o = load(spark, sf_dir, "orders")
-    if _parquet_bytes(sf_dir, "lineitem") < _BROADCAST_GATE_BYTES:
-        l = l.repartition(16, "l_orderkey")
-        o = o.select("o_orderkey", "o_custkey").repartition(16, "o_orderkey")
-    o = o.hint("shuffle_hash")
+    o = load(spark, sf_dir, "orders").hint("shuffle_hash")
     c = _maybe_broadcast(load(spark, sf_dir, "customer"), sf_dir, "customer")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")
@@ -720,16 +582,6 @@ def q05_nation_trade_roles_df(spark, sf_dir):
             (F.col("rev") / F.lit(float(BP))).cast("double").alias("volume"),
         )
     )
-
-
-# Packed composite key: when max(l_suppkey) < 2^20 and max(l_partkey) <
-# 2^42 (checked against the parquet footer column stats — one metadata
-# read, no job), (partkey, suppkey) packs into ONE BIGINT. The window's
-# sort then runs on a single radix-friendly long instead of a two-column
-# comparator: measured 16.4 -> 11.2 s at sf16, 0.71 -> 0.64 s at sf1,
-# 0.46 -> 0.41 s at sf0.1 (interleaved A/B). Past the width gate (e.g.
-# 2^20+ suppliers) the two-column form below is the fallback.
-_PACK_BITS = 20
 
 
 @register(
@@ -760,76 +612,10 @@ def q06_multikey_min_price_join(spark, sf_dir):
     if bpk:
         # (partkey, suppkey)-clustered+sorted lineitem: the window's
         # required distribution is satisfied by the bucket hash and its
-        # required sort by the bucket sort order — the TWO-COLUMN window
-        # form runs with no exchange and no sort before the window, which
-        # is strictly better than the packed-key form (whose only purpose
-        # is cheapening the sort that no longer exists).
-        src = f"SELECT l_partkey, l_suppkey, l_extendedprice FROM {bpk}"
-        return run_sql(spark, sf_dir, Q06_SQL.replace("__SRC__", src))
-    pin = _parquet_bytes(sf_dir, "lineitem") < _BROADCAST_GATE_BYTES
-    sk = _parquet_col_minmax(sf_dir, "lineitem", "l_suppkey")
-    pk = _parquet_col_minmax(sf_dir, "lineitem", "l_partkey")
-    # The min >= 0 check matters: a column whose MAX fits the width gate
-    # but contains negative keys would alias packed (partkey,suppkey)
-    # values and silently corrupt the window partitioning.
-    packable = (
-        sk is not None
-        and pk is not None
-        and 0 <= sk[0] and sk[1] < (1 << _PACK_BITS)
-        and 0 <= pk[0] and pk[1] < (1 << (62 - _PACK_BITS))
-    )
-    if packable:
-        hint = "/*+ REPARTITION(16, pk) */ " if pin else ""
-        src = (
-            f"SELECT {hint}l_partkey * {1 << _PACK_BITS} + l_suppkey AS pk,"
-            " l_extendedprice FROM {lineitem}"
-        )
-        return run_sql(spark, sf_dir, Q06_SQL_PACKED.replace("__SRC__", src))
-    hint = "/*+ REPARTITION(16, l_partkey, l_suppkey) */ " if pin else ""
-    src = f"SELECT {hint}l_partkey, l_suppkey, l_extendedprice FROM {{lineitem}}"
-    return run_sql(spark, sf_dir, Q06_SQL.replace("__SRC__", src))
-
-
-def _parquet_col_minmax(sf_dir: str, table: str, column: str):
-    """Column (min, max) from parquet footer statistics (driver-side, no
-    job). Both bounds are needed by the packed-key gate: max for width,
-    min for non-negativity (negative keys would alias packed values).
-
-    Returns None when any row group lacks stats — callers must fall back
-    to the unpacked plan in that case."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    path = f"{sf_dir}/{table}.parquet"
-    files = [path] if _os.path.isfile(path) else sorted(_glob.glob(f"{path}/*.parquet"))
-    lo = hi = None
-    for f in files:
-        md = _pq.ParquetFile(f).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}.get(column)
-        if idx is None:
-            return None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or st.max is None or st.min is None:
-                return None
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-    return None if lo is None else (lo, hi)
-
-
-Q06_SQL_PACKED = f"""
-    SELECT CAST(pk % {1 << _PACK_BITS} AS BIGINT) AS l_suppkey,
-           count(*)                                               AS n_lines,
-           count(CASE WHEN l_extendedprice = min_price THEN 1 END) AS n_at_min
-    FROM (
-        SELECT pk, l_extendedprice,
-               min(l_extendedprice) OVER (PARTITION BY pk) AS min_price
-        FROM (__SRC__)
-    )
-    GROUP BY pk % {1 << _PACK_BITS}
-"""
+        # required sort by the bucket sort order — the window runs with no
+        # exchange and no sort before it.
+        return run_sql(spark, sf_dir, Q06_SQL.replace("{lineitem}", bpk))
+    return run_sql(spark, sf_dir, Q06_SQL)
 
 
 Q06_SQL = """
@@ -839,7 +625,7 @@ Q06_SQL = """
     FROM (
         SELECT l_suppkey, l_extendedprice,
                min(l_extendedprice) OVER (PARTITION BY l_partkey, l_suppkey) AS min_price
-        FROM (__SRC__)
+        FROM (SELECT l_partkey, l_suppkey, l_extendedprice FROM {lineitem})
     )
     GROUP BY l_suppkey
 """
@@ -849,8 +635,6 @@ def q06_multikey_min_price_join_df(spark, sf_dir):
     l = load(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice"
     )
-    if _parquet_bytes(sf_dir, "lineitem") < _BROADCAST_GATE_BYTES:
-        l = l.repartition(16, "l_partkey", "l_suppkey")
     w = Window.partitionBy("l_partkey", "l_suppkey")
     return (
         l.withColumn("min_price", F.min("l_extendedprice").over(w))
@@ -981,7 +765,7 @@ def q09_upsert_delete_insert(spark, sf_dir):
         .withColumn("value", F.col("value") * 2)
     )
     target = e.filter(F.col("event_id") < 8000)
-    merged = target.join(updates, "event_id", "left_anti").unionByName(updates)
+    merged = upsert_delete_insert(target, updates, ["event_id"])
     return merged.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         dsum(F.col("value")).alias("total_value"),
@@ -1042,7 +826,7 @@ def q11_schema_align_union(spark, sf_dir):
     latest = o.filter(F.col("o_orderdate") >= cutoff).select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
-    unioned = historic.unionByName(latest, allowMissingColumns=True)
+    unioned = align_union(historic, latest)
     return unioned.groupBy(
         F.coalesce("o_orderpriority", F.lit("UNKNOWN")).alias("priority")
     ).agg(
@@ -1572,46 +1356,22 @@ def q23_limit_preview(spark, sf_dir):
     tags=("A8", "F4", "J3"),
 )
 def q24_grouped_column_reuse(spark, sf_dir):
-    bt = _bucketed_facts(spark, sf_dir)
-    if bt:
-        # Bucketed facts: the merge join AND the o_orderkey group-by are
-        # both satisfied by the bucket distribution — ZERO exchanges in the
-        # whole query (pinned in tests/test_plans.py).
-        return run_sql(
-            spark, sf_dir,
-            Q24_SQL.replace("SHUFFLE_HASH(o)", "MERGE(o)")
-            .replace("__O__", f"(SELECT o_orderkey, o_totalprice FROM {bt['orders']})")
-            .replace("__L__", f"(SELECT l_orderkey, l_partkey FROM {bt['lineitem']})"),
-        )
-    width = 16 if _parquet_bytes(sf_dir, "lineitem") < _BROADCAST_GATE_BYTES else 0
-    return run_sql(
-        spark, sf_dir,
-        Q24_SQL.replace(
-            "__O__",
-            f"(SELECT /*+ REPARTITION({width}, o_orderkey) */ o_orderkey, o_totalprice FROM {{orders}})"
-            if width
-            else "(SELECT o_orderkey, o_totalprice FROM {orders})",
-        ).replace(
-            "__L__",
-            f"(SELECT /*+ REPARTITION({width}, l_orderkey) */ l_orderkey, l_partkey FROM {{lineitem}})"
-            if width
-            else "(SELECT l_orderkey, l_partkey FROM {lineitem})",
-        ),
-    )
+    return _run_fact_sql(spark, sf_dir, Q24_SQL)
 
 
 # SHUFFLE_HASH(o): orders is too big to broadcast cheaply (the single-thread
 # hash build costs more than a parallel shuffle at bench scale, and at real
-# scale broadcasting a fact side is impossible anyway). The size-gated
-# REPARTITION pins the join exchanges 16-wide at bench scale (the join and
-# the downstream group-by reuse them — HashPartitioning(o_orderkey) satisfies
-# both, so no extra shuffle); past the gate session/AQE sizing applies.
+# scale broadcasting a fact side is impossible anyway). The join and the
+# downstream group-by share one distribution (HashPartitioning(o_orderkey)
+# satisfies both), so the group-by adds no shuffle; on the orderkey-bucketed
+# facts neither adds one.
 Q24_SQL = """
     SELECT /*+ SHUFFLE_HASH(o) */
            o.o_orderkey, o.o_totalprice,
            CAST(round(o_totalprice * 100, 0) AS BIGINT)
                div nullif(count(DISTINCT l.l_partkey), 0) AS price_cents_per_part
-    FROM __O__ o JOIN __L__ l ON l.l_orderkey = o.o_orderkey
+    FROM (SELECT o_orderkey, o_totalprice FROM {orders}) o
+    JOIN (SELECT l_orderkey, l_partkey FROM {lineitem}) l ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderkey, o.o_totalprice
 """
 
@@ -1619,9 +1379,6 @@ Q24_SQL = """
 def q24_grouped_column_reuse_df(spark, sf_dir):
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    if _parquet_bytes(sf_dir, "lineitem") < _BROADCAST_GATE_BYTES:
-        o = o.repartition(16, "o_orderkey")
-        l = l.repartition(16, "l_orderkey")
     return (
         o.hint("shuffle_hash")
         .join(l, l.l_orderkey == o.o_orderkey)
@@ -1680,11 +1437,9 @@ def q26_incremental_append(spark, sf_dir):
     e = load(spark, sf_dir, "events")
     cutoff = F.lit("2024-10-01 00:00:00").cast("timestamp")
     target = e.filter(F.col("ts") < cutoff)
-    # Driver-side scalar, exactly how the incremental materializer reads the
-    # sink's high-water mark (one tiny job, not a data-path collect).
-    max_ts = target.agg(F.max("ts")).collect()[0][0]
-    increment = e.filter(F.col("ts") > F.lit(max_ts))
-    merged = target.unionByName(increment)
+    # the operator the incremental materializer runs: a broadcast join on
+    # the sink's 1-row high-water mark, no driver collect
+    merged = target.unionByName(incremental_filter(e, target, "ts"))
     return merged.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.max("ts").alias("latest_ts"),

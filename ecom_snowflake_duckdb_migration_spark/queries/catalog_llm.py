@@ -54,23 +54,21 @@ def q40_dedup_exact(spark, sf_dir):
         # clustered on it — what an exact-dedup store is in production):
         # the hash-groupBy reads co-located buckets, zero exchanges.
         return spark.sql(
-            f"""
-            SELECT text_hash, min(doc_id) AS canonical_doc_id,
-                   count(*) AS n_copies
-            FROM {bt} GROUP BY text_hash
-            """
+            Q40_SQL.replace("{hash}", "text_hash").replace("{documents}", bt)
         )
-    return run_sql(spark, sf_dir, Q40_SQL)
+    return run_sql(spark, sf_dir, Q40_SQL.replace("{hash}", "md5(text)"))
 
 
 # SQL twin of operators.text.exact_dedup_groups (the canonical DataFrame op);
 # tests/test_sql_df_parity.py pins exact equality. SQL-text build avoids the
 # py4j plan-construction overhead that dominates sub-second benchmarks.
+# ``{hash}`` is the content hash: md5(text) over the raw documents, the
+# stored text_hash column on the content-addressed copy.
 Q40_SQL = """
-    SELECT md5(text)   AS text_hash,
+    SELECT {hash}      AS text_hash,
            min(doc_id) AS canonical_doc_id,
            count(*)    AS n_copies
-    FROM {documents} GROUP BY md5(text)
+    FROM {documents} GROUP BY {hash}
 """
 
 

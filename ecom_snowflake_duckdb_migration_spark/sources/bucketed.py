@@ -23,9 +23,10 @@ Mechanics:
   DDL over the existing location instead of rewriting (bucket ids ride the
   file names, so the layout survives re-registration).
 - Activation is explicit: queries consult :func:`bucketed_fact_names` and
-  use the bucketed scan ONLY when both tables are registered in the
-  session catalog — the correctness gate and any plain consumer keep the
-  raw-parquet plans untouched.
+  read the bucketed tables ONLY when both are registered in the session
+  catalog. Each query runs one SQL template either way; without the
+  tables (the correctness gate, any plain consumer) the same SQL reads the
+  raw parquet files, with ``SHUFFLE_HASH`` where the bucketed form merges.
 - Files are touched with driver-local ``os`` calls, not the helpers in
   ``writers``: a session-local warehouse cache on the ``olap_mixed`` setup path.
 """

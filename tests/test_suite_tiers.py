@@ -44,14 +44,19 @@ def test_slow_tests_name_defined_test_functions():
 
 # "[_]" keeps this file from matching a plain search for the variable prefix
 HOST_SIZING = re.compile(r"os\.cpu_count|SC_PHYS_PAGES|SPARK_GRAFT_BENCH[_]")
+# A literal shuffle width (a REPARTITION hint or a repartition call whose
+# first argument is a number) pins the width that default_parallelism sets.
+# Package files only: a script may fix a width that a recorded measurement
+# depends on.
+LITERAL_WIDTH = re.compile(r"(?i)repartition(ByRange)?\(\s*\d")
 
 
 def test_host_sizing_lives_in_session_py():
     """Core count and RAM are read in ``session.py`` only, and no bench env
     var overrides the sizing: the package, bench.py and scripts/ follow
-    ``default_parallelism`` / ``default_driver_memory``. perfbench/ is not
-    scanned: it is frozen outside benchmark changes and still keeps its own
-    driver-memory rule."""
+    ``default_parallelism`` / ``default_driver_memory``, and no package file
+    pins a literal shuffle width. perfbench/ is not scanned: it is frozen
+    outside benchmark changes and still keeps its own driver-memory rule."""
     package = os.path.join(ROOT, "ecom_snowflake_duckdb_migration_spark")
     paths = [os.path.join(ROOT, "bench.py")]
     for top in (package, os.path.join(ROOT, "scripts")):
@@ -63,6 +68,8 @@ def test_host_sizing_lives_in_session_py():
             continue
         with open(path, encoding="utf-8") as f:
             for lineno, line in enumerate(f, 1):
-                if HOST_SIZING.search(line):
+                if HOST_SIZING.search(line) or (
+                    path.startswith(package + os.sep) and LITERAL_WIDTH.search(line)
+                ):
                     offenders.append(f"{os.path.relpath(path, ROOT)}:{lineno}")
     assert not offenders, f"host sizing outside session.py: {offenders}"
