@@ -473,26 +473,47 @@ def train_centroids(
     n_centroids: int,
     vec_col: str = "embedding",
     seed: int = 42,
-    max_iter: int = 20,
+    max_iter: int = 300,
     sample_n: int | None = None,
     id_col: str | None = "vec_id",
 ) -> list[list[float]]:
-    """KMeans coarse quantizer (the IVF codebook). Training is a distributed
-    MLlib job; the returned codebook is tiny (n_centroids x dim floats) and
+    """KMeans coarse quantizer (the IVF codebook). Training is an MLlib
+    job; the returned codebook is tiny (n_centroids x dim floats) and
     ships to queries as literals. At 100 TB pass ``sample_n`` — centroids
     converge long before full data, and the sample is the deterministic
     hash-ranked one (:func:`_codebook_sample_rows`: unbiased under any
-    physical layout, unlike a head ``limit``)."""
+    physical layout, unlike a head ``limit``).
+
+    The codebook is a function of the rows, ``n_centroids`` and ``seed``
+    alone — the same on every host and under every input partitioning:
+
+    - Canonical layout: k-means|| seeds each partition by its partition
+      index, so the fit runs on ONE partition in ``id_col`` order (else
+      vector order). Rows whose vector has no direction (NULL or zero
+      norm) are dropped first: :func:`assign_cell` gives them no cell.
+    - Cosine objective: the fit uses ``distanceMeasure="cosine"``, the
+      metric that :func:`assign_cell` and :func:`knn_join` define cells by.
+    - Fit to convergence: ``max_iter`` (scikit-learn's 300) is a cap
+      that the fit does not reach; it stops on MLlib's ``tol``."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
+    key = id_col if id_col is not None and id_col in df.columns else vec_col
+    directed = df.filter(norm(vec_col) > 0)
     if sample_n is not None:
-        rows = _codebook_sample_rows(df, vec_col, sample_n, id_col, seed)
-        df = df.sparkSession.createDataFrame(
+        rows = _codebook_sample_rows(directed, vec_col, sample_n, id_col, seed)
+        directed = df.sparkSession.createDataFrame(
             [(list(r[0]),) for r in rows], f"{vec_col} array<double>"
         )
-    feats = df.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(feats)
+        key = vec_col
+    feats = (
+        directed.orderBy(key)
+        .coalesce(1)
+        .select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
+    )
+    model = KMeans(
+        k=n_centroids, seed=seed, maxIter=max_iter, distanceMeasure="cosine"
+    ).fit(feats)
     return [c.tolist() for c in model.clusterCenters()]
 
 

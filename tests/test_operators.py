@@ -1301,7 +1301,7 @@ def test_ann_ivf_recall_gate(spark):
 
     Committed sf0.1 embeddings (2000 x 64), trained codebook (8 cells,
     seed 42), 50 queries, exact numpy oracle. Measured curve (recall@10):
-    nprobe 1 -> 0.48, 2 -> 0.64, 4 -> 0.81, 6 -> 0.93, 8 -> 1.0. nprobe=4
+    nprobe 2 -> 0.60, 4 -> 0.80, 6 -> 0.94, 8 -> 1.0. nprobe=4
     sits UNDER the 0.9 bar on this geometry (neighbors straddle cell
     boundaries with only 8 cells); 6 is the smallest >= 0.9 here. The
     FAMILY default is calibrated at production geometry instead — see
@@ -1352,8 +1352,8 @@ def test_ann_ivf_recall_gate_production_geometry(spark):
     degenerately 1.0 at nprobe=1 — so the set is 10 seeded ~0.82-cosine
     perturbations per committed sf0.1 vector: near-duplicate clusters
     that straddle cell boundaries). Measured curve (PERF_ANN_RECALL.json):
-    nprobe 1 -> 0.64, 4 -> 0.84, 6 -> 0.88, 8 -> 0.90, 12 -> 0.93,
-    16 -> 0.96. nprobe=8 is the smallest >= 0.9 — the family default.
+    nprobe 1 -> 0.68, 4 -> 0.83, 6 -> 0.87, 8 -> 0.92, 12 -> 0.96,
+    16 -> 0.97. nprobe=8 is the smallest >= 0.9 — the family default.
     Also exercises the pandas (numpy-kernel) assignment path end-to-end:
     at >16 cells knn_join auto-dispatches to it (the expression path
     measured 90 s vs < 5 s here)."""
@@ -2405,6 +2405,37 @@ def test_pq_trained_codebooks_beat_seeded_recall(spark, sf_dir):
     r_t, r_s = recall(trained), recall(seeded)
     assert r_t >= 0.2, r_t
     assert r_t > r_s, (r_t, r_s)
+
+
+def _codebook_rows(n=400, dim=8):
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    return [(i, rng.standard_normal(dim).tolist()) for i in range(n)]
+
+
+def test_codebook_training_is_layout_invariant(spark):
+    """The full-data KMeans codebook is a function of the rows, not of how
+    they are laid out: one partition in id order and seven partitions in
+    reverse order train the same codebook (k-means|| seeds each partition
+    by its index, so a layout-dependent fit would differ — and the layout
+    createDataFrame gives follows the host's core count)."""
+    rows = _codebook_rows()
+    schema = "vec_id long, embedding array<double>"
+    one = spark.createDataFrame(rows, schema).coalesce(1)
+    seven = spark.createDataFrame(rows[::-1], schema).repartition(7)
+    assert sim.train_centroids(one, 6, seed=3) == sim.train_centroids(seven, 6, seed=3)
+
+
+def test_codebook_training_drops_directionless_vectors(spark):
+    """assign_cell's degenerate-vector contract holds in training too: a
+    NULL and an all-zero embedding have no direction, get no cell, and
+    leave the trained codebook exactly as it is without them."""
+    rows = _codebook_rows()
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(rows + [(400, None), (401, [0.0] * 8)], schema)
+    assert sim.train_centroids(dirty, 6, seed=3) == sim.train_centroids(clean, 6, seed=3)
 
 
 def test_codebook_training_sample_is_layout_invariant(spark):
