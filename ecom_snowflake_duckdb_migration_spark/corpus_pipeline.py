@@ -136,23 +136,14 @@ def corpus_run(
             order_cols=("shuffle_key", "chunk_id"),
         )
         path = os.path.join(out_dir, f"split={name}")
-        # no explicit partition count (round-10, guide §6): with N
-        # pinned to the core count the val/test splits wrote 32 tiny
-        # files at any scale and train's width never tracked data
-        # size; un-pinned, the range exchange starts at
-        # spark.sql.shuffle.partitions and AQE coalesces it to
-        # advisory-sized output files — scale-adaptive in both
-        # directions, ordering within files unchanged. File sizing
-        # DEPENDS on AQE coalescing: under an AQE-off profile every
-        # split would write spark.sql.shuffle.partitions files no
-        # matter how small, so fall back to the pre-round-10 explicit
-        # width there (round-11, advisor finding).
-        if spark.conf.get("spark.sql.adaptive.enabled", "true").lower() == "true":
-            ranged = part.repartitionByRange("pack_id", "pack_offset")
-        else:
-            ranged = part.repartitionByRange(
-                spark.sparkContext.defaultParallelism, "pack_id", "pack_offset"
-            )
+        # no explicit partition count (round-10, guide §6): the range
+        # exchange starts at spark.sql.shuffle.partitions and AQE
+        # coalesces it to advisory-sized output files — scale-adaptive
+        # in both directions, ordering within files unchanged. With AQE
+        # off it stays at spark.sql.shuffle.partitions, which session.py
+        # sizes to default_parallelism(), the width an explicit count
+        # would pin.
+        ranged = part.repartitionByRange("pack_id", "pack_offset")
         back = overwrite_parquet(
             ranged.sortWithinPartitions("pack_id", "pack_offset"), path
         )

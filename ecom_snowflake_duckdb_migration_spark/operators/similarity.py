@@ -25,6 +25,13 @@ projections on scan-side frames. Row norms are always projected once
 per side BEFORE any pair join — only the dot product is per-pair work —
 and LITERAL vector norms are computed driver-side in Python
 (IEEE-identical, see ``norm_lit``).
+
+One form per expression: every vector expression is the SQL text of its
+``*_sql`` builder, parsed by one ``F.expr``. Names are quoted once: the
+operators and the Column wrappers (``dot``, ``norm``, ``assign_cell``,
+...) take column NAMES and pass each through ``quote_ident`` where it
+comes in. SQL fragments such as ``slice(...)`` go only through the
+``*_sql`` builders, which take SQL text and quote nothing.
 """
 
 from __future__ import annotations
@@ -49,7 +56,7 @@ def _resolve_method(method: str, centroids: list, codebooks: list | None = None)
 
 
 # ---------------------------------------------------------------------------
-# SQL-text twins of the literal-codebook expression builders.
+# Expression builders: one form per expression.
 #
 # Round-10 measurement (guide §7.3 "avoid generating gigantic expression
 # trees in loops"): constructing these folds through the Python Column API
@@ -57,29 +64,11 @@ def _resolve_method(method: str, centroids: list, codebooks: list | None = None)
 # assign_cell over 8 centroids 1.15 s, the full semantic_cells projection
 # ~3 s of pure driver-side Python, dwarfing both planning (0.25 s) and
 # execution (0.7 s) at bench scale and re-paid on every operator invocation
-# at any scale. Building the IDENTICAL tree as one SQL string parsed by a
-# single F.expr call is ~1 ms. The parsed trees perform the same IEEE
-# operation sequence (same fold shape, same casts, literals round-tripped
-# through repr -> Double.parseDouble), so results are bit-identical —
-# pinned by an A/B collect in tests and by the unchanged DuckDB oracles.
-# String inputs name columns (or are themselves SQL fragments, e.g. a
-# slice(...) expression); Column inputs keep the legacy Column-API path.
+# at any scale. Building the tree as one SQL string parsed by a single
+# F.expr call is ~1 ms, and the parsed trees are the IEEE operation
+# sequences the DuckDB oracles pin (literals round-trip through
+# repr -> Double.parseDouble). Hence the module's one-form rule.
 # ---------------------------------------------------------------------------
-
-
-import re as _re
-
-_SAFE_IDENT = _re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
-
-
-def _ident_sql(s: str) -> str:
-    """Backtick-quote ``s`` when it is a plain identifier — quoting a
-    valid identifier never changes the parse, and it protects column
-    names that collide with reserved words (round-11, advisor finding).
-    Non-identifier strings pass through untouched as SQL fragments (the
-    documented dual use of the string inputs); column names that need
-    quoting beyond this (hyphens, spaces) must be passed as Columns."""
-    return quote_ident(s) if _SAFE_IDENT.fullmatch(s) else s
 
 
 def _dlit_sql(v: float) -> str:
@@ -92,34 +81,32 @@ def _arr_lit_sql(values: list[float]) -> str:
     return "array(" + ", ".join(_dlit_sql(v) for v in values) + ")"
 
 
-def _dot_fold_sql(a: str, b: str) -> str:
-    """Lambda-fold dot, textually identical in shape to the Column form."""
+def dot_sql(a: str, b: str) -> str:
+    """Left-to-right double-precision fold of the elementwise product —
+    bit-identical to DuckDB's ``list_sum(list_transform(...))``. Always
+    the compact lambda fold: under a join the unroll is 1.4-5x slower
+    (module docstring)."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) *"
         f" CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
     )
 
 
-def dot_sql(a: str, b: str, dim: int | None = None) -> str:
-    """SQL text of :func:`dot` for string/fragment inputs."""
-    if dim is None:
-        return _dot_fold_sql(a, b)
-    terms = "0.0D"
-    for i in range(dim):
-        terms = (
-            f"({terms} + (CAST(get({a}, {i}) AS DOUBLE) *"
-            f" CAST(get({b}, {i}) AS DOUBLE)))"
-        )
-    return terms
-
-
 def dot_lit_sql(a: str, values: list[float]) -> str:
-    """SQL text of :func:`dot_lit` (lambda fold against a literal array)."""
-    return _dot_fold_sql(a, _arr_lit_sql(values))
+    """Dot of a vector against a LITERAL vector, via the compact lambda
+    fold — one ~80-node tree per call, so a projection carrying one per
+    codebook centroid stays cheap to analyze and compile (the unrolled
+    form here measured 8 x ~380-node trees and ~4 s of frontend per query
+    for zero execution win at 1M rows)."""
+    return dot_sql(a, _arr_lit_sql(values))
 
 
 def norm_sql(a: str, dim: int | None = None) -> str:
-    """SQL text of :func:`norm`."""
+    """sqrt of the left-to-right fold of squares. ``dim`` (the fixed
+    array length; longer arrays would be silently truncated) unrolls it
+    into flat ``((0.0 + a0*a0) + a1*a1) + ...`` arithmetic — the same
+    IEEE sequence, ~25% faster per eval in scan-side row-norm projections,
+    never used for pair work under a join."""
     if dim is None:
         return (
             f"SQRT(aggregate(transform({a}, x -> CAST(x AS DOUBLE) *"
@@ -133,13 +120,15 @@ def norm_sql(a: str, dim: int | None = None) -> str:
 
 
 def cosine_lit_sql(a: str, values: list[float], a_norm_sql: str) -> str:
-    """SQL text of :func:`cosine_lit` — pass the row norm's SQL once."""
+    """Cosine of a vector against a literal vector, with the vector
+    side's norm SQL passed in (project it ONCE per row upstream — it is
+    the same subexpression for every literal compared against)."""
     return f"({dot_lit_sql(a, values)} / ({a_norm_sql} * {_dlit_sql(norm_lit(values))}))"
 
 
 def assign_cell_sql(a: str, centroids: list[list[float]]) -> str:
-    """SQL text of :func:`assign_cell` (same (sim, -cell) array_max device,
-    same NULL/zero-norm guard)."""
+    """SQL text of :func:`assign_cell` (the (sim, -cell) array_max device
+    and the NULL/zero-norm guard)."""
     d = len(centroids[0])
     nv = norm_sql(a, d)
     structs = ", ".join(
@@ -152,49 +141,14 @@ def assign_cell_sql(a: str, centroids: list[list[float]]) -> str:
     )
 
 
-def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    """Left-to-right double-precision fold of the elementwise product.
-
-    With ``dim`` (a known fixed array length), the fold is UNROLLED into a
-    flat ``((0.0 + a0*b0) + a1*b1) + ...`` expression — fully inside
-    whole-stage codegen, measured ~25% faster per eval than the lambda
-    form; worth it ONLY in per-pair hot paths (see the module docstring
-    for the frontend-latency tradeoff). The unrolled fold performs the
-    IDENTICAL IEEE operation sequence, so results stay bit-identical to
-    the lambda form and to DuckDB's ``list_sum(list_transform(...))``.
-    ``dim`` must equal the array length — longer arrays would be silently
-    truncated. Never pass a literal ``F.array`` with ``dim``: each of the
-    ``dim`` element reads would carry its own copy of the array subtree
-    (O(dim^2) nodes); use ``dot_lit``'s caller pattern instead.
-    """
-    if isinstance(a, str) and isinstance(b, str):
-        # one-parse SQL twin: ~1 ms vs ~250 ms (dim=64) of py4j round-trips
-        return F.expr(dot_sql(_ident_sql(a), _ident_sql(b), dim))
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    if dim is not None:
-        acc = F.lit(0.0)
-        for i in range(dim):
-            acc = acc + F.get(a, i).cast("double") * F.get(b, i).cast("double")
-        return acc
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def dot(a: str, b: str) -> Column:
+    """:func:`dot_sql` over the columns named ``a`` and ``b``."""
+    return F.expr(dot_sql(quote_ident(a), quote_ident(b)))
 
 
-def dot_lit(a: Column | str, values: list[float]) -> Column:
-    """Dot of a column vector against a LITERAL vector, via the compact
-    lambda fold — one ~80-node tree per call, so a projection carrying one
-    per codebook centroid stays cheap to analyze and compile (the unrolled
-    form here measured 8 x ~380-node trees and ~4 s of frontend per query
-    for zero execution win at 1M rows). IEEE sequence identical to
-    :func:`dot` and DuckDB's ``list_sum(list_transform(...))``."""
-    if isinstance(a, str):
-        return F.expr(dot_lit_sql(_ident_sql(a), values))
-    lit = F.array(*[F.lit(float(v)) for v in values])
-    return dot(a, lit)
+def dot_lit(a: str, values: list[float]) -> Column:
+    """:func:`dot_lit_sql` over the column named ``a``."""
+    return F.expr(dot_lit_sql(quote_ident(a), values))
 
 
 def norm_lit(values: list[float]) -> float:
@@ -212,36 +166,9 @@ def norm_lit(values: list[float]) -> float:
     return math.sqrt(acc)
 
 
-def cosine_lit(a: Column | str, values: list[float], a_norm: Column) -> Column:
-    """Cosine of a column vector against a literal vector, with the column
-    side's norm passed in (project it ONCE per row upstream — it is the
-    same subexpression for every literal compared against)."""
-    return dot_lit(a, values) / (a_norm * F.lit(norm_lit(values)))
-
-
-def norm(a: Column | str, dim: int | None = None) -> Column:
-    """sqrt of the left-to-right fold of squares; ``dim`` unrolls it into
-    codegen-able arithmetic exactly like :func:`dot`."""
-    if isinstance(a, str):
-        return F.expr(norm_sql(_ident_sql(a), dim))
-    a = F.col(a) if isinstance(a, str) else a
-    if dim is not None:
-        acc = F.lit(0.0)
-        for i in range(dim):
-            x = F.get(a, i).cast("double")
-            acc = acc + x * x
-        return F.sqrt(acc)
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def cosine(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
+def norm(a: str, dim: int | None = None) -> Column:
+    """:func:`norm_sql` over the column named ``a``."""
+    return F.expr(norm_sql(quote_ident(a), dim))
 
 
 def ann_topk_bruteforce(
@@ -296,36 +223,22 @@ def cosine_pairs_bruteforce(
     )
 
 
-def hyperplane_signature(
-    vec_col: Column | str, hyperplanes: list[list[float]]
-) -> Column:
+def hyperplane_signature(vec_col: str, hyperplanes: list[list[float]]) -> Column:
     """Random-hyperplane LSH signature: bit b = sign(v . h_b).
 
     Hyperplanes are passed as literals (generated once, deterministic seed),
     so the signature is a pure Catalyst expression.
     """
-    if isinstance(vec_col, str):
-        vec_col = _ident_sql(vec_col)
-        terms = [
-            f"CASE WHEN {dot_lit_sql(vec_col, h)} >= 0 THEN"
-            f" SHIFTLEFT(CAST(1 AS BIGINT), {i}) ELSE CAST(0 AS BIGINT) END"
-            for i, h in enumerate(hyperplanes)
-        ]
-        sig_sql = terms[0]
-        for t in terms[1:]:
-            sig_sql = f"({sig_sql} | {t})"
-        return F.expr(sig_sql)
-    bits = []
-    for i, h in enumerate(hyperplanes):
-        bit = F.when(
-            dot_lit(vec_col, h) >= 0,
-            F.shiftleft(F.lit(1).cast("long"), i),
-        ).otherwise(F.lit(0).cast("long"))
-        bits.append(bit)
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig.bitwiseOR(b)
-    return sig
+    v = quote_ident(vec_col)
+    terms = [
+        f"CASE WHEN {dot_lit_sql(v, h)} >= 0 THEN"
+        f" SHIFTLEFT(CAST(1 AS BIGINT), {i}) ELSE CAST(0 AS BIGINT) END"
+        for i, h in enumerate(hyperplanes)
+    ]
+    sig_sql = terms[0]
+    for t in terms[1:]:
+        sig_sql = f"({sig_sql} | {t})"
+    return F.expr(sig_sql)
 
 
 def make_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -503,7 +416,7 @@ def train_centroids(
     if sample_n is not None:
         rows = _codebook_sample_rows(directed, vec_col, sample_n, id_col, seed)
         directed = df.sparkSession.createDataFrame(
-            [(list(r[0]),) for r in rows], f"{vec_col} array<double>"
+            [(list(r[0]),) for r in rows], f"{quote_ident(vec_col)} array<double>"
         )
         key = vec_col
     feats = (
@@ -517,7 +430,7 @@ def train_centroids(
     return [c.tolist() for c in model.clusterCenters()]
 
 
-def assign_cell(vec_col: Column | str, centroids: list[list[float]]) -> Column:
+def assign_cell(vec_col: str, centroids: list[list[float]]) -> Column:
     """Nearest-centroid id (by cosine) as a pure Catalyst expression —
     the codebook is inlined as literals, so assignment is a scan-side map
     with no shuffle and no Python.
@@ -534,24 +447,7 @@ def assign_cell(vec_col: Column | str, centroids: list[list[float]]) -> Column:
     NULL vectors and zero-norm vectors both get a NULL cell — a zero
     vector has no defined cosine direction, and without the guard all
     sims are NaN so array_max would silently pick cell 0."""
-    if isinstance(vec_col, str):
-        return F.expr(assign_cell_sql(_ident_sql(vec_col), centroids)).alias("cell")
-    d = len(centroids[0])
-    nv = norm(vec_col, d)
-    sims = F.array(
-        *[
-            F.struct(
-                cosine_lit(vec_col, c, nv).alias("sim"),
-                F.lit(-i).alias("negcell"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return (
-        F.when(nv > 0, F.lit(0) - F.array_max(sims)["negcell"])
-        .otherwise(F.lit(None).cast("int"))
-        .alias("cell")
-    )
+    return F.expr(assign_cell_sql(quote_ident(vec_col), centroids)).alias("cell")
 
 
 def assign_cell_pandas(
@@ -804,7 +700,7 @@ def knn_join(
     )
     celled = celled.withColumn("_in", norm(vec_col, d))
     return _knn_score_topk(
-        qcells, celled, k, d, vec_col, id_col, query_vec_col, query_id_col
+        qcells, celled, k, vec_col, id_col, query_vec_col, query_id_col
     )
 
 
@@ -832,15 +728,16 @@ def _query_probe_cells(
             F.explode("_cells").alias("cell"),
         )
     else:
-        qn = norm_sql(query_vec_col, d)
+        qv = quote_ident(query_vec_col)
+        qn = norm_sql(qv, d)
         sims = ", ".join(
-            f"named_struct('sim', {cosine_lit_sql(query_vec_col, c, qn)}, 'cell', {i})"
+            f"named_struct('sim', {cosine_lit_sql(qv, c, qn)}, 'cell', {i})"
             for i, c in enumerate(centroids)
         )
         probe = f"slice(reverse(array_sort(array({sims}))), 1, {nprobe})"
         qcells = queries.selectExpr(
-            query_id_col,
-            query_vec_col,
+            quote_ident(query_id_col),
+            qv,
             f"{qn} AS _qn",
             f"explode(transform({probe}, s -> s.cell)) AS cell",
         )
@@ -851,7 +748,6 @@ def _knn_score_topk(
     qcells: DataFrame,
     celled: DataFrame,
     k: int,
-    d: int,
     vec_col: str,
     id_col: str,
     query_vec_col: str,
@@ -859,17 +755,10 @@ def _knn_score_topk(
 ) -> DataFrame:
     """Score the (query, cell)-exploded frame against cell-assigned items
     (columns ``cell``, ``_in`` = item norm) and rank top-k per query.
-
-    The pair dot uses the compact LAMBDA fold, NOT the ``dim`` unroll:
-    under this join the unrolled form measured 5x SLOWER (16.1 s vs
-    3.3 s for 1.25M 64-dim pairs — the ~400-node flat expression pushes
-    the joined stage out of whole-stage codegen, and interpreted
-    ``F.get`` chains re-walk the array per element), inverting the
-    scan-context economics the module docstring describes. IEEE sequence
-    identical either way, so results are unchanged."""
+    The pair dot is the lambda fold: under this join an unrolled dot
+    measured 5x slower (16.1 s vs 3.3 s for 1.25M 64-dim pairs)."""
     from pyspark.sql import Window
 
-    del d  # kept in the signature for call-site symmetry/documentation
     scored = qcells.join(celled, "cell").select(
         query_id_col,
         F.col(id_col),
@@ -940,7 +829,6 @@ def probe_ivf_store(
     window. The query frame is checkpointed so the collected cell set and
     the join provably see the same probe cells."""
     method = _resolve_method(method, centroids)
-    d = len(centroids[0])
     qcells = _query_probe_cells(
         queries, centroids, nprobe, query_vec_col, query_id_col, method
     ).localCheckpoint(eager=False)
@@ -955,7 +843,7 @@ def probe_ivf_store(
         F.col("ivf_cell").cast("int").alias("cell"),
     )
     return _knn_score_topk(
-        qcells, celled, k, d, vec_col, id_col, query_vec_col, query_id_col
+        qcells, celled, k, vec_col, id_col, query_vec_col, query_id_col
     )
 
 
@@ -1101,15 +989,16 @@ def semantic_cells(
     if method == "pandas":
         return _semantic_cells_pandas(df, centroids, vec_col, id_col)
     d = len(centroids[0])
+    v = quote_ident(vec_col)
     # whole projection as FOUR parsed SQL expressions (round-10): the
     # Column-API build of the same trees measured ~3 s of py4j per call
-    _nv = norm_sql(vec_col, d)
-    cos = [cosine_lit_sql(vec_col, c, _nv) for c in centroids]
+    _nv = norm_sql(v, d)
+    cos = [cosine_lit_sql(v, c, _nv) for c in centroids]
     return df.selectExpr(
-        id_col,
-        vec_col,
+        quote_ident(id_col),
+        v,
         f"{_nv} AS nrm",
-        f"{assign_cell_sql(vec_col, centroids)} AS cell",
+        f"{assign_cell_sql(v, centroids)} AS cell",
         f"greatest({', '.join(cos)}) AS csim",
     )
 
@@ -1203,7 +1092,7 @@ def semantic_removal_candidates(
             | ((F.col("a_csim") == F.col("b_csim")) & (F.col("a_id") < F.col("b_id")))
         )
         .where(
-            dot(F.col("a_vec"), F.col("b_vec")) / (F.col("a_nrm") * F.col("b_nrm"))
+            dot("a_vec", "b_vec") / (F.col("a_nrm") * F.col("b_nrm"))
             >= F.lit(float(threshold))
         )
         .select(F.col("b_id").alias("_rm"))
@@ -1374,7 +1263,7 @@ def semantic_dedup_incremental(
         veto = (
             b.join(c, F.col("b_cell") == F.col("c_cell"))
             .where(
-                dot(F.col("b_vec"), F.col("c_vec")) / (F.col("b_nrm") * F.col("c_nrm"))
+                dot("b_vec", "c_vec") / (F.col("b_nrm") * F.col("c_nrm"))
                 >= F.lit(float(threshold))
             )
             .select(F.col("b_id").alias("_veto"))
@@ -1449,7 +1338,7 @@ def ann_topk_quantized(
     ``query`` must be a single row carrying ``qe`` (the raw query vector).
     Scale: the int codes are 4x smaller than float32; one broadcast + a
     top-k. With ``dim`` the integer dot unrolls into flat codegen-able
-    arithmetic (see :func:`dot`); integer addition commutes, so the
+    arithmetic (see :func:`norm_sql`); integer addition commutes, so the
     unrolled sum is exactly the fold's value regardless of order.
     """
     qe = F.col("qe")
@@ -1520,7 +1409,7 @@ def ann_topk_matryoshka(
     if qpn == 0.0 or qfn == 0.0:
         raise ValueError("zero-norm query (full or prefix): cosine undefined")
     v = F.col(vec_col)
-    pre_sql = f"slice({vec_col}, 1, {prefix_dim})"
+    pre_sql = f"slice({quote_ident(vec_col)}, 1, {prefix_dim})"
     pnorm = F.expr(norm_sql(pre_sql))
     # explicit > 0 guard, not isNotNull: 0/0 is NaN in Spark (which sorts
     # FIRST under DESC), the assign_cell degenerate-vector lesson
@@ -1707,8 +1596,9 @@ def train_residual_pq_codebooks(
 
 
 def pq_code_cols_sql(v: str, codebooks: list[list[list[float]]]) -> list[str]:
-    """SQL texts of :func:`pq_code_cols` — one parsed expression per
-    subspace instead of ~m*k*dsub py4j round-trips (round-10)."""
+    """Per-subspace PQ code expressions over the vector SQL ``v`` (the
+    expr encoder's core): argmax of ``dot(v_s, c) - ||c||^2/2`` with
+    (score, -code) array_max ties, one parsed expression per subspace."""
     dsub = len(codebooks[0][0])
     codes = []
     for s, book in enumerate(codebooks):
@@ -1719,31 +1609,6 @@ def pq_code_cols_sql(v: str, codebooks: list[list[list[float]]]) -> list[str]:
             for j, c in enumerate(book)
         )
         codes.append(f"(0 - array_max(array({structs})).negcode)")
-    return codes
-
-
-def pq_code_cols(
-    v: Column | str, codebooks: list[list[list[float]]]
-) -> list[Column]:
-    """Per-subspace PQ code expressions (the expr encoder's core, shared
-    with :func:`ivfadc_knn_join`'s item side): argmax of
-    ``dot(v_s, c) - ||c||^2/2`` with (score, -code) array_max ties."""
-    if isinstance(v, str):
-        return [F.expr(s) for s in pq_code_cols_sql(v, codebooks)]
-    dsub = len(codebooks[0][0])
-    codes = []
-    for s, book in enumerate(codebooks):
-        sub = F.slice(v, s * dsub + 1, dsub)
-        scored = F.array(
-            *[
-                F.struct(
-                    (dot_lit(sub, c) - F.lit(sq_norm_lit(c) / 2.0)).alias("score"),
-                    F.lit(-j).alias("negcode"),
-                )
-                for j, c in enumerate(book)
-            ]
-        )
-        codes.append(F.lit(0) - F.array_max(scored)["negcode"])
     return codes
 
 
@@ -1774,18 +1639,11 @@ def pq_encode(
         method = "pandas" if m * k > 32 else "expr"
     if method == "pandas":
         return _pq_encode_pandas(df, codebooks, vec_col, id_col)
-    if isinstance(vec_col, str):
-        codes = pq_code_cols_sql(vec_col, codebooks)
-        return df.selectExpr(
-            id_col,
-            f"CASE WHEN {vec_col} IS NOT NULL THEN"
-            f" array({', '.join(codes)}) END AS codes",
-        )
-    v = vec_col
-    codes = pq_code_cols(v, codebooks)
-    return df.select(
-        F.col(id_col),
-        F.when(v.isNotNull(), F.array(*codes)).alias("codes"),
+    v = quote_ident(vec_col)
+    codes = pq_code_cols_sql(v, codebooks)
+    return df.selectExpr(
+        quote_ident(id_col),
+        f"CASE WHEN {v} IS NOT NULL THEN array({', '.join(codes)}) END AS codes",
     )
 
 
@@ -1907,17 +1765,17 @@ def ann_topk_pq(
         # returning k arbitrary rows
         raise ValueError("zero-norm query vector: ADC cosine is undefined")
     m = len(codebooks)
-    codes = F.col(codes_col)
+    codes = quote_ident(codes_col)
     dot_acc = "0.0D"
     nrm_acc = "0.0D"
     for s in range(m):
-        code1 = f"(element_at({codes_col}, {s + 1}) + 1)"
+        code1 = f"(element_at({codes}, {s + 1}) + 1)"
         dot_acc = f"({dot_acc} + element_at({_arr_lit_sql(dotT[s])}, {code1}))"
         nrm_acc = f"({nrm_acc} + element_at({_arr_lit_sql(nrm2T[s])}, {code1}))"
     score = f"({dot_acc} / ({_dlit_sql(qn)} * SQRT({nrm_acc})))"
     return (
-        codes_df.filter(codes.isNotNull())
-        .selectExpr(id_col, f"{score} AS adc_cos")
+        codes_df.filter(F.col(codes_col).isNotNull())
+        .selectExpr(quote_ident(id_col), f"{score} AS adc_cos")
         .orderBy(F.desc("adc_cos"), F.asc(id_col))
         .limit(k)
     )
@@ -2051,14 +1909,13 @@ def _ivfadc_item_side(
     m, kc = len(codebooks), len(codebooks[0])
     dsub = len(codebooks[0][0])
     adjT, crn2T = ivfadc_residual_tables(centroids, codebooks)
+    v, key = quote_ident(vec_col), quote_ident(id_col)
     celled = items.selectExpr(
-        id_col,
-        vec_col,
-        f"{assign_cell_sql(vec_col, centroids)} AS cell",
+        key, v, f"{assign_cell_sql(v, centroids)} AS cell"
     ).filter(F.col("cell").isNotNull())
     code_exprs = []
     for s, book in enumerate(codebooks):
-        sub = f"slice({vec_col}, {s * dsub + 1}, {dsub})"
+        sub = f"slice({v}, {s * dsub + 1}, {dsub})"
         adj = [
             _arr_lit_sql([adjT[c][s][j] for c in range(len(centroids))])
             for j in range(kc)
@@ -2071,7 +1928,7 @@ def _ivfadc_item_side(
         code_exprs.append(
             f"(0 - array_max(array({structs})).negcode) AS _c{s}"
         )
-    coded = celled.selectExpr(id_col, "cell", *code_exprs)
+    coded = celled.selectExpr(key, "cell", *code_exprs)
     rnorm2 = "0.0D"
     for s in range(m):
         tbl2d = "array(" + ", ".join(
@@ -2083,7 +1940,7 @@ def _ivfadc_item_side(
             f" (_c{s} + 1)))"
         )
     return coded.selectExpr(
-        id_col,
+        key,
         "cell",
         f"array({', '.join(f'_c{s}' for s in range(m))}) AS codes",
         f"{rnorm2} AS _rn2",
@@ -2112,22 +1969,21 @@ def _ivfadc_query_cells(
         )
     m = len(codebooks)
     dsub = len(codebooks[0][0])
+    qv, key = quote_ident(query_vec_col), quote_ident(query_id_col)
     dott = "array(" + ", ".join(
-        dot_lit_sql(f"slice({query_vec_col}, {s * dsub + 1}, {dsub})", c)
+        dot_lit_sql(f"slice({qv}, {s * dsub + 1}, {dsub})", c)
         for s, book in enumerate(codebooks)
         for c in book
     ) + ")"
-    qdots = "array(" + ", ".join(
-        dot_lit_sql(query_vec_col, c) for c in centroids
-    ) + ")"
+    qdots = "array(" + ", ".join(dot_lit_sql(qv, c) for c in centroids) + ")"
     q_aug = queries.selectExpr(
-        query_id_col,
-        f"{norm_sql(query_vec_col, m * dsub)} AS _qn",
+        key,
+        f"{norm_sql(qv, m * dsub)} AS _qn",
         f"{dott} AS _dott",
         f"{qdots} AS _qdots",
     )
     # centroid sims derived from the bound _qdots (dot / (|q| * |c|)) —
-    # the IEEE sequence of cosine_lit without re-folding each dot
+    # the IEEE sequence of cosine_lit_sql without re-folding each dot
     sims = ", ".join(
         f"named_struct('sim', (element_at(_qdots, {i + 1}) /"
         f" (_qn * {_dlit_sql(norm_lit(c))})), 'negcell', {-i})"
@@ -2135,7 +1991,7 @@ def _ivfadc_query_cells(
     )
     probe = f"slice(reverse(array_sort(array({sims}))), 1, {nprobe})"
     exploded = q_aug.selectExpr(
-        query_id_col,
+        key,
         "_qn",
         "_dott",
         "_qdots",

@@ -535,18 +535,12 @@ def ngram_jaccard_pairs(
     )
 
 
-def _seeded_hash(col: Column, seed: int, hash_fn: str) -> Column:
-    """Seeded content hash. ``xxhash64`` (default): fastest, JVM-only.
-    ``md5``: hex-string hash both Spark and DuckDB implement identically —
-    the cross-engine-checkable variant (string MIN/odering over lowercase
-    hex is engine-stable), used by the oracled catalog entries."""
-    if hash_fn == "md5":
-        return F.md5(F.concat_ws(":", F.lit(str(seed)), col))
-    return F.xxhash64(col, F.lit(seed))
-
-
 def _seeded_hash_sql(col: str, seed: int, hash_fn: str) -> str:
-    """SQL text of :func:`_seeded_hash` — same tree, one parse."""
+    """Seeded content hash of the SQL expression ``col``. ``xxhash64``
+    (default): fastest, JVM-only. ``md5``: hex-string hash both Spark and
+    DuckDB implement identically — the cross-engine-checkable variant
+    (string MIN/ordering over lowercase hex is engine-stable), used by the
+    oracled catalog entries."""
     if hash_fn == "md5":
         return f"md5(concat_ws(':', '{seed}', {col}))"
     return f"xxhash64({col}, {seed})"
@@ -1754,7 +1748,7 @@ def exact_substring_dedup(
     ).select(
         F.col(id_col),
         F.col("pos"),
-        _seeded_hash(F.col("gram"), 0, hash_fn).alias("g"),
+        F.expr(_seeded_hash_sql("gram", 0, hash_fn)).alias("g"),
     )
     w = Window.partitionBy("g").orderBy(F.col(id_col), F.col("pos"))
     dup_windows = grams.withColumn("rn", F.row_number().over(w)).filter(

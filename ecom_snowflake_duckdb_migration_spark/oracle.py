@@ -1,6 +1,6 @@
 """Local DuckDB-oracle parity harness.
 
-Mirrors the driver's t2 check (/root/repo/__spark_entry__.py contract): run the
+Mirrors the driver's t2 check (the repo root's __spark_entry__.py contract): run the
 Spark query and the DuckDB SQL over the same parquet tables, then compare
 row count + sorted-by-name schema + order-insensitive values. Used by
 tests/test_parity.py so every catalog entry is validated locally before the

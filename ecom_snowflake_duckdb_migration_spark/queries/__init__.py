@@ -3,7 +3,7 @@
 Each entry pairs a PySpark DataFrame builder ``(spark, sf_dir) -> DataFrame``
 with an equivalent DuckDB SQL string run over the same parquet tables.
 Column names/types are aligned on both sides because the driver's compare
-sorts columns by name and hashes values (see /root/repo/__spark_entry__.py).
+sorts columns by name and hashes values (see the repo root's __spark_entry__.py).
 
 Float convention: any aggregate over DOUBLE columns is rounded on BOTH sides
 (round(x, 2) for money-scale sums, round(x, 6) for averages/ratios) so that

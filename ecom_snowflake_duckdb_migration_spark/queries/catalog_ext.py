@@ -10,6 +10,7 @@ tests/test_multimodal.py).
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 from pyspark.sql import functions as F
@@ -207,7 +208,11 @@ def q33_media_decode_stats(spark, sf_dir):
     )
 
 
-_Q34_RAW_DIR = "/root/repo/benchdata/q34_raw"
+# committed under the repository root, next to the package
+_Q34_RAW_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "benchdata", "q34_raw",
+)
 
 
 def _q34_oracle() -> str:
@@ -262,8 +267,6 @@ def _q34_oracle() -> str:
     tags=("pipeline", "E1"),
 )
 def q34_ecom_pipeline_smoke(spark, sf_dir):
-    import os
-
     from ..ecom import PipelineRunner
     from . import ensure_confs
 

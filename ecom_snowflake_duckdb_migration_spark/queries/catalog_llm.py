@@ -1931,7 +1931,7 @@ _X87_K = 15
     "x87_exact_substring_dedup",
     # DuckDB twin of exact_substring_dedup(k=15, hash_fn="md5"): parallel
     # unnests zip positionally (x81 pattern); the rank key is md5('0:'||
-    # gram) — the _seeded_hash(seed=0) layout both engines produce
+    # gram) — the _seeded_hash_sql(seed=0) layout both engines produce
     # byte-identically; covered positions distinct in a subquery because
     # DISTINCT must apply AFTER the range unnest expands.
     oracle=f"""

@@ -52,9 +52,14 @@ T = TypeVar("T")
 
 
 def default_parallelism() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the cores this process may run
+    on: its CPU affinity where the OS reports one (``taskset``, cgroup
+    cpusets), which ``os.cpu_count()`` ignores."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus and cpus.isdigit():
         return int(cpus)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
     return os.cpu_count() or 8
 
 

@@ -1,5 +1,5 @@
 """One-time: materialize the seeded ecom raw extract for the q34 driver
-oracle to /root/repo/benchdata/q34_raw/<table>/ (committed to the repo).
+oracle to benchdata/q34_raw/<table>/ (committed to the repo).
 
 Both sides of the q34 gate read these SAME files: the Spark fn runs the
 37-model pipeline over them; the DuckDB oracle runs the hand-compiled
@@ -8,13 +8,14 @@ order-independent (no runtime temp paths).
 
 Run: python scripts/gen_q34_raw.py
 """
-import os, shutil, sys
+import os
+import shutil
 
-sys.path.insert(0, "/root/repo")
+from _repo import ROOT
 from ecom_snowflake_duckdb_migration_spark.ecom.generate import generate_all
 from ecom_snowflake_duckdb_migration_spark.session import get_spark
 
-OUT = "/root/repo/benchdata/q34_raw"
+OUT = os.path.join(ROOT, "benchdata", "q34_raw")
 
 spark = get_spark(app_name="gen-q34-raw")
 raw = generate_all(spark, n_customers=100)

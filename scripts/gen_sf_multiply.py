@@ -32,11 +32,11 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+from _repo import ROOT
 
 import duckdb
 
-SRC = "/root/repo/benchdata/sf1"
+SRC = os.path.join(ROOT, "benchdata", "sf1")
 
 OFFSETS = {
     # table: {column: key-space it belongs to}
@@ -70,7 +70,7 @@ COPY_AS_IS = ("region", "nation")
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 4
-    out = sys.argv[2] if len(sys.argv) > 2 else f"/root/repo/benchdata/sf{n}"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "benchdata", f"sf{n}")
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     spans = {

@@ -16,7 +16,7 @@ from __future__ import annotations
 import json
 import sys
 
-sys.path.insert(0, "/root/repo")
+import _repo  # noqa: F401  (puts the repo on sys.path and PYTHONPATH)
 
 from ecom_snowflake_duckdb_migration_spark.oracle import driver_style_result
 from ecom_snowflake_duckdb_migration_spark.queries import all_queries

@@ -22,7 +22,7 @@ import json
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+import _repo  # noqa: F401  (puts the repo on sys.path and PYTHONPATH)
 
 import numpy as np
 

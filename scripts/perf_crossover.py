@@ -16,7 +16,7 @@ import json
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+import _repo  # noqa: F401  (puts the repo on sys.path and PYTHONPATH)
 
 from bench import HEADLINE, bench_duckdb, profile_conf, time_blocked  # noqa: E402
 

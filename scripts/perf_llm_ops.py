@@ -15,10 +15,11 @@ keeps each run inside a CI timeout.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+from _repo import ROOT
 
 from pyspark.sql import functions as F
 
@@ -240,8 +241,6 @@ def main() -> int:
     # sub-plans pay ~2 stages of expression compile on a 400-row batch), so
     # the corpus must grow before the probe's O(|batch| x cell-width)
     # beats recompute's O(sum cell^2). Measure it at sf1 when available.
-    import os as _os
-
     crossover = None
     if mode == "ops" or mode.startswith("only="):
         try:  # keep a previously-measured crossover when only re-running ops
@@ -249,8 +248,8 @@ def main() -> int:
                 crossover = json.load(f).get("incremental_semdedup_crossover")
         except (OSError, ValueError):
             pass
-    sf1 = "/root/repo/benchdata/sf1"
-    if mode not in ("ops",) and not mode.startswith("only=") and _os.path.exists(_os.path.join(sf1, "embeddings.parquet")):
+    sf1 = os.path.join(ROOT, "benchdata", "sf1")
+    if mode not in ("ops",) and not mode.startswith("only=") and os.path.exists(os.path.join(sf1, "embeddings.parquet")):
         e1 = load(spark, sf1, "embeddings").repartition(par)
         c1 = e1.filter(F.col("vec_id") < 16000)
         b1 = e1.filter(F.col("vec_id") >= 16000)

@@ -14,7 +14,7 @@ import json
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+import _repo  # noqa: F401  (puts the repo on sys.path and PYTHONPATH)
 
 from ecom_snowflake_duckdb_migration_spark import multimodal as mm
 from ecom_snowflake_duckdb_migration_spark.session import get_spark

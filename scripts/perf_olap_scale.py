@@ -19,7 +19,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+import _repo  # noqa: F401  (puts the repo on sys.path and PYTHONPATH)
 
 import bench as bench_mod
 from bench import bench_duckdb, time_blocked

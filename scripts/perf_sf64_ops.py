@@ -32,10 +32,11 @@ Usage: python scripts/perf_sf64_ops.py [sf_dir] [out.json] [op_name|all]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+from _repo import ROOT
 
 from pyspark.sql import functions as F
 
@@ -61,7 +62,7 @@ def exact_then_near(docs):
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/benchdata/sf64"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, "benchdata", "sf64")
     out_path = sys.argv[2] if len(sys.argv) > 2 else "BENCH_SCALING.json"
     which = sys.argv[3] if len(sys.argv) > 3 else "all"
     # same harness raise as perf_crossover's sf64 rows: AQE-materialized

@@ -51,10 +51,8 @@ SLOW_TESTS = {
     "test_parity.py::test_query_matches_oracle[x117_curate_gopher]",
     "test_parity.py::test_in_window_schema_is_driver_canonicalizable[q56_dedup_canonical_embeddings]",
     "test_streaming.py::test_streaming_corpus_dedup_redelivery_safe",
-    "test_parity.py::test_query_matches_oracle[x78_semantic_dedup]",
     "test_plans.py::test_ecom_models_scale_clean",
     "test_operators.py::test_incremental_dedup_batch_equivalence_and_store",
-    "test_parity.py::test_query_matches_oracle[q53_cosine_pairs_lsh]",
     "test_property_parity.py::test_hll_group_merge_equals_whole",
     "test_corpus_pipeline.py::test_corpus_run_without_benchmark",
     "test_streaming.py::test_streaming_semantic_dedup_torn_store_replay",

@@ -2963,7 +2963,7 @@ def test_minhash_signatures_scan_side_equals_grouped_reference(spark):
     for hash_fn in ("xxhash64", "md5"):
         sh = tx.char_shingles(d)
         aggs = [
-            F.min(tx._seeded_hash(F.col("shingle"), s, hash_fn)).alias(f"mh_{s}")
+            F.min(F.expr(tx._seeded_hash_sql("shingle", s, hash_fn))).alias(f"mh_{s}")
             for s in range(8)
         ]
         ref = sh.groupBy("doc_id").agg(*aggs)
@@ -2986,25 +2986,58 @@ def test_minhash_signatures_scan_side_equals_grouped_reference(spark):
 
 
 def test_sql_twin_string_paths_quote_reserved_identifiers(spark):
-    """The parsed-SQL string paths (round-10 twins) must accept column
-    names that collide with SQL reserved words: plain identifiers are
-    backtick-quoted before interpolation (round-11, advisor finding).
-    Non-identifier strings still pass through as SQL fragments."""
+    """Every vector expression is parsed SQL, so each column name is
+    backtick-quoted once, where the operator takes it: a reserved word
+    (``order``) and a name that is no identifier (``my vec``) both work.
+    SQL fragments go only through the ``*_sql`` builders."""
+    import math
+
     import ecom_snowflake_duckdb_migration_spark.operators.similarity as sim
 
     d = spark.createDataFrame(
         [(1, [3.0, 4.0]), (2, [1.0, 0.0])],
         "doc_id long, `order` array<double>",
     )
-    # norm/dot string path over a reserved-word column name
+    # norm/dot over a reserved-word column name
     got = d.select(
         sim.norm("order", dim=2).alias("n"),
-        sim.dot("order", "order", dim=2).alias("s"),
+        sim.dot("order", "order").alias("s"),
     ).collect()
     assert sorted((r.n, r.s) for r in got) == [(1.0, 1.0), (5.0, 25.0)]
-    # fragment inputs keep working (the documented dual use)
-    frag = d.select(sim.norm("slice(`order`, 1, 2)", dim=2).alias("n")).collect()
+    # a fragment is SQL text, so it goes through the builder
+    frag = d.select(F.expr(sim.norm_sql("slice(`order`, 1, 2)", 2)).alias("n")).collect()
     assert sorted(r.n for r in frag) == [1.0, 5.0]
+    # a column name with a space, through every vector operator
+    v = spark.createDataFrame(
+        [(1, [3.0, 4.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0, 0.0]), (3, [0.0, 1.0, 1.0, 0.0])],
+        "vec_id long, `my vec` array<double>",
+    )
+    cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
+    rows = v.select(
+        "vec_id",
+        sim.norm("my vec").alias("n"),
+        sim.dot("my vec", "my vec").alias("s"),
+        sim.assign_cell("my vec", cents),
+        sim.hyperplane_signature(
+            "my vec", [[1.0, 0.0, 0.0, 0.0], [0.0, -1.0, 0.0, 0.0]]
+        ).alias("sig"),
+    ).collect()
+    assert sorted(tuple(r) for r in rows) == [
+        (1, 5.0, 25.0, 1, 1), (2, 1.0, 1.0, 0, 3), (3, math.sqrt(2.0), 2.0, 1, 1),
+    ]
+    books = [[[1.0, 0.0], [0.0, 1.0]], [[1.0, 0.0], [0.0, 1.0]]]
+    codes = sim.pq_encode(v, books, vec_col="my vec", method="expr").collect()
+    assert sorted((r.vec_id, r.codes) for r in codes) == [(1, [1, 0]), (2, [0, 0]), (3, [1, 0])]
+    top = sim.ann_topk_matryoshka(
+        v, [1.0, 0.0, 0.0, 0.0], k=2, prefix_dim=2, shortlist=3, vec_col="my vec"
+    ).collect()
+    assert [r.vec_id for r in top] == [2, 1]
+    q = spark.createDataFrame([(10, [1.0, 0.0, 0.0, 0.0])], "`q id` long, `q vec` array<double>")
+    knn = sim.knn_join(
+        v, q, cents, k=2, nprobe=2, vec_col="my vec",
+        query_vec_col="q vec", query_id_col="q id", method="expr",
+    ).collect()
+    assert sorted((r["q id"], r.vec_id, r.rnk) for r in knn) == [(10, 1, 2), (10, 2, 1)]
     # gopher stats over a reserved-word text column (full quote_ident quoting)
     g = spark.createDataFrame(
         [(1, "the be to of and that have with " + "word " * 50)],

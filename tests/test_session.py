@@ -22,6 +22,18 @@ def test_shuffle_width_is_core_count(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == str(default_parallelism())
 
 
+def test_default_parallelism_counts_affinity_cores(monkeypatch):
+    """Without SPARK_GRAFT_CPUS the width is the cores this process may
+    run on (its affinity mask, as under ``taskset -c 0,1``), not the
+    machine's core count; the variable still wins when set."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1}, raising=False)
+    monkeypatch.setattr(os, "cpu_count", lambda: 64)
+    assert default_parallelism() == 2
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3
+
+
 def test_generated_classes_survive_a_repeat_pass(spark):
     """150 distinct plan shapes outnumber Spark's default 100-entry codegen
     cache; with the factory's bound, a second pass compiles nothing."""
