@@ -580,20 +580,33 @@ def quantize_int8(
     Scale: per-row array expressions, no shuffle; downstream ANN over the
     int8 vectors shuffles a quarter of the bytes.
     """
-    x = F.col(vec_col)
-    scale = F.array_max(F.transform(x, lambda v: F.abs(v.cast("double"))))
-    quant = F.transform(
-        x,
-        lambda v: F.floor(
-            v.cast("double") * F.lit(127.0) / scale + F.lit(0.5)
-        ).cast("int"),
-    )
+    scale, codes = quantize_int8_sql(quote_ident(vec_col))
     return df.select(
         id_col,
-        F.when(scale > 0, scale).alias("scale"),
-        F.when(scale > 0, quant)
-        .otherwise(F.transform(x, lambda v: F.lit(0)))
-        .alias("q"),
+        F.expr(f"CASE WHEN {scale} > 0 THEN {scale} END").alias("scale"),
+        F.expr(codes).alias("q"),
+    )
+
+
+def quantize_int8_sql(a: str) -> tuple[str, str]:
+    """SQL text of :func:`quantize_int8` over the vector SQL ``a``:
+    ``(scale, codes)``, the codes all zeros where the scale is not
+    positive."""
+    scale = f"array_max(transform({a}, y -> abs(CAST(y AS DOUBLE))))"
+    codes = (
+        f"CASE WHEN {scale} > 0 THEN transform({a}, x -> CAST(floor("
+        f"CAST(x AS DOUBLE) * 127.0D / {scale} + 0.5D) AS INT))"
+        f" ELSE transform({a}, x -> 0) END"
+    )
+    return scale, codes
+
+
+def int8_dot_sql(a: str, b: str) -> str:
+    """Exact BIGINT dot of two int-code vectors: integer sums do not
+    depend on the fold order."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x * y AS BIGINT)),"
+        f" CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     )
 
 
@@ -1327,7 +1340,6 @@ def ann_topk_quantized(
     k: int = 20,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """Top-k by int8-quantized dot product — the memory-bound scale path
     that pairs with ``quantize_int8``: candidates rank on an exact BIGINT
@@ -1335,41 +1347,16 @@ def ann_topk_quantized(
     any engine; the caller re-scores the k survivors with full-precision
     cosine when exact similarity values matter.
 
-    ``query`` must be a single row carrying ``qe`` (the raw query vector).
+    ``query`` must be a single row carrying ``qe`` (the raw query vector),
+    quantized by the same :func:`quantize_int8_sql` as the items.
     Scale: the int codes are 4x smaller than float32; one broadcast + a
-    top-k. With ``dim`` the integer dot unrolls into flat codegen-able
-    arithmetic (see :func:`norm_sql`); integer addition commutes, so the
-    unrolled sum is exactly the fold's value regardless of order.
+    top-k.
     """
-    qe = F.col("qe")
-    q_scale = F.array_max(F.transform(qe, lambda v: F.abs(v.cast("double"))))
-    qv = query.select(
-        F.when(
-            q_scale > 0,
-            F.transform(
-                qe,
-                lambda v: F.floor(
-                    v.cast("double") * F.lit(127.0) / q_scale + F.lit(0.5)
-                ).cast("int"),
-            ),
-        )
-        .otherwise(F.transform(qe, lambda v: F.lit(0)))
-        .alias("qq")
-    )
+    qv = query.select(F.expr(quantize_int8_sql("qe")[1]).alias("qq"))
     base = quantize_int8(df, vec_col=vec_col, id_col=id_col)
-    if dim is not None:
-        # parsed-SQL unroll (round-10 py4j economics; same tree)
-        terms = "CAST(0 AS BIGINT)"
-        for i in range(dim):
-            terms = f"({terms} + CAST((get(q, {i}) * get(qq, {i})) AS BIGINT))"
-        dot_q = F.expr(terms)
-    else:
-        dot_q = F.aggregate(
-            F.zip_with("q", "qq", lambda a, b: (a * b).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-    scored = base.join(F.broadcast(qv)).select(id_col, dot_q.alias("dot_q"))
+    scored = base.join(F.broadcast(qv)).select(
+        id_col, F.expr(int8_dot_sql("q", "qq")).alias("dot_q")
+    )
     return scored.orderBy(F.desc("dot_q"), F.asc(id_col)).limit(k)
 
 

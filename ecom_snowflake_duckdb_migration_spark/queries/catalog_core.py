@@ -1422,7 +1422,8 @@ def q25_json_flatten(spark, sf_dir):
     oracle="""
     WITH target AS (SELECT * FROM events WHERE ts < TIMESTAMP '2024-10-01 00:00:00'),
     increment AS (
-        SELECT * FROM events WHERE ts > (SELECT max(ts) FROM target)
+        SELECT * FROM events
+        WHERE (SELECT max(ts) FROM target) IS NULL OR ts > (SELECT max(ts) FROM target)
     ),
     merged AS (SELECT * FROM target UNION ALL SELECT * FROM increment)
     SELECT event_type, count(*) AS n_rows, max(ts) AS latest_ts
@@ -1430,7 +1431,8 @@ def q25_json_flatten(spark, sf_dir):
     """,
     doc="S11 incremental materialization semantics: filter source rows past "
     "max(ts) of the sink, append (dbt/dbt_duckdb/models/ecom_marts/customer/"
-    "fct_customer_orders.sql:18-20).",
+    "fct_customer_orders.sql:18-20); an empty sink passes every row (first "
+    "run).",
     tags=("S11", "U3"),
 )
 def q26_incremental_append(spark, sf_dir):

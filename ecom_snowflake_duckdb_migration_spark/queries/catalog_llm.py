@@ -10,9 +10,30 @@ entries.
 Parity conventions:
 - Ratios are fixed-point integers (``*_e6``): integer division is bit-stable
   across engines, rounded double division is not.
-- Cosines are raw doubles: the left-to-right double fold is verified
-  bit-identical between Spark's ``F.aggregate`` and DuckDB's
-  ``list_sum(list_transform(...))``.
+- Cosines are raw doubles. Every DuckDB oracle takes the fragments that more
+  than one oracle needs from the builders below, so each fold rule is stated
+  here and applied there, once:
+  - 64-element folds (``_dot``, ``_norm``, ``_cos``, over columns or
+    literal vectors) are ``list_sum(list_transform(...))``, bit-identical
+    to Spark's left-to-right ``aggregate`` at that length.
+  - Short sub-vector folds, and folds whose doubles land in the hashed
+    output, are explicit left-assoc chains (``_fold``, ``_chain_dot``):
+    ``list_sum`` diverges from the fold by an ulp at 16 elements, and once
+    at 64 (x123's query-centroid dots).
+  - Every literal double a fragment carries (vector elements, table
+    entries, norms) is string-parsed (``_dbl``, ``_dbl_list``:
+    ``CAST('<repr>' AS DOUBLE)``). DuckDB types a bare decimal literal
+    DECIMAL, and its DECIMAL->DOUBLE cast is an ulp off for some 17-digit
+    values.
+  - Argmaxes are first-index (``_argmax``): the lowest cell or code on
+    ties, as the operators' ``(score, -index)`` ``array_max``.
+  - The other shared fragments: ``_hyperplane_sig`` (LSH signature),
+    ``_cell_sims`` / ``_assign_ctes`` / ``_qsims_cte`` /
+    ``_probe_cells_cte`` (literal-codebook cells and probes), ``_pq_code_ctes`` (PQ codes), ``_minhash_ctes``
+    / ``_agree`` (md5 MinHash), ``_shingles_cte`` (char 3-shingle set),
+    ``_shingle_overlap_ctes`` (exact-Jaccard inputs),
+    ``_INT8_CTES`` (int8 quantization) and ``_split_case`` (md5 split
+    ladder).
 - LSH/SimHash variants depend on xxhash64 (no DuckDB twin) -> registered
   without oracle; tests/test_operators.py pins them against the exact
   algorithms instead.
@@ -30,6 +51,234 @@ _EN = tx.LANG_STOPWORDS["en"]
 _FR = tx.LANG_STOPWORDS["fr"]
 _DE = tx.LANG_STOPWORDS["de"]
 _ES = tx.LANG_STOPWORDS["es"]
+
+
+# ---------------------------------------------------------------------------
+# DuckDB oracle fragments (fold rules in the module docstring).
+# ---------------------------------------------------------------------------
+
+
+def _dbl(x: float) -> str:
+    """Exact double literal: DuckDB parses the repr string exactly."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def _dbl_list(vals: list[float]) -> str:
+    return "[" + ", ".join(_dbl(v) for v in vals) + "]"
+
+
+def _fold(terms, start: str = "CAST(0.0 AS DOUBLE)") -> str:
+    """Explicit left-assoc chain ``((start + t0) + t1) + ...``."""
+    acc = start
+    for t in terms:
+        acc = f"({acc} + {t})"
+    return acc
+
+
+def _chain_dot(a: str, b: list[str], offset: int = 0) -> str:
+    """``_fold`` of ``a[offset + i] * b[i]``; ``b`` holds element SQL."""
+    return _fold(f"CAST({a}[{offset + i}] AS DOUBLE) * {y}" for i, y in enumerate(b, 1))
+
+
+def _dot(a: str, b: str, typ: str = "DOUBLE") -> str:
+    """64-element dot of two list expressions, products in ``typ``."""
+    return (
+        f"list_sum(list_transform(range(1, len({a}) + 1),"
+        f" i -> CAST({a}[i] AS {typ}) * CAST({b}[i] AS {typ})))"
+    )
+
+
+def _norm(a: str) -> str:
+    return f"sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
+
+
+def _cos(a: str, b: str) -> str:
+    return f"({_dot(a, b)} / ({_norm(a)} * {_norm(b)}))"
+
+
+def _hyperplane_sig(vec: str, planes: list[list[float]]) -> str:
+    """hyperplane_signature: bit i set iff ``vec`` is on the non-negative
+    side of plane i."""
+    return "(" + "\n             + ".join(
+        f"(CASE WHEN {_dot(vec, f'({_dbl_list(p)})')} >= 0 THEN CAST({1 << i} AS BIGINT)"
+        f" ELSE CAST(0 AS BIGINT) END)"
+        for i, p in enumerate(planes)
+    ) + ")"
+
+
+def _argmax(names: list[str], best: str) -> str:
+    """Index of the first of ``names`` equal to ``best``."""
+    return "CASE " + " ".join(
+        f"WHEN {n} = {best} THEN {i}" for i, n in enumerate(names)
+    ) + " END"
+
+
+def _cell_sims(vec: str, cents: list[list[float]]) -> str:
+    """SELECT-list ``s0 .. s{n-1}``: the cosine of ``vec`` to each centroid."""
+    return ",\n               ".join(
+        f"{_cos(vec, f'({_dbl_list(c)})')} AS s{i}" for i, c in enumerate(cents)
+    )
+
+
+def _assign_ctes(cents: list[list[float]], guard: bool = False) -> str:
+    """``scored`` + ``assigned`` CTEs: each embeddings row's ``cell`` under
+    the literal codebook and ``csim``, its cosine to that centroid.
+    ``guard`` drops the rows assign_cell gives no cell (NULL and zero-norm
+    vectors), for the operators that drop them."""
+    names = [f"s{i}" for i in range(len(cents))]
+    where = f"\n        WHERE best IS NOT NULL AND {_norm('embedding')} > 0" if guard else ""
+    return f"""scored AS (
+        SELECT vec_id, embedding,
+               {_cell_sims('embedding', cents)}
+        FROM embeddings
+    ),
+    assigned AS (
+        SELECT vec_id, embedding, {_argmax(names, 'best')} AS cell, best AS csim
+        FROM (SELECT *, greatest({', '.join(names)}) AS best FROM scored){where}
+    )"""
+
+
+def _qsims_cte(cents: list[list[float]], where: str) -> str:
+    """``qsims`` CTE: the embeddings rows matching ``where`` as queries
+    (``q_id``, ``qe``) with their centroid cosines."""
+    return f"""qsims AS (
+        SELECT vec_id AS q_id, embedding AS qe,
+               {_cell_sims('embedding', cents)}
+        FROM embeddings WHERE {where}
+    )"""
+
+
+def _probe_cells_cte(n_cells: int, nprobe: int, tie: str) -> str:
+    """``qcells`` CTE: each query's ``nprobe`` cells by cosine DESC; equal
+    cosines rank the cell ``tie`` (DESC for knn_join's reverse(array_sort),
+    ASC for ivfadc's ``(sim, -cell)`` struct)."""
+    union = "\n            UNION ALL ".join(
+        f"SELECT q_id, {i} AS cell, s{i} AS sim FROM qsims" for i in range(n_cells)
+    )
+    return f"""qcells AS (
+        SELECT q_id, cell FROM (
+            SELECT q_id, cell, sim,
+                   row_number() OVER (PARTITION BY q_id
+                                      ORDER BY sim DESC, cell {tie}) AS rn
+            FROM ({union})
+        ) WHERE rn <= {nprobe}
+    )"""
+
+
+def _pq_code_ctes(
+    books: list[list[list[float]]], adjust, src: str = "embeddings", keys: str = "vec_id"
+) -> str:
+    """``pq_scored`` + ``coded`` CTEs: PQ encoding of ``src``'s
+    ``embedding``. Score ``s{s}_{j}`` is the subspace chain dot against
+    code j minus ``adjust(s, j, centroid)``; code ``c{s}`` is its argmax.
+    Both carry ``keys``."""
+    dsub = len(books[0][0])
+    score_defs, code_cols = [], []
+    for s, book in enumerate(books):
+        names = [f"s{s}_{j}" for j in range(len(book))]
+        for j, c in enumerate(book):
+            dot = _chain_dot("embedding", [_dbl(x) for x in c], s * dsub)
+            score_defs.append(f"{dot} - {adjust(s, j, c)} AS {names[j]}")
+        best = f"greatest({', '.join(names)})"
+        code_cols.append(f"{_argmax(names, best)} AS c{s}")
+    sep = ",\n               "
+    return f"""pq_scored AS (
+        SELECT {keys},
+               {sep.join(score_defs)}
+        FROM {src}
+    ),
+    coded AS (
+        SELECT {keys},
+               {sep.join(code_cols)}
+        FROM pq_scored
+    )"""
+
+
+def _shingles_cte(src: str, keys: str = "doc_id") -> str:
+    """``sh`` CTE: one row per distinct char 3-shingle of each document."""
+    return f"""sh AS (
+        SELECT {keys},
+               unnest(list_distinct([substr(text, i, 3) for i in range(1, length(text) - 1)]))
+                   AS shingle
+        FROM {src}
+    )"""
+
+
+def _shingle_overlap_ctes(src: str) -> str:
+    """``sh`` plus ``sizes`` (shingles per document) and ``inter`` (shared
+    shingles per document pair ``d1 < d2``): the exact-Jaccard inputs."""
+    return f"""{_shingles_cte(src)},
+    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+    inter AS (
+        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_inter
+        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )"""
+
+
+def _minhash_ctes(num_hashes: int, bands: int, keys: str = "doc_id") -> str:
+    """``sh``, ``sig`` and ``banded`` CTEs of the md5 MinHash
+    (``hash_fn='md5'``): component s is the least ``md5('s:' || shingle)``, and
+    band b's bucket is the md5 of its components joined by '|'."""
+    rows = num_hashes // bands
+    mins = ",\n               ".join(
+        f"min(md5('{s}:' || shingle)) AS mh_{s}" for s in range(num_hashes)
+    )
+    band_selects = "\n        UNION ALL\n        ".join(
+        f"SELECT {keys}, {b} AS band, md5("
+        + " || '|' || ".join(f"mh_{s}" for s in range(b * rows, (b + 1) * rows))
+        + ") AS bucket FROM sig"
+        for b in range(bands)
+    )
+    return f"""{_shingles_cte('documents', keys)},
+    sig AS (
+        SELECT {keys},
+               {mins}
+        FROM sh GROUP BY {keys}
+    ),
+    banded AS (
+        {band_selects}
+    )"""
+
+
+def _agree(num_hashes: int, a: str, b: str) -> str:
+    """Number of signature components on which ``sig`` rows a and b agree."""
+    return " + ".join(
+        f"(CASE WHEN {a}.mh_{s} = {b}.mh_{s} THEN 1 ELSE 0 END)" for s in range(num_hashes)
+    )
+
+
+# ``s`` + ``quant`` CTEs of quantize_int8: ``scale`` = max|x| and the codes
+# ``q`` = floor(x * 127 / scale + 0.5), all zeros when scale is 0.
+_INT8_CTES = """s AS (
+        SELECT vec_id, embedding,
+               list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS scale
+        FROM embeddings
+    ),
+    quant AS (
+        SELECT vec_id, scale,
+               CASE WHEN scale > 0 THEN
+                   list_transform(embedding,
+                       x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 / scale + 0.5) AS INT))
+               ELSE list_transform(embedding, x -> 0) END AS q
+        FROM s
+    )"""
+
+
+def _split_case(splits_e6: dict[str, int], seed: int) -> str:
+    """shuffle_split's membership CASE: cumulative md5-hex thresholds;
+    lowercase-hex string compare == integer compare."""
+    from ..operators.sampling import rate_to_threshold_hex
+
+    names = list(splits_e6)
+    whens, cum = [], 0
+    for name in names[:-1]:
+        cum += splits_e6[name]
+        whens.append(
+            f"WHEN substr(md5('{seed}:' || CAST(doc_id AS VARCHAR)), 1, 8)"
+            f" < '{rate_to_threshold_hex(cum)}' THEN '{name}'"
+        )
+    return "CASE " + " ".join(whens) + f" ELSE '{names[-1]}' END"
 
 
 @register(
@@ -203,19 +452,8 @@ def q44_fingerprint(spark, sf_dir):
 
 @register(
     "x45_ngram_jaccard_pairs",
-    oracle="""
-    WITH sh AS (
-        SELECT doc_id,
-               unnest(list_distinct([substr(text, i, 3) for i in range(1, length(text) - 1)]))
-                   AS shingle
-        FROM documents
-    ),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_shingle_overlap_ctes('documents')}
     SELECT d1, d2,
            CAST(n_inter AS BIGINT) * 1000000 // (s1.sz + s2.sz - n_inter) AS jaccard_e6
     FROM inter
@@ -237,14 +475,9 @@ def q45_ngram_jaccard_pairs(spark, sf_dir):
 
 @register(
     "x46_ann_cosine_topk",
-    oracle="""
+    oracle=f"""
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-    SELECT e.vec_id,
-           list_sum(list_transform(range(1, len(e.embedding) + 1),
-                                   i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-               AS cosine
+    SELECT e.vec_id, {_cos('e.embedding', 'q.qe')} AS cosine
     FROM embeddings e, q
     ORDER BY cosine DESC, e.vec_id LIMIT 20
     """,
@@ -262,19 +495,10 @@ def q46_ann_cosine_topk(spark, sf_dir):
 
 @register(
     "x47_cosine_neardup_pairs",
-    oracle="""
-    SELECT a.vec_id AS id1, b.vec_id AS id2,
-           list_sum(list_transform(range(1, len(a.embedding) + 1),
-                                   i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-               AS cosine
+    oracle=f"""
+    SELECT a.vec_id AS id1, b.vec_id AS id2, {_cos('a.embedding', 'b.embedding')} AS cosine
     FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE list_sum(list_transform(range(1, len(a.embedding) + 1),
-                                  i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-          / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-           * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-          >= 0.4
+    WHERE {_cos('a.embedding', 'b.embedding')} >= 0.4
     """,
     doc="Embedding-cosine near-dup pairs, exact O(n^2) baseline "
     "(operators.similarity.cosine_pairs_bruteforce). The LSH-bucketed scale "
@@ -305,27 +529,12 @@ def _minhash_oracle(
     candidates whose signature-agreement estimate undershoots the cutoff
     are dropped BEFORE the exact-Jaccard join, so the pruning itself is
     cross-engine-checked (x132), not assumed equivalent."""
-    rows = num_hashes // bands
-    mins = ",\n               ".join(
-        f"min(md5('{s}:' || shingle)) AS mh_{s}" for s in range(num_hashes)
-    )
-    band_selects = "\n        UNION ALL\n        ".join(
-        "SELECT doc_id, {b} AS band, md5({expr}) AS bucket FROM sig".format(
-            b=b,
-            expr=" || '|' || ".join(f"mh_{s}" for s in range(b * rows, (b + 1) * rows)),
-        )
-        for b in range(bands)
-    )
     prefilter_ctes = ""
     cand_src = "cand"
     if prefilter_e6 is not None:
-        agree = " + ".join(
-            f"(CASE WHEN sa.mh_{s} = sb.mh_{s} THEN 1 ELSE 0 END)"
-            for s in range(num_hashes)
-        )
         prefilter_ctes = f""",
     est AS (
-        SELECT c.d1, c.d2, {agree} AS n_agree
+        SELECT c.d1, c.d2, {_agree(num_hashes, 'sa', 'sb')} AS n_agree
         FROM cand c
         JOIN sig sa ON sa.doc_id = c.d1
         JOIN sig sb ON sb.doc_id = c.d2
@@ -336,20 +545,7 @@ def _minhash_oracle(
     )"""
         cand_src = "kept"
     return f"""
-    WITH sh AS (
-        SELECT doc_id,
-               unnest(list_distinct([substr(text, i, 3) for i in range(1, length(text) - 1)]))
-                   AS shingle
-        FROM documents
-    ),
-    sig AS (
-        SELECT doc_id,
-               {mins}
-        FROM sh GROUP BY doc_id
-    ),
-    banded AS (
-        {band_selects}
-    ),
+    WITH {_minhash_ctes(num_hashes, bands)},
     cand AS (
         SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
         FROM banded a
@@ -474,39 +670,15 @@ def q49_simhash_near_pairs(spark, sf_dir):
 
 def _q50_oracle(k: int, dim: int, n_planes: int, seed: int = 42) -> str:
     """DuckDB twin of ann_topk_ivf: the hyperplanes are deterministic
-    literals (same numpy seed), embedded into the SQL; dot-product folds are
-    bit-identical across engines (verified by x46/x47)."""
+    literals (same numpy seed), embedded into the SQL."""
     planes = sim.make_hyperplanes(dim, n_planes, seed)
-
-    def dot_lit(vec: str, plane: list[float]) -> str:
-        lst = "[" + ", ".join(repr(float(x)) for x in plane) + "]"
-        return (
-            f"list_sum(list_transform(range(1, len({vec}) + 1),"
-            f" i -> CAST({vec}[i] AS DOUBLE) * ({lst})[i]))"
-        )
-
-    def sig_expr(vec: str) -> str:
-        return "(" + "\n             + ".join(
-            f"(CASE WHEN {dot_lit(vec, p)} >= 0 THEN CAST({1 << i} AS BIGINT)"
-            f" ELSE CAST(0 AS BIGINT) END)"
-            for i, p in enumerate(planes)
-        ) + ")"
-
-    dot_q = (
-        "list_sum(list_transform(range(1, len(s.embedding) + 1),"
-        " i -> CAST(s.embedding[i] AS DOUBLE) * CAST(q2.qe[i] AS DOUBLE)))"
-    )
-    norm = (
-        "sqrt(list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    )
     return f"""
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
     sigs AS (
-        SELECT vec_id, embedding, {sig_expr('embedding')} AS sig FROM embeddings
+        SELECT vec_id, embedding, {_hyperplane_sig('embedding', planes)} AS sig FROM embeddings
     ),
-    qsig AS (SELECT qe, {sig_expr('qe')} AS qsig FROM q)
-    SELECT s.vec_id,
-           {dot_q} / ({norm.format(v='s.embedding')} * {norm.format(v='q2.qe')}) AS cosine
+    qsig AS (SELECT qe, {_hyperplane_sig('qe', planes)} AS qsig FROM q)
+    SELECT s.vec_id, {_cos('s.embedding', 'q2.qe')} AS cosine
     FROM sigs s, qsig q2
     WHERE bit_count(xor(s.sig, q2.qsig)) <= 1
     ORDER BY cosine DESC, s.vec_id
@@ -534,67 +706,17 @@ def q50_ann_lsh_topk(spark, sf_dir):
 def _q51_oracle(k: int, dim: int, n_centroids: int, nprobe: int, seed: int = 42) -> str:
     """DuckDB twin of ann_topk_ivf_centroids over the seeded codebook: the
     centroids are float64 literals (same numpy seed as the Spark side), so
-    cell assignment (first-index argmax by cosine), probe-cell selection
-    (top-nprobe by cosine desc, cell desc — mirroring reverse(array_sort)),
-    and the exact re-rank are all plain SQL with bit-identical doubles."""
+    cell assignment, probe-cell selection (top-nprobe by cosine desc, cell
+    desc — mirroring reverse(array_sort)) and the exact re-rank are all
+    plain SQL."""
     cents = sim.make_centroids(dim, n_centroids, seed)
-
-    def clist(c: list[float]) -> str:
-        return "[" + ", ".join(repr(float(x)) for x in c) + "]"
-
-    def cos_lit(vec: str, c: list[float]) -> str:
-        lst = clist(c)
-        dot = (
-            f"list_sum(list_transform(range(1, len({vec}) + 1),"
-            f" i -> CAST({vec}[i] AS DOUBLE) * ({lst})[i]))"
-        )
-        nv = f"sqrt(list_sum(list_transform({vec}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        nc = f"sqrt(list_sum(list_transform({lst}, x -> x * x)))"
-        return f"({dot} / ({nv} * {nc}))"
-
-    sims_data = ",\n               ".join(
-        f"{cos_lit('embedding', c)} AS s{i}" for i, c in enumerate(cents)
-    )
-    sims_q = ",\n               ".join(
-        f"{cos_lit('qe', c)} AS s{i}" for i, c in enumerate(cents)
-    )
-    all_s = ", ".join(f"s{i}" for i in range(n_centroids))
-    argmax = "CASE " + " ".join(
-        f"WHEN s{i} = best THEN {i}" for i in range(n_centroids)
-    ) + " END"
-    probe_union = "\n            UNION ALL ".join(
-        f"SELECT {i} AS cell, s{i} AS sim FROM qs" for i in range(n_centroids)
-    )
-    dot_q = (
-        "list_sum(list_transform(range(1, len(a.embedding) + 1),"
-        " i -> CAST(a.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)))"
-    )
-    norm = "sqrt(list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
     return f"""
-    WITH scored AS (
-        SELECT vec_id, embedding,
-               {sims_data}
-        FROM embeddings
-    ),
-    assigned AS (
-        SELECT vec_id, embedding, {argmax} AS cell
-        FROM (SELECT *, greatest({all_s}) AS best FROM scored)
-    ),
-    q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-    qs AS (
-        SELECT qe,
-               {sims_q}
-        FROM q
-    ),
-    qprobe AS (
-        SELECT cell FROM (
-            {probe_union}
-        ) ORDER BY sim DESC, cell DESC LIMIT {nprobe}
-    )
-    SELECT a.vec_id,
-           {dot_q} / ({norm.format(v='a.embedding')} * {norm.format(v='q.qe')}) AS cosine
-    FROM assigned a, q
-    WHERE a.cell IN (SELECT cell FROM qprobe)
+    WITH {_assign_ctes(cents)},
+    {_qsims_cte(cents, 'vec_id = 0')},
+    {_probe_cells_cte(n_centroids, nprobe, 'DESC')}
+    SELECT a.vec_id, {_cos('a.embedding', 'q.qe')} AS cosine
+    FROM assigned a, qsims q
+    WHERE a.cell IN (SELECT cell FROM qcells)
     ORDER BY cosine DESC, a.vec_id
     LIMIT {k}
     """
@@ -627,34 +749,14 @@ def _q53_oracle(threshold: float, dim: int, n_planes: int, n_tables: int, seed: 
     exact cosine re-rank. Mirrors the Spark pipeline 1:1 so the pair set —
     and with it the multi-table LSH recall contract vs exact x47 — is
     oracle-checked end-to-end."""
-
-    def dot_lit(vec: str, plane: list[float]) -> str:
-        lst = "[" + ", ".join(repr(float(x)) for x in plane) + "]"
-        return (
-            f"list_sum(list_transform(range(1, len({vec}) + 1),"
-            f" i -> CAST({vec}[i] AS DOUBLE) * ({lst})[i]))"
-        )
-
-    def sig_expr(vec: str, planes: list[list[float]]) -> str:
-        return "(" + "\n             + ".join(
-            f"(CASE WHEN {dot_lit(vec, p)} >= 0 THEN CAST({1 << i} AS BIGINT)"
-            f" ELSE CAST(0 AS BIGINT) END)"
-            for i, p in enumerate(planes)
-        ) + ")"
-
     sig_cols = ",\n               ".join(
-        f"{sig_expr('embedding', sim.make_hyperplanes(dim, n_planes, seed + 1000 * t))} AS sig_{t}"
+        f"{_hyperplane_sig('embedding', sim.make_hyperplanes(dim, n_planes, seed + 1000 * t))} AS sig_{t}"
         for t in range(n_tables)
     )
     stacked = "\n        UNION ALL ".join(
         f"SELECT vec_id, {t} AS tbl, sig_{t} AS sig FROM sigs" for t in range(n_tables)
     )
-    cos = (
-        "list_sum(list_transform(range(1, len(e1.embedding) + 1),"
-        " i -> CAST(e1.embedding[i] AS DOUBLE) * CAST(e2.embedding[i] AS DOUBLE)))"
-        " / (sqrt(list_sum(list_transform(e1.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        " * sqrt(list_sum(list_transform(e2.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"
-    )
+    cos = _cos("e1.embedding", "e2.embedding")
     return f"""
     WITH sigs AS (
         SELECT vec_id,
@@ -696,19 +798,8 @@ def q53_cosine_pairs_lsh(spark, sf_dir):
 
 @register(
     "q52_dedup_canonical_docs",
-    oracle="""
-    WITH RECURSIVE sh AS (
-        SELECT doc_id,
-               unnest(list_distinct([substr(text, i, 3) for i in range(1, length(text) - 1)]))
-                   AS shingle
-        FROM documents
-    ),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_shingle_overlap_ctes('documents')},
     pairs AS (
         SELECT d1, d2 FROM inter
         JOIN sizes s1 ON s1.doc_id = d1
@@ -933,15 +1024,11 @@ def q55_stratified_sample(spark, sf_dir):
 
 @register(
     "q56_dedup_canonical_embeddings",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE pairs AS (
         SELECT a.vec_id AS id1, b.vec_id AS id2
         FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        WHERE list_sum(list_transform(range(1, len(a.embedding) + 1),
-                                      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-              / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-               * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-              >= 0.4
+        WHERE {_cos('a.embedding', 'b.embedding')} >= 0.4
     ),
     edges AS (SELECT id1 AS a, id2 AS b FROM pairs UNION SELECT id2, id1 FROM pairs),
     walk(node, reach) AS (
@@ -1028,20 +1115,12 @@ def q60_tfidf_top_terms(spark, sf_dir):
     # the result and Categorical(list) throws "unhashable type: 'list'"
     # (round-5 red row). array_join / array_to_string produce the identical
     # string on both engines, so the hash gate still pins every element.
-    oracle="""
-    WITH s AS (
-        SELECT vec_id, embedding,
-               list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS scale
-        FROM embeddings
-    )
+    oracle=f"""
+    WITH {_INT8_CTES}
     SELECT vec_id,
            CASE WHEN scale > 0 THEN round(scale, 6) END AS scale,
-           array_to_string(
-               CASE WHEN scale > 0 THEN
-                   list_transform(embedding,
-                       x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 / scale + 0.5) AS INT))
-               ELSE list_transform(embedding, x -> 0) END, ',') AS q_csv
-    FROM s
+           array_to_string(q, ',') AS q_csv
+    FROM quant
     """,
     doc="Symmetric int8 scalar quantization of the embedding column "
     "(operators.similarity.quantize_int8): scale = max|x|, q_i = "
@@ -1064,26 +1143,11 @@ def q61_int8_quantization(spark, sf_dir):
     "q62_ann_quantized_topk",
     # Integer dot products over int8 codes: exact BIGINT scores, no float
     # comparison anywhere — the most hash-stable ANN entry in the catalog.
-    oracle="""
-    WITH q AS (
-        SELECT list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 /
-                        list_max(list_transform(embedding, y -> abs(CAST(y AS DOUBLE))))
-                        + 0.5) AS INT)) AS qq
-        FROM embeddings WHERE vec_id = 0
-    ),
-    base AS (
-        SELECT vec_id,
-               list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 /
-                        list_max(list_transform(embedding, y -> abs(CAST(y AS DOUBLE))))
-                        + 0.5) AS INT)) AS bq
-        FROM embeddings
-    )
-    SELECT vec_id,
-           CAST(list_sum(list_transform(range(1, len(bq) + 1),
-                i -> CAST(bq[i] AS BIGINT) * qq[i])) AS BIGINT) AS dot_q
-    FROM base CROSS JOIN q
+    oracle=f"""
+    WITH {_INT8_CTES},
+    qv AS (SELECT q AS qq FROM quant WHERE vec_id = 0)
+    SELECT vec_id, CAST({_dot('q', 'qq', 'BIGINT')} AS BIGINT) AS dot_q
+    FROM quant CROSS JOIN qv
     ORDER BY dot_q DESC, vec_id
     LIMIT 20
     """,
@@ -1097,7 +1161,7 @@ def q61_int8_quantization(spark, sf_dir):
 def q62_ann_quantized_topk(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     query = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    return sim.ann_topk_quantized(e, query, k=20, dim=64)
+    return sim.ann_topk_quantized(e, query, k=20)
 
 
 @register(
@@ -1278,57 +1342,20 @@ def x77_winnow_overlap_pairs(spark, sf_dir):
 
 
 def _x78_oracle(threshold: float, dim: int, n_centroids: int, seed: int = 42) -> str:
-    """DuckDB twin of semantic_dedup over the seeded codebook: centroid
-    literals -> first-index argmax cell + greatest() centroid sim (both
-    identical to the q51 oracle), then the paper's per-cluster dominance
-    sweep — a row is removed iff a same-cell row with cosine >= threshold
-    ranks ahead of it by (csim ASC, vec_id ASC). All doubles come from the
-    same left-to-right folds, so the rank comparisons are bit-stable."""
+    """DuckDB twin of semantic_dedup over the seeded codebook: literal-
+    codebook cell + centroid cosine (q51's assignment), then the paper's
+    per-cluster dominance sweep — a row is removed iff a same-cell row with
+    cosine >= threshold ranks ahead of it by (csim ASC, vec_id ASC)."""
     cents = sim.make_centroids(dim, n_centroids, seed)
-
-    def clist(c: list[float]) -> str:
-        return "[" + ", ".join(repr(float(x)) for x in c) + "]"
-
-    def cos_lit(vec: str, c: list[float]) -> str:
-        lst = clist(c)
-        dot = (
-            f"list_sum(list_transform(range(1, len({vec}) + 1),"
-            f" i -> CAST({vec}[i] AS DOUBLE) * ({lst})[i]))"
-        )
-        nv = f"sqrt(list_sum(list_transform({vec}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        nc = f"sqrt(list_sum(list_transform({lst}, x -> x * x)))"
-        return f"({dot} / ({nv} * {nc}))"
-
-    sims_data = ",\n               ".join(
-        f"{cos_lit('embedding', c)} AS s{i}" for i, c in enumerate(cents)
-    )
-    all_s = ", ".join(f"s{i}" for i in range(n_centroids))
-    argmax = "CASE " + " ".join(
-        f"WHEN s{i} = best THEN {i}" for i in range(n_centroids)
-    ) + " END"
-    dot_ab = (
-        "list_sum(list_transform(range(1, len(a.embedding) + 1),"
-        " i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))"
-    )
-    nrm = "sqrt(list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    cos_ab = f"({dot_ab} / ({nrm.format(v='a.embedding')} * {nrm.format(v='b.embedding')}))"
     return f"""
-    WITH scored AS (
-        SELECT vec_id, embedding,
-               {sims_data}
-        FROM embeddings
-    ),
-    assigned AS (
-        SELECT vec_id, embedding, {argmax} AS cell, best AS csim
-        FROM (SELECT *, greatest({all_s}) AS best FROM scored)
-    ),
+    WITH {_assign_ctes(cents)},
     removed AS (
         SELECT DISTINCT b.vec_id
         FROM assigned a JOIN assigned b
           ON a.cell = b.cell
          AND a.vec_id <> b.vec_id
          AND (a.csim < b.csim OR (a.csim = b.csim AND a.vec_id < b.vec_id))
-        WHERE {cos_ab} >= CAST({threshold!r} AS DOUBLE)
+        WHERE {_cos('a.embedding', 'b.embedding')} >= CAST({threshold!r} AS DOUBLE)
     )
     SELECT vec_id, cell FROM assigned
     WHERE vec_id NOT IN (SELECT vec_id FROM removed)
@@ -1400,18 +1427,7 @@ def x78_semantic_dedup(spark, sf_dir):
     ),
     canon AS (SELECT min(doc_id) AS doc_id FROM keep1 GROUP BY md5(text)),
     keep2 AS (SELECT k.* FROM keep1 k JOIN canon USING (doc_id)),
-    sh AS (
-        SELECT doc_id,
-               unnest(list_distinct([substr(text, i, 3) for i in range(1, length(text) - 1)]))
-                   AS shingle
-        FROM keep2
-    ),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    {_shingle_overlap_ctes('keep2')},
     neardup AS (
         SELECT DISTINCT d2 AS doc_id
         FROM inter
@@ -1572,60 +1588,12 @@ def _x82_oracle(k: int, dim: int, n_centroids: int, nprobe: int, n_queries: int,
     (sim DESC, cell DESC) per q_id, candidates met on the cell equi-join,
     per-query top-k by (cosine DESC, vec_id ASC) row_number."""
     cents = sim.make_centroids(dim, n_centroids, seed)
-
-    def clist(c: list[float]) -> str:
-        return "[" + ", ".join(repr(float(x)) for x in c) + "]"
-
-    def cos_lit(vec: str, c: list[float]) -> str:
-        lst = clist(c)
-        dot = (
-            f"list_sum(list_transform(range(1, len({vec}) + 1),"
-            f" i -> CAST({vec}[i] AS DOUBLE) * ({lst})[i]))"
-        )
-        nv = f"sqrt(list_sum(list_transform({vec}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        nc = f"sqrt(list_sum(list_transform({lst}, x -> x * x)))"
-        return f"({dot} / ({nv} * {nc}))"
-
-    sims_data = ",\n               ".join(
-        f"{cos_lit('embedding', c)} AS s{i}" for i, c in enumerate(cents)
-    )
-    all_s = ", ".join(f"s{i}" for i in range(n_centroids))
-    argmax = "CASE " + " ".join(
-        f"WHEN s{i} = best THEN {i}" for i in range(n_centroids)
-    ) + " END"
-    probe_union = "\n            UNION ALL ".join(
-        f"SELECT q_id, {i} AS cell, s{i} AS sim FROM qsims" for i in range(n_centroids)
-    )
-    dot_q = (
-        "list_sum(list_transform(range(1, len(a.embedding) + 1),"
-        " i -> CAST(a.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)))"
-    )
-    norm = "sqrt(list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
     return f"""
-    WITH scored AS (
-        SELECT vec_id, embedding,
-               {sims_data}
-        FROM embeddings
-    ),
-    assigned AS (
-        SELECT vec_id, embedding, {argmax} AS cell
-        FROM (SELECT *, greatest({all_s}) AS best FROM scored)
-    ),
-    qsims AS (
-        SELECT vec_id AS q_id, embedding AS qe,
-               {sims_data}
-        FROM embeddings WHERE vec_id < {n_queries}
-    ),
-    qcells AS (
-        SELECT q_id, cell FROM (
-            SELECT q_id, cell, sim,
-                   row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, cell DESC) AS rn
-            FROM ({probe_union})
-        ) WHERE rn <= {nprobe}
-    ),
+    WITH {_assign_ctes(cents)},
+    {_qsims_cte(cents, f'vec_id < {n_queries}')},
+    {_probe_cells_cte(n_centroids, nprobe, 'DESC')},
     cand AS (
-        SELECT q.q_id, a.vec_id,
-               {dot_q} / ({norm.format(v='a.embedding')} * {norm.format(v='q.qe')}) AS cosine
+        SELECT q.q_id, a.vec_id, {_cos('a.embedding', 'q.qe')} AS cosine
         FROM qcells c
         JOIN (SELECT q_id, qe FROM qsims) q ON q.q_id = c.q_id
         JOIN assigned a ON a.cell = c.cell
@@ -1666,48 +1634,14 @@ def _x83_oracle(threshold: float, dim: int, n_centroids: int, cutoff: int, seed:
     cutoff) to reproduce its kept set, then the frozen-corpus veto join,
     then the within-batch sweep over the survivors."""
     cents = sim.make_centroids(dim, n_centroids, seed)
-
-    def clist(c: list[float]) -> str:
-        return "[" + ", ".join(repr(float(x)) for x in c) + "]"
-
-    def cos_lit(vec: str, c: list[float]) -> str:
-        lst = clist(c)
-        dot = (
-            f"list_sum(list_transform(range(1, len({vec}) + 1),"
-            f" i -> CAST({vec}[i] AS DOUBLE) * ({lst})[i]))"
-        )
-        nv = f"sqrt(list_sum(list_transform({vec}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        nc = f"sqrt(list_sum(list_transform({lst}, x -> x * x)))"
-        return f"({dot} / ({nv} * {nc}))"
-
-    sims_data = ",\n               ".join(
-        f"{cos_lit('embedding', c)} AS s{i}" for i, c in enumerate(cents)
-    )
-    all_s = ", ".join(f"s{i}" for i in range(n_centroids))
-    argmax = "CASE " + " ".join(
-        f"WHEN s{i} = best THEN {i}" for i in range(n_centroids)
-    ) + " END"
-    dot_ab = (
-        "list_sum(list_transform(range(1, len(a.embedding) + 1),"
-        " i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))"
-    )
-    nrm = "sqrt(list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    cos_ab = f"({dot_ab} / ({nrm.format(v='a.embedding')} * {nrm.format(v='b.embedding')}))"
+    cos_ab = _cos("a.embedding", "b.embedding")
     tau = f"CAST({threshold!r} AS DOUBLE)"
     dominates = (
         "a.cell = b.cell AND a.vec_id <> b.vec_id"
         " AND (a.csim < b.csim OR (a.csim = b.csim AND a.vec_id < b.vec_id))"
     )
     return f"""
-    WITH scored AS (
-        SELECT vec_id, embedding,
-               {sims_data}
-        FROM embeddings
-    ),
-    assigned AS (
-        SELECT vec_id, embedding, {argmax} AS cell, best AS csim
-        FROM (SELECT *, greatest({all_s}) AS best FROM scored)
-    ),
+    WITH {_assign_ctes(cents)},
     c_removed AS (
         SELECT DISTINCT b.vec_id
         FROM assigned a JOIN assigned b ON {dominates}
@@ -1772,18 +1706,8 @@ def x83_incremental_semantic_dedup(spark, sf_dir):
 
 def _x84_oracle(splits_e6: dict[str, int], seed: int) -> str:
     """DuckDB twin of shuffle_split: same cumulative md5-hex thresholds,
-    same shuffle salt; lowercase-hex string compare == integer compare."""
-    from ..operators.sampling import rate_to_threshold_hex
-
-    names = list(splits_e6)
-    whens, cum = [], 0
-    for name in names[:-1]:
-        cum += splits_e6[name]
-        whens.append(
-            f"WHEN substr(md5('{seed}:' || CAST(doc_id AS VARCHAR)), 1, 8)"
-            f" < '{rate_to_threshold_hex(cum)}' THEN '{name}'"
-        )
-    case = "CASE " + " ".join(whens) + f" ELSE '{names[-1]}' END"
+    same shuffle salt."""
+    case = _split_case(splits_e6, seed)
     return f"""
     SELECT doc_id,
            {case} AS split,
@@ -1818,35 +1742,9 @@ def _minhash_estimate_oracle(num_hashes: int, bands: int, threshold_e6: int) -> 
     """DuckDB twin of minhash_estimate_pairs(hash_fn='md5'): the q48
     oracle's sh/sig/banded/cand CTEs, then signature-agreement counting
     instead of exact-Jaccard verification."""
-    rows = num_hashes // bands
-    mins = ",\n               ".join(
-        f"min(md5('{s}:' || shingle)) AS mh_{s}" for s in range(num_hashes)
-    )
-    band_selects = "\n        UNION ALL\n        ".join(
-        "SELECT doc_id, {b} AS band, md5({expr}) AS bucket FROM sig".format(
-            b=b,
-            expr=" || '|' || ".join(f"mh_{s}" for s in range(b * rows, (b + 1) * rows)),
-        )
-        for b in range(bands)
-    )
-    agree = " + ".join(
-        f"CASE WHEN s1.mh_{s} = s2.mh_{s} THEN 1 ELSE 0 END" for s in range(num_hashes)
-    )
+    agree = _agree(num_hashes, "s1", "s2")
     return f"""
-    WITH sh AS (
-        SELECT doc_id,
-               unnest(list_distinct([substr(text, i, 3) for i in range(1, length(text) - 1)]))
-                   AS shingle
-        FROM documents
-    ),
-    sig AS (
-        SELECT doc_id,
-               {mins}
-        FROM sh GROUP BY doc_id
-    ),
-    banded AS (
-        {band_selects}
-    ),
+    WITH {_minhash_ctes(num_hashes, bands)},
     cand AS (
         SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
         FROM banded a
@@ -2086,35 +1984,9 @@ def _fuzzy_decontam_oracle(num_hashes: int, bands: int, threshold_e6: int) -> st
     """DuckDB twin of decontaminate_fuzzy(hash_fn='md5'): x85's sig/band
     CTEs with the source column carried through, candidates restricted to
     corpus-vs-benchmark, max signature-agreement estimate per corpus doc."""
-    rows = num_hashes // bands
-    mins = ",\n               ".join(
-        f"min(md5('{s}:' || shingle)) AS mh_{s}" for s in range(num_hashes)
-    )
-    band_selects = "\n        UNION ALL\n        ".join(
-        "SELECT doc_id, source, {b} AS band, md5({expr}) AS bucket FROM sig".format(
-            b=b,
-            expr=" || '|' || ".join(f"mh_{s}" for s in range(b * rows, (b + 1) * rows)),
-        )
-        for b in range(bands)
-    )
-    agree = " + ".join(
-        f"CASE WHEN s1.mh_{s} = s2.mh_{s} THEN 1 ELSE 0 END" for s in range(num_hashes)
-    )
+    agree = _agree(num_hashes, "s1", "s2")
     return f"""
-    WITH sh AS (
-        SELECT doc_id, source,
-               unnest(list_distinct([substr(text, i, 3) for i in range(1, length(text) - 1)]))
-                   AS shingle
-        FROM documents
-    ),
-    sig AS (
-        SELECT doc_id, source,
-               {mins}
-        FROM sh GROUP BY doc_id, source
-    ),
-    banded AS (
-        {band_selects}
-    ),
+    WITH {_minhash_ctes(num_hashes, bands, keys='doc_id, source')},
     cand AS (
         SELECT DISTINCT c.doc_id AS cid, b.doc_id AS bid
         FROM banded c
@@ -3321,48 +3193,13 @@ def x119_unicode_nfc(spark, sf_dir):
 
 
 def _x120_oracle(drop_frac_e6: int, dim: int, n_centroids: int, seed: int = 42) -> str:
-    """DuckDB twin of density_prune: x78's literal-codebook assignment
-    fragment (same cos folds, same first-index argmax), then a per-cell
-    rank by (csim DESC, vec_id ASC) keeping ranks past the integer-floor
-    drop count."""
+    """DuckDB twin of density_prune: the literal-codebook assignment (rows
+    with no cell dropped, as the operator drops them), then a per-cell rank
+    by (csim DESC, vec_id ASC) keeping ranks past the integer-floor drop
+    count."""
     cents = sim.make_centroids(dim, n_centroids, seed)
-
-    def clist(c: list[float]) -> str:
-        return "[" + ", ".join(repr(float(x)) for x in c) + "]"
-
-    def cos_lit(vec: str, c: list[float]) -> str:
-        lst = clist(c)
-        dot = (
-            f"list_sum(list_transform(range(1, len({vec}) + 1),"
-            f" i -> CAST({vec}[i] AS DOUBLE) * ({lst})[i]))"
-        )
-        nv = f"sqrt(list_sum(list_transform({vec}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        nc = f"sqrt(list_sum(list_transform({lst}, x -> x * x)))"
-        return f"({dot} / ({nv} * {nc}))"
-
-    sims_data = ",\n               ".join(
-        f"{cos_lit('embedding', c)} AS s{i}" for i, c in enumerate(cents)
-    )
-    all_s = ", ".join(f"s{i}" for i in range(n_centroids))
-    argmax = "CASE " + " ".join(
-        f"WHEN s{i} = best THEN {i}" for i in range(n_centroids)
-    ) + " END"
-    # the operator drops NULL cells (assign_cell gives NULL/zero-norm
-    # vectors no cell); the guard below mirrors that BY CONSTRUCTION
-    # (best IS NOT NULL for NULL vectors, norm > 0 for zero vectors)
-    # rather than relying on the fixtures having no degenerate rows
-    nv = "sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
     return f"""
-    WITH scored AS (
-        SELECT vec_id, embedding,
-               {sims_data}
-        FROM embeddings
-    ),
-    assigned AS (
-        SELECT vec_id, {argmax} AS cell, best AS csim
-        FROM (SELECT *, greatest({all_s}) AS best FROM scored)
-        WHERE best IS NOT NULL AND {nv} > 0
-    ),
+    WITH {_assign_ctes(cents, guard=True)},
     ranked AS (
         SELECT vec_id, cell,
                row_number() OVER (PARTITION BY cell
@@ -3386,7 +3223,7 @@ def _x120_oracle(drop_frac_e6: int, dim: int, n_centroids: int, seed: int = 42) 
     "Assignment is the scan-side literal codebook; rank/count windows "
     "partition on cell (width bounded by sizing n_centroids ~0.1% N), "
     "one exchange total. Integer-floor drop count is bit-stable across "
-    "engines; csim ordering reuses the pinned left-to-right cos folds.",
+    "engines.",
     tags=("LLM", "dedup", "semantic", "sampling"),
 )
 def x120_density_prune(spark, sf_dir):
@@ -3398,64 +3235,17 @@ def x120_density_prune(spark, sf_dir):
 _PQ_M, _PQ_K, _PQ_DIM = 4, 4, 64
 
 
-def _pq_dot_sql(vec: str, offset: int, c: list[float]) -> str:
-    """Subspace dot against a literal centroid as an EXPLICIT left-assoc
-    chain: DuckDB's list_sum matches Spark's left-to-right fold on
-    64-element lists (every cos_lit oracle pins that) but NOT on short
-    sub-vector lists — measured a 1-ulp divergence at 16 elements — so
-    sub-byte folds spell the sequence out."""
-    terms = "CAST(0.0 AS DOUBLE)"
-    for i, x in enumerate(c):
-        # string-parse the literal: DuckDB's DECIMAL->DOUBLE cast is off
-        # by an ulp for some 17-digit values; '...'::DOUBLE is exact
-        terms = (
-            f"({terms} + CAST({vec}[{offset + i + 1}] AS DOUBLE)"
-            f" * CAST('{float(x)!r}' AS DOUBLE))"
-        )
-    return terms
-
-
-def _pq_encode_fragment(books: list[list[list[float]]]) -> tuple[str, str]:
-    """(scored SELECT-list, per-subspace code exprs) shared by the x121
-    and x122 oracles: score_sj = dot(v_s, c_sj) - ||c_sj||^2/2 with the
-    squared norm inlined as the operator's own driver-side double, then
-    first-index argmax per subspace (= lowest code on ties, matching the
-    (score, -code) array_max)."""
-    dsub = len(books[0][0])
-    score_defs, code_exprs = [], []
-    for s, book in enumerate(books):
-        names = []
-        for j, c in enumerate(book):
-            half = repr(sim.sq_norm_lit(c) / 2.0)
-            score_defs.append(
-                f"{_pq_dot_sql('embedding', s * dsub, c)}"
-                f" - CAST('{half}' AS DOUBLE) AS s{s}_{j}"
-            )
-            names.append(f"s{s}_{j}")
-        best = f"greatest({', '.join(names)})"
-        case = "CASE " + " ".join(
-            f"WHEN {n} = {best} THEN {j}" for j, n in enumerate(names)
-        ) + " END"
-        code_exprs.append(case)
-    return ",\n               ".join(score_defs), code_exprs
+def _pq_half_norm(s: int, j: int, c: list[float]) -> str:
+    """x121/x122's PQ score offset: ||c||^2/2 as the operator's own
+    driver-side double."""
+    return _dbl(sim.sq_norm_lit(c) / 2.0)
 
 
 def _x121_oracle() -> str:
     books = sim.make_pq_codebooks(_PQ_DIM, _PQ_M, _PQ_K, seed=42)
-    scores, codes = _pq_encode_fragment(books)
     codes_str = " || '-' || ".join(f"CAST(c{s} AS VARCHAR)" for s in range(_PQ_M))
-    code_cols = ",\n               ".join(f"{e} AS c{s}" for s, e in enumerate(codes))
     return f"""
-    WITH scored AS (
-        SELECT vec_id,
-               {scores}
-        FROM embeddings
-    ),
-    coded AS (
-        SELECT vec_id,
-               {code_cols}
-        FROM scored
-    )
+    WITH {_pq_code_ctes(books, _pq_half_norm)}
     SELECT vec_id, {codes_str} AS codes_str FROM coded
     """
 
@@ -3492,34 +3282,16 @@ def _x122_oracle(k: int, query_seed: int) -> str:
     books = sim.make_pq_codebooks(_PQ_DIM, _PQ_M, _PQ_K, seed=42)
     q = np.random.RandomState(query_seed).standard_normal(_PQ_DIM).tolist()
     dotT, nrm2T, qn = sim.pq_adc_tables(books, q)
-    scores, codes = _pq_encode_fragment(books)
-    code_cols = ",\n               ".join(f"{e} AS c{s}" for s, e in enumerate(codes))
-
-    def tbl(rows: list[float]) -> str:
-        # DOUBLE[] via string parses (exact; see _pq_dot_sql)
-        return "[" + ", ".join(f"CAST('{v!r}' AS DOUBLE)" for v in rows) + "]"
-
-    # CASTs keep every term DOUBLE: DuckDB parses bare decimal literals
-    # as DECIMAL, and decimal chain arithmetic drifts a ulp from the
-    # operator's double fold
-    dot_chain = "CAST(0.0 AS DOUBLE)"
-    nrm_chain = "CAST(0.0 AS DOUBLE)"
-    for s in range(_PQ_M):
-        dot_chain = f"({dot_chain} + CAST(({tbl(dotT[s])})[c{s} + 1] AS DOUBLE))"
-        nrm_chain = f"({nrm_chain} + CAST(({tbl(nrm2T[s])})[c{s} + 1] AS DOUBLE))"
-    return f"""
-    WITH scored AS (
-        SELECT vec_id,
-               {scores}
-        FROM embeddings
-    ),
-    coded AS (
-        SELECT vec_id,
-               {code_cols}
-        FROM scored
+    dot_chain = _fold(
+        f"CAST(({_dbl_list(dotT[s])})[c{s} + 1] AS DOUBLE)" for s in range(_PQ_M)
     )
+    nrm_chain = _fold(
+        f"CAST(({_dbl_list(nrm2T[s])})[c{s} + 1] AS DOUBLE)" for s in range(_PQ_M)
+    )
+    return f"""
+    WITH {_pq_code_ctes(books, _pq_half_norm)}
     SELECT vec_id,
-           {dot_chain} / (CAST('{qn!r}' AS DOUBLE) * sqrt({nrm_chain})) AS adc_cos
+           {dot_chain} / ({_dbl(qn)} * sqrt({nrm_chain})) AS adc_cos
     FROM coded
     ORDER BY adc_cos DESC, vec_id ASC
     LIMIT {k}
@@ -3556,137 +3328,51 @@ def _x123_oracle(
     """DuckDB twin of RESIDUAL ivfadc_knn_join(method='expr'): x82's
     coarse-cell assignment + probe fragments (ties to the LOWEST cell,
     matching the operator's (sim, -cell) struct); item PQ codes are the
-    residual argmax — raw subspace dot (explicit left-assoc chain) minus
-    the per-(cell, subspace, code) adjustment literal of
-    ``ivfadc_residual_tables``, indexed by cell — and the reconstruction
-    norm indexes the same function's ``crn2T`` by [cell][code]. Per-query
-    ADC dot tables ride as computed columns plus the full-dim
-    query·centroid dots (the residual coarse term, seeding the ADC fold);
-    every double is the same left-to-right fold the operator inlines,
-    string-cast so DuckDB parses it exactly."""
+    residual argmax — raw subspace dot minus the per-(cell, subspace, code)
+    adjustment literal of ``ivfadc_residual_tables``, indexed by cell — and
+    the reconstruction norm indexes the same function's ``crn2T`` by
+    [cell][code]. Per-query ADC dot tables ride as computed columns plus
+    the full-dim query·centroid dots (the residual coarse term, seeding the
+    ADC fold, so its doubles land in the output: ``_fold`` chains)."""
     cents = sim.make_centroids(dim, n_centroids, seed=42)
     books = sim.make_pq_codebooks(dim, _PQ_M, _PQ_K, seed=42)
     adjT, crn2T = sim.ivfadc_residual_tables(cents, books)
     dsub = dim // _PQ_M
-
-    def clist(c: list[float]) -> str:
-        return "[" + ", ".join(repr(float(x)) for x in c) + "]"
-
-    def dlist(vals: list[float]) -> str:
-        # scalar lookup tables: string-parse so every entry is exact
-        return "[" + ", ".join(f"CAST('{v!r}' AS DOUBLE)" for v in vals) + "]"
-
-    def dot64(vec: str, c: list[float]) -> str:
-        # full-dim literal dot: list_sum matches Spark's fold at 64 elems
-        return (
-            f"list_sum(list_transform(range(1, len({vec}) + 1),"
-            f" i -> CAST({vec}[i] AS DOUBLE) * ({clist(c)})[i]))"
-        )
-
-    def cos_lit(vec: str, c: list[float]) -> str:
-        lst = clist(c)
-        nv = f"sqrt(list_sum(list_transform({vec}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        nc = f"sqrt(list_sum(list_transform({lst}, x -> x * x)))"
-        return f"({dot64(vec, c)} / ({nv} * {nc}))"
-
-    cell_sims = ",\n               ".join(
-        f"{cos_lit('embedding', c)} AS cs{i}" for i, c in enumerate(cents)
-    )
-    all_cs = ", ".join(f"cs{i}" for i in range(n_centroids))
-    cell_argmax = "CASE " + " ".join(
-        f"WHEN cs{i} = best THEN {i}" for i in range(n_centroids)
-    ) + " END"
-    nv_item = "sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    # residual PQ scores: raw subspace dot minus the adj[cell][s][j]
-    # literal (dot(cent_s, B_sj) + ||B_sj||^2/2), indexed by cell
-    score_defs, code_exprs = [], []
-    for s, book in enumerate(books):
-        names = []
-        for j, b in enumerate(book):
-            adj = dlist([adjT[c][s][j] for c in range(n_centroids)])
-            score_defs.append(
-                f"{_pq_dot_sql('embedding', s * dsub, b)}"
-                f" - ({adj})[cell + 1] AS s{s}_{j}"
-            )
-            names.append(f"s{s}_{j}")
-        best = f"greatest({', '.join(names)})"
-        code_exprs.append(
-            "CASE "
-            + " ".join(f"WHEN {n} = {best} THEN {j}" for j, n in enumerate(names))
-            + " END"
-        )
-    pq_scores = ",\n               ".join(score_defs)
-    code_cols = ",\n               ".join(
-        f"{e} AS c{s}" for s, e in enumerate(code_exprs)
+    pq_ctes = _pq_code_ctes(
+        books,
+        lambda s, j, c: f"({_dbl_list([adjT[cell][s][j] for cell in range(n_centroids)])})[cell + 1]",
+        src="assigned",
+        keys="vec_id, cell",
     )
     # reconstruction norm: crn2T[cell][code_s] nested-literal lookups
-    rn2 = "CAST(0.0 AS DOUBLE)"
-    for s in range(_PQ_M):
-        nested = "[" + ", ".join(
-            dlist([crn2T[c][s][j] for j in range(_PQ_K)])
-            for c in range(n_centroids)
-        ) + "]"
-        rn2 = f"({rn2} + ({nested})[cell + 1][c{s} + 1])"
-    probe_union = "\n            UNION ALL ".join(
-        f"SELECT q_id, {i} AS cell, cs{i} AS sim FROM qsims"
-        for i in range(n_centroids)
+    rn2 = _fold(
+        "(["
+        + ", ".join(_dbl_list(crn2T[c][s]) for c in range(n_centroids))
+        + f"])[cell + 1][c{s} + 1]"
+        for s in range(_PQ_M)
     )
     q_dott = ",\n               ".join(
-        f"{_pq_dot_sql('qe', s * dsub, c)} AS d{s}_{j}"
+        f"{_chain_dot('qe', [_dbl(x) for x in c], s * dsub)} AS d{s}_{j}"
         for s, book in enumerate(books)
         for j, c in enumerate(book)
     )
-    # the query·centroid dots SEED the ADC chain, so their raw doubles
-    # land in the hashed output — unlike the cos fragments (rank-only),
-    # they need the explicit left-assoc chain: list_sum matched the fold
-    # on every fixture tested at 64 elems until the sf0.001 parity set
-    # exposed a 1-ulp divergence here (round-10 finding)
     q_cdots = ",\n               ".join(
-        f"{_pq_dot_sql('qe', 0, c)} AS qd{i}" for i, c in enumerate(cents)
+        f"{_chain_dot('qe', [_dbl(x) for x in c])} AS qd{i}" for i, c in enumerate(cents)
     )
-    qnorm = "sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
+    qnorm = _norm("qe")
     qd_all = ", ".join(f"q.qd{i}" for i in range(n_centroids))
-    adc = f"([{qd_all}])[pc.cell + 1]"
-    for s in range(_PQ_M):
-        lv = ", ".join(f"q.d{s}_{j}" for j in range(_PQ_K))
-        adc = f"({adc} + ([{lv}])[a.c{s} + 1])"
+    adc = _fold(
+        (f"([{', '.join(f'q.d{s}_{j}' for j in range(_PQ_K))}])[a.c{s} + 1]" for s in range(_PQ_M)),
+        start=f"([{qd_all}])[pc.cell + 1]",
+    )
     return f"""
-    WITH cellscored AS (
-        SELECT vec_id, embedding,
-               {cell_sims}
-        FROM embeddings
-    ),
-    celled AS (
-        SELECT vec_id, embedding, {cell_argmax} AS cell
-        FROM (SELECT *, greatest({all_cs}) AS best FROM cellscored)
-        WHERE best IS NOT NULL AND {nv_item} > 0
-    ),
-    items AS (
-        SELECT vec_id, cell,
-               {pq_scores}
-        FROM celled
-    ),
-    coded AS (
-        SELECT vec_id, cell,
-               {code_cols}
-        FROM items
-    ),
+    WITH {_assign_ctes(cents, guard=True)},
+    {pq_ctes},
     items_rn AS (
         SELECT *, {rn2} AS rn2 FROM coded
     ),
-    qsims AS (
-        SELECT vec_id AS q_id, embedding AS qe,
-               {cell_sims.replace('embedding', 'embedding')}
-        FROM embeddings WHERE vec_id < {n_queries}
-    ),
-    qcells AS (
-        SELECT q_id, cell FROM (
-            SELECT q_id, cell, sim,
-                   row_number() OVER (PARTITION BY q_id
-                                      ORDER BY sim DESC, cell ASC) AS rn
-            FROM ({probe_union})
-        ) WHERE rn <= {nprobe}
-    ),
+    {_qsims_cte(cents, f'vec_id < {n_queries}')},
+    {_probe_cells_cte(n_centroids, nprobe, 'ASC')},
     qtab AS (
         SELECT vec_id AS q_id, {qnorm} AS qn,
                {q_cdots},
@@ -3852,34 +3538,12 @@ def _x125_oracle(
     """DuckDB twin of split_leakage_guard: x84's md5 split ladder plus
     x45/x79's char-3-shingle Jaccard pair fragment, pairs filtered to
     train/eval straddles and the train member flagged."""
-    from ..operators.sampling import rate_to_threshold_hex
-
-    names = list(splits_e6)
-    whens, cum = [], 0
-    for name in names[:-1]:
-        cum += splits_e6[name]
-        whens.append(
-            f"WHEN substr(md5('{seed}:' || CAST(doc_id AS VARCHAR)), 1, 8)"
-            f" < '{rate_to_threshold_hex(cum)}' THEN '{name}'"
-        )
-    case = "CASE " + " ".join(whens) + f" ELSE '{names[-1]}' END"
     evset = ", ".join(f"'{s}'" for s in eval_splits)
     return f"""
     WITH splits AS (
-        SELECT doc_id, {case} AS split FROM documents
+        SELECT doc_id, {_split_case(splits_e6, seed)} AS split FROM documents
     ),
-    sh AS (
-        SELECT doc_id,
-               unnest(list_distinct([substr(text, i, 3)
-                      for i in range(1, length(text) - 1)])) AS shingle
-        FROM documents
-    ),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    {_shingle_overlap_ctes('documents')},
     pairs AS (
         SELECT d1, d2
         FROM inter
@@ -4209,7 +3873,7 @@ def x129_classifier_grad_step(spark, sf_dir):
 # bit-identical cosine doubles), so the fused integers are too.
 _X130_TOPN = 50
 
-_X130_ORACLE = """
+_X130_ORACLE = f"""
     WITH toks AS (
         SELECT doc_id,
                string_split_regex(lower(trim(coalesce(text, ''))), '\\s+') AS t
@@ -4253,14 +3917,7 @@ _X130_ORACLE = """
     ),
     q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
     ann AS (
-        SELECT e.vec_id AS doc_id,
-               list_sum(list_transform(range(1, len(e.embedding) + 1),
-                   i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(e.embedding,
-                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                * sqrt(list_sum(list_transform(q.qe,
-                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-                   AS cosine
+        SELECT e.vec_id AS doc_id, {_cos('e.embedding', 'q.qe')} AS cosine
         FROM embeddings e, q
     ),
     ann_ranked AS (
@@ -4331,20 +3988,15 @@ def x130_rrf_hybrid_retrieval(spark, sf_dir):
 # x131: Matryoshka two-stage ANN. The query is vec_id 0's own embedding
 # (the x46 convention), collected driver-side (1 bounded row) so the
 # operator's literal folds see the exact stored doubles the oracle's
-# column references see. Prefix (16-dim) folds are SHORT, so the oracle
-# spells them as explicit left-assoc chains (list_sum diverges a ulp
-# below ~64 elements — the _pq_dot_sql discipline).
+# column references see. The 16-dim prefix folds are short: ``_fold``
+# chains.
 def _x131_oracle(prefix_dim: int, shortlist: int, k: int) -> str:
-    pdot = "CAST(0.0 AS DOUBLE)"
-    pn2 = "CAST(0.0 AS DOUBLE)"
-    qpn2 = "CAST(0.0 AS DOUBLE)"
-    for i in range(1, prefix_dim + 1):
-        pdot = (f"({pdot} + CAST(e.embedding[{i}] AS DOUBLE)"
-                f" * CAST(q.qe[{i}] AS DOUBLE))")
-        pn2 = (f"({pn2} + CAST(e.embedding[{i}] AS DOUBLE)"
-               f" * CAST(e.embedding[{i}] AS DOUBLE))")
-        qpn2 = (f"({qpn2} + CAST(q.qe[{i}] AS DOUBLE)"
-                f" * CAST(q.qe[{i}] AS DOUBLE))")
+    def prefix(v: str) -> list[str]:
+        return [f"CAST({v}[{i}] AS DOUBLE)" for i in range(1, prefix_dim + 1)]
+
+    pdot = _chain_dot("e.embedding", prefix("q.qe"))
+    pn2 = _chain_dot("e.embedding", prefix("e.embedding"))
+    qpn2 = _chain_dot("q.qe", prefix("q.qe"))
     return f"""
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
     pre AS (
@@ -4359,15 +4011,7 @@ def _x131_oracle(prefix_dim: int, shortlist: int, k: int) -> str:
         ORDER BY pdot / (pn * qpn) DESC, vec_id ASC
         LIMIT {shortlist}
     )
-    SELECT vec_id,
-           list_sum(list_transform(range(1, len(s.embedding) + 1),
-               i -> CAST(s.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(s.embedding,
-                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(q.qe,
-                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-               AS cosine,
-           prefix_cos
+    SELECT vec_id, {_cos('s.embedding', 'q.qe')} AS cosine, prefix_cos
     FROM short s, q
     ORDER BY cosine DESC, vec_id ASC
     LIMIT {k}
@@ -4384,10 +4028,9 @@ def _x131_oracle(prefix_dim: int, shortlist: int, k: int) -> str:
     "shortlist by exact full-dim cosine. Scan-side prefix arithmetic is "
     "a quarter of the flops (and of the BYTES when the prefix persists "
     "as its own column), the shortlist bounds stage-2 cost, and both "
-    "stages are TakeOrdered top-k — no shuffle, no window. Short "
-    "(16-elem) folds are explicit left-assoc chains in the oracle "
-    "(list_sum diverges a ulp below 64 elems); zero-prefix-norm rows "
-    "are guarded out (NaN would sort first under DESC).",
+    "stages are TakeOrdered top-k — no shuffle, no window. "
+    "Zero-prefix-norm rows are guarded out (NaN would sort first under "
+    "DESC).",
     tags=("LLM", "similarity", "ann"),
 )
 def x131_matryoshka_topk(spark, sf_dir):

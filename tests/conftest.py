@@ -48,7 +48,6 @@ SLOW_TESTS = {
     "test_streaming.py::test_restart_same_checkpoint_exactly_once",
     "test_parity.py::test_query_matches_oracle[x124_curate_boilerplate]",
     "test_operators.py::test_ann_ivf_recall_gate",
-    "test_parity.py::test_query_matches_oracle[x117_curate_gopher]",
     "test_parity.py::test_in_window_schema_is_driver_canonicalizable[q56_dedup_canonical_embeddings]",
     "test_streaming.py::test_streaming_corpus_dedup_redelivery_safe",
     "test_plans.py::test_ecom_models_scale_clean",

@@ -3032,6 +3032,13 @@ def test_sql_twin_string_paths_quote_reserved_identifiers(spark):
         v, [1.0, 0.0, 0.0, 0.0], k=2, prefix_dim=2, shortlist=3, vec_col="my vec"
     ).collect()
     assert [r.vec_id for r in top] == [2, 1]
+    quant = sim.quantize_int8(v, vec_col="my vec").collect()
+    assert sorted((r.vec_id, r.scale, r.q) for r in quant) == [
+        (1, 4.0, [95, 127, 0, 0]), (2, 1.0, [127, 0, 0, 0]), (3, 1.0, [0, 127, 127, 0]),
+    ]
+    qe = spark.createDataFrame([([1.0, 0.0, 0.0, 0.0],)], "qe array<double>")
+    qtop = sim.ann_topk_quantized(v, qe, k=2, vec_col="my vec").collect()
+    assert [(r.vec_id, r.dot_q) for r in qtop] == [(2, 16129), (1, 12065)]
     q = spark.createDataFrame([(10, [1.0, 0.0, 0.0, 0.0])], "`q id` long, `q vec` array<double>")
     knn = sim.knn_join(
         v, q, cents, k=2, nprobe=2, vec_col="my vec",

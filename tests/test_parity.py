@@ -49,3 +49,29 @@ def test_query_matches_oracle(spark, sf_dir, name):
         return
     result = compare_to_oracle(name, df, spec.oracle, sf_dir)
     assert result.ok, result.detail
+
+
+def test_q26_oracle_passes_every_row_on_empty_sink(spark, sf_dir, tmp_path):
+    """An empty sink (no event before q26's cutoff) is a first run: the
+    operator passes every source row (``incremental_filter``'s NULL
+    high-water rule), and the oracle must too."""
+    import datetime
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from ecom_snowflake_duckdb_migration_spark.queries import TABLES
+
+    for t in TABLES:
+        if t != "events":
+            os.symlink(os.path.join(sf_dir, f"{t}.parquet"), tmp_path / f"{t}.parquet")
+    ev = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    shift = pa.scalar(datetime.timedelta(days=3653))
+    ev = ev.set_column(ev.schema.get_field_index("ts"), "ts", pc.add(ev["ts"], shift))
+    pq.write_table(ev, tmp_path / "events.parquet")
+    shifted = str(tmp_path)
+    spec = QUERIES["q26_incremental_append"]
+    result = compare_to_oracle(spec.name, spec.fn(spark, shifted), spec.oracle, shifted)
+    assert result.ok, result.detail

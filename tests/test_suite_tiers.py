@@ -1,7 +1,8 @@
 """Spark-free guards: every ``SLOW_TESTS`` entry in conftest.py must name a
 test function defined in its file (a stale or misspelled entry otherwise
-skips nothing and goes unnoticed when a test is deleted or renamed), and
-host sizing stays in ``session.py``."""
+skips nothing and goes unnoticed when a test is deleted or renamed),
+host sizing stays in ``session.py``, and each shared oracle SQL fragment
+is spelled once."""
 
 from __future__ import annotations
 
@@ -73,3 +74,36 @@ def test_host_sizing_lives_in_session_py():
                 ):
                     offenders.append(f"{os.path.relpath(path, ROOT)}:{lineno}")
     assert not offenders, f"host sizing outside session.py: {offenders}"
+
+
+# SQL fragments of the DuckDB oracles (and of the Spark int8 quantizer)
+# that several entries need: each is spelled once, inside its builder in
+# queries/catalog_llm.py (operators/similarity.py for the Spark one), so a
+# fold rule cannot differ between two copies.
+SHARED_FRAGMENTS = {
+    "64-element dot": r"list_sum\(list_transform\(range\(1, len\(",
+    "vector norm": r"x -> CAST\(x AS DOUBLE\) \* CAST\(x AS DOUBLE\)",
+    "left-assoc chain": r"CAST\(0\.0 AS DOUBLE\)",
+    "first-index argmax": r"= \{?best\}? THEN",
+    "md5 MinHash component": r"min\(md5\('",
+    "char 3-shingle set": r"list_distinct\(\[substr\(text, i, 3\)",
+    "shingle overlap": r"FROM sh a JOIN sh b ON a\.shingle = b\.shingle",
+    "int8 quantization (DuckDB)": r"\* 127\.0 /",
+    "int8 quantization (Spark)": r"\* 127\.0D /",
+    "md5 split ladder": r"WHEN substr\(md5\('\{seed\}",
+}
+
+
+def test_shared_oracle_fragments_live_in_one_builder():
+    package = os.path.join(ROOT, "ecom_snowflake_duckdb_migration_spark")
+    sources = []
+    for dirpath, _, names in os.walk(package):
+        for n in names:
+            if n.endswith(".py"):
+                with open(os.path.join(dirpath, n), encoding="utf-8") as f:
+                    sources.append(f.read())
+    counts = {
+        name: sum(len(re.findall(pat, src)) for src in sources)
+        for name, pat in SHARED_FRAGMENTS.items()
+    }
+    assert all(n == 1 for n in counts.values()), counts
