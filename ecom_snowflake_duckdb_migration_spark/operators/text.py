@@ -12,6 +12,16 @@ Design rules for 100 TB scale:
   rounded double division is not.
 - Near-dup joins go through bounded candidate generation (shingle join with
   distinct shingles, MinHash-LSH bands) — never an unbounded cross join.
+
+One form per text expression: the operators take column NAMES and pass
+each through ``quote_ident`` where it enters SQL text. Every fragment that
+more than one operator needs is SQL text built once by a ``_*_sql``
+builder, which takes SQL text and quotes nothing: the word split
+(``_words_sql``, with the lowercase, NULL-as-'' and Gopher/C4
+full-whitespace-trim variants), word n-grams and tiles
+(``_word_ngrams_sql``, ``_word_tiles_sql``), character k-grams
+(``_char_kgrams_sql``) and the split bound once per row (``_let_sql``).
+The 60-bit md5 hash is ``sketches.h60``.
 """
 
 from __future__ import annotations
@@ -21,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions.core import quote_ident
+from .sketches import h60
 
 SCALE = 1_000_000  # fixed-point scale for engine-stable ratios
 
@@ -35,29 +46,97 @@ LANG_STOPWORDS = {
 }
 
 
-def normalized_text(c: Column | str) -> Column:
+# ---------------------------------------------------------------------------
+# SQL builders: one per text fragment that more than one operator needs.
+# ---------------------------------------------------------------------------
+
+
+def _words_sql(
+    t: str, lower: bool = False, null_empty: bool = False, ws_trim: bool = False
+) -> str:
+    """The whitespace word split of ``t``: trim spaces, split on ``\\s+``,
+    so an empty text is one empty word. ``lower`` lowercases the trimmed
+    text; ``null_empty`` reads NULL as ''; ``ws_trim`` is the Gopher/C4
+    form — a full-whitespace trim (``trim`` strips spaces only, so a
+    trailing newline would fabricate an empty word), and an empty or
+    all-whitespace text is zero words."""
+    if null_empty:
+        t = f"coalesce({t}, '')"
+    if ws_trim:
+        t = f"regexp_replace(regexp_replace({t}, '^\\\\s+', ''), '\\\\s+$', '')"
+    else:
+        t = f"trim({t})"
+    if lower:
+        t = f"lower({t})"
+    words = f"split({t}, '\\\\s+')"
+    if ws_trim:
+        return f"CASE WHEN {t} = '' THEN CAST(array() AS ARRAY<STRING>) ELSE {words} END"
+    return words
+
+
+def _let_sql(value: str, body: str) -> str:
+    """``body`` with the lambda variable ``ws`` bound to ``value``, which is
+    evaluated once per row. A split that a lambda references (as in
+    ``slice(split(...), i, n)``) is otherwise re-evaluated per reference
+    after projection collapse: measured at 5x the tokenize cost on the
+    hashed features."""
+    return f"get(transform(array({value}), ws -> {body}), 0)"
+
+
+def _word_ngrams_sql(ws: str, n: int) -> str:
+    """Overlapping word ``n``-grams of the word array ``ws`` (a column or a
+    bound ``ws``), space-joined, with multiplicity. Fewer than ``n`` words
+    give none: the size gate guards Spark's ``sequence(1, 0)``, which steps
+    DESCENDING to ``[1, 0]``."""
+    return (
+        f"CASE WHEN size({ws}) >= {n} THEN transform(sequence(1, size({ws}) - {n - 1}),"
+        f" i -> concat_ws(' ', slice({ws}, i, {n}))) ELSE array() END"
+    )
+
+
+def _word_tiles_sql(ws: str, n: int) -> str:
+    """Consecutive ``n``-word tiles of the word array ``ws``, space-joined;
+    the last tile may be partial."""
+    return (
+        f"transform(sequence(0, (size({ws}) - 1) div {n}),"
+        f" i -> array_join(slice({ws}, i * {n} + 1, {n}), ' '))"
+    )
+
+
+def _char_kgrams_sql(t: str, k: int, distinct: bool = False) -> str:
+    """Character ``k``-grams of ``t`` in position order (``distinct``: each
+    once, the shingle set). Texts shorter than ``k`` give none — an explicit
+    length gate, because ``sequence(1, 0)`` in Spark steps DESCENDING to
+    ``[1, 0]`` (DuckDB's ``range`` is empty there): ungated, every
+    sub-k-length document emitted a phantom ``''`` shingle, making any two
+    short docs Jaccard-1 duplicates and silently diverging from the oracle.
+    Found by the hypothesis ground-truth pin, not the corpus oracles — the
+    test corpus carries no short documents."""
+    grams = f"transform(sequence(1, length({t}) - {k - 1}), i -> substring({t}, i, {k}))"
+    if distinct:
+        grams = f"array_distinct({grams})"
+    return f"CASE WHEN length({t}) >= {k} THEN {grams} ELSE array() END"
+
+
+def _qualified(alias: str, name: str) -> Column:
+    """Column ``name`` of the self-join side ``alias``."""
+    return F.col(f"{alias}.{quote_ident(name)}")
+
+
+def normalized_text(c: str) -> Column:
     """Lowercase, collapse runs of whitespace, trim — canonical form used by
     fingerprinting and exact dedup."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+    return F.trim(F.regexp_replace(F.lower(F.col(c)), r"\s+", " "))
 
 
-def fingerprint(c: Column | str) -> Column:
+def fingerprint(c: str) -> Column:
     """Deterministic 128-bit content fingerprint of the normalized text."""
     return F.md5(normalized_text(c))
 
 
-def token_count(c: Column | str) -> Column:
+def token_count(c: str) -> Column:
     """Whitespace token count of the trimmed text."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.size(F.split(F.trim(col), r"\s+"))
-
-
-def bpe_like_tokens(c: Column | str) -> Column:
-    """BPE-ish pre-tokenization: alphabetic runs, digit runs, single
-    non-alnum marks (the classic GPT-2-style pre-split, simplified)."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.regexp_extract_all(col, F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), F.lit(0))
+    return F.size(F.expr(_words_sql(quote_ident(c))))
 
 
 def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -66,9 +145,10 @@ def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     Columns added: n_chars_calc, n_tokens, alpha_ratio_e6, punct_count,
     mean_token_len_e6, stopword_count_en, quality_ok.
     """
+    q = quote_ident(text_col)
     t = F.col(text_col)
     n_chars = F.length(t)
-    n_tokens = token_count(t)
+    n_tokens = token_count(text_col)
     alpha_chars = F.length(F.regexp_replace(t, r"[^a-zA-Z]", ""))
     punct_count = F.length(F.regexp_replace(t, r"[a-zA-Z0-9\s]", ""))
     stop_en = F.size(F.regexp_extract_all(F.lower(t), F.lit(LANG_STOPWORDS["en"]), F.lit(0)))
@@ -78,17 +158,14 @@ def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn(
             "alpha_ratio_e6",
             F.expr(
-                f"CAST(length(regexp_replace({text_col}, '[^a-zA-Z]', '')) AS BIGINT)"
-                f" * {SCALE} div length({text_col})"
+                f"CAST(length(regexp_replace({q}, '[^a-zA-Z]', '')) AS BIGINT)"
+                f" * {SCALE} div length({q})"
             ),
         )
         .withColumn("punct_count", punct_count)
         .withColumn(
             "mean_token_len_e6",
-            F.expr(
-                f"CAST(length({text_col}) AS BIGINT) * {SCALE} div "
-                f"size(split(trim({text_col}), '\\\\s+'))"
-            ),
+            F.expr(f"CAST(length({q}) AS BIGINT) * {SCALE} div size({_words_sql(q)})"),
         )
         .withColumn("stopword_count_en", stop_en)
         .withColumn(
@@ -160,26 +237,18 @@ def gopher_repetition_stats(
     not trim() — trim strips spaces only, so a trailing newline would
     fabricate an empty token).
     """
-    tr = _ws_trim(F.coalesce(F.col(text_col), F.lit("")))
     base = df.select(
         F.col(id_col),
         F.length(F.coalesce(F.col(text_col), F.lit(""))).alias("_tlen"),
-        F.when(tr == "", F.array().cast("array<string>"))
-        .otherwise(F.split(tr, r"\s+"))
-        .alias("_ws"),
+        F.expr(_words_sql(quote_ident(text_col), null_empty=True, ws_trim=True)).alias("_ws"),
     )
     grams = None
     for n in (2, 5):
-        g = base.filter(F.size("_ws") >= n).select(
+        g = base.select(
             id_col,
             "_tlen",
             F.lit(n).alias("_n"),
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, size(_ws) - {n - 1}),"
-                    f" i -> concat_ws(' ', slice(_ws, i, {n})))"
-                )
-            ).alias("g"),
+            F.explode(F.expr(_word_ngrams_sql("_ws", n))).alias("g"),
         )
         grams = g if grams is None else grams.unionByName(g)
     counted = grams.groupBy(id_col, "_n", "g").agg(
@@ -228,12 +297,6 @@ def gopher_repetition_stats(
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def _ws_trim(c: Column) -> Column:
-    """Strip leading/trailing WHITESPACE (``trim`` strips spaces only —
-    a trailing newline would otherwise fabricate an empty word token)."""
-    return F.regexp_replace(F.regexp_replace(c, r"^\s+", ""), r"\s+$", "")
-
-
 def gopher_quality_stats(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -270,11 +333,7 @@ def gopher_quality_stats(
     reference parity test and the catalog oracle).
     """
     t = f"coalesce({quote_ident(text_col)}, '')"
-    tr = f"regexp_replace(regexp_replace({t}, '^\\\\s+', ''), '\\\\s+$', '')"
-    words = (
-        f"CASE WHEN {tr} = '' THEN CAST(array() AS ARRAY<STRING>)"
-        f" ELSE split({tr}, '\\\\s+') END"
-    )
+    words = _words_sql(t, ws_trim=True)
     lines = f"split({t}, '\\n')"  # '' -> [''], matching DuckDB string_split
     n_words = f"CAST(size({words}) AS BIGINT)"
     n_lines = f"CAST(size({lines}) AS BIGINT)"
@@ -347,24 +406,13 @@ def c4_line_filters(
     counts are plain integers, so the row is bit-identical cross-engine.
     """
     t = F.coalesce(F.col(text_col), F.lit(""))
-    lines = F.split(t, "\n")
-
-    def line_ok(ln: Column) -> Column:
-        r = F.rtrim(ln)
-        terminal = (
-            r.endswith(".") | r.endswith("!") | r.endswith("?") | r.endswith('"')
-        )
-        ltr = _ws_trim(ln)
-        n_words = F.when(ltr == "", F.lit(0)).otherwise(
-            F.size(F.split(ltr, r"\s+"))
-        )
-        return (
-            terminal
-            & (n_words >= 5)
-            & ~F.contains(F.lower(ln), F.lit("javascript"))
-        )
-
-    kept = F.filter(lines, line_ok)
+    lines = f"split(coalesce({quote_ident(text_col)}, ''), '\\n')"
+    terminal = " OR ".join(f"endswith(rtrim(ln), '{c}')" for c in '.!?"')
+    kept = F.expr(
+        f"filter({lines}, ln -> ({terminal})"
+        f" AND size({_words_sql('ln', ws_trim=True)}) >= 5"
+        " AND NOT contains(lower(ln), 'javascript'))"
+    )
     kept_text = F.array_join(kept, "\n")
 
     def count_char(src: Column, ch: str) -> Column:
@@ -372,7 +420,7 @@ def c4_line_filters(
 
     out = df.select(
         F.col(id_col),
-        F.size(lines).cast("long").alias("n_lines"),
+        F.size(F.expr(lines)).cast("long").alias("n_lines"),
         F.size(kept).cast("long").alias("n_kept_lines"),
         F.length(kept_text).cast("long").alias("kept_chars"),
         (
@@ -414,25 +462,10 @@ def exact_dedup_groups(
 
 
 def _shingle_array(text_col: str, k: int) -> Column:
-    """Column expression: the document's DISTINCT character k-shingles as an
-    array — the scan-side building block shared by the exploded
-    (``char_shingles``) and array-at-rest (``char_shingle_sets``,
-    ``minhash_signatures``) forms.
-
-    Texts shorter than ``k`` contribute NO shingles — guarded by an explicit
-    length gate, because ``sequence(1, 0)`` in Spark steps DESCENDING to
-    ``[1, 0]`` (DuckDB's ``range`` is empty there): ungated, every
-    sub-k-length document emitted a phantom ``''`` shingle, making any two
-    short docs Jaccard-1 duplicates and silently diverging from the oracle.
-    Found by the hypothesis ground-truth pin, not the corpus oracles — the
-    test corpus carries no short documents.
-    """
-    return F.expr(
-        f"CASE WHEN length({text_col}) >= {k} THEN"
-        f" array_distinct(transform(sequence(1, length({text_col}) - {k - 1}),"
-        f" i -> substring({text_col}, i, {k})))"
-        f" ELSE array() END"
-    )
+    """The document's DISTINCT character k-shingles as an array — the
+    scan-side building block shared by the exploded (``char_shingles``) and
+    array-at-rest (``char_shingle_sets``, ``minhash_signatures``) forms."""
+    return F.expr(_char_kgrams_sql(quote_ident(text_col), k, distinct=True))
 
 
 def char_shingles(
@@ -517,15 +550,19 @@ def ngram_jaccard_pairs(
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("d1"), F.col(f"b.{id_col}").alias("d2"))
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (_qualified("a", id_col) < _qualified("b", id_col)),
+        )
+        .groupBy(_qualified("a", id_col).alias("d1"), _qualified("b", id_col).alias("d2"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     s1 = sizes.alias("s1")
     s2 = sizes.alias("s2")
     return (
-        inter.join(s1, F.col("d1") == F.col(f"s1.{id_col}"))
-        .join(s2, F.col("d2") == F.col(f"s2.{id_col}"))
+        inter.join(s1, F.col("d1") == _qualified("s1", id_col))
+        .join(s2, F.col("d2") == _qualified("s2", id_col))
         .withColumn(
             "jaccard_e6",
             F.expr(f"n_inter * {SCALE} div (s1.sz + s2.sz - n_inter)"),
@@ -874,9 +911,9 @@ def band_candidates(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (_qualified("a", id_col) < _qualified("b", id_col)),
         )
-        .select(F.col(f"a.{id_col}").alias("d1"), F.col(f"b.{id_col}").alias("d2"))
+        .select(_qualified("a", id_col).alias("d1"), _qualified("b", id_col).alias("d2"))
         .distinct()
     )
 
@@ -983,22 +1020,15 @@ def simhash64(
     conditional-sum aggregate per bit over the exploded tokens — one shuffle
     on doc id, all JVM-side.
 
-    ``hash_fn="md5"`` derives a 60-bit token hash from the md5 hex prefix
-    (``conv(substr(md5(tok),1,15),16,10)``) — bit-identical in DuckDB via
-    ``CAST('0x' || substr(md5(tok),1,15) AS BIGINT)`` — so the oracled
-    catalog entry (q49) is cross-engine checkable.
+    ``hash_fn="md5"`` hashes each token with the 60-bit ``sketches.h60``
+    (bit-identical to DuckDB's ``o_h60``), so the oracled catalog entry
+    (q49) is cross-engine checkable.
     """
     n_bits = simhash_bits(hash_fn)
     tokens = df.select(
         F.col(id_col),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
-    )
-    if hash_fn == "md5":
-        tokens = tokens.withColumn(
-            "h", F.expr("CAST(conv(substr(md5(tok), 1, 15), 16, 10) AS BIGINT)")
-        )
-    else:
-        tokens = tokens.withColumn("h", F.xxhash64("tok"))
+        F.explode(F.expr(_words_sql(quote_ident(text_col)))).alias("tok"),
+    ).withColumn("h", h60(F.col("tok")) if hash_fn == "md5" else F.xxhash64("tok"))
     # per-bit sums and the fingerprint fold as parsed SQL (round-10 py4j
     # economics — the Column-API loops measured ~1 s of driver Python)
     bit_sums = [
@@ -1015,7 +1045,7 @@ def simhash64(
             f" ELSE CAST(0 AS BIGINT) END"
         )
         fp = term if fp is None else f"({fp} | {term})"
-    return agg.selectExpr(id_col, f"{fp} AS simhash")
+    return agg.selectExpr(quote_ident(id_col), f"{fp} AS simhash")
 
 
 def simhash_near_pairs(
@@ -1065,7 +1095,9 @@ def hamming_near_pairs(
             F.array(*[
                 F.struct(
                     F.lit(i).alias("blk"),
-                    F.expr(f"({hash_col} >> {i * width}) & {(1 << width) - 1}").alias("chunk"),
+                    F.expr(
+                        f"({quote_ident(hash_col)} >> {i * width}) & {(1 << width) - 1}"
+                    ).alias("chunk"),
                 )
                 for i in range(blocks)
             ])
@@ -1078,11 +1110,11 @@ def hamming_near_pairs(
             b,
             (F.col("a.blk") == F.col("b.blk"))
             & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (_qualified("a", id_col) < _qualified("b", id_col)),
         )
         .select(
-            F.col(f"a.{id_col}").alias("d1"),
-            F.col(f"b.{id_col}").alias("d2"),
+            _qualified("a", id_col).alias("d1"),
+            _qualified("b", id_col).alias("d2"),
             F.col("a._fp").alias("sh1"),
             F.col("b._fp").alias("sh2"),
         )
@@ -1120,9 +1152,10 @@ def chunk_documents(
     if overlap >= chunk_size:
         raise ValueError("overlap must be smaller than chunk_size")
     stride = chunk_size - overlap
+    q = quote_ident(text_col)
     n_chunks = F.expr(
-        f"CASE WHEN length({text_col}) <= {chunk_size} THEN 1 "
-        f"ELSE CAST(ceil((length({text_col}) - {chunk_size}) / {stride}.0) AS INT) + 1 END"
+        f"CASE WHEN length({q}) <= {chunk_size} THEN 1 "
+        f"ELSE CAST(ceil((length({q}) - {chunk_size}) / {stride}.0) AS INT) + 1 END"
     )
     return (
         df.select(
@@ -1134,7 +1167,7 @@ def chunk_documents(
             id_col,
             "chunk_id",
             (F.col("chunk_id") * stride + 1).alias("chunk_start"),
-            F.expr(f"substring({text_col}, chunk_id * {stride} + 1, {chunk_size})").alias(
+            F.expr(f"substring({q}, chunk_id * {stride} + 1, {chunk_size})").alias(
                 "chunk_text"
             ),
         )
@@ -1207,19 +1240,11 @@ def repetition_metrics(
     — embarrassingly parallel, no shuffle, codegen-eligible; memory is
     bounded by document length, not corpus size.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    n3 = F.greatest(F.size(toks) - 2, F.lit(0))
-    tri = F.expr(
-        f"transform(sequence(1, greatest(size(split(lower(trim({text_col})), '\\\\s+')) - 2, 1)), "
-        f"i -> concat_ws(' ', element_at(split(lower(trim({text_col})), '\\\\s+'), i), "
-        f"element_at(split(lower(trim({text_col})), '\\\\s+'), i + 1), "
-        f"element_at(split(lower(trim({text_col})), '\\\\s+'), i + 2)))"
-    )
-    n_distinct = F.when(n3 > 0, F.size(F.array_distinct(tri))).otherwise(0)
-    return df.select(
-        id_col,
-        n3.cast("long").alias("n_trigrams"),
-        n_distinct.cast("long").alias("n_distinct_trigrams"),
+    tri = _let_sql(_words_sql(quote_ident(text_col), lower=True), _word_ngrams_sql("ws", 3))
+    return df.selectExpr(quote_ident(id_col), f"{tri} AS _tri").selectExpr(
+        quote_ident(id_col),
+        "CAST(size(_tri) AS BIGINT) AS n_trigrams",
+        "CAST(size(array_distinct(_tri)) AS BIGINT) AS n_distinct_trigrams",
     ).withColumn(
         "dup_trigram_ratio_e6",
         # integer div: bit-stable across engines (e6 fixed-point convention)
@@ -1282,7 +1307,7 @@ def tfidf_top_terms(
         F.col(id_col),
         F.explode(
             F.expr(
-                f"filter(split(lower(trim({text_col})), '\\\\s+'),"
+                f"filter({_words_sql(quote_ident(text_col), lower=True)},"
                 f" t -> length(regexp_replace(t, '[^a-z]', '')) >= {min_term_len})"
             )
         ).alias("raw"),
@@ -1306,18 +1331,10 @@ def tfidf_top_terms(
     )
 
 
-def word_ngrams(c: Column | str, n: int) -> Column:
+def word_ngrams(c: str, n: int) -> Column:
     """Distinct word n-grams of lowercased whitespace tokens (array)."""
-    col = F.col(c) if isinstance(c, str) else c
-    toks = f"split(lower(trim({c if isinstance(c, str) else '<expr>'})), '\\\\s+')"
-    if not isinstance(c, str):
-        raise ValueError("word_ngrams requires a column name")
-    return F.expr(
-        f"CASE WHEN size({toks}) >= {n} THEN "
-        f"array_distinct(transform(sequence(1, size({toks}) - {n - 1}), "
-        f"i -> concat_ws(' ', slice({toks}, i, {n})))) "
-        f"ELSE array() END"
-    )
+    words = _words_sql(quote_ident(c), lower=True)
+    return F.expr(f"array_distinct({_let_sql(words, _word_ngrams_sql('ws', n))})")
 
 
 def decontaminate(
@@ -1436,17 +1453,12 @@ def span_dedup(
     # coalesce NULL text to '' so posexplode still emits the one empty
     # span — a NULL-text doc must keep its output row (the "for every
     # input document" contract; posexplode(NULL) would drop it entirely)
-    words = f"split(trim(coalesce({text_col}, '')), '\\\\s+')"
+    words = _words_sql(quote_ident(text_col), null_empty=True)
     spans = df.select(
         F.col(id_col),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, (size({words}) - 1)"
-                f" div {span_words}),"
-                f" i -> array_join(slice({words},"
-                f" i * {span_words} + 1, {span_words}), ' '))"
-            )
-        ).alias("pos", "span"),
+        F.posexplode(F.expr(_let_sql(words, _word_tiles_sql("ws", span_words)))).alias(
+            "pos", "span"
+        ),
     )
     w = Window.partitionBy("span").orderBy(F.col(id_col), F.col("pos"))
     ranked = spans.withColumn("rn", F.row_number().over(w))
@@ -1498,17 +1510,12 @@ def segment_frequency_filter(
     is a tiny minority of distinct segments (the entry keeps text-keyed
     counting for oracle bit-parity at test scale).
     """
-    words = f"split(trim(coalesce({text_col}, '')), '\\\\s+')"
+    words = _words_sql(quote_ident(text_col), null_empty=True)
     segs = df.select(
         F.col(id_col),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, (size({words}) - 1)"
-                f" div {seg_words}),"
-                f" i -> array_join(slice({words},"
-                f" i * {seg_words} + 1, {seg_words}), ' '))"
-            )
-        ).alias("pos", "seg"),
+        F.posexplode(F.expr(_let_sql(words, _word_tiles_sql("ws", seg_words)))).alias(
+            "pos", "seg"
+        ),
     )
     over = (
         segs.groupBy("seg")
@@ -1634,20 +1641,19 @@ def cdc_dedup(
     from pyspark.sql import Window
 
     w = window
-    words = f"split(trim(coalesce({text_col}, '')), '\\\\s+')"
+    words = _words_sql(quote_ident(text_col), null_empty=True)
     prefixes = ", ".join(f"'{p}'" for p in boundary_hex_prefixes)
-    # let-bind the split through a one-element transform (the
-    # _hashed_presence_features device) so it evaluates once per row,
-    # then build (pos, word, b) structs: the Generate's INPUT row holds
-    # the word array once; its output rows are O(1) wide.
-    struct_arr = F.expr(
-        f"get(transform(array({words}), ws ->"
-        f" transform(sequence(1, size(ws)), i -> struct("
+    # bind the split once per row, then build (pos, word, b) structs: the
+    # Generate's INPUT row holds the word array once; its output rows are
+    # O(1) wide.
+    struct_arr = F.expr(_let_sql(
+        words,
+        f"transform(sequence(1, size(ws)), i -> struct("
         f" i AS pos, element_at(ws, i) AS word,"
         f" CASE WHEN i >= {w} AND substr(md5(concat_ws(' ',"
         f" slice(ws, i - {w} + 1, {w}))), 1, 1) IN ({prefixes})"
-        f" THEN 1 ELSE 0 END AS b))), 0)"
-    )
+        f" THEN 1 ELSE 0 END AS b))",
+    ))
     pos_words = df.select(
         F.col(id_col), F.explode(struct_arr).alias("_s")
     ).select(
@@ -1722,9 +1728,8 @@ def exact_substring_dedup(
     sliding windows: boilerplate at ARBITRARY offsets is caught, the
     failure mode tiling misses.
 
-    Sub-``k``-word documents contribute no windows (explicit size gate —
-    ``sequence(0, n-k)`` steps DESCENDING when n < k and would emit
-    phantom windows; see char_shingles). NULL text is treated as empty
+    Sub-``k``-word documents contribute no windows (the size gate of
+    ``_word_ngrams_sql``). NULL text is treated as empty
     (coalesced before the split) so the every-input-document contract
     holds — otherwise posexplode(NULL) silently drops the row from the
     token side and the document vanishes from the output.
@@ -1733,18 +1738,10 @@ def exact_substring_dedup(
 
     words = df.select(
         F.col(id_col),
-        F.expr(f"split(trim(coalesce({text_col}, '')), '\\\\s+')").alias("t"),
+        F.expr(_words_sql(quote_ident(text_col), null_empty=True)).alias("t"),
     )
     grams = words.select(
-        F.col(id_col),
-        F.posexplode(
-            F.expr(
-                f"CASE WHEN size(t) >= {k} THEN"
-                f" transform(sequence(0, size(t) - {k}),"
-                f" i -> concat_ws(' ', slice(t, i + 1, {k})))"
-                f" ELSE array() END"
-            )
-        ).alias("pos", "gram"),
+        F.col(id_col), F.posexplode(F.expr(_word_ngrams_sql("t", k))).alias("pos", "gram")
     ).select(
         F.col(id_col),
         F.col("pos"),
@@ -1795,13 +1792,8 @@ def lm_trigram_model(ref: DataFrame, text_col: str = "text") -> DataFrame:
     100 TB train on a sample — trigram frequencies converge long before
     full data (same argument as the IVF codebook).
     """
-    grams = ref.filter(F.length(text_col) >= 3).select(
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, length({text_col}) - 2),"
-                f" i -> substring({text_col}, i, 3))"
-            )
-        ).alias("gram")
+    grams = ref.select(
+        F.explode(F.expr(_char_kgrams_sql(quote_ident(text_col), 3))).alias("gram")
     )
     return grams.groupBy("gram").agg(F.count(F.lit(1)).alias("n"))
 
@@ -1837,14 +1829,9 @@ def lm_score(
     # project to the two needed columns up front: the joins below introduce
     # n/cx/cn/v and must never collide with caller columns of those names
     df = df.select(id_col, text_col)
-    doc_grams = df.filter(F.length(text_col) >= 3).select(
+    doc_grams = df.select(
         F.col(id_col),
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, length({text_col}) - 2),"
-                f" i -> substring({text_col}, i, 3))"
-            )
-        ).alias("gram"),
+        F.explode(F.expr(_char_kgrams_sql(quote_ident(text_col), 3))).alias("gram"),
     )
     joined = (
         doc_grams.join(F.broadcast(model), "gram", "left")
@@ -2063,30 +2050,20 @@ def winnow_fingerprints(
     """
     from pyspark.sql import Window
 
-    gram = F.expr(f"substring({text_col}, pos, {k})")
-    if hash_fn == "md5":
-        h = F.conv(F.substring(F.md5(gram), 1, 15), 16, 10).cast("long")
-    else:
-        h = F.xxhash64(gram)
+    q = quote_ident(text_col)
+    h = h60(F.col("gram")) if hash_fn == "md5" else F.xxhash64("gram")
     grams = (
         # Docs shorter than one full window (k + w - 1 chars) select no
-        # fingerprints — filter them before the explode. This also guards
-        # Spark's sequence(1, 0), which yields the DESCENDING [1, 0]
-        # rather than an empty array and would emit phantom grams.
+        # fingerprints — filter them before the explode.
         df.filter(F.length(text_col) >= k + w - 1)
         .select(
             F.col(id_col),
-            F.explode(F.expr(f"sequence(1, length({text_col}) - {k - 1})")).alias("pos"),
-            F.col(text_col),
-        )
-        .select(
-            id_col,
-            "pos",
-            h.alias("h"),
             # gram count derives from the length already on the row — no
             # window COUNT pass over the exploded rows needed
-            F.expr(f"length({text_col}) - {k - 1}").alias("n"),
+            F.expr(f"length({q}) - {k - 1}").alias("n"),
+            F.posexplode(F.expr(_char_kgrams_sql(q, k))).alias("_p", "gram"),
         )
+        .select(id_col, (F.col("_p") + 1).alias("pos"), h.alias("h"), "n")
     )
     win = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1)
     sel = (
@@ -2120,10 +2097,10 @@ def winnow_overlap_pairs(
         a.join(
             b,
             (F.col("a.fp") == F.col("b.fp"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (_qualified("a", id_col) < _qualified("b", id_col)),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("d1"), F.col(f"b.{id_col}").alias("d2")
+            _qualified("a", id_col).alias("d1"), _qualified("b", id_col).alias("d2")
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
@@ -2157,9 +2134,7 @@ def vocab_coverage(
     # an output row — explode(NULL) would silently drop it.
     toks = df.select(
         F.col(id_col),
-        F.explode(
-            F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
-        ).alias("tok"),
+        F.explode(F.expr(_words_sql(quote_ident(text_col), null_empty=True))).alias("tok"),
     )
     vocab = (
         toks.groupBy("tok")
@@ -2200,39 +2175,18 @@ def bpe_pair_counts(
     stream: distinct words are orders of magnitude fewer than tokens, so
     the character explode fans out from the small relation and the pair
     aggregation ships character-pair partials only. Words shorter than 2
-    characters carry no pairs and are filtered before the explode —
-    which also guards the Spark ``sequence(1, 0) -> [1, 0]`` descending
-    trap (no ungated sequence ever sees length-1 input).
+    characters carry no pairs and are filtered before the explode.
 
     Scale: two map-side-combinable shuffles (word counts, then pair
     counts over |alphabet|^2-bounded keys); everything is codegen
     expressions.
     """
-    word = F.explode(
-        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
-    ).alias("word")
-    words = df.select(word)
-    if lowercase:
-        words = words.select(F.lower(F.col("word")).alias("word"))
-    wf = (
-        words.filter(F.length("word") >= 2)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
+    pairs = _bpe_word_freq(df, text_col, lowercase).select(
+        F.explode(F.expr(_char_kgrams_sql("word", 2))).alias("p"), "n"
     )
-    pairs = wf.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, length(word) - 1),"
-                " i -> struct(substring(word, i, 1) AS a,"
-                " substring(word, i + 1, 1) AS b))"
-            )
-        ).alias("p"),
-        "n",
-    )
-    return (
-        pairs.groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.sum("n").cast("long").alias("n_occurrences"))
-    )
+    return pairs.groupBy(
+        F.substring("p", 1, 1).alias("a"), F.substring("p", 2, 1).alias("b")
+    ).agg(F.sum("n").cast("long").alias("n_occurrences"))
 
 
 def decontaminate_fuzzy(
@@ -2284,7 +2238,7 @@ def decontaminate_fuzzy(
             & (F.col("c.bucket") == F.col("b.bucket")),
         )
         .select(
-            F.col(f"c.{id_col}").alias("cid"), F.col(f"b.{id_col}").alias("bid")
+            _qualified("c", id_col).alias("cid"), _qualified("b", id_col).alias("bid")
         )
         .distinct()
     )
@@ -2338,23 +2292,9 @@ def dsir_weights(
     doc-id groupBy — no feature-keyed shuffle at all (the bucket counts
     shuffle ≤ B rows after map-side combine).
     """
-    from .sketches import h60
-
-    def feats(df: DataFrame, *cols):
-        t = f"split(trim(coalesce({text_col}, '')), '\\\\s+')"
-        arr = (
-            f"concat({t}, CASE WHEN size({t}) >= 2 THEN"
-            f" transform(sequence(1, size({t}) - 1),"
-            f" i -> concat_ws(' ', slice({t}, i, 2)))"
-            f" ELSE array() END)"
-        )
-        return df.select(*cols, F.explode(F.expr(arr)).alias("g"))
-
     B = n_buckets
-    cb = feats(corpus, F.col(id_col)).select(
-        F.col(id_col), (h60(F.col("g")) % B).alias("b")
-    )
-    tb = feats(target).select((h60(F.col("g")) % B).alias("b"))
+    cb = _hashed_word_features(corpus, text_col, [id_col], B, distinct=False)
+    tb = _hashed_word_features(target, text_col, [], B, distinct=False)
     rc = cb.groupBy("b").agg(F.count(F.lit(1)).alias("rn"))
     tc = tb.groupBy("b").agg(F.count(F.lit(1)).alias("tn"))
     tr = rc.select(F.coalesce(F.sum("rn"), F.lit(0)).alias("tr"))
@@ -2495,7 +2435,7 @@ def bm25_scores(
     terms_sql = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
     toks = df.select(
         F.col(id_col),
-        F.expr(f"split(lower(trim(coalesce({text_col}, ''))), '\\\\s+')").alias("t"),
+        F.expr(_words_sql(quote_ident(text_col), lower=True, null_empty=True)).alias("t"),
     )
     dl = toks.select(id_col, F.size("t").alias("dl"))
     stats = dl.agg(
@@ -2578,7 +2518,7 @@ def rrf_fuse(
         # DuckDB (//), the catalog's fixed-point ratio convention
         c = df.select(
             F.col(id_col),
-            F.expr(f"1000000 div ({k0} + {rank_col})").cast("long").alias("_c"),
+            F.expr(f"1000000 div ({k0} + {quote_ident(rank_col)})").cast("long").alias("_c"),
         )
         contribs = c if contribs is None else contribs.unionByName(c)
     fused = contribs.groupBy(id_col).agg(
@@ -2596,10 +2536,9 @@ def _bpe_word_freq(df: DataFrame, text_col: str, lowercase: bool) -> DataFrame:
     tokenization (Java ``\\s``), optional lowercase, length >= 2 (length-1
     words carry no pairs). Its first pair statistics are exactly
     ``bpe_pair_counts`` (the DuckDB-oracled x93)."""
-    word = F.explode(
-        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
-    ).alias("word")
-    words = df.select(word)
+    words = df.select(
+        F.explode(F.expr(_words_sql(quote_ident(text_col), null_empty=True))).alias("word")
+    )
     if lowercase:
         words = words.select(F.lower(F.col("word")).alias("word"))
     return (
@@ -2818,28 +2757,17 @@ def bpe_apply(
     return df.select(id_col, text_col).mapInPandas(run, out_schema)
 
 
-def _hashed_presence_features(
+def _hashed_word_features(
     df: DataFrame, text_col: str, id_cols, n_buckets: int, distinct: bool = True
 ) -> DataFrame:
-    """Binary hashed bag-of-words features: distinct (id, bucket) pairs
-    over word unigrams + bigrams, hashed with the cross-engine h60 into
-    ``n_buckets`` (the dsir_weights feature space, presence-only).
-
-    The word array is let-bound through a one-element ``transform``
-    lambda so ``split`` evaluates ONCE per row — referencing the split
-    macro from every gram expression re-evaluates it per reference after
-    projection collapse (measured 5x the tokenize cost)."""
-    from .sketches import h60
-
+    """Hashed bag-of-words features: (id, bucket) pairs over word unigrams
+    + bigrams, hashed with the cross-engine h60 into ``n_buckets`` —
+    distinct (presence-only, the classifier) or with multiplicity
+    (``dsir_weights``)."""
     if isinstance(id_cols, str):
         id_cols = [id_cols]
-    arr = (
-        f"get(transform(array(split(trim(coalesce({text_col}, '')), '\\\\s+')),"
-        " t -> concat(t, CASE WHEN size(t) >= 2 THEN"
-        " transform(sequence(1, size(t) - 1),"
-        " i -> concat_ws(' ', slice(t, i, 2)))"
-        " ELSE array() END)), 0)"
-    )
+    words = _words_sql(quote_ident(text_col), null_empty=True)
+    arr = _let_sql(words, f"concat(ws, {_word_ngrams_sql('ws', 2)})")
     out = df.select(*id_cols, F.explode(F.expr(arr)).alias("g")).select(
         *id_cols, (h60(F.col("g")) % n_buckets).alias("b")
     )
@@ -2952,7 +2880,7 @@ def _classifier_doc_feats(
         )
     )
     return (
-        _hashed_presence_features(
+        _hashed_word_features(
             labeled, text_col, ["_y", "_id"], n_buckets, distinct=False
         )
         # collect_set = the distinct + list fold in ONE shuffle (set
@@ -3052,7 +2980,7 @@ def quality_classifier_score(
             [(b, weights_e6[b + 1]) for b in range(n_buckets)], "b INT, w_e6 LONG"
         )
     )
-    feats = _hashed_presence_features(df, text_col, id_col, n_buckets)
+    feats = _hashed_word_features(df, text_col, id_col, n_buckets)
     z = (
         feats.join(wdf, "b")
         .groupBy(id_col)
@@ -3083,7 +3011,7 @@ def quality_classifier_score(
     )
 
 
-def canonicalize_text(c: Column | str) -> Column:
+def canonicalize_text(c: str) -> Column:
     """Dedup canonical form (the RefinedWeb/C4 pre-hash normalization):
     lowercase, strip everything but [a-z0-9] and whitespace, collapse
     whitespace runs to one space, trim. Catches the trivial variants
@@ -3094,10 +3022,9 @@ def canonicalize_text(c: Column | str) -> Column:
     groups NULL-text docs under the same md5(NULL)=NULL-key semantics
     as the raw exact_dedup_groups.
     """
-    col = F.col(c) if isinstance(c, str) else c
     return F.trim(
         F.regexp_replace(
-            F.regexp_replace(F.lower(col), r"[^a-z0-9\s]", ""), r"\s+", " "
+            F.regexp_replace(F.lower(F.col(c)), r"[^a-z0-9\s]", ""), r"\s+", " "
         )
     )
 
@@ -3110,7 +3037,7 @@ def canonical_dedup_groups(
     variant; strictly coarser groups (raw-equal implies canonical-equal).
     """
     return df.groupBy(
-        F.md5(canonicalize_text(F.col(text_col))).alias("canonical_hash")
+        F.md5(canonicalize_text(text_col)).alias("canonical_hash")
     ).agg(
         F.min(id_col).alias("canonical_doc_id"),
         F.count(F.lit(1)).alias("n_copies"),

@@ -32,8 +32,10 @@ Parity conventions:
     ``_probe_cells_cte`` (literal-codebook cells and probes), ``_pq_code_ctes`` (PQ codes), ``_minhash_ctes``
     / ``_agree`` (md5 MinHash), ``_shingles_cte`` (char 3-shingle set),
     ``_shingle_overlap_ctes`` (exact-Jaccard inputs),
-    ``_INT8_CTES`` (int8 quantization) and ``_split_case`` (md5 split
-    ladder).
+    ``_INT8_CTES`` (int8 quantization), ``_split_case`` (md5 split
+    ladder) and ``_words`` (the word split, with the variants of the
+    Spark operators' ``_words_sql``). The 60-bit md5 hash is
+    ``sketches.o_h60``.
 - LSH/SimHash variants depend on xxhash64 (no DuckDB twin) -> registered
   without oracle; tests/test_operators.py pins them against the exact
   algorithms instead.
@@ -45,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity as sim
 from ..operators import text as tx
+from ..operators.sketches import o_h60
 from . import REGISTRY, load, register, run_sql
 
 _EN = tx.LANG_STOPWORDS["en"]
@@ -194,6 +197,23 @@ def _pq_code_ctes(
     )"""
 
 
+def _words(t: str, lower: bool = False, null_empty: bool = False, ws_trim: bool = False) -> str:
+    """The whitespace word split of ``t``, with the variants of
+    ``operators.text._words_sql``: trim spaces and split on ``\\s+`` (an
+    empty text is one empty word); ``lower``; NULL as '' (``null_empty``);
+    the Gopher/C4 full-whitespace trim, where an empty text is zero words
+    (``ws_trim``)."""
+    if null_empty:
+        t = f"coalesce({t}, '')"
+    t = f"regexp_replace(regexp_replace({t}, '^\\s+', ''), '\\s+$', '')" if ws_trim else f"trim({t})"
+    if lower:
+        t = f"lower({t})"
+    words = f"string_split_regex({t}, '\\s+')"
+    if ws_trim:
+        return f"CASE WHEN {t} = '' THEN []::VARCHAR[] ELSE {words} END"
+    return words
+
+
 def _shingles_cte(src: str, keys: str = "doc_id") -> str:
     """``sh`` CTE: one row per distinct char 3-shingle of each document."""
     return f"""sh AS (
@@ -330,15 +350,15 @@ def q40_dedup_exact_df(spark, sf_dir):
     oracle=f"""
     SELECT doc_id,
            length(text)                                            AS n_chars_calc,
-           len(string_split_regex(trim(text), '\\s+'))             AS n_tokens,
+           len({_words('text')})                                   AS n_tokens,
            CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS BIGINT)
                * 1000000 // length(text)                           AS alpha_ratio_e6,
            length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS punct_count,
            CAST(length(text) AS BIGINT) * 1000000
-               // len(string_split_regex(trim(text), '\\s+'))      AS mean_token_len_e6,
+               // len({_words('text')})                            AS mean_token_len_e6,
            len(regexp_extract_all(lower(text), '{_EN}'))           AS stopword_count_en,
            length(text) >= 20
-             AND len(string_split_regex(trim(text), '\\s+')) >= 5
+             AND len({_words('text')}) >= 5
              AND length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 2 > length(text)
                                                                    AS quality_ok
     FROM documents
@@ -409,8 +429,9 @@ def q42_language_id(spark, sf_dir):
     FROM documents GROUP BY source
     """,
     doc="BPE-ish pre-tokenization statistics per source: alphabetic runs, "
-    "digit runs, single marks (operators.text.bpe_like_tokens). DuckDB "
-    "sum(int) widens to HUGEINT, hence the BIGINT casts in the oracle.",
+    "digit runs and single marks, each counted with its own regexp_extract_all "
+    "pattern. DuckDB sum(int) widens to HUGEINT, hence the BIGINT casts in "
+    "the oracle.",
     tags=("LLM", "text-analysis"),
 )
 def q43_token_stats(spark, sf_dir):
@@ -629,11 +650,11 @@ def _simhash_oracle(max_hamming: int) -> str:
     )
     return f"""
     WITH tok AS (
-        SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
+        SELECT doc_id, unnest({_words('text')}) AS tok
         FROM documents
     ),
     h AS (
-        SELECT doc_id, CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) AS h FROM tok
+        SELECT doc_id, {o_h60('tok')} AS h FROM tok
     ),
     bits AS (
         SELECT doc_id,
@@ -843,7 +864,7 @@ def q52_dedup_canonical_docs(spark, sf_dir):
 
 @register(
     "q37_document_chunks",
-    oracle="""
+    oracle=f"""
     WITH fanout AS (
         SELECT doc_id, text,
                unnest(range(0,
@@ -857,7 +878,7 @@ def q52_dedup_canonical_docs(spark, sf_dir):
            CAST(i * 400 + 1 AS INT) AS chunk_start,
            substring(text, CAST(i * 400 + 1 AS INT), 500) AS chunk_text,
            length(substring(text, CAST(i * 400 + 1 AS INT), 500)) AS chunk_chars,
-           len(string_split_regex(trim(substring(text, CAST(i * 400 + 1 AS INT), 500)), '\\s+'))
+           len({_words('substring(text, CAST(i * 400 + 1 AS INT), 500)')})
                AS chunk_tokens
     FROM fanout
     """,
@@ -875,7 +896,7 @@ def q37_document_chunks(spark, sf_dir):
 
 @register(
     "q38_sequence_packing",
-    oracle="""
+    oracle=f"""
     WITH fanout AS (
         SELECT doc_id, text,
                unnest(range(0,
@@ -886,7 +907,7 @@ def q37_document_chunks(spark, sf_dir):
     ),
     chunks AS (
         SELECT doc_id, CAST(i AS INT) AS chunk_id,
-               len(string_split_regex(trim(substring(text, CAST(i * 400 + 1 AS INT), 500)), '\\s+'))
+               len({_words('substring(text, CAST(i * 400 + 1 AS INT), 500)')})
                    AS chunk_tokens
         FROM fanout
     ),
@@ -924,11 +945,11 @@ def q38_sequence_packing(spark, sf_dir):
 
 @register(
     "q39_repetition_quality",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               string_split_regex(lower(trim(text)), '\s+') AS t,
-               len(string_split_regex(lower(trim(text)), '\s+')) AS n
+               {_words('text', lower=True)} AS t,
+               len({_words('text', lower=True)}) AS n
         FROM documents
     ),
     tri AS (
@@ -1067,10 +1088,10 @@ def q56_dedup_canonical_embeddings(spark, sf_dir):
 
 @register(
     "q60_tfidf_top_terms",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               regexp_replace(unnest(string_split_regex(lower(trim(text)), '\s+')), '[^a-z]', '', 'g') AS term
+               regexp_replace(unnest({_words('text', lower=True)}), '[^a-z]', '', 'g') AS term
         FROM documents
     ),
     filtered AS (
@@ -1166,11 +1187,11 @@ def q62_ann_quantized_topk(spark, sf_dir):
 
 @register(
     "q63_decontamination",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id, source,
-               string_split_regex(lower(trim(text)), '\s+') AS t,
-               len(string_split_regex(lower(trim(text)), '\s+')) AS n
+               {_words('text', lower=True)} AS t,
+               len({_words('text', lower=True)}) AS n
         FROM documents
     ),
     grams AS (
@@ -1301,7 +1322,7 @@ def x76_domain_mix(spark, sf_dir):
     # window-min hash values — never WHICH position was selected — so the
     # oracle sidesteps the argmin-tie question entirely: min(h) OVER a
     # 10-wide position window, full windows only, then distinct + self-join.
-    oracle="""
+    oracle=f"""
     WITH g AS (
         SELECT doc_id,
                unnest(range(1, greatest(length(text) - 19, 0) + 1)) AS pos,
@@ -1310,7 +1331,7 @@ def x76_domain_mix(spark, sf_dir):
     ),
     h AS (
         SELECT g.doc_id, g.pos, g.n,
-               CAST(('0x' || substr(md5(substr(d.text, CAST(g.pos AS INT), 20)), 1, 15)) AS BIGINT) AS hv
+               {o_h60('substr(d.text, CAST(g.pos AS INT), 20)')} AS hv
         FROM g JOIN documents d ON d.doc_id = g.doc_id
     ),
     m AS (
@@ -1394,9 +1415,9 @@ def x78_semantic_dedup(spark, sf_dir):
     WITH corpus AS (SELECT * FROM documents WHERE source <> 'src0'),
     q AS (
         SELECT doc_id,
-               len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
+               len({_words('text')}) AS n_tokens,
                (length(text) >= 20
-                AND len(string_split_regex(trim(text), '\\s+')) >= 5
+                AND len({_words('text')}) >= 5
                 AND length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 2
                     > length(text)) AS quality_ok
         FROM corpus
@@ -1439,8 +1460,8 @@ def x78_semantic_dedup(spark, sf_dir):
         SELECT * FROM keep2 WHERE doc_id NOT IN (SELECT doc_id FROM neardup)
     ),
     toks AS (
-        SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t,
-               len(string_split_regex(lower(trim(text)), '\\s+')) AS n
+        SELECT doc_id, {_words('text', lower=True)} AS t,
+               len({_words('text', lower=True)}) AS n
         FROM keep3
     ),
     grams AS (
@@ -1452,8 +1473,8 @@ def x78_semantic_dedup(spark, sf_dir):
     bench AS (
         SELECT DISTINCT unnest(list_distinct(list_transform(range(1, n - 6),
                    i -> array_to_string(t[i:i+7], ' ')))) AS gram
-        FROM (SELECT string_split_regex(lower(trim(text)), '\\s+') AS t,
-                     len(string_split_regex(lower(trim(text)), '\\s+')) AS n
+        FROM (SELECT {_words('text', lower=True)} AS t,
+                     len({_words('text', lower=True)}) AS n
               FROM documents WHERE source = 'src0')
         WHERE n >= 8
     ),
@@ -1537,10 +1558,10 @@ def x80_lm_quality_score(spark, sf_dir):
     # positionally, so pos and span enumerate together; keep = global
     # row_number 1 by (doc_id, pos) per span text; ordered string_agg
     # reassembly mirrors Spark's array_sort(collect_list(struct)).
-    oracle="""
+    oracle=f"""
     WITH words AS (
-        SELECT doc_id, string_split_regex(trim(coalesce(text, '')), '\\s+') AS t,
-               len(string_split_regex(trim(coalesce(text, '')), '\\s+')) AS n
+        SELECT doc_id, {_words('text', null_empty=True)} AS t,
+               len({_words('text', null_empty=True)}) AS n
         FROM documents
     ),
     spans AS (
@@ -1834,8 +1855,8 @@ _X87_K = 15
     # DISTINCT must apply AFTER the range unnest expands.
     oracle=f"""
     WITH words AS (
-        SELECT doc_id, string_split_regex(trim(coalesce(text, '')), '\\s+') AS t,
-               len(string_split_regex(trim(coalesce(text, '')), '\\s+')) AS n
+        SELECT doc_id, {_words('text', null_empty=True)} AS t,
+               len({_words('text', null_empty=True)}) AS n
         FROM documents
     ),
     grams AS (
@@ -1904,7 +1925,7 @@ _X88_BUDGET = 15_000
         SELECT doc_id,
                CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS BIGINT)
                    * 1000000 // length(text)                AS score,
-               CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
+               CAST(len({_words('text')}) AS BIGINT)
                                                             AS n_tokens
         FROM documents
     ),
@@ -1949,7 +1970,7 @@ _X89_V = 20
     # ASCII tokens; per-doc OOV via LEFT JOIN + FILTER counts.
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, unnest(string_split_regex(trim(coalesce(text, '')), '\\s+')) AS tok
+        SELECT doc_id, unnest({_words('text', null_empty=True)}) AS tok
         FROM documents
     ),
     vocab AS (
@@ -2044,7 +2065,7 @@ _X91_B = 4096
 _X91_ORACLE_CORE = f"""
     WITH tok AS (
         SELECT doc_id, source,
-               string_split_regex(trim(coalesce(text, '')), '\\s+') AS t
+               {_words('text', null_empty=True)} AS t
         FROM documents
     ),
     feats AS (
@@ -2057,12 +2078,12 @@ _X91_ORACLE_CORE = f"""
     ),
     cb AS (
         SELECT doc_id,
-               CAST(('0x' || substr(md5(CAST(g AS VARCHAR)),1,15)) AS BIGINT)
+               {o_h60('g')}
                    % {_X91_B} AS b
         FROM feats WHERE source <> 'src0'
     ),
     tb AS (
-        SELECT CAST(('0x' || substr(md5(CAST(g AS VARCHAR)),1,15)) AS BIGINT)
+        SELECT {o_h60('g')}
                    % {_X91_B} AS b
         FROM feats WHERE source = 'src0'
     ),
@@ -2120,11 +2141,11 @@ def x91_dsir_importance_weights(spark, sf_dir):
     WITH per AS (
         SELECT source,
                md5(text) AS h,
-               len(string_split_regex(trim(text), '\\s+')) AS n_toks,
+               len({_words('text')}) AS n_toks,
                CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS BIGINT)
                    * 1000000 // length(text) AS alpha_e6,
                (length(text) >= 20
-                 AND len(string_split_regex(trim(text), '\\s+')) >= 5
+                 AND len({_words('text')}) >= 5
                  AND length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 2
                      > length(text)) AS quality_ok,
                CASE WHEN length(regexp_replace(text, '[\\x00-\\x7F]', '', 'g')) * 4
@@ -2185,9 +2206,9 @@ def x92_corpus_report(spark, sf_dir):
     # (1-based inclusive slicing; range(1, len) stops before the last
     # char, so length-1 words contribute nothing — mirroring the Spark
     # length >= 2 filter).
-    oracle="""
+    oracle=f"""
     WITH words AS (
-        SELECT lower(unnest(string_split_regex(trim(coalesce(text, '')), '\\s+'))) AS word
+        SELECT lower(unnest({_words('text', null_empty=True)})) AS word
         FROM documents
     ),
     wf AS (
@@ -2195,7 +2216,7 @@ def x92_corpus_report(spark, sf_dir):
         WHERE length(word) >= 2 GROUP BY word
     ),
     pairs AS (
-        SELECT unnest([{'a': word[i:i], 'b': word[i+1:i+1]}
+        SELECT unnest([{{'a': word[i:i], 'b': word[i+1:i+1]}}
                        for i in range(1, length(word))]) AS p, n
         FROM wf
     )
@@ -2262,12 +2283,11 @@ def x94_corpus_diff(spark, sf_dir):
     # floor(-ln(-ln(u)) * 1e6) with u the h60 uniform of '42:'||doc_id —
     # verified bit-stable Spark-vs-DuckDB on 200k samples, so both
     # engines select the identical 500 documents.
-    oracle=_X91_ORACLE_CORE + """
+    oracle=_X91_ORACLE_CORE + f"""
     SELECT doc_id, n_feats, logw_e6, key_e6 FROM (
         SELECT w.*,
                CAST(logw_e6 + floor(-ln(-ln(
-                   (CAST(('0x' || substr(md5('42:' || CAST(doc_id AS VARCHAR)),
-                          1, 15)) AS BIGINT) + 0.5) / 1152921504606846976.0))
+                   ({o_h60("'42:' || CAST(doc_id AS VARCHAR)")} + 0.5) / 1152921504606846976.0))
                    * 1e6) AS BIGINT) AS key_e6
         FROM w
     ) ORDER BY key_e6 DESC, doc_id LIMIT 500
@@ -2299,10 +2319,10 @@ def x95_dsir_resample(spark, sf_dir):
     # k1=6/5, b=3/4 clear the weight fraction to the integer ratio
     # 44*T*tf / (20*T*tf + 6*T + 18*dl*N); idf floor-e6 per term, one
     # identical IEEE divide+multiply per (doc, term), integer doc sum.
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               string_split_regex(lower(trim(coalesce(text, ''))), '\\s+') AS t
+               {_words('text', lower=True, null_empty=True)} AS t
         FROM documents
     ),
     dl AS (SELECT doc_id, len(t) AS dl FROM toks),
@@ -2711,19 +2731,11 @@ def x111_canonical_dedup(spark, sf_dir):
     # and the top-2-gram argmax tie-breaks lexicographically in both
     # (min(struct(-cnt, g)) here, ORDER BY cnt DESC, gr ASC there).
     oracle=f"""
-    WITH tr AS (
+    WITH w AS (
         SELECT doc_id,
                length(coalesce(text, '')) AS tlen,
-               regexp_replace(regexp_replace(coalesce(text, ''),
-                              '^\\s+', ''), '\\s+$', '') AS t
+               {_words('text', null_empty=True, ws_trim=True)} AS ws
         FROM documents
-    ),
-    w AS (
-        SELECT doc_id, tlen,
-               CASE WHEN t = '' THEN []::VARCHAR[]
-                    ELSE string_split_regex(t, '\\s+')
-               END AS ws
-        FROM tr
     ),
     g AS (
         SELECT doc_id, tlen, 2 AS n,
@@ -2848,16 +2860,11 @@ def x113_pii_redaction_planted(spark, sf_dir):
     # word split / line split / trim semantics are pinned identical
     # (string_split_regex + chr(10) split keep trailing empties in both
     # engines; ltrim/rtrim default to space-trimming in both).
-    oracle=r"""
+    oracle=rf"""
     WITH base AS (
         SELECT doc_id,
                coalesce(text, '') AS t,
-               CASE WHEN regexp_replace(regexp_replace(coalesce(text, ''),
-                         '^\s+', ''), '\s+$', '') = '' THEN []::VARCHAR[]
-                    ELSE string_split_regex(
-                         regexp_replace(regexp_replace(coalesce(text, ''),
-                         '^\s+', ''), '\s+$', ''), '\s+')
-               END AS ws,
+               {_words('text', null_empty=True, ws_trim=True)} AS ws,
                string_split(coalesce(text, ''), chr(10)) AS ls
         FROM documents
     ),
@@ -2940,7 +2947,7 @@ def x114_gopher_quality_signals(spark, sf_dir):
     # reuses the x112/x114 whitespace-trim discipline so both engines
     # tokenize lines identically; kept_text is the newline rejoin and
     # every count is a plain integer.
-    oracle=r"""
+    oracle=rf"""
     WITH base AS (
         SELECT doc_id, coalesce(text, '') AS t,
                string_split(coalesce(text, ''), chr(10)) AS ls
@@ -2951,11 +2958,7 @@ def x114_gopher_quality_signals(spark, sf_dir):
                list_filter(ls, l ->
                    (rtrim(l) LIKE '%.' OR rtrim(l) LIKE '%!'
                     OR rtrim(l) LIKE '%?' OR rtrim(l) LIKE '%"')
-                   AND (CASE WHEN regexp_replace(regexp_replace(l,
-                                 '^\s+', ''), '\s+$', '') = '' THEN 0
-                        ELSE len(string_split_regex(
-                                 regexp_replace(regexp_replace(l,
-                                 '^\s+', ''), '\s+$', ''), '\s+')) END) >= 5
+                   AND len({_words('l', ws_trim=True)}) >= 5
                    AND NOT contains(lower(l), 'javascript')
                ) AS kept
         FROM base
@@ -2966,7 +2969,7 @@ def x114_gopher_quality_signals(spark, sf_dir):
                CAST(len(kept) AS BIGINT) AS n_kept_lines,
                coalesce(array_to_string(kept, chr(10)), '') AS kept_text,
                contains(lower(t), 'lorem ipsum') AS has_lorem_ipsum,
-               contains(t, '{') AS has_brace
+               contains(t, '{{') AS has_brace
         FROM k
     ),
     s AS (
@@ -3085,9 +3088,7 @@ _X118_MAX_OCC = 1
     oracle=f"""
     WITH base AS (
         SELECT doc_id,
-               string_split_regex(regexp_replace(regexp_replace(
-                   coalesce(text, ''), '^\\s+', ''), '\\s+$', ''),
-                   '\\s+') AS words
+               {_words('text', null_empty=True)} AS words
         FROM documents
     ),
     segs AS (
@@ -3441,9 +3442,7 @@ def x123_ivfadc_knn(spark, sf_dir):
 _X124_PREFIX = "subscribe to our newsletter follow us on twitter "
 _X124_SEGCHAIN = f"""segbase AS (
         SELECT doc_id,
-               string_split_regex(regexp_replace(regexp_replace(
-                   coalesce(text, ''), '^\\s+', ''), '\\s+$', ''),
-                   '\\s+') AS words
+               {_words('text', null_empty=True)} AS words
         FROM keep1
     ),
     segs AS (
@@ -3470,8 +3469,7 @@ _X124_SEGCHAIN = f"""segbase AS (
     keep1b AS (
         SELECT k.doc_id, k.source,
                coalesce(r.clean_text, '') AS text,
-               len(string_split_regex(trim(coalesce(r.clean_text, '')),
-                   '\\s+')) AS n_tokens
+               len({_words('r.clean_text', null_empty=True)}) AS n_tokens
         FROM keep1 k LEFT JOIN reass r USING (doc_id)
     ),
     canon AS (SELECT min(doc_id) AS doc_id FROM keep1b GROUP BY md5(text)),
@@ -3661,11 +3659,11 @@ def x126_temperature_mix(spark, sf_dir):
     "x127_ngram_novelty",
     # q63's gram fragments, scored: distinct 3-gram sets per doc, left
     # anti the reference (source='src0') distinct set, e6 integer ratio.
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               string_split_regex(lower(trim(text)), '\\s+') AS t,
-               len(string_split_regex(lower(trim(text)), '\\s+')) AS n
+               {_words('text', lower=True)} AS t,
+               len({_words('text', lower=True)}) AS n
         FROM documents WHERE source <> 'src0'
     ),
     grams AS (
@@ -3677,8 +3675,8 @@ def x126_temperature_mix(spark, sf_dir):
     ref AS (
         SELECT DISTINCT unnest(list_distinct(list_transform(range(1, n - 1),
                    i -> array_to_string(t[i:i+2], ' ')))) AS gram
-        FROM (SELECT string_split_regex(lower(trim(text)), '\\s+') AS t,
-                     len(string_split_regex(lower(trim(text)), '\\s+')) AS n
+        FROM (SELECT {_words('text', lower=True)} AS t,
+                     len({_words('text', lower=True)}) AS n
               FROM documents WHERE source = 'src0')
         WHERE n >= 3
     ),
@@ -3722,12 +3720,10 @@ def x127_ngram_novelty(spark, sf_dir):
     # Same word-split as x81/x118; boundaries are md5-of-context string
     # compares (identical in both engines), chunk ids a per-doc running
     # sum, then the keep-first rank + ordered reassembly fragments.
-    oracle="""
+    oracle=f"""
     WITH base AS (
         SELECT doc_id,
-               string_split_regex(regexp_replace(regexp_replace(
-                   coalesce(text, ''), '^\\s+', ''), '\\s+$', ''),
-                   '\\s+') AS t
+               {_words('text', null_empty=True)} AS t
         FROM documents
     ),
     posw AS (
@@ -3802,7 +3798,7 @@ _X129_B = 512
 _X129_ORACLE = f"""
     WITH tok AS (
         SELECT doc_id, source,
-               string_split_regex(trim(coalesce(text, '')), '\\s+') AS t
+               {_words('text', null_empty=True)} AS t
         FROM documents
     ),
     feats AS (
@@ -3816,7 +3812,7 @@ _X129_ORACLE = f"""
     db AS (
         SELECT DISTINCT CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS y,
                doc_id,
-               CAST(('0x' || substr(md5(CAST(g AS VARCHAR)),1,15)) AS BIGINT)
+               {o_h60('g')}
                    % {_X129_B} AS b
         FROM feats
         UNION ALL
@@ -3876,7 +3872,7 @@ _X130_TOPN = 50
 _X130_ORACLE = f"""
     WITH toks AS (
         SELECT doc_id,
-               string_split_regex(lower(trim(coalesce(text, ''))), '\\s+') AS t
+               {_words('text', lower=True, null_empty=True)} AS t
         FROM documents
     ),
     dl AS (SELECT doc_id, len(t) AS dl FROM toks),

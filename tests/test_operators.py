@@ -3,6 +3,7 @@ exact counterparts, plus unit checks on the text/similarity libraries."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ecom_snowflake_duckdb_migration_spark.operators import similarity as sim
@@ -3060,6 +3061,101 @@ def test_sql_twin_string_paths_quote_reserved_identifiers(spark):
     sig = tx.minhash_signatures(m, id_col="select", num_hashes=8)
     assert sig.count() == 1
     assert tx.lsh_band_stack(sig, id_col="select", num_hashes=8, bands=4).count() == 4
+
+
+# Every public operator in operators/text.py that takes ``text_col``, as
+# ``op(docs, other, text_col)``: ``other`` is the second frame of the
+# two-frame operators (benchmark, reference, target, new snapshot).
+_TEXT_COL_OPS = {
+    "bm25_scores": lambda d, o, t: tx.bm25_scores(d, ["the", "data"], text_col=t),
+    "bpe_apply": lambda d, o, t: tx.bpe_apply(d, [("t", "h"), ("th", "e")], text_col=t),
+    "bpe_pair_counts": lambda d, o, t: tx.bpe_pair_counts(d, text_col=t),
+    "bpe_train": lambda d, o, t: tx.bpe_train(d, n_merges=5, text_col=t),
+    "c4_line_filters": lambda d, o, t: tx.c4_line_filters(d, text_col=t),
+    "canonical_dedup_groups": lambda d, o, t: tx.canonical_dedup_groups(d, text_col=t),
+    "cdc_dedup": lambda d, o, t: tx.cdc_dedup(d, text_col=t),
+    "char_shingle_sets": lambda d, o, t: tx.char_shingle_sets(d, text_col=t),
+    "char_shingles": lambda d, o, t: tx.char_shingles(d, text_col=t),
+    "chunk_documents": lambda d, o, t: tx.chunk_documents(d, 200, 50, text_col=t),
+    "corpus_diff": lambda d, o, t: tx.corpus_diff(d, o, text_col=t),
+    "corpus_report": lambda d, o, t: tx.corpus_report(d, text_col=t),
+    "curate": lambda d, o, t: tx.curate(d, o, text_col=t, near_dup="minhash"),
+    "decontaminate": lambda d, o, t: tx.decontaminate(d, o, n=3, text_col=t),
+    "decontaminate_fuzzy": lambda d, o, t: tx.decontaminate_fuzzy(d, o, text_col=t),
+    "dsir_weights": lambda d, o, t: tx.dsir_weights(d, o, text_col=t, n_buckets=64),
+    "exact_dedup_groups": lambda d, o, t: tx.exact_dedup_groups(d, text_col=t),
+    "exact_substring_dedup": lambda d, o, t: tx.exact_substring_dedup(d, k=5, text_col=t),
+    "gopher_quality_stats": lambda d, o, t: tx.gopher_quality_stats(d, text_col=t),
+    "gopher_repetition_stats": lambda d, o, t: tx.gopher_repetition_stats(d, text_col=t),
+    "lm_score": lambda d, o, t: tx.lm_score(d, tx.lm_trigram_model(o, text_col=t), text_col=t),
+    "lm_trigram_model": lambda d, o, t: tx.lm_trigram_model(d, text_col=t),
+    "minhash_estimate_pairs": lambda d, o, t: tx.minhash_estimate_pairs(d, text_col=t),
+    "minhash_lsh_pairs": lambda d, o, t: tx.minhash_lsh_pairs(d, text_col=t),
+    "minhash_signatures": lambda d, o, t: tx.minhash_signatures(d, text_col=t),
+    "ngram_jaccard_pairs": lambda d, o, t: tx.ngram_jaccard_pairs(d, text_col=t),
+    "ngram_novelty": lambda d, o, t: tx.ngram_novelty(d, o, text_col=t),
+    "predict_language": lambda d, o, t: tx.predict_language(d, text_col=t),
+    "quality_classifier_grad": lambda d, o, t: tx.quality_classifier_grad(
+        d, o, text_col=t, n_buckets=64
+    ),
+    "quality_classifier_score": lambda d, o, t: tx.quality_classifier_score(
+        d, list(range(-32, 33)), text_col=t
+    ),
+    "quality_classifier_train": lambda d, o, t: tx.quality_classifier_train(
+        d, o, text_col=t, n_buckets=64, n_iters=2
+    ),
+    "quality_metrics": lambda d, o, t: tx.quality_metrics(d, text_col=t),
+    "redact_pii": lambda d, o, t: tx.redact_pii(d, text_col=t),
+    "repetition_metrics": lambda d, o, t: tx.repetition_metrics(d, text_col=t),
+    "segment_frequency_filter": lambda d, o, t: tx.segment_frequency_filter(d, text_col=t),
+    "simhash64": lambda d, o, t: tx.simhash64(d, text_col=t, hash_fn="md5"),
+    "simhash_near_pairs": lambda d, o, t: tx.simhash_near_pairs(d, text_col=t),
+    "span_dedup": lambda d, o, t: tx.span_dedup(d, text_col=t),
+    "split_leakage_guard": lambda d, o, t: tx.split_leakage_guard(
+        d, {"train": 800_000, "val": 100_000, "test": 100_000}, text_col=t
+    ),
+    "tfidf_top_terms": lambda d, o, t: tx.tfidf_top_terms(d, text_col=t),
+    "unicode_normalize": lambda d, o, t: tx.unicode_normalize(d, text_col=t),
+    "vocab_coverage": lambda d, o, t: tx.vocab_coverage(d, 50, text_col=t),
+    "winnow_fingerprints": lambda d, o, t: tx.winnow_fingerprints(d, text_col=t, hash_fn="md5"),
+    "winnow_overlap_pairs": lambda d, o, t: tx.winnow_overlap_pairs(d, text_col=t),
+}
+
+
+def test_text_col_operator_table_names_every_text_operator():
+    import inspect
+
+    takes_text_col = {
+        name
+        for name, f in vars(tx).items()
+        if inspect.isfunction(f)
+        and f.__module__ == tx.__name__
+        and not name.startswith("_")
+        and "text_col" in inspect.signature(f).parameters
+    }
+    assert takes_text_col == set(_TEXT_COL_OPS)
+
+
+@pytest.mark.parametrize("name", sorted(_TEXT_COL_OPS))
+def test_text_operator_takes_text_column_named_my_text(spark, sf_dir, name):
+    """Each text operator quotes its column names once, where they enter
+    SQL text: a text column named ``my text`` gives the rows that
+    ``text`` gives."""
+    docs = _docs(spark, sf_dir)
+    d, o = docs.filter("doc_id < 60"), docs.filter("doc_id >= 40 AND doc_id < 100")
+    op = _TEXT_COL_OPS[name]
+
+    def rows(out):
+        data = out if isinstance(out, list) else [tuple(r) for r in out.collect()]
+        return sorted(data, key=repr)
+
+    want = rows(op(d, o, "text"))
+    got = rows(op(
+        d.withColumnRenamed("text", "my text"),
+        o.withColumnRenamed("text", "my text"),
+        "my text",
+    ))
+    assert got == want
 
 
 def test_quote_ident_doubles_embedded_backtick(spark):

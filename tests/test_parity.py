@@ -75,3 +75,22 @@ def test_q26_oracle_passes_every_row_on_empty_sink(spark, sf_dir, tmp_path):
     spec = QUERIES["q26_incremental_append"]
     result = compare_to_oracle(spec.name, spec.fn(spark, shifted), spec.oracle, shifted)
     assert result.ok, result.detail
+
+
+def test_q53_lsh_geometry_with_candidates_matches_oracle(spark, sf_dir):
+    """q53's registered geometry (12 planes x 4 tables) recovers no pair
+    at sf0.001, so its parity row compares 0 rows with 0 rows there. 6
+    planes x 8 tables finds pairs at that scale: the oracle is non-empty
+    and the Spark pairs match it."""
+    from ecom_snowflake_duckdb_migration_spark.operators import similarity as sim
+    from ecom_snowflake_duckdb_migration_spark.queries import catalog_llm, load
+
+    e = load(spark, sf_dir, "embeddings")
+    pairs = sim.cosine_pairs_lsh(
+        e, threshold=0.4, dim=64, n_planes=6, n_tables=8
+    ).localCheckpoint()
+    oracle = catalog_llm._q53_oracle(0.4, 64, 6, 8)
+    result = compare_to_oracle("q53_cosine_pairs_lsh_6x8", pairs, oracle, sf_dir)
+    assert result.ok, result.detail
+    # the row counts are equal, so the oracle is non-empty too
+    assert pairs.count() > 0

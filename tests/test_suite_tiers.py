@@ -76,10 +76,11 @@ def test_host_sizing_lives_in_session_py():
     assert not offenders, f"host sizing outside session.py: {offenders}"
 
 
-# SQL fragments of the DuckDB oracles (and of the Spark int8 quantizer)
-# that several entries need: each is spelled once, inside its builder in
-# queries/catalog_llm.py (operators/similarity.py for the Spark one), so a
-# fold rule cannot differ between two copies.
+# SQL fragments that several DuckDB oracles or Spark operators need: each
+# is spelled once, inside its builder in queries/catalog_llm.py (the
+# oracles), operators/similarity.py or operators/text.py (Spark), or
+# operators/sketches.py (the 60-bit hash, both engines), so a fold or
+# tokenization rule cannot differ between two copies.
 SHARED_FRAGMENTS = {
     "64-element dot": r"list_sum\(list_transform\(range\(1, len\(",
     "vector norm": r"x -> CAST\(x AS DOUBLE\) \* CAST\(x AS DOUBLE\)",
@@ -91,6 +92,14 @@ SHARED_FRAGMENTS = {
     "int8 quantization (DuckDB)": r"\* 127\.0 /",
     "int8 quantization (Spark)": r"\* 127\.0D /",
     "md5 split ladder": r"WHEN substr\(md5\('\{seed\}",
+    "word split (Spark)": r"""\bsplit\([^\n]*?(?:'\\\\\\\\s\+'|r"\\s\+")""",
+    "word split (DuckDB)": r"string_split_regex\(",
+    "word n-grams (Spark)": r"concat_ws\(' ', slice\(",
+    "char k-grams (Spark)": r"transform\(sequence\(1, length\(",
+    "md5 60-bit hash (Spark)": r"1, 15\), 16, 10\)",
+    "md5 60-bit hash (DuckDB)": r"'0x' \|\| substr\(md5\(",
+    "whitespace trim (Spark)": r"""(?:'\^\\\\\\\\s\+'|r"\^\\s\+")""",
+    "whitespace trim (DuckDB)": r"'\^\\\\?s\+'",
 }
 
 
@@ -107,3 +116,27 @@ def test_shared_oracle_fragments_live_in_one_builder():
         for name, pat in SHARED_FRAGMENTS.items()
     }
     assert all(n == 1 for n in counts.values()), counts
+
+
+# Text operators take column NAMES and quote each one where it enters SQL
+# text (``quote_ident``); an f-string that splices a bare name breaks on a
+# column named ``my text``.
+BARE_NAME = re.compile(r"\{(text_col|id_col|hash_col|rank_col)\}")
+
+
+def test_text_operators_splice_no_bare_column_name():
+    path = os.path.join(ROOT, "ecom_snowflake_duckdb_migration_spark", "operators", "text.py")
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    offenders = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.JoinedStr)
+        and any(
+            isinstance(v, ast.FormattedValue)
+            and isinstance(v.value, ast.Name)
+            and BARE_NAME.fullmatch("{" + v.value.id + "}")
+            for v in node.values
+        )
+    ]
+    assert not offenders, f"f-strings splicing a bare column name at lines {offenders}"
