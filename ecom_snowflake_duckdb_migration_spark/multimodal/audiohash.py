@@ -19,15 +19,12 @@ decode op); only the 8-byte hash enters the pigeonhole band join.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.text import hamming_near_pairs
-from .columns import _decode_payload
+from .columns import _map_payloads
 
 AUDIO_HASH_SCHEMA = StructType(  # the default media_id-keyed shape
     [
@@ -76,28 +73,9 @@ def audio_hashes(
     """(media_id, audio_hash, ok) per audio payload; decode errors are
     captured per row (``ok`` column), never thrown across the batch."""
 
-    from .phash import _hash_schema
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {id_col: [], "audio_hash": [], "ok": []}
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    kind, d = _decode_payload(payload)
-                    if kind != "audio":
-                        raise ValueError(f"not audio: {kind}")
-                    out["audio_hash"].append(
-                        _hash_one(d["samples"], t_frames, n_bands)
-                    )
-                    out["ok"].append("ok")
-                except Exception as e:  # captured, not raised
-                    out["audio_hash"].append(None)
-                    out["ok"].append(type(e).__name__)
-                out[id_col].append(mid)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        _batches, _hash_schema(df, id_col, AUDIO_HASH_SCHEMA.fields[1:])
+    return _map_payloads(
+        df, id_col, payload_col, "audio", AUDIO_HASH_SCHEMA.fields[1:-1],
+        lambda d: (_hash_one(d["samples"], t_frames, n_bands),),
     )
 
 

@@ -557,7 +557,47 @@ def _decode_payload(payload: bytes) -> tuple[str, dict]:
 
 # ---- Spark-side operators ----
 
-DECODED_IMAGE_SCHEMA = StructType(
+
+def _map_payloads(
+    df: DataFrame,
+    id_col: str,
+    payload_col: str,
+    kind: str,
+    value_fields: list[StructField],
+    kernel: Callable[[dict], tuple],
+) -> DataFrame:
+    """Per-payload kernel over mapInPandas: decode each payload, require
+    ``kind``, and emit ``(id_col, *kernel(decoded), ok='ok')``. The id
+    column keeps the caller's name and type (a doc_id-keyed corpus works
+    unchanged).
+
+    Errors are captured per row: NULL values and ``ok`` = the error class
+    name, never thrown across the batch — one corrupt file must not kill a
+    100 TB job. Value columns are built as object arrays so a NULL beside
+    a 64-bit hash does not turn the column into float64 (which rounds
+    every other hash in the batch)."""
+    names = [f.name for f in value_fields]
+
+    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for payload in pdf[payload_col]:
+                try:
+                    got, d = _decode_payload(payload)
+                    if got != kind:
+                        raise ValueError(f"not {kind}: {got}")
+                    rows.append((*kernel(d), "ok"))
+                except Exception as e:  # captured, not raised
+                    rows.append((*[None] * len(names), type(e).__name__))
+            out = pd.DataFrame(rows, columns=names + ["ok"], dtype=object)
+            out.insert(0, id_col, pdf[id_col].to_numpy())
+            yield out
+
+    ok = StructField("ok", StringType())  # 'ok' | error class name
+    return df.mapInPandas(_batches, StructType([df.schema[id_col], *value_fields, ok]))
+
+
+DECODED_IMAGE_SCHEMA = StructType(  # the default media_id-keyed shape
     [
         StructField("media_id", StringType()),
         StructField("width", IntegerType()),
@@ -569,32 +609,13 @@ DECODED_IMAGE_SCHEMA = StructType(
 
 
 def decode_images(df: DataFrame, id_col: str = "media_id", payload_col: str = "payload") -> DataFrame:
-    """Decode image payloads to (dims, mean pixel) via mapInPandas.
-
-    Errors are captured per row (column ``ok``), never thrown across the
-    batch — one corrupt file must not kill a 100 TB job."""
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "width": [], "height": [], "mean_pixel": [], "ok": []}
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    kind, d = _decode_payload(payload)
-                    if kind != "image":
-                        raise ValueError(f"not an image: {kind}")
-                    out["width"].append(d["width"])
-                    out["height"].append(d["height"])
-                    out["mean_pixel"].append(float(d["pixels"].mean()))
-                    out["ok"].append("ok")
-                except Exception as e:  # captured, not raised
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["mean_pixel"].append(None)
-                    out["ok"].append(type(e).__name__)
-                out["media_id"].append(mid)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_batches, DECODED_IMAGE_SCHEMA)
+    """Decode image payloads to (id, width, height, mean pixel, ok) via
+    mapInPandas; the id column keeps the caller's name and type, and a
+    failed decode yields NULLs with its error class in ``ok``."""
+    return _map_payloads(
+        df, id_col, payload_col, "image", DECODED_IMAGE_SCHEMA.fields[1:-1],
+        lambda d: (d["width"], d["height"], float(d["pixels"].mean())),
+    )
 
 
 def resize_images(

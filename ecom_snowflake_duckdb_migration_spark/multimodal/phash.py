@@ -27,20 +27,12 @@ the documented non-codegen path shared by every decode op); only the
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.text import hamming_near_pairs
-from .columns import _decode_payload
-
-def _hash_schema(df: DataFrame, id_col: str, value_fields) -> StructType:
-    """Output schema carrying the CALLER'S id column (name and type
-    preserved from the input — a doc_id-keyed corpus works unchanged)."""
-    return StructType([df.schema[id_col]] + list(value_fields))
+from .columns import _map_payloads
 
 
 IMAGE_HASH_SCHEMA = StructType(  # the default media_id-keyed shape
@@ -108,28 +100,11 @@ def image_hashes(
             "corrupted by undefined >=64-bit shifts)"
         )
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {id_col: [], "ahash": [], "dhash": [], "ok": []}
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    kind, d = _decode_payload(payload)
-                    if kind != "image":
-                        raise ValueError(f"not an image: {kind}")
-                    px = d["pixels"].reshape(d["height"], d["width"])
-                    a, h = _hashes_one(px, grid)
-                    out["ahash"].append(a)
-                    out["dhash"].append(h)
-                    out["ok"].append("ok")
-                except Exception as e:  # captured, not raised
-                    out["ahash"].append(None)
-                    out["dhash"].append(None)
-                    out["ok"].append(type(e).__name__)
-                out[id_col].append(mid)
-            yield pd.DataFrame(out)
+    def kernel(d: dict) -> tuple[int, int]:
+        return _hashes_one(d["pixels"].reshape(d["height"], d["width"]), grid)
 
-    return df.mapInPandas(
-        _batches, _hash_schema(df, id_col, IMAGE_HASH_SCHEMA.fields[1:])
+    return _map_payloads(
+        df, id_col, payload_col, "image", IMAGE_HASH_SCHEMA.fields[1:-1], kernel
     )
 
 

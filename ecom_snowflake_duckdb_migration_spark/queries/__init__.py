@@ -29,6 +29,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.bucketed import FACT_BUCKET_SPECS, JOIN_FAMILY, bucketed_name, layout_projection
+
 TABLES = (
     "region",
     "nation",
@@ -122,18 +124,42 @@ def _view_tag(spark: SparkSession, sf_dir: str) -> str:
 
 
 def run_sql(spark: SparkSession, sf_dir: str, template: str) -> DataFrame:
-    """Run a Spark-SQL template whose ``{table}`` placeholders name the
-    testdata tables.
+    """Run a Spark-SQL template over this sf_dir's tables.
+
+    ``{table}`` names a raw testdata table. ``{bkt_<alias>}`` names a
+    layout of ``sources.bucketed.FACT_BUCKET_SPECS``: the registered
+    bucketed copy when every layout the template names is in the session
+    catalog (``ensure_bucketed_facts``), else the raw view with the
+    layout's derived columns projected, so one SQL text serves both. Over
+    the bucketed orderkey pair ``SHUFFLE_HASH(o)`` becomes ``MERGE(o)``:
+    co-located, pre-sorted buckets make the fact-fact join a merge join
+    with no exchange and no sort.
 
     Why SQL text and not the equivalent DataFrame chain: building a deep
     DataFrame plan costs one py4j round-trip per expression (~50-200 ms for
     a 6-join query), which dominates sub-second interactive queries. A SQL
-    string is a single JVM call; the optimized plan is identical (pinned by
-    tests/test_sql_df_parity.py, which keeps a DataFrame twin of every SQL
-    headline query and asserts bit-exact result equality).
+    string is a single JVM call. tests/test_sql_df_parity.py keeps a
+    DataFrame twin of every SQL headline query and pins equal results and
+    dtypes (not equal plans).
     """
     tag = _view_tag(spark, sf_dir)
-    return spark.sql(template.format(**{t: f"{tag}_{t}" for t in TABLES}))
+    names = {t: f"{tag}_{t}" for t in TABLES}
+    layouts = [a for a in FACT_BUCKET_SPECS if f"{{bkt_{a}}}" in template]
+    try:
+        bucketed = all(spark.catalog.tableExists(bucketed_name(sf_dir, a)) for a in layouts)
+    except Exception:
+        bucketed = False
+    for a in layouts:
+        table, _, _, derived = FACT_BUCKET_SPECS[a]
+        if bucketed:
+            names[f"bkt_{a}"] = bucketed_name(sf_dir, a)
+        elif derived:
+            names[f"bkt_{a}"] = f"(SELECT {', '.join(layout_projection(a))} FROM {names[table]})"
+        else:
+            names[f"bkt_{a}"] = names[table]
+    if bucketed and set(JOIN_FAMILY) <= set(layouts):
+        template = template.replace("SHUFFLE_HASH(o)", "MERGE(o)")
+    return spark.sql(template.format(**names))
 
 
 @dataclass(frozen=True)

@@ -26,8 +26,8 @@ with primitive longs. Exactness is unchanged on <=4-decimal money values.
 Scale bound: int64 holds +-9.2e18 bp = $922 trillion per output group —
 headroom for any real dataset, but TPC-H money columns at ~sf40k exceed it.
 Past that, set ``BP = 100`` (cents: 100x headroom, still exact for 2-decimal
-sources) or switch the affected query to ``dsum_decimal`` (exact at any
-scale, BigDecimal cost).
+sources) or sum a DECIMAL(27,6) cast on both sides (exact at any scale,
+BigDecimal cost).
 
 Scale notes:
 - Dimension tables (region, nation, derived lookups) are broadcast — no
@@ -48,7 +48,6 @@ from pyspark.sql.window import Window
 from ..sources import align_union, incremental_filter, upsert_delete_insert
 from . import load, register, run_sql
 
-DEC_ELEM = "decimal(27,6)"
 BP = 10_000  # fixed-point scale: 4 decimal digits ("basis points")
 
 
@@ -96,12 +95,6 @@ def s_davg(expr: str) -> str:
         f"round((sum(CAST(floor(({expr}) * {BP} + 0.5D) AS BIGINT))"
         f" / {BP}.0D) / count({expr}), 6)"
     )
-
-
-def dsum_decimal(c: Column) -> Column:
-    """Arbitrary-scale exact variant (BigDecimal cost): for sums beyond the
-    int64 bp bound. Pair with the matching DECIMAL(27,6) oracle expression."""
-    return F.round(F.sum(c.cast(DEC_ELEM)), 2).cast("double")
 
 
 def davg(c: Column) -> Column:
@@ -201,12 +194,10 @@ def q02_revenue_by_nation(spark, sf_dir):
     # explicit hint (at sf16 its 25 MB broadcast saves re-shuffling the
     # 2.4M-row per-customer rollup; at 100 TB the gate refuses and AQE
     # owns the decision).
-    chint = (
-        "BROADCAST(c), "
-        if _parquet_bytes(sf_dir, "customer") < _BROADCAST_GATE_BYTES
-        else ""
+    return run_sql(
+        spark, sf_dir,
+        Q02_SQL_RAWJOIN.replace("__HINTS__", _broadcast_hints(sf_dir, ("customer", "c"))),
     )
-    return _run_fact_sql(spark, sf_dir, Q02_SQL_RAWJOIN.replace("__CHINT__", chint))
 
 
 # SHUFFLE_HASH the RAW projected lineitem rows against orders and aggregate
@@ -222,14 +213,14 @@ Q02_SQL_RAWJOIN = f"""
     WITH lraw AS (
         SELECT l_orderkey,
                CAST(floor((l_extendedprice * (1 - l_discount)) * {BP} + 0.5D) AS BIGINT) AS _rev
-        FROM {{lineitem}}
+        FROM {{bkt_lineitem}}
     ),
     per_cust AS (
         SELECT /*+ SHUFFLE_HASH(o) */ o.o_custkey, sum(_rev) AS _crev
-        FROM {{orders}} o JOIN lraw ON lraw.l_orderkey = o.o_orderkey
+        FROM {{bkt_orders}} o JOIN lraw ON lraw.l_orderkey = o.o_orderkey
         GROUP BY o.o_custkey
     )
-    SELECT /*+ __CHINT__BROADCAST(n), BROADCAST(r) */
+    SELECT __HINTS__/*+ BROADCAST(n), BROADCAST(r) */
            r.r_name, n.n_name,
            CAST(sum(_crev) / {BP}.0D AS DOUBLE) AS revenue,
            count(*)                             AS n_customers
@@ -286,32 +277,6 @@ def _parquet_bytes(sf_dir: str, table: str) -> int:
 _BROADCAST_GATE_BYTES = 64 * 1024 * 1024  # matches session autoBroadcastJoinThreshold
 
 
-def _run_fact_sql(spark, sf_dir: str, template: str):
-    """Run an orderkey fact-join template. When the orderkey-bucketed
-    lineitem/orders are registered in this session's catalog
-    (sources.bucketed.ensure_bucketed_facts), the same SQL reads them and
-    ``MERGE(o)`` replaces ``SHUFFLE_HASH(o)``: the co-located, pre-sorted
-    buckets make the fact-fact join a merge join with no exchange and no
-    sort. Otherwise it runs over the raw parquet files."""
-    from ..sources.bucketed import bucketed_fact_names
-
-    bt = bucketed_fact_names(spark, sf_dir)
-    if bt:
-        template = (
-            template.replace("SHUFFLE_HASH(o)", "MERGE(o)")
-            .replace("{lineitem}", bt["lineitem"])
-            .replace("{orders}", bt["orders"])
-        )
-    return run_sql(spark, sf_dir, template)
-
-
-def _bucketed_lineitem_pk(spark, sf_dir: str):
-    """The (l_partkey, l_suppkey)-clustered lineitem copy, if registered."""
-    from ..sources.bucketed import bucketed_table
-
-    return bucketed_table(spark, sf_dir, "lineitem_pk")
-
-
 def _broadcast_hints(sf_dir: str, *tables: tuple[str, str]) -> str:
     """Explicit BROADCAST hints, gated on the dim's actual on-disk size.
 
@@ -353,13 +318,9 @@ def _maybe_broadcast(df, sf_dir: str, table: str):
     tags=("J6", "O1", "A2"),
 )
 def q03_top_parts_by_revenue(spark, sf_dir):
-    sql = Q03_SQL.replace("__HINTS__", _broadcast_hints(sf_dir, ("part", "p")))
-    bpk = _bucketed_lineitem_pk(spark, sf_dir)
-    if bpk:
-        # partkey-bucketed lineitem: the per-partkey aggregate (the whole
-        # query's dominant shuffle) runs exchange-free on bucket layout.
-        sql = sql.replace("{lineitem}", bpk)
-    return run_sql(spark, sf_dir, sql)
+    return run_sql(
+        spark, sf_dir, Q03_SQL.replace("__HINTS__", _broadcast_hints(sf_dir, ("part", "p")))
+    )
 
 
 # Aggregate lineitem by l_partkey BEFORE touching part: the group-by
@@ -385,6 +346,8 @@ def q03_top_parts_by_revenue(spark, sf_dir):
 # No DISTINCT on the key scan: p_partkey is the reference schema's
 # declared PRIMARY KEY (dbt schema tests pin uniqueness), and a dedup
 # aggregate would cost the exact exchange this shape exists to avoid.
+# On the partkey-bucketed lineitem copy the per-partkey aggregate (the
+# whole query's dominant shuffle) runs exchange-free.
 Q03_SQL = f"""
     SELECT __HINTS__
            p.p_partkey, p.p_name,
@@ -395,7 +358,7 @@ Q03_SQL = f"""
             SELECT l_partkey,
                    sum(CAST(floor((l_extendedprice * (1 - l_discount)) * {BP} + 0.5D) AS BIGINT)) AS rev_bp,
                    sum(CAST(floor(l_quantity * {BP} + 0.5D) AS BIGINT))                           AS qty_bp
-            FROM {{lineitem}}
+            FROM {{bkt_lineitem_pk}}
             GROUP BY l_partkey
         ) la0
         JOIN (SELECT p_partkey AS pk_key FROM {{part}}) pk
@@ -491,7 +454,7 @@ def q04_semi_join_large_parts(spark, sf_dir):
     tags=("J5", "J3"),
 )
 def q05_nation_trade_roles(spark, sf_dir):
-    return _run_fact_sql(
+    return run_sql(
         spark, sf_dir,
         Q05_SQL.replace(
             "__HINTS__",
@@ -530,8 +493,8 @@ Q05_SQL = f"""
                CAST(sum(l._rev) AS BIGINT)    AS rev
         FROM (SELECT l_orderkey, l_suppkey,
                      CAST(floor((l_extendedprice * (1 - l_discount)) * {BP} + 0.5D) AS BIGINT) AS _rev
-              FROM {{lineitem}}) l
-        JOIN {{orders}} o   ON o.o_orderkey = l.l_orderkey
+              FROM {{bkt_lineitem}}) l
+        JOIN {{bkt_orders}} o ON o.o_orderkey = l.l_orderkey
         JOIN {{customer}} c ON c.c_custkey = o.o_custkey
         JOIN {{supplier}} s ON s.s_suppkey = l.l_suppkey
         GROUP BY c.c_nationkey, s.s_nationkey
@@ -608,16 +571,13 @@ def q05_nation_trade_roles_df(spark, sf_dir):
     tags=("J2", "A3"),
 )
 def q06_multikey_min_price_join(spark, sf_dir):
-    bpk = _bucketed_lineitem_pk(spark, sf_dir)
-    if bpk:
-        # (partkey, suppkey)-clustered+sorted lineitem: the window's
-        # required distribution is satisfied by the bucket hash and its
-        # required sort by the bucket sort order — the window runs with no
-        # exchange and no sort before it.
-        return run_sql(spark, sf_dir, Q06_SQL.replace("{lineitem}", bpk))
     return run_sql(spark, sf_dir, Q06_SQL)
 
 
+# On the (partkey, suppkey)-clustered+sorted lineitem copy the window's
+# required distribution is satisfied by the bucket hash and its required
+# sort by the bucket sort order: the window runs with no exchange and no
+# sort before it.
 Q06_SQL = """
     SELECT l_suppkey,
            count(*)                                               AS n_lines,
@@ -625,7 +585,7 @@ Q06_SQL = """
     FROM (
         SELECT l_suppkey, l_extendedprice,
                min(l_extendedprice) OVER (PARTITION BY l_partkey, l_suppkey) AS min_price
-        FROM (SELECT l_partkey, l_suppkey, l_extendedprice FROM {lineitem})
+        FROM (SELECT l_partkey, l_suppkey, l_extendedprice FROM {bkt_lineitem_pk})
     )
     GROUP BY l_suppkey
 """
@@ -666,14 +626,6 @@ def q06_multikey_min_price_join_df(spark, sf_dir):
     tags=("A11", "W1"),
 )
 def q07_dedup_keep_newest(spark, sf_dir):
-    from ..sources.bucketed import bucketed_table
-
-    bt = bucketed_table(spark, sf_dir, "events_user")
-    if bt:
-        # user_id-bucketed events (the PK-co-located ingest layout): the
-        # groupBy(user_id) reads co-located buckets and plans with ZERO
-        # exchanges — the whole query is one stage at any scale.
-        return spark.sql(Q07_SQL.replace("{events}", bt))
     return run_sql(spark, sf_dir, Q07_SQL)
 
 
@@ -684,7 +636,9 @@ def q07_dedup_keep_newest(spark, sf_dir):
 # semantics: the struct comparator is lexicographic (ts, then event_id),
 # matching ORDER BY ts DESC, event_id DESC with rn = 1. At 100 TB the
 # map-side combine is the difference between shuffling |rows| and
-# shuffling ~|users|.
+# shuffling ~|users|. On the user_id-bucketed events copy (the
+# PK-co-located ingest layout) the groupBy(user_id) reads co-located
+# buckets and plans with ZERO exchanges: one stage at any scale.
 Q07_SQL = """
     SELECT picked.user_id, picked.event_id, picked.event_type,
            picked.value, picked.ts
@@ -693,7 +647,7 @@ Q07_SQL = """
                  named_struct('user_id', user_id, 'event_id', event_id,
                               'event_type', event_type, 'value', value, 'ts', ts),
                  struct(ts, event_id)) AS picked
-        FROM {events} GROUP BY user_id
+        FROM {bkt_events_user} GROUP BY user_id
     )
 """
 
@@ -886,20 +840,7 @@ def q12_string_agg_nations(spark, sf_dir):
     tags=("A3", "A4", "A1", "F13"),
 )
 def q13_conditional_activity(spark, sf_dir):
-    from ..sources.bucketed import bucketed_table
-
-    bt = bucketed_table(spark, sf_dir, "events_day")
-    if bt:
-        # day-clustered events copy (stored day = to_date(ts), bucketed on
-        # it): HashPartitioning(day) satisfies ClusteredDistribution for
-        # BOTH aggregate levels ([day, w] and [day]), so the whole bitmap
-        # cascade runs exchange-free in one stage. Bench-scale layout —
-        # see sources/bucketed.py for the |days|-parallelism trade; the
-        # raw path below stays the 100 TB shape.
-        return spark.sql(
-            Q13_SQL_BITMAP.replace("{day}", "day").replace("{events}", bt)
-        )
-    return run_sql(spark, sf_dir, Q13_SQL_BITMAP.replace("{day}", "to_date(ts)"))
+    return run_sql(spark, sf_dir, Q13_SQL_BITMAP)
 
 
 # Both DISTINCTs range over user_id — a NON-NEGATIVE INTEGER — so the same
@@ -914,16 +855,22 @@ def q13_conditional_activity(spark, sf_dir):
 # sf0.1; the former shapes — multi-distinct Expand, (day,user) cascade,
 # REPARTITION(day) daypart — all lose to it at every scale tried). 63-bit
 # words keep every word a positive BIGINT (DuckDB raises on 1<<63).
+# On the day-clustered events copy (stored day = to_date(ts), bucketed on
+# it) HashPartitioning(day) satisfies ClusteredDistribution for BOTH
+# aggregate levels ([day, w] and [day]), so the whole cascade runs
+# exchange-free in one stage. That is the bench-scale layout (see
+# sources/bucketed.py for the |days|-parallelism trade); the raw read
+# stays the 100 TB shape.
 Q13_SQL_BITMAP = f"""
     WITH words AS (
-        SELECT {{day}} AS day, user_id div 63 AS w,
+        SELECT day, user_id div 63 AS w,
                CASE WHEN event_type = 'purchase'
                     THEN shiftleft(1L, CAST(user_id % 63 AS INT)) ELSE 0L END AS pbit,
                shiftleft(1L, CAST(user_id % 63 AS INT)) AS abit,
                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_p,
                CASE WHEN event_type = 'click' THEN 1 ELSE 0 END    AS is_c,
                CAST(floor((CASE WHEN event_type = 'purchase' THEN value ELSE 0D END) * {BP} + 0.5D) AS BIGINT) AS val_bp
-        FROM {{events}}
+        FROM {{bkt_events_day}}
     ),
     perword AS (
         SELECT day, w, bit_or(pbit) AS pbits, bit_or(abit) AS abits,
@@ -1356,7 +1303,7 @@ def q23_limit_preview(spark, sf_dir):
     tags=("A8", "F4", "J3"),
 )
 def q24_grouped_column_reuse(spark, sf_dir):
-    return _run_fact_sql(spark, sf_dir, Q24_SQL)
+    return run_sql(spark, sf_dir, Q24_SQL)
 
 
 # SHUFFLE_HASH(o): orders is too big to broadcast cheaply (the single-thread
@@ -1370,8 +1317,8 @@ Q24_SQL = """
            o.o_orderkey, o.o_totalprice,
            CAST(round(o_totalprice * 100, 0) AS BIGINT)
                div nullif(count(DISTINCT l.l_partkey), 0) AS price_cents_per_part
-    FROM (SELECT o_orderkey, o_totalprice FROM {orders}) o
-    JOIN (SELECT l_orderkey, l_partkey FROM {lineitem}) l ON l.l_orderkey = o.o_orderkey
+    FROM (SELECT o_orderkey, o_totalprice FROM {bkt_orders}) o
+    JOIN (SELECT l_orderkey, l_partkey FROM {bkt_lineitem}) l ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderkey, o.o_totalprice
 """
 

@@ -315,29 +315,21 @@ def _split_case(splits_e6: dict[str, int], seed: int) -> str:
     tags=("LLM", "dedup"),
 )
 def q40_dedup_exact(spark, sf_dir):
-    from ..sources.bucketed import bucketed_table
-
-    bt = bucketed_table(spark, sf_dir, "documents_hash")
-    if bt:
-        # content-addressed documents copy (stored text_hash = md5(text),
-        # clustered on it — what an exact-dedup store is in production):
-        # the hash-groupBy reads co-located buckets, zero exchanges.
-        return spark.sql(
-            Q40_SQL.replace("{hash}", "text_hash").replace("{documents}", bt)
-        )
-    return run_sql(spark, sf_dir, Q40_SQL.replace("{hash}", "md5(text)"))
+    return run_sql(spark, sf_dir, Q40_SQL)
 
 
 # SQL twin of operators.text.exact_dedup_groups (the canonical DataFrame op);
 # tests/test_sql_df_parity.py pins exact equality. SQL-text build avoids the
 # py4j plan-construction overhead that dominates sub-second benchmarks.
-# ``{hash}`` is the content hash: md5(text) over the raw documents, the
-# stored text_hash column on the content-addressed copy.
+# ``text_hash`` is the content hash md5(text): computed over the raw
+# documents, stored on the content-addressed copy (clustered on it — what
+# an exact-dedup store is in production), where the hash-groupBy reads
+# co-located buckets with zero exchanges.
 Q40_SQL = """
-    SELECT {hash}      AS text_hash,
+    SELECT text_hash,
            min(doc_id) AS canonical_doc_id,
            count(*)    AS n_copies
-    FROM {documents} GROUP BY {hash}
+    FROM {bkt_documents_hash} GROUP BY text_hash
 """
 
 

@@ -22,11 +22,14 @@ Mechanics:
   a later session re-registers them with ``CREATE TABLE ... CLUSTERED BY``
   DDL over the existing location instead of rewriting (bucket ids ride the
   file names, so the layout survives re-registration).
-- Activation is explicit: queries consult :func:`bucketed_fact_names` and
-  read the bucketed tables ONLY when both are registered in the session
-  catalog. Each query runs one SQL template either way; without the
-  tables (the correctness gate, any plain consumer) the same SQL reads the
-  raw parquet files, with ``SHUFFLE_HASH`` where the bucketed form merges.
+- Activation is explicit and lives in one place: a headline template
+  names a layout by its alias (``{bkt_lineitem_pk}``) and
+  ``queries.run_sql`` resolves it to the bucketed table ONLY when every
+  layout the template names is registered in the session catalog.
+  Otherwise (the correctness gate, any plain consumer) the same SQL reads
+  the raw parquet files, with the derived columns computed on the fly
+  (:func:`layout_projection`) and ``SHUFFLE_HASH`` where the bucketed
+  orderkey pair merges.
 - Files are touched with driver-local ``os`` calls, not the helpers in
   ``writers``: a session-local warehouse cache on the ``olap_mixed`` setup path.
 """
@@ -59,15 +62,15 @@ from ..functions.core import quote_ident
 #   by |days| x buckets-per-day, so it is the right layout while one
 #   day-bucket fits a task — past that the catalog's raw two-stage
 #   cascade (map-side partial combine, only word-partials cross the wire)
-#   is the shape that scales, and the gate falls back to it whenever the
+#   is the shape that scales, and run_sql falls back to it whenever the
 #   table is not registered;
 # - documents_hash: content-addressed documents copy (stores text_hash =
 #   md5(text), clustered on it) — exactly what an exact-dedup store IS in
 #   production (docs keyed by content hash); the q40 hash-groupBy then
 #   plans with zero exchanges.
 # Derived columns are part of the MATERIALIZED layout (computed once at
-# prep, like any warehouse sort/cluster key); activation stays catalog-
-# gated so raw-parquet consumers and the correctness gate never see them.
+# prep, like any warehouse sort/cluster key); without the copy, run_sql
+# derives them over the raw table, so a template reads them either way.
 FACT_BUCKET_SPECS = {
     "lineitem": ("lineitem", "l_orderkey", ["l_orderkey"], None),
     "orders": ("orders", "o_orderkey", ["o_orderkey"], None),
@@ -76,8 +79,8 @@ FACT_BUCKET_SPECS = {
     "events_day": ("events", "day", ["day"], {"day": "to_date(ts)"}),
     "documents_hash": ("documents", "text_hash", ["text_hash"], {"text_hash": "md5(text)"}),
 }
-# the co-located join pair (both or neither — a join needs both sides)
-_JOIN_FAMILY = ("lineitem", "orders")
+# the co-located join pair: its merge join needs both sides bucketed
+JOIN_FAMILY = ("lineitem", "orders")
 
 
 def _tag(sf_dir: str) -> str:
@@ -103,26 +106,12 @@ def bucketed_name(sf_dir: str, alias: str) -> str:
     return f"bkt_{_tag(sf_dir)}_{alias}"
 
 
-def bucketed_fact_names(spark: SparkSession, sf_dir: str) -> dict[str, str] | None:
-    """Name map for this sf_dir's orderkey-bucketed JOIN pair, or None when
-    either side is absent from the session catalog (-> callers keep the
-    raw-parquet plan)."""
-    names = {t: bucketed_name(sf_dir, t) for t in _JOIN_FAMILY}
-    try:
-        if all(spark.catalog.tableExists(n) for n in names.values()):
-            return names
-    except Exception:
-        return None
-    return None
-
-
-def bucketed_table(spark: SparkSession, sf_dir: str, alias: str) -> str | None:
-    """Single bucketed table name (e.g. ``lineitem_pk``) if registered."""
-    name = bucketed_name(sf_dir, alias)
-    try:
-        return name if spark.catalog.tableExists(name) else None
-    except Exception:
-        return None
+def layout_projection(alias: str) -> list[str]:
+    """``*`` plus the layout's derived columns (``to_date(ts) AS day``):
+    what the bucketed copy stores, and what ``queries.run_sql`` computes
+    over the raw table when the copy is not registered."""
+    extra = FACT_BUCKET_SPECS[alias][3] or {}
+    return ["*", *(f"{e} AS {n}" for n, e in extra.items())]
 
 
 def ensure_bucketed_facts(
@@ -203,7 +192,7 @@ def ensure_bucketed_facts(
             shutil.rmtree(location, ignore_errors=True)
         src = sources[table]
         if extra:
-            src = src.selectExpr("*", *[f"{e} AS {n}" for n, e in extra.items()])
+            src = src.selectExpr(*layout_projection(alias))
         (
             src.repartition(buckets, key)
             .write.mode("overwrite")

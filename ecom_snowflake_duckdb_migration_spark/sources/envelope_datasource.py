@@ -72,6 +72,28 @@ def _load_envelopes(file: str) -> list[dict]:
         return [json.loads(line) for line in text.splitlines() if line.strip()]
 
 
+def _envelope_rows(schema: StructType, options: dict, files: list[str]):
+    """Rows of ``files`` in ``schema`` order, each ending with its lineage
+    columns (``_envelope_file``, ``_generated_at``). With option
+    ``validate_count`` an envelope whose ``recordCount`` disagrees with its
+    data raises, naming the file."""
+    validate = str(options.get("validate_count", "false")).lower() == "true"
+    names = [f.name for f in schema.fields if not f.name.startswith("_")]
+    for file in files:
+        for env in _load_envelopes(file):
+            meta = env.get("metadata") or {}
+            data = env.get("data") or []
+            declared = meta.get("recordCount")
+            if validate and declared is not None and declared != len(data):
+                raise ValueError(
+                    f"envelope {file}: recordCount={declared} "
+                    f"but data holds {len(data)} rows"
+                )
+            gen_at = meta.get("generatedAt")
+            for row in data:
+                yield tuple(row.get(n) for n in names) + (file, gen_at)
+
+
 class _EnvelopePartition(InputPartition):
     def __init__(self, file: str):
         self.file = file
@@ -80,26 +102,13 @@ class _EnvelopePartition(InputPartition):
 class EnvelopeReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
         self._schema = schema
-        self._path = options["path"]
-        self._validate = str(options.get("validate_count", "false")).lower() == "true"
+        self._options = options
 
     def partitions(self):
-        return [_EnvelopePartition(f) for f in _envelope_files(self._path)]
+        return [_EnvelopePartition(f) for f in _envelope_files(self._options["path"])]
 
     def read(self, partition: _EnvelopePartition):
-        names = [f.name for f in self._schema.fields if not f.name.startswith("_")]
-        for env in _load_envelopes(partition.file):
-            meta = env.get("metadata") or {}
-            data = env.get("data") or []
-            declared = meta.get("recordCount")
-            if self._validate and declared is not None and declared != len(data):
-                raise ValueError(
-                    f"envelope {partition.file}: recordCount={declared} "
-                    f"but data holds {len(data)} rows"
-                )
-            gen_at = meta.get("generatedAt")
-            for row in data:
-                yield tuple(row.get(n) for n in names) + (partition.file, gen_at)
+        return _envelope_rows(self._schema, self._options, [partition.file])
 
 
 class EnvelopeDataSource(DataSource):
@@ -160,36 +169,19 @@ class EnvelopeStreamReader(SimpleDataSourceStreamReader):
 
     def __init__(self, schema: StructType, options: dict):
         self._schema = schema
-        self._path = options["path"]
-        self._validate = str(options.get("validate_count", "false")).lower() == "true"
+        self._options = options
 
     def initialOffset(self) -> dict:
         return {"last": ""}
 
     def _files_after(self, last: str, upto: str | None = None) -> list[str]:
-        files = _envelope_files_or_empty(self._path)
+        files = _envelope_files_or_empty(self._options["path"])
         out = []
         for f in files:
             base = os.path.basename(f)
             if base > last and (upto is None or base <= upto):
                 out.append(f)
         return out
-
-    def _rows(self, files: list[str]):
-        names = [f.name for f in self._schema.fields if not f.name.startswith("_")]
-        for file in files:
-            for env in _load_envelopes(file):
-                meta = env.get("metadata") or {}
-                data = env.get("data") or []
-                declared = meta.get("recordCount")
-                if self._validate and declared is not None and declared != len(data):
-                    raise ValueError(
-                        f"envelope {file}: recordCount={declared} "
-                        f"but data holds {len(data)} rows"
-                    )
-                gen_at = meta.get("generatedAt")
-                for row in data:
-                    yield tuple(row.get(n) for n in names) + (file, gen_at)
 
     def read(self, start: dict):
         files = self._files_after(start.get("last", ""))
@@ -199,12 +191,11 @@ class EnvelopeStreamReader(SimpleDataSourceStreamReader):
         # materialized list, not a generator: the engine's prefetch cache
         # copy.copy()s the iterator (datasource_internal.getCache), which
         # list iterators support and generators do not
-        return iter(list(self._rows(files))), end
+        return iter(list(_envelope_rows(self._schema, self._options, files))), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        return self._rows(
-            self._files_after(start.get("last", ""), end.get("last", ""))
-        )
+        files = self._files_after(start.get("last", ""), end.get("last", ""))
+        return _envelope_rows(self._schema, self._options, files)
 
 
 class _EnvelopeCommit(WriterCommitMessage):

@@ -1203,6 +1203,40 @@ def test_image_hashes_custom_id_col(spark):
     assert pairs.count() == 0  # single image, no pairs — but the plan resolves
 
 
+def test_decode_images_custom_int_id_col(spark):
+    """decode_images keeps the caller's id column name AND type, like the
+    hash operators: an INT ``img`` key comes back as ``img``, still INT,
+    with failures captured per row."""
+    import numpy as np
+    from pyspark.sql.types import IntegerType
+
+    df = spark.createDataFrame(
+        [(7, bytearray(mm.encode_bmp(np.full((3, 5), 9, np.uint8)))), (8, bytearray(b"junk"))],
+        "img INT, payload BINARY",
+    )
+    out = mm.decode_images(df, id_col="img")
+    assert out.columns == ["img", "width", "height", "mean_pixel", "ok"]
+    assert out.schema["img"].dataType == IntegerType()
+    rows = {r.img: r for r in out.collect()}
+    assert (rows[7].width, rows[7].height, rows[7].mean_pixel, rows[7].ok) == (5, 3, 9.0, "ok")
+    assert rows[8].width is None and rows[8].ok == "NotImplementedError"
+
+
+def test_image_hashes_keep_64_bits_beside_a_failed_row(spark, images):
+    """A failed row in the same Arrow batch leaves every other row's hash
+    exact: a NULL beside 64-bit ints must not round the column through
+    float64."""
+    alone = {r.media_id: (r.ahash, r.dhash) for r in mm.image_hashes(images).collect()}
+    vids = mm.generate_media(spark, 1, "video")
+    mixed = images.unionByName(vids).coalesce(1)
+    got = {
+        r.media_id: (r.ahash, r.dhash)
+        for r in mm.image_hashes(mixed).collect()
+        if r.ok == "ok"
+    }
+    assert got == alone
+
+
 def _pack_subbyte_rows(samples, depth, filt=0):
     """Bit-pack (h, w) raw sample values MSB-first at ``depth`` bits with a
     leading filter byte per row — the inverse of png._unpack_subbyte."""

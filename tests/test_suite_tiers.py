@@ -1,8 +1,9 @@
 """Spark-free guards: every ``SLOW_TESTS`` entry in conftest.py must name a
 test function defined in its file (a stale or misspelled entry otherwise
 skips nothing and goes unnoticed when a test is deleted or renamed),
-host sizing stays in ``session.py``, and each shared oracle SQL fragment
-is spelled once."""
+host sizing stays in ``session.py``, each shared oracle SQL fragment is
+spelled once, and the headline queries leave the bucketed-or-raw choice
+to ``queries.run_sql``."""
 
 from __future__ import annotations
 
@@ -140,3 +141,27 @@ def test_text_operators_splice_no_bare_column_name():
         )
     ]
     assert not offenders, f"f-strings splicing a bare column name at lines {offenders}"
+
+
+# Headline templates name a bucketed layout with a ``{bkt_<alias>}``
+# placeholder and run through ``queries.run_sql``, the one place that picks
+# the bucketed copy or the raw view: no catalog module looks the copies up
+# itself, runs a template with ``spark.sql`` or swaps a column in by hand.
+LAYOUT_BYPASS = re.compile(
+    r"bucketed_table|bucketed_fact_names|spark\.sql\(\s*Q\w*_SQL"
+    r"|\.replace\(\s*\"\{(?:day|hash)\}\""
+)
+
+
+def test_headline_layout_resolves_in_run_sql():
+    qdir = os.path.join(ROOT, "ecom_snowflake_duckdb_migration_spark", "queries")
+    offenders = []
+    for name in sorted(os.listdir(qdir)):
+        if name.startswith("catalog_") and name.endswith(".py"):
+            with open(os.path.join(qdir, name), encoding="utf-8") as f:
+                text = f.read()
+            offenders += [
+                f"{name}:{text.count(chr(10), 0, m.start()) + 1}"
+                for m in LAYOUT_BYPASS.finditer(text)
+            ]
+    assert not offenders, f"headline layout chosen outside run_sql: {offenders}"
